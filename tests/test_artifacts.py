@@ -342,6 +342,38 @@ def test_delete_from_ivfpq_index_inverts_append(spark, tmp_path):
     assert delete_from_ivfpq_index(spark, p_del, drift) is False
 
 
+def test_delete_from_ivfpq_index_refuses_repeated_id(spark, tmp_path):
+    """A delete slice that names an id twice refuses and leaves the index
+    as it was — both when the repeats are identical rows and when one
+    occurrence carries a drifted vector while the other matches."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from warp_spark.pipeline.similarity import delete_from_ivfpq_index, persist_ivfpq_index
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(30)],
+        "vec_id long, embedding array<float>",
+    )
+    p = str(tmp_path / "idx")
+    persist_ivfpq_index(emb, p, n_centroids=4, m=4, n_codes=8)
+    snapshot = {
+        sub: sorted(map(str, spark.read.parquet(f"{p}/{sub}").collect()))
+        for sub in ("codes", "storage")
+    }
+    one = emb.filter("vec_id = 3")
+    drifted = one.select(
+        "vec_id", F.transform("embedding", lambda x: x + F.lit(2.0)).alias("embedding")
+    )
+    for slice_ in (one.union(one), one.union(drifted)):
+        assert delete_from_ivfpq_index(spark, p, slice_) is False
+        for sub, rows in snapshot.items():
+            assert sorted(map(str, spark.read.parquet(f"{p}/{sub}").collect())) == rows
+    assert delete_from_ivfpq_index(spark, p, one) is True
+
+
 def test_mutation_verbs_serialize_on_the_index_root_lock(spark, tmp_path):
     """r13 verdict item 3: EVERY mutation verb (append / delete /
     compact) must hold the canonical <index>.lock for its whole

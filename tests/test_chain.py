@@ -117,3 +117,153 @@ def test_chain_errors(spark):
         Chain().add("filter", condition="1=1").full_dataset(spark)
     with pytest.raises(ValueError):
         Chain().add("nonsense").full_dataset(spark)
+
+
+# -- preview samples (warp_spark.sources.parquet) ---------------------------
+
+
+def _sample(spark, path):
+    from warp_spark.sources.parquet import _SESSIONS
+
+    return _SESSIONS[spark].samples[path]
+
+
+def _cached(df) -> bool:
+    return "InMemoryRelation" in df._jdf.queryExecution().withCachedData().toString()
+
+
+def _write(spark, path, offset):
+    spark.range(200).select(
+        (F.col("id") + offset).alias("k"), (F.col("id") * 3).alias("v")
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def test_chain_self_join_over_same_source_preview_and_full(spark):
+    # the right chain keeps every source column, so all of them clash
+    # with the left's and are dropped after the join by reference
+    src = f"{SF}/orders.parquet"
+    right = [
+        step("source", path=src),
+        step("calculate", calculations={"k2": "o_orderkey", "price2": "=[o_totalprice] * 2"}),
+    ]
+    ch = (
+        Chain()
+        .add("source", path=src)
+        .add("calculate", calculations={"k1": "o_orderkey"})
+        .add("join", chain=right, on="k1 = k2")
+    )
+    preview = ch.example_dataset(spark, max_input_rows=100).to_df()
+    assert _cached(preview)
+    full = ch.dataframe(spark)
+    for df, n in ((preview, 100), (full, spark.read.parquet(src).count())):
+        assert df.columns[-3:] == ["k1", "k2", "price2"]
+        rows = df.collect()
+        assert len(rows) == n
+        assert all(r["k1"] == r["k2"] == r["o_orderkey"] for r in rows)
+        assert all(r["price2"] == 2 * r["o_totalprice"] for r in rows)
+
+
+def test_preview_reads_of_one_source_get_own_expr_ids(spark):
+    import re
+
+    from warp_spark.sources.parquet import preview_parquet
+
+    def ids(df):
+        return set(re.findall(r"#(\d+)", df._jdf.queryExecution().analyzed().output().toString()))
+
+    a = preview_parquet(spark, f"{SF}/orders.parquet", 10)
+    b = preview_parquet(spark, f"{SF}/orders.parquet", 10)
+    assert _cached(a) and _cached(b)
+    assert not ids(a) & ids(b)
+
+
+def test_chain_preview_source_rows_stable_across_edits(spark):
+    ch = Chain().add("source", path=f"{SF}/lineitem.parquet")
+    cols = ["l_orderkey", "l_linenumber"]
+    seen = []
+    for edit in (
+        step("calculate", calculations={"x": "=[l_quantity] * 2"}),
+        step("filter", condition="=[l_quantity] > 0"),
+        step("calculate", calculations={"y": "=[x] + 1"}),
+    ):
+        ch.steps.append(edit)
+        df = ch.example_dataset(spark, max_input_rows=60).to_df()
+        assert _cached(df)
+        seen.append([tuple(r) for r in df.select(*cols).collect()])
+    assert len(seen[0]) == 60 and seen[0] == seen[1] == seen[2]
+
+
+def test_chain_new_sample_unpersists_old(spark, tmp_path):
+    from pyspark.storagelevel import StorageLevel
+
+    p = str(tmp_path / "t")
+    _write(spark, p, 0)
+    ch = Chain().add("source", path=p)
+    ch.example_dataset(spark, max_input_rows=10).to_df().collect()
+    small = _sample(spark, p)
+    ch.example_dataset(spark, max_input_rows=5).to_df().collect()
+    assert _sample(spark, p) is small  # a smaller preview reuses the sample
+    ch.example_dataset(spark, max_input_rows=50).to_df().collect()
+    large = _sample(spark, p)
+    assert large is not small and large.rows == 50
+    assert small.df.storageLevel == StorageLevel.NONE
+    assert large.df.storageLevel != StorageLevel.NONE
+    _write(spark, p, 1000)
+    rows = ch.example_dataset(spark, max_input_rows=50).to_df().collect()
+    assert min(r.k for r in rows) >= 1000  # the new file's rows
+    assert _sample(spark, p) is not large
+    assert large.df.storageLevel == StorageLevel.NONE
+
+
+def test_plain_read_never_gets_preview_sample(spark, tmp_path):
+    p = str(tmp_path / "t")
+    _write(spark, p, 0)
+    ch = Chain().add("source", path=p)
+    assert len(ch.example_dataset(spark, max_input_rows=20).to_df().collect()) == 20
+    _write(spark, p, 1000)  # the old sample stays persisted until the next preview
+    plain = spark.read.parquet(p).limit(20)
+    assert not _cached(plain)
+    assert sorted(r.k for r in plain.collect()) == list(range(1000, 1020))
+
+
+def test_concurrent_previews_leave_one_sample_persisted(spark, tmp_path, monkeypatch):
+    """Threads previewing one source at growing sizes race to replace its
+    sample; every replaced sample must end up unpersisted."""
+    import sys
+    import threading
+
+    from pyspark.storagelevel import StorageLevel
+
+    p = str(tmp_path / "t")
+    _write(spark, p, 0)
+    persisted = []
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    real_persist = DataFrame.persist
+
+    def recording_persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "persist", recording_persist)
+    ch = Chain().add("source", path=p)
+    errors = []
+
+    def preview(n):
+        try:
+            assert len(ch.example_dataset(spark, max_input_rows=n).to_df().collect()) == n
+        except BaseException as e:  # surfaced in the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=preview, args=(5 + i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    live = [df for df in persisted if df.storageLevel != StorageLevel.NONE]
+    assert live == [_sample(spark, p).df]

@@ -487,3 +487,72 @@ def test_aggregate_splits_distinct_from_buffered_reducers(spark):
         None: (2, 45.0, "5,6"),  # NULL group survives the null-safe join
     }
     assert list(out.columns) == ["g", "cd", "med", "pk"]
+
+
+class TestParquetSchemaMemo:
+    """``Dataset.from_parquet`` infers a schema once per file version and
+    SQL conf (warp_spark.sources.parquet); every change to either reads
+    the new schema."""
+
+    @staticmethod
+    def _jobs(spark, fn, tag):
+        sc = spark.sparkContext
+        sc.setJobGroup(tag, tag)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    def test_rereading_unchanged_path_launches_no_job(self, spark, tmp_path):
+        p = str(tmp_path / "t")
+        spark.range(10).write.parquet(p)
+        first, cold = self._jobs(spark, lambda: Dataset.from_parquet(spark, p), "memo_cold")
+        again, warm = self._jobs(spark, lambda: Dataset.from_parquet(spark, p), "memo_warm")
+        assert cold >= 1  # the counter sees the inference job
+        assert warm == 0
+        assert again.df.schema == first.df.schema
+        assert sorted(r.id for r in again.collect()) == list(range(10))
+
+    def test_overwritten_file_reads_new_schema_and_rows(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        p = str(tmp_path / "one.parquet")
+        pq.write_table(pa.table({"a": [1, 2]}), p)
+        assert [r.a for r in Dataset.from_parquet(spark, p).collect()] == [1, 2]
+        pq.write_table(pa.table({"b": ["x"], "c": [3.5]}), p)
+        ds = Dataset.from_parquet(spark, p)
+        assert ds.df.columns == ["b", "c"]
+        assert [tuple(r) for r in ds.collect()] == [("x", 3.5)]
+
+    def test_overwritten_spark_directory_reads_new_schema_and_rows(self, spark, tmp_path):
+        p = str(tmp_path / "dir")
+        spark.range(4).write.parquet(p)
+        assert Dataset.from_parquet(spark, p).df.columns == ["id"]
+        spark.range(3).select((F.col("id") * 10).alias("v")).write.mode("overwrite").parquet(p)
+        ds = Dataset.from_parquet(spark, p)
+        assert ds.df.columns == ["v"]
+        assert sorted(r.v for r in ds.collect()) == [0, 10, 20]
+
+    def test_conf_change_infers_again(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql import types as T
+
+        # a plain parquet BINARY column (no Spark schema in the footer),
+        # which the conf decides how to read
+        p = str(tmp_path / "bin.parquet")
+        pq.write_table(pa.table({"b": pa.array([b"hi"], pa.binary())}), p)
+        key = "spark.sql.parquet.binaryAsString"
+        before = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "false")
+            assert isinstance(Dataset.from_parquet(spark, p).df.schema["b"].dataType, T.BinaryType)
+            spark.conf.set(key, "true")
+            ds, jobs = self._jobs(spark, lambda: Dataset.from_parquet(spark, p), "memo_conf")
+            assert jobs >= 1
+            assert isinstance(ds.df.schema["b"].dataType, T.StringType)
+            assert ds.collect()[0].b == "hi"
+        finally:
+            spark.conf.set(key, before)

@@ -439,21 +439,38 @@ def test_topk_nonadjacent_fast_path_equals_full_anti_join(spark):
         for i, (x, y) in enumerate(all_pairs)
     ]
     scored = spark.createDataFrame(scored_rows, "x long, y long, s long")
-    order = lambda: (F.col("s").desc(), F.col("x"), F.col("y"))
 
     def key(r):
         return tuple(r[c] for c in r.__fields__)
 
     for k in (3, 5, 100):  # 100 > number of candidates: prefix exhausts
         fast = [
-            key(r) for r in _topk_nonadjacent(scored, und, k, order, n0=4).collect()
+            key(r) for r in _topk_nonadjacent(scored, und, k, "s", n0=4).collect()
         ]
         slow = [
             key(r)
             for r in _topk_nonadjacent(
-                scored, und, k, order, n0=4, n_max=0
+                scored, und, k, "s", n0=4, n_max=0
             ).collect()
         ]
         assert fast == slow, f"k={k}: {fast} != {slow}"
         assert fast == sorted(fast, key=lambda t: (-t[2], t[0], t[1]))
         assert all((x, y) not in adj for x, y, _ in fast)
+
+
+def test_topk_nonadjacent_escalation_returns_full_rows(spark):
+    """Escalation rounds collect only (x, y, score); the survivors' other
+    columns come back through one keyed fetch, equal to the exact
+    fallback row for row and in order."""
+    from warp_spark.pipeline.graph import _topk_nonadjacent
+
+    # the 20 best pairs are all adjacent, so k=5 cannot finish in the
+    # first round (n = 4k = 20) and must escalate
+    adj = [(x, x + 1) for x in range(20)]
+    und = spark.createDataFrame(adj, "u long, v long")
+    rows = [(x, x + 1, 1000 - x, f"a{x}") for x in range(20)]
+    rows += [(x, x + 2, 500 - x, f"n{x}") for x in range(30)]
+    scored = spark.createDataFrame(rows, "x long, y long, s long, tag string")
+    fast = [tuple(r) for r in _topk_nonadjacent(scored, und, 5, "s", n0=1).collect()]
+    slow = [tuple(r) for r in _topk_nonadjacent(scored, und, 5, "s", n_max=0).collect()]
+    assert fast == slow == [(x, x + 2, 500 - x, f"n{x}") for x in range(5)]

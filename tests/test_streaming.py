@@ -841,3 +841,25 @@ def test_graph_ingest_streamed_equals_batch(spark):
     assert streamed == batch and len(streamed) == 1
     # a real census came through, not an empty artifact
     assert streamed[0][1] > 0  # cn_total (columns sorted: cn_total first)
+
+
+def test_stage_split_files_raises_on_key_outside_range(spark, tmp_path):
+    """Staging writes one trigger file per residue class 0..n-1; a key
+    that puts rows in no class raises instead of silently dropping them,
+    and leaves no trigger files behind."""
+    import os
+
+    from warp_spark.catalog import _stage_split_files
+
+    df = spark.range(12).withColumnRenamed("id", "v")
+    ok = str(tmp_path / "ok")
+    _stage_split_files(df, ok, F.col("v") % 3, ["v"], n=3)
+    got = sorted(r.v for r in spark.read.parquet(f"{ok}/file_*.parquet").collect())
+    assert got == list(range(12))
+    assert sorted(os.listdir(ok)) == ["file_000.parquet", "file_001.parquet", "file_002.parquet"]
+
+    for key in (F.col("v") % 4, F.when(F.col("v") < 10, F.col("v") % 3)):
+        bad = str(tmp_path / "bad")
+        with pytest.raises(RuntimeError, match="outside 0..2"):
+            _stage_split_files(df, bad, key, ["v"], n=3)
+        assert not [f for f in os.listdir(bad) if f.startswith("file_")]

@@ -5111,6 +5111,21 @@ def _stage_split_files(
     df.select(*cols, key.alias("__b")).repartition(1).write.mode(
         "overwrite"
     ).partitionBy("__b").parquet(f"{root}/stage")
+    # rows whose key is null or outside 0..n-1 land in an unclaimed
+    # __b=* dir and would vanish with the stage rmtree — every current
+    # caller passes a total pmod/% key, so a stray partition is a caller
+    # bug, raised before any file is claimed
+    stray = [
+        d
+        for d in _glob.glob(f"{root}/stage/__b=*")
+        if os.path.basename(d) not in {f"__b={i}" for i in range(n)}
+    ]
+    if stray:
+        shutil.rmtree(f"{root}/stage", ignore_errors=True)
+        raise RuntimeError(
+            f"_stage_split_files: key produced rows outside 0..{n - 1}: "
+            f"{sorted(os.path.basename(d) for d in stray)}"
+        )
     for i in range(n):
         hits = _glob.glob(f"{root}/stage/__b={i}/part-*.parquet")
         tgt = f"{root}/file_{i:03d}.parquet"
@@ -5125,16 +5140,6 @@ def _stage_split_files(
             )
             shutil.rmtree(f"{root}/stage_empty{i}", ignore_errors=True)
         os.utime(tgt, (1_700_000_000 + 100 * i,) * 2)
-    # rows whose key is null or outside 0..n-1 would land in an
-    # unclaimed __b=* dir and vanish with the stage rmtree below —
-    # every current caller passes a total pmod/% key, so any stray
-    # partition is a caller bug this surfaces instead of swallowing
-    stray = [
-        d
-        for d in _glob.glob(f"{root}/stage/__b=*")
-        if os.path.basename(d) not in {f"__b={i}" for i in range(n)}
-    ]
-    assert not stray, f"_stage_split_files: key produced rows outside 0..{n-1}: {stray}"
     shutil.rmtree(f"{root}/stage", ignore_errors=True)
 
 

@@ -87,7 +87,11 @@ class Dataset:
     # -- sources -----------------------------------------------------------
     @staticmethod
     def from_parquet(spark: SparkSession, path: str) -> "Dataset":
-        return Dataset(spark.read.parquet(path))
+        """Read parquet; the schema is inferred once per file version
+        (see warp_spark.sources.parquet)."""
+        from warp_spark.sources.parquet import read_parquet
+
+        return Dataset(read_parquet(spark, path))
 
     @staticmethod
     def from_df(df: DataFrame) -> "Dataset":

@@ -394,13 +394,13 @@ def _topk_nonadjacent(
     scored: DataFrame,
     und: DataFrame,
     k: int,
-    order,
+    score: str,
     n0: int = 4096,
     n_max: int = 1 << 20,
 ) -> DataFrame:
     """Top-``k`` of ``scored`` — pair rows (x < y) under the strict
-    total order ``order()`` — restricted to pairs NOT present in the
-    canonical edge set ``und``, WITHOUT the census-sized anti-join
+    total order (``score`` desc, x, y) — restricted to pairs NOT present
+    in the canonical edge set ``und``, WITHOUT the census-sized anti-join
     exchange (r14 verdict item 1, guide §2.4).
 
     The direct form (anti-join the whole census against the edge set,
@@ -409,7 +409,7 @@ def _topk_nonadjacent(
     ``n`` census rows (a per-partition heap — no exchange), check ONLY
     those against the edge set with one broadcast semi-join (the edge
     set is scanned map-side, never shuffled), and widen ``n`` until
-    ``k`` non-adjacent survivors exist.  Exactness: ``order()`` is a strict
+    ``k`` non-adjacent survivors exist.  Exactness: the order is a strict
     total order (the score ties break on the unique pair), so once the
     top-``n`` prefix holds ≥ k non-adjacent pairs, every pair outside
     the prefix orders after all of them — the k survivors ARE the
@@ -422,48 +422,57 @@ def _topk_nonadjacent(
     deterministic fallback — correctness is never conditional on the
     fast path.
 
-    TWO actions per round, never three: the prefix is COLLECTED (≤ n
-    pair rows, driver-bounded by ``n_max`` — not a §5 driver-loop
-    hazard), adjacency is one broadcast semi-join collect over the
-    edge scan, and the k survivors are re-emitted as a one-slice
-    driver frame (:func:`warp_spark.localdf.small_rows_df`) in the
-    exact TakeOrdered order — filtering a sorted prefix preserves
-    order, so no re-sort is needed and the edge set is scanned ONCE
-    (the checkpoint form paid a second scan plus a count action)."""
+    TWO actions per round: the prefix is COLLECTED (≤ n pair rows,
+    driver-bounded by ``n_max`` — not a §5 driver-loop hazard),
+    adjacency is one broadcast semi-join collect over the edge scan,
+    and the k survivors are re-emitted as a one-slice driver frame
+    (:func:`warp_spark.localdf.small_rows_df`) in the exact TakeOrdered
+    order — filtering a sorted prefix preserves order, so no re-sort is
+    needed and the edge set is scanned ONCE.  The first round collects
+    whole rows; escalation rounds collect only ``(x, y, score)``, so
+    the driver never holds ``n_max`` full rows, and pay one more action
+    on success: a broadcast semi-join that fetches the k survivors'
+    full rows."""
     from warp_spark.localdf import small_rows_df
 
     spark = scored.sparkSession
-    pair_schema = "{} {}, {} {}".format(
-        "u",
-        scored.schema["x"].dataType.simpleString(),
-        "v",
-        scored.schema["y"].dataType.simpleString(),
-    )
+    x_type = scored.schema["x"].dataType.simpleString()
+    y_type = scored.schema["y"].dataType.simpleString()
+    order = (F.col(score).desc(), F.col("x"), F.col("y"))
     n = max(int(n0), 4 * k)
+    narrow = False
     while n <= n_max:
-        rows = scored.orderBy(*order()).limit(n).collect()
+        prefix = scored.orderBy(*order).limit(n)
+        rows = (prefix.select("x", "y", score) if narrow else prefix).collect()
+        pairs = [(r["x"], r["y"]) for r in rows]
         adj = set(
             (r["u"], r["v"])
             for r in und.join(
-                F.broadcast(
-                    small_rows_df(
-                        spark, [(r["x"], r["y"]) for r in rows], pair_schema
-                    )
-                ),
+                F.broadcast(small_rows_df(spark, pairs, f"u {x_type}, v {y_type}")),
                 ["u", "v"],
                 "leftsemi",
             ).collect()
         )
-        survivors = [r for r in rows if (r["x"], r["y"]) not in adj]
-        if len(survivors) >= k or len(rows) < n:
-            return small_rows_df(spark, survivors[:k], scored.schema)
+        survivors = [r for r in rows if (r["x"], r["y"]) not in adj][:k]
+        if len(survivors) == k or len(rows) < n:
+            if narrow and survivors:
+                keys = small_rows_df(
+                    spark, [(r["x"], r["y"]) for r in survivors], f"x {x_type}, y {y_type}"
+                )
+                survivors = (
+                    scored.join(F.broadcast(keys), ["x", "y"], "leftsemi")
+                    .orderBy(*order)
+                    .collect()
+                )
+            return small_rows_df(spark, survivors, scored.schema)
         n *= 16
+        narrow = True
     cand = scored.join(
         und,
         (scored["x"] == und["u"]) & (scored["y"] == und["v"]),
         "left_anti",
     )
-    return cand.orderBy(*order()).limit(k)
+    return cand.orderBy(*order).limit(k)
 
 
 def jaccard_links(
@@ -504,7 +513,12 @@ def jaccard_links(
     the same ``max_center_degree``; when given, the quadratic
     expansion is skipped entirely and this is scan + anti-join +
     degree join + top-k.  ``assume_canonical``: see
-    :func:`_canonical_undirected`."""
+    :func:`_canonical_undirected`.
+
+    Eager: this call runs Spark jobs (the top-k prefix and its
+    adjacency check are collected, see :func:`_topk_nonadjacent`), and
+    the returned frame holds the k result rows as driver data, so it
+    does not follow later changes to ``edges`` or ``census``."""
     und, sym, deg = _canonical_undirected(edges, assume_canonical)
     if census is None:
         census = _census_from(und, sym, deg, max_center_degree)
@@ -525,12 +539,7 @@ def jaccard_links(
             F.expr("(cn * 1000000) div (dx + dy - cn)").cast("long").alias("jacc_ppm"),
         )
     )
-    return _topk_nonadjacent(
-        scored,
-        und,
-        k,
-        lambda: (F.col("jacc_ppm").desc(), F.col("x"), F.col("y")),
-    )
+    return _topk_nonadjacent(scored, und, k, "jacc_ppm")
 
 
 def resource_allocation_links(
@@ -559,7 +568,12 @@ def resource_allocation_links(
     LITERALLY shared with jaccard_links (:func:`wedge_census` emits cn
     and ra_ppm from one groupBy), and a persisted census can be passed
     via ``census=`` to skip the expansion entirely.
-    ``assume_canonical``: see :func:`_canonical_undirected`."""
+    ``assume_canonical``: see :func:`_canonical_undirected`.
+
+    Eager: this call runs Spark jobs (the top-k prefix and its
+    adjacency check are collected, see :func:`_topk_nonadjacent`), and
+    the returned frame holds the k result rows as driver data, so it
+    does not follow later changes to ``edges`` or ``census``."""
     und, sym, deg = _canonical_undirected(edges, assume_canonical)
     scored_pairs = (
         census
@@ -570,12 +584,7 @@ def resource_allocation_links(
     # no join at all before the TakeOrdered — _topk_nonadjacent checks
     # adjacency on the tiny prefix only (r14 verdict item 1), instead
     # of shuffling the whole census through an anti-join
-    return _topk_nonadjacent(
-        scored_pairs,
-        und,
-        k,
-        lambda: (F.col("ra_ppm").desc(), F.col("x"), F.col("y")),
-    )
+    return _topk_nonadjacent(scored_pairs, und, k, "ra_ppm")
 
 
 def persist_edges(edges: DataFrame, path: str) -> None:

@@ -1258,13 +1258,14 @@ def delete_from_ivfpq_index(
     the remaining corpus).  On ``True``,
     delete(append(build(B), S), S) is BYTE-EQUAL to build(B)
     (pytest-pinned) — append and delete are exact inverses under a
-    frozen model.  A slice that repeats an id REFUSES too (the fused
-    verification counts each recomputed row once per occurrence, so
-    duplicates inflate ``matched`` past ``n_del``) — stricter than the
-    pre-r14 leftsemi form, which tolerated duplicate rows silently;
-    refusing hands the ambiguity to the caller's rebuild instead of
-    guessing.  The ENTIRE verb — verification, inverted-list
-    rewrite, storage swap — holds the canonical ``<path>.lock``
+    frozen model.  A slice that repeats an id REFUSES too, whether the
+    repeats carry the same vector or not: its count of non-null ids
+    must equal its distinct-id count ``n_del`` (both from the one
+    pre-verification job) — stricter than the pre-r14 leftsemi form,
+    which tolerated duplicate rows silently; refusing hands the
+    ambiguity to the caller's rebuild instead of guessing.  The ENTIRE
+    verb — verification, inverted-list rewrite, storage swap — holds
+    the canonical ``<path>.lock``
     (artifacts.locked_mutation, r13 verdict item 3)."""
     import os
     import shutil
@@ -1295,16 +1296,19 @@ def delete_from_ivfpq_index(
         F.coalesce(enc["centroid_id"], F.lit(-1)).alias("centroid_id"),
         enc["codes"].alias("codes"),
     ).localCheckpoint(eager=True)
-    # ONE job answers both "how many distinct ids" and "which lists
-    # are touched" (previously a count + a collect over the same tiny
-    # checkpointed frame — two scheduler round-trips for one answer)
+    # ONE job answers "how many ids", "how many distinct ids" and
+    # "which lists are touched" (previously a count + a collect over the
+    # same tiny checkpointed frame — two scheduler round-trips)
     pre = del_enc.agg(
+        F.count("vec_id").alias("n_ids"),
         F.countDistinct("vec_id").alias("n_del"),
         F.collect_set("centroid_id").alias("touched"),
     ).first()
     n_del = int(pre["n_del"])
     if n_del == 0:
         return True
+    if int(pre["n_ids"]) != n_del:
+        return False  # the slice repeats an id
     touched = sorted(pre["touched"])
     codes = spark.read.parquet(f"{path}/codes")
     pruned = codes.filter(F.col("centroid_id").isin(touched))

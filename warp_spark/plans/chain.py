@@ -12,6 +12,14 @@ for the whole chain, so cross-step optimization (filter pushdown through
 calculates, projection pruning, limit combining — everything the
 reference's CoalescedDataset did by hand, Data.swift:375-755) is free.
 
+Previews (``example_dataset``) read each parquet source through a
+per-session sample (warp_spark.sources.parquet): the first ``N`` rows,
+``N`` the largest preview size asked for so far, persisted once per file
+version. The source rows of a preview therefore stay the same from one
+edit to the next, and the sample is refreshed when the file changes
+(like the reference's example cache, QBECacheStep.swift:100-140). Full
+runs read the file itself.
+
 Steps are plain dicts (kind + params), so chains serialize to/from JSON
 like the reference's saved documents. Expressions may be given as Warp
 formula strings (compiled via warp_spark.formula) or left as Spark SQL
@@ -130,6 +138,10 @@ class Chain:
             fmt = st.get("format", "parquet")
             path = st["path"]
             if fmt == "parquet":
+                if example_rows is not None:
+                    from warp_spark.sources import preview_parquet
+
+                    return Dataset(preview_parquet(spark, path, example_rows))
                 out = Dataset.from_parquet(spark, path)
             elif fmt == "csv":
                 from warp_spark.sources import read_csv

@@ -60,21 +60,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver's synthetic star schema as DataFrames (TESTDATA.md)."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
