@@ -125,11 +125,31 @@ def test_chain_errors(spark):
 def _sample(spark, path):
     from warp_spark.sources.parquet import _SESSIONS
 
-    return _SESSIONS[spark].samples[path]
+    return _SESSIONS[spark].samples[("parquet", (), path)]
 
 
-def _cached(df) -> bool:
-    return "InMemoryRelation" in df._jdf.queryExecution().withCachedData().toString()
+def _local(df) -> bool:
+    """Every source of ``df`` is a driver-local relation: no file scan,
+    and nothing served from the CacheManager."""
+    import re
+
+    qe = df._jdf.queryExecution()
+    plan = qe.analyzed().toString()
+    return (
+        "LocalRelation" in plan
+        and not re.search(r"(?<!Local)Relation \[", plan)  # a file source
+        and "InMemoryRelation" not in qe.withCachedData().toString()
+    )
+
+
+def _jobs(spark, fn, tag):
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
 def _write(spark, path, offset):
@@ -153,7 +173,8 @@ def test_chain_self_join_over_same_source_preview_and_full(spark):
         .add("join", chain=right, on="k1 = k2")
     )
     preview = ch.example_dataset(spark, max_input_rows=100).to_df()
-    assert _cached(preview)
+    assert _local(preview)
+    assert preview._jdf.queryExecution().analyzed().toString().count("LocalRelation") == 2
     full = ch.dataframe(spark)
     for df, n in ((preview, 100), (full, spark.read.parquet(src).count())):
         assert df.columns[-3:] == ["k1", "k2", "price2"]
@@ -166,15 +187,16 @@ def test_chain_self_join_over_same_source_preview_and_full(spark):
 def test_preview_reads_of_one_source_get_own_expr_ids(spark):
     import re
 
-    from warp_spark.sources.parquet import preview_parquet
+    from warp_spark.sources import preview_source
 
     def ids(df):
         return set(re.findall(r"#(\d+)", df._jdf.queryExecution().analyzed().output().toString()))
 
-    a = preview_parquet(spark, f"{SF}/orders.parquet", 10)
-    b = preview_parquet(spark, f"{SF}/orders.parquet", 10)
-    assert _cached(a) and _cached(b)
+    a = preview_source(spark, f"{SF}/orders.parquet", 10)
+    b = preview_source(spark, f"{SF}/orders.parquet", 10)
+    assert _local(a) and _local(b)
     assert not ids(a) & ids(b)
+    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
 
 
 def test_chain_preview_source_rows_stable_across_edits(spark):
@@ -188,31 +210,30 @@ def test_chain_preview_source_rows_stable_across_edits(spark):
     ):
         ch.steps.append(edit)
         df = ch.example_dataset(spark, max_input_rows=60).to_df()
-        assert _cached(df)
+        assert _local(df)
         seen.append([tuple(r) for r in df.select(*cols).collect()])
     assert len(seen[0]) == 60 and seen[0] == seen[1] == seen[2]
 
 
-def test_chain_new_sample_unpersists_old(spark, tmp_path):
-    from pyspark.storagelevel import StorageLevel
-
+def test_chain_larger_preview_or_new_file_replaces_sample(spark, tmp_path):
     p = str(tmp_path / "t")
     _write(spark, p, 0)
     ch = Chain().add("source", path=p)
     ch.example_dataset(spark, max_input_rows=10).to_df().collect()
     small = _sample(spark, p)
-    ch.example_dataset(spark, max_input_rows=5).to_df().collect()
+    rows = ch.example_dataset(spark, max_input_rows=5).to_df().collect()
     assert _sample(spark, p) is small  # a smaller preview reuses the sample
+    assert [r.k for r in rows] == [small.rows.get(i).get(0) for i in range(5)]
     ch.example_dataset(spark, max_input_rows=50).to_df().collect()
     large = _sample(spark, p)
-    assert large is not small and large.rows == 50
-    assert small.df.storageLevel == StorageLevel.NONE
-    assert large.df.storageLevel != StorageLevel.NONE
+    assert large is not small and large.asked == 50 and large.rows.size() == 50
     _write(spark, p, 1000)
-    rows = ch.example_dataset(spark, max_input_rows=50).to_df().collect()
-    assert min(r.k for r in rows) >= 1000  # the new file's rows
+    df = ch.example_dataset(spark, max_input_rows=50).to_df()
+    assert _local(df)
+    assert min(r.k for r in df.collect()) >= 1000  # the new file's rows
     assert _sample(spark, p) is not large
-    assert large.df.storageLevel == StorageLevel.NONE
+    # a preview larger than the file holds every row
+    assert len(ch.example_dataset(spark, max_input_rows=500).to_df().collect()) == 200
 
 
 def test_plain_read_never_gets_preview_sample(spark, tmp_path):
@@ -220,19 +241,18 @@ def test_plain_read_never_gets_preview_sample(spark, tmp_path):
     _write(spark, p, 0)
     ch = Chain().add("source", path=p)
     assert len(ch.example_dataset(spark, max_input_rows=20).to_df().collect()) == 20
-    _write(spark, p, 1000)  # the old sample stays persisted until the next preview
+    _write(spark, p, 1000)  # the old sample stays on the driver until the next preview
     plain = spark.read.parquet(p).limit(20)
-    assert not _cached(plain)
+    assert "InMemoryRelation" not in plain._jdf.queryExecution().withCachedData().toString()
     assert sorted(r.k for r in plain.collect()) == list(range(1000, 1020))
 
 
-def test_concurrent_previews_leave_one_sample_persisted(spark, tmp_path, monkeypatch):
+def test_concurrent_previews_leave_one_sample(spark, tmp_path, monkeypatch):
     """Threads previewing one source at growing sizes race to replace its
-    sample; every replaced sample must end up unpersisted."""
+    sample; one sample of the largest size is left, and nothing is
+    persisted."""
     import sys
     import threading
-
-    from pyspark.storagelevel import StorageLevel
 
     p = str(tmp_path / "t")
     _write(spark, p, 0)
@@ -265,5 +285,70 @@ def test_concurrent_previews_leave_one_sample_persisted(spark, tmp_path, monkeyp
     finally:
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads) and not errors
-    live = [df for df in persisted if df.storageLevel != StorageLevel.NONE]
-    assert live == [_sample(spark, p).df]
+    # one sample, read for the largest size: a smaller read never replaces a larger one
+    assert _sample(spark, p).asked == 12 and persisted == []
+
+
+def test_calculate_and_filter_previews_over_a_sample_launch_no_job(spark):
+    ch = Chain().add("source", path=f"{SF}/lineitem.parquet")
+    ch.example_dataset(spark, max_input_rows=300).to_df().collect()  # reads the sample
+    ch.add("calculate", calculations={"rev": "=[l_extendedprice] * (1 - [l_discount])"})
+    rows, jobs = _jobs(spark, lambda: ch.example_dataset(spark, 300).to_df().collect(), "pv_calc")
+    assert len(rows) == 300 and jobs == 0
+    ch.add("filter", condition="=[l_quantity] > 25")
+    rows, jobs = _jobs(spark, lambda: ch.example_dataset(spark, 200).to_df().collect(), "pv_filt")
+    assert 0 < len(rows) < 200 and jobs == 0
+    assert all(r.l_quantity > 25 for r in rows)
+
+
+def test_dropped_session_releases_its_samples(spark, monkeypatch):
+    """A session nobody holds any more (a stopped one, or a dropped
+    ``newSession()``) is not kept alive by its samples."""
+    import gc
+    import weakref
+
+    from pyspark import RDD
+
+    from warp_spark.sources.parquet import _SESSIONS
+
+    # pyspark binds RDD.toDF to the newest session; put the fixture's back
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)
+    other = spark.newSession()
+    Chain().add("source", path=f"{SF}/nation.parquet").example_dataset(other, 5).to_df().collect()
+    assert other in _SESSIONS
+    gone = weakref.ref(other)
+    del other
+    spark.newSession()  # takes RDD.toDF, pyspark's own last hold on ``other``
+    gc.collect()
+    assert gone() is None
+    assert all(s is spark for s in _SESSIONS.keys())
+
+
+def _write_text(path, text):
+    # every rewrite below changes the size, so it is a new file version
+    # even within the file system's mtime granularity
+    with open(path, "w") as f:
+        f.write(text)
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json"])
+def test_text_source_previews_read_sample_once_per_version(spark, tmp_path, fmt):
+    p = str(tmp_path / f"t.{fmt}")
+
+    def rows_text(keys):
+        if fmt == "csv":
+            return "k,name\n" + "".join(f"{k},n{k}\n" for k in keys)
+        return "[" + ",".join(f'{{"k": {k}, "name": "n{k}"}}' for k in keys) + "]"
+
+    _write_text(p, rows_text(range(30)))
+    ch = Chain().add("source", path=p, format=fmt)
+    first = ch.example_dataset(spark, max_input_rows=10).to_df()
+    assert _local(first)
+    assert [r.k for r in first.collect()] == list(range(10))
+    ch.add("calculate", calculations={"k2": "=[k] * 2"})
+    rows, jobs = _jobs(spark, lambda: ch.example_dataset(spark, 8).to_df().collect(), f"pv_{fmt}")
+    assert [r.k2 for r in rows] == [2 * k for k in range(8)] and jobs == 0
+    _write_text(p, rows_text(range(500, 540)))
+    rows = ch.example_dataset(spark, max_input_rows=10).to_df().collect()
+    assert [r.k for r in rows] == list(range(500, 510))
+    assert sorted(r.k for r in ch.dataframe(spark).collect()) == list(range(500, 540))

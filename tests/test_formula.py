@@ -331,3 +331,68 @@ def test_sequencer_dataframe(spark):
     df = sq.sequencer_dataframe(spark, "[a-c][0-1]")
     got = sorted(r["value"] for r in df.collect())
     assert got == ["a0", "a1", "b0", "b1", "c0", "c1"]
+
+
+# --- compiled-Column memo --------------------------------------------------
+
+
+def _py4j_calls(spark, monkeypatch):
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    real = client.send_command
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return calls
+
+
+def test_formula_memo_hit_makes_no_py4j_call(spark, monkeypatch):
+    text = "=[memo_a] * (1 - [memo_b]) + length([memo_c])"
+    first = formula(text)
+    calls = _py4j_calls(spark, monkeypatch)
+    again = formula(text)
+    assert again is first and calls == []
+    assert feval(spark, "=3 * 2") == 6  # a memoized Column still evaluates
+
+
+@pytest.mark.parametrize(
+    "text", ["=RAND()", "=RANDBETWEEN(1; 6)", "=UUID()", "=NOW()", '=RANDSTRING("[ab]{4}")',
+             "=[x] + RAND()"]
+)
+def test_volatile_formula_compiles_anew_each_call(spark, text):
+    a, b = formula(text), formula(text)
+    assert a is not b
+    if "RAND" in text and "STRING" not in text:  # a new Column draws a new seed
+        assert str(a) != str(b)
+
+
+def test_random_formula_draws_new_values_each_compile(spark):
+    df = spark.range(50)
+    a = [r[0] for r in df.select(formula("=RAND()")).collect()]
+    b = [r[0] for r in df.select(formula("=RAND()")).collect()]
+    assert a != b
+
+
+def test_formula_memo_keys_on_locale(spark):
+    # en: "," groups thousands, so this is [x] > 300; nl: it is [x] > 30.0
+    en, nl = formula("[x] > 30,0", locale="en"), formula("[x] > 30,0", locale="nl")
+    assert en is not nl
+    df = spark.createDataFrame([(100,)], "x long")
+    assert df.select(en.alias("v")).collect()[0].v is False
+    assert df.select(nl.alias("v")).collect()[0].v is True
+    assert formula("[x] > 30,0", locale="nl") is nl
+
+
+def test_formula_memo_bypassed_by_non_default_context(spark):
+    text = "=[a] + 1"
+    base = formula(text)
+    assert formula(text, sibling=lambda n: F.col(n)) is not base
+    assert formula("=[a] + #[b]", foreign=F.col) is not formula("=[a] + #[b]", foreign=F.col)
+    ident = F.lit(2)
+    assert formula("=@ * 2", identity=ident) is not formula("=@ * 2", identity=ident)
+    assert feval(spark, "=@ * 2", identity=ident) == 4
+    loc = fm.LOCALES["nl"]
+    assert formula(text, locale=loc) is not formula(text, locale=loc)

@@ -16,7 +16,9 @@ Design notes (Spark-first, 100 TB aware):
   coordination point, so it is opt-in, never automatic.
 - No driver-side collects except ``transpose`` (inherently small-data,
   guarded by a row cap — mirrors the reference, which only implements
-  it on the in-memory raster, Raster.swift:657-694).
+  it on the in-memory raster, Raster.swift:657-694) and the preview
+  sample of a chain source (bounded by the preview size, kept in the
+  JVM; warp_spark.sources.parquet).
 """
 
 from __future__ import annotations

@@ -35,6 +35,7 @@ numerically when both sides coerce to numbers and as strings otherwise,
 from __future__ import annotations
 
 import base64
+import functools
 import re
 from dataclasses import dataclass, field
 from typing import Callable, Mapping, Optional, Sequence, Union
@@ -729,10 +730,27 @@ def formula(
     identity: Optional[Column] = None,
     locale: Union[str, Locale, None] = None,
 ) -> Column:
-    """Parse + compile a formula string to a Column."""
+    """Parse + compile a formula string to a Column.
+
+    With ``sibling``/``foreign``/``identity`` at their defaults the
+    Column is memoized by (text, locale): a Column is an unresolved,
+    immutable expression tree, so one serves every plan it is used in.
+    A formula that calls a volatile function (``random``, ``now``,
+    ``uuid``, …) gets a new Column, and so a new seed, on every call."""
+    if sibling is F.col and foreign is None and identity is None and not isinstance(locale, Locale):
+        node, column = _memo(text, locale)
+        return column if column is not None else to_column(node)
     return to_column(
         parse(text, locale=locale), sibling=sibling, foreign=foreign, identity=identity
     )
+
+
+@functools.lru_cache(maxsize=1024)
+def _memo(text: str, locale: Optional[str]) -> tuple[Node, Optional[Column]]:
+    from warp_spark.optimize import _has_nondeterministic
+
+    node = parse(text, locale=locale)
+    return node, None if _has_nondeterministic(node) else to_column(node)
 
 
 # ---------------------------------------------------------------------------

@@ -12,13 +12,15 @@ for the whole chain, so cross-step optimization (filter pushdown through
 calculates, projection pruning, limit combining — everything the
 reference's CoalescedDataset did by hand, Data.swift:375-755) is free.
 
-Previews (``example_dataset``) read each parquet source through a
-per-session sample (warp_spark.sources.parquet): the first ``N`` rows,
-``N`` the largest preview size asked for so far, persisted once per file
-version. The source rows of a preview therefore stay the same from one
-edit to the next, and the sample is refreshed when the file changes
-(like the reference's example cache, QBECacheStep.swift:100-140). Full
-runs read the file itself.
+Previews (``example_dataset``) read each parquet, csv or json source
+through a per-session, driver-local sample (warp_spark.sources.parquet):
+the first ``N`` rows, ``N`` the largest preview size asked for so far,
+read once per file version. The source rows of a preview therefore stay
+the same from one edit to the next, and the sample is refreshed when the
+file changes (like the reference's example cache,
+QBECacheStep.swift:100-140). Each preview is a local relation over the
+first ``n`` of those rows, which Catalyst folds projections, filters
+and limits into without a Spark job. Full runs read the file itself.
 
 Steps are plain dicts (kind + params), so chains serialize to/from JSON
 like the reference's saved documents. Expressions may be given as Warp
@@ -135,27 +137,12 @@ class Chain:
         kind = st.pop("kind")
 
         if kind == "source":
-            fmt = st.get("format", "parquet")
-            path = st["path"]
-            if fmt == "parquet":
-                if example_rows is not None:
-                    from warp_spark.sources import preview_parquet
+            from warp_spark.sources import preview_source, read_source
 
-                    return Dataset(preview_parquet(spark, path, example_rows))
-                out = Dataset.from_parquet(spark, path)
-            elif fmt == "csv":
-                from warp_spark.sources import read_csv
-
-                out = Dataset(read_csv(spark, path, **st.get("options", {})))
-            elif fmt == "json":
-                from warp_spark.sources import read_json
-
-                out = Dataset(read_json(spark, path, **st.get("options", {})))
-            else:
-                raise ValueError(f"unknown source format {fmt!r}")
+            fmt, options = st.get("format", "parquet"), st.get("options")
             if example_rows is not None:
-                out = out.limit(example_rows)
-            return out
+                return Dataset(preview_source(spark, st["path"], example_rows, fmt, options))
+            return Dataset(read_source(spark, st["path"], fmt, options))
 
         if kind == "sequencer":
             from warp_spark.sequencer import sequencer_dataframe

@@ -1,53 +1,42 @@
-"""Parquet reads that touch each file version once per session.
+"""Source reads that touch each file version once per session.
 
 Reference: a step's ``exampleDataset`` runs the chain over a truncated
 source (QBEStep.swift:98-116), and the app keeps that example data in
 memory between edits (QBECacheStep.swift:100-140).
 
-Spark-first mapping, two per-session memos keyed by *file version*:
+Spark-first mapping, two per-session memos keyed by *file version*: a
+stamp of ``(relpath, size, mtime_ns)`` for every file under the path,
+plus the whole SQL conf (``spark.sql.parquet.binaryAsString`` and the
+like change what a read returns).
 
 - **Schema.** ``spark.read.parquet`` runs a schema-inference job on
-  every call. The inferred schema is kept per (path, SQL conf) with a
-  stamp of ``(relpath, size, mtime_ns)`` for every file under the path;
-  while the stamp holds, ``spark.read.schema(memo).parquet(path)`` skips
-  that job. The whole SQL conf is part of the key, because settings such
-  as ``spark.sql.parquet.binaryAsString`` change what inference returns.
-- **Preview sample.** A preview reads ``limit(N)`` of a source, N the
-  largest preview size asked for so far, persisted once per file version
-  and tagged with a marker column whose value is unique to that sample
-  (plan matching erases column names, not literals). Each preview
-  selects every source column of the sample under a new alias
-  (``selectExpr("`c` AS `c`", …)``), then ``limit(n)``: the
-  CacheManager substitutes the cached rows, the aliases drop the marker,
-  and every preview read gets its own exprIds, so a self-join of one
-  source stays unambiguous. The marker keeps any other plan — a plain
-  ``read.limit(N)`` included — from ever matching a sample, which is
-  what keeps a stale sample out of reads of a rewritten file. A sample
-  stays persisted until its file or the SQL conf changes (the next
-  preview then unpersists it) or the session ends.
+  every call; while the stamp holds, ``spark.read.schema(memo)`` skips it.
+- **Preview sample.** The first N rows of a parquet, csv or json source,
+  N the largest preview size asked for so far, kept on the driver per
+  (format, options, path) by ``collectAsList`` (JVM-side: no row crosses
+  into Python). Each preview is a new ``LocalRelation`` over the first
+  ``n`` of them: it has its own exprIds (a self-join of one source stays
+  unambiguous), no other read can see it, and Catalyst's
+  ``ConvertToLocalRelation`` folds projections, filters and limits over
+  it at optimisation time, so such previews launch no Spark job.
 
 Only local paths the driver can ``os.stat`` are memoized; anything else
-(``hdfs:``/``s3a:`` URIs, globs, relative paths) is read exactly as
-``spark.read.parquet`` reads it.
+(``hdfs:``/``s3a:`` URIs, globs, relative paths) is read as the plain
+reader reads it.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
 import stat
 import threading
+import weakref
 from dataclasses import dataclass
-from typing import Optional
+from typing import Any, Optional
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.storagelevel import StorageLevel
-
-_MARKERS = itertools.count()
-_LOCK = threading.Lock()
 
 
 def _local_stamp(path: str) -> Optional[tuple]:
@@ -78,20 +67,38 @@ def _sql_conf(spark: SparkSession) -> str:
     return spark._jsparkSession.sessionState().conf().getAllConfs().toString()
 
 
+def read_source(
+    spark: SparkSession, path: str, fmt: str = "parquet", options: Optional[dict] = None
+) -> DataFrame:
+    """A parquet, csv or json source; ``options`` go to the csv/json
+    reader (warp_spark.sources.csv/json)."""
+    if fmt == "parquet":
+        return read_parquet(spark, path)
+    if fmt not in ("csv", "json"):
+        raise ValueError(f"unknown source format {fmt!r}")
+    from warp_spark.sources import read_csv, read_json
+
+    return (read_csv if fmt == "csv" else read_json)(spark, path, **(options or {}))
+
+
 @dataclass
 class _Sample:
     version: tuple
-    rows: int
-    columns: list[str]
-    df: DataFrame
+    asked: int  # the N the rows were read for; the file may hold fewer
+    rows: Any  # java.util.List[Row]
+    schema: Any  # the JVM StructType of the rows
 
 
 class _SessionReads:
-    """One session's memos: schemas by (path, conf), samples by path."""
+    """One session's memos: schemas by (path, conf), samples by
+    (format, options, path)."""
 
     def __init__(self):
         self.schemas: dict[tuple[str, str], tuple[tuple, T.StructType]] = {}
-        self.samples: dict[str, _Sample] = {}
+        self.samples: dict[tuple, _Sample] = {}
+        # one sample read at a time: a concurrent preview of the same
+        # source waits for the rows instead of reading them again
+        self.lock = threading.Lock()
 
     def read(self, spark: SparkSession, path: str, stamp: tuple, conf: str) -> DataFrame:
         hit = self.schemas.get((path, conf))
@@ -101,32 +108,21 @@ class _SessionReads:
         self.schemas[(path, conf)] = (stamp, df.schema)
         return df
 
-    def sample(self, spark: SparkSession, path: str, version: tuple, rows: int) -> _Sample:
-        # check-then-replace under the lock: two threads must not both
-        # persist a sample and leave one cached with no entry to unpersist it
-        with _LOCK:
-            s = self.samples.get(path)
-            if (
-                s is not None
-                and s.version == version
-                and s.rows >= rows
-                and s.df.storageLevel != StorageLevel.NONE  # not dropped by clearCache
-            ):
+    def sample(self, spark, key: tuple, version: tuple, rows: int) -> _Sample:
+        with self.lock:
+            s = self.samples.get(key)
+            if s is not None and s.version == version and s.asked >= rows:
                 return s
-            if s is not None:
-                if s.version == version:
-                    rows = max(rows, s.rows)
-                s.df.unpersist()
-            read = self.read(spark, path, *version)
-            marker = next(_MARKERS)
-            df = read.limit(rows).withColumn(f"__warp_sample_{marker}", F.lit(marker))
-            s = self.samples[path] = _Sample(version, rows, read.columns, df.persist())
+            fmt, options, path = key
+            jdf = read_source(spark, path, fmt, dict(options)).limit(rows)._jdf
+            s = self.samples[key] = _Sample(version, rows, jdf.collectAsList(), jdf.schema())
             return s
 
 
-# keyed by the session object: a stopped session's successor is a new
-# object, so it never sees samples persisted in the old one
-_SESSIONS: dict[SparkSession, _SessionReads] = {}
+# weakly keyed by the session object: a session nobody holds any more
+# takes its samples with it, and a stopped session's successor is a new
+# object that never sees them
+_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _session(spark: SparkSession) -> _SessionReads:
@@ -142,16 +138,18 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return _session(spark).read(spark, path, stamp, _sql_conf(spark))
 
 
-def preview_parquet(spark: SparkSession, path: str, rows: int) -> DataFrame:
-    """The first ``rows`` rows of a parquet source, served from the
-    session's persisted sample of that file version. The rows stay the
-    same from one preview to the next until the file changes."""
+def preview_source(
+    spark: SparkSession, path: str, rows: int, fmt: str = "parquet", options: Optional[dict] = None
+) -> DataFrame:
+    """The first ``rows`` rows of a parquet, csv or json source (read
+    with ``options``), served from the session's driver-local sample of
+    that file version. The rows stay the same from one preview to the
+    next until the file changes."""
     stamp = _local_stamp(path)
     if stamp is None:
-        return spark.read.parquet(path).limit(rows)
-    s = _session(spark).sample(spark, path, (stamp, _sql_conf(spark)), rows)
-    # re-aliasing gives this read its own exprIds (a self-join of one
-    # source stays unambiguous) and drops the marker in the same step;
-    # one selectExpr call is ~3x cheaper than building Columns one by one
-    names = ["`" + c.replace("`", "``") + "`" for c in s.columns]
-    return s.df.selectExpr(*[f"{n} AS {n}" for n in names]).limit(rows)
+        return read_source(spark, path, fmt, options).limit(rows)
+    key = (fmt, tuple(sorted((options or {}).items())), path)
+    s = _session(spark).sample(spark, key, (stamp, _sql_conf(spark)), rows)
+    # a new relation per preview: its own exprIds, and nothing to re-alias
+    head = s.rows.subList(0, min(rows, s.rows.size()))
+    return DataFrame(spark._jsparkSession.createDataFrame(head, s.schema), spark)
