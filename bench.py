@@ -200,18 +200,18 @@ def _regression_report(detail: dict, here: str, rnd: int, cpus: str) -> None:
     of the two recorded spreads are flagged as noise-explainable.
     Informational only — never fails the bench.
 
-    Detail files come in two vintages: the legacy ``_rNN.json`` name
-    and the r15+ ``_rNN_cNN.json`` name that keys the core count into
-    the filename (VERDICT r14 item 2 — same-round runs at different
-    core counts used to overwrite each other's per-query map).  Prefer
-    a prior detail at the SAME core count (core-sensitive entries are
-    only comparable like-for-like); fall back to any vintage."""
+    Detail files are named ``BENCH_DETAIL_rNN_cNN.json``, keying the
+    core count into the name (VERDICT r14 item 2 — same-round runs at
+    different core counts used to overwrite each other's per-query map).
+    Prefer a prior detail at the SAME core count (core-sensitive entries
+    are only comparable like-for-like); fall back to the newest prior
+    round's detail at another core count."""
     import glob
 
     prior = sorted(
-        (int(m.group(1)), m.group(2) == f"_c{cpus}", p)
-        for p in glob.glob(os.path.join(here, "BENCH_DETAIL_r*.json"))
-        if (m := re.search(r"_r(\d+)(_c\w+)?\.json$", p)) and int(m.group(1)) < rnd
+        (int(m.group(1)), m.group(2) == cpus, p)
+        for p in glob.glob(os.path.join(here, "BENCH_DETAIL_r*_c*.json"))
+        if (m := re.search(r"_r(\d+)_c(\w+)\.json$", p)) and int(m.group(1)) < rnd
     )
     if not prior:
         return

@@ -176,11 +176,11 @@ def test_append_refuses_redelivered_slice(spark, tmp_path):
 
 
 def test_publish_artifact_concurrent_builders_do_not_clobber(tmp_path):
-    """Two _publish_artifact calls racing on the same path must each
+    """Two publish_artifact calls racing on the same path must each
     complete and leave ONE winner's consistent tree (r12 ADVICE: the
     old fixed '.build' sibling let builder B rmtree builder A's
     in-progress scratch).  Build bodies deliberately overlap in time."""
-    from warp_spark.catalog import _publish_artifact
+    from warp_spark.artifacts import publish_artifact
 
     path = str(tmp_path / "art")
     errs: list = []
@@ -192,7 +192,7 @@ def test_publish_artifact_concurrent_builders_do_not_clobber(tmp_path):
             time.sleep(0.3)  # keep both scratch trees alive at once
 
         try:
-            _publish_artifact(path, "_DONE", f"stamp-{tag}", body)
+            publish_artifact(path, "_DONE", f"stamp-{tag}", body)
         except Exception as e:  # pragma: no cover - the failure we pin
             errs.append(e)
 
@@ -262,11 +262,11 @@ def test_dedup_index_delete_entry_takes_the_fast_path(spark):
     import os
 
     import __spark_entry__ as m
-    import warp_spark.catalog as cat
+    from warp_spark.artifacts import artifact_path
 
     sf = "/root/testdata/sf0.001"
     m.queries()["dedup_index_delete"](spark, sf).count()
-    path = cat._artifact_path("warp_dedup_idxdel_v1", sf)
+    path = artifact_path("warp_dedup_idxdel_v1", sf)
     with open(os.path.join(path, "_INDEX_COMPLETE")) as f:
         assert "deleted" in f.read()
 
@@ -489,3 +489,245 @@ def test_delete_from_bm25_index_refuses_zero_token_rows(spark, tmp_path):
     # the refused deletes wrote NOTHING
     assert spark.read.parquet(f"{p}/postings").count() == n_post
     assert int(spark.read.parquet(f"{p}/stats").first()["n_docs"]) == 10
+
+
+def _tree(path):
+    """relpath -> bytes of every file under ``path``."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            with open(full, "rb") as f:
+                out[os.path.relpath(full, path)] = f.read()
+    return out
+
+
+def test_build_that_raises_leaves_previous_tree_and_marker(tmp_path):
+    """A failed rebuild never touches the published artifact: tree and
+    marker stay byte-identical and no scratch or trash sibling is left."""
+    from warp_spark.artifacts import ensure, read_marker
+
+    path = str(tmp_path / "art")
+
+    def build_v1(tmp):
+        os.makedirs(os.path.join(tmp, "sub"))
+        with open(os.path.join(tmp, "sub", "part-0.parquet"), "wb") as f:
+            f.write(b"v1 payload")
+
+    assert ensure(path, "_X_COMPLETE", "v1", build_v1) == (path, "v1")
+    before = _tree(path)
+
+    def build_fails(tmp):
+        with open(os.path.join(tmp, "half-written"), "wb") as f:
+            f.write(b"partial")
+        raise RuntimeError("injected build failure")
+
+    with pytest.raises(RuntimeError, match="injected"):
+        ensure(path, "_X_COMPLETE", "v2", build_fails)
+    assert _tree(path) == before
+    assert read_marker(path, "_X_COMPLETE") == "v1"
+    assert not [n for n in os.listdir(tmp_path) if ".build." in n or ".trash." in n]
+    # an ensure at the current stamp does not build at all
+    assert ensure(path, "_X_COMPLETE", "v1", build_fails) == (path, "v1")
+
+
+def test_refused_mutation_publishes_the_rebuild_label(tmp_path):
+    from warp_spark.artifacts import mutate, publish_artifact, read_marker
+
+    path = str(tmp_path / "art")
+
+    def write(tag):
+        def build(tmp):
+            with open(os.path.join(tmp, "data"), "w") as f:
+                f.write(tag)
+
+        return build
+
+    publish_artifact(path, "_X_COMPLETE", "base", write("base"))
+    seen = []
+
+    def refuse():
+        seen.append(read_marker(path, "_X_COMPLETE"))
+        return False
+
+    mutate(
+        path, "_X_COMPLETE", "mutating", refuse, "mutated", write("rebuilt"), "rebuilt (refused)"
+    )
+    assert seen == ["mutating"]  # the sentinel is in place while apply runs
+    assert read_marker(path, "_X_COMPLETE") == "rebuilt (refused)"
+    with open(os.path.join(path, "data")) as f:
+        assert f.read() == "rebuilt"
+    # without a rebuild label the rebuild carries the final label
+    mutate(path, "_X_COMPLETE", "mutating", lambda: False, "final", write("again"))
+    assert read_marker(path, "_X_COMPLETE") == "final"
+
+
+def test_memo_stamp_skips_the_cache_for_an_unstatable_source(tmp_path):
+    from warp_spark.artifacts import memo_stamp
+
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return f"stamp-{len(calls)}"
+
+    missing = str(tmp_path / "absent.parquet")
+    assert memo_stamp("k_absent", missing, compute) == "stamp-1"
+    assert memo_stamp("k_absent", missing, compute) == "stamp-2"
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"abc")
+    assert memo_stamp("k_file", str(src), compute) == "stamp-3"
+    assert memo_stamp("k_file", str(src), compute) == "stamp-3"  # memo hit
+    src.write_bytes(b"abcd")
+    assert memo_stamp("k_file", str(src), compute) == "stamp-4"
+
+
+def _crc(path):
+    """Hadoop's checksum sidecar of a local file."""
+    return os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+
+
+def _jobs(spark, fn, tag):
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_second_ensure_on_an_unchanged_source_launches_no_job(spark, tmp_path, monkeypatch):
+    """The fingerprint memo: on an unchanged sf dir a second
+    _ensure_tdigest and _ensure_graph_edges run no Spark job at all; an
+    in-place rewrite of a part file re-fingerprints and rebuilds."""
+    import glob
+    import shutil
+    import tempfile
+
+    import warp_spark.catalog as cat
+    from warp_spark.artifacts import read_marker
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "artifacts"))
+    os.makedirs(tempfile.tempdir)
+    sf = str(tmp_path / "sf")
+    schema = "l_orderkey long, l_partkey long, l_extendedprice double, l_returnflag string"
+
+    def lineitem(rows, dst):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(dst)
+
+    lineitem([(1, 10, 5.25, "A"), (1, 11, 7.5, "N"), (2, 11, 3.0, "A")], f"{sf}/lineitem.parquet")
+    first = (cat._ensure_tdigest(spark, sf), cat._ensure_graph_edges(spark, sf))
+    stamps = (
+        read_marker(first[0], "_SKETCH_COMPLETE"),
+        read_marker(first[1], "_EDGES_COMPLETE"),
+    )
+    for tag, fn in (
+        ("memo_tdigest", lambda: cat._ensure_tdigest(spark, sf)),
+        ("memo_edges", lambda: cat._ensure_graph_edges(spark, sf)),
+    ):
+        _, n = _jobs(spark, fn, tag)
+        assert n == 0, tag
+
+    # rewrite the one part file (and its checksum) in place: same
+    # names, new content
+    lineitem([(1, 10, 6.25, "A"), (1, 12, 7.5, "N"), (2, 11, 3.0, "A")], str(tmp_path / "new"))
+    (part,) = glob.glob(f"{sf}/lineitem.parquet/part-*.parquet")
+    (new_part,) = glob.glob(str(tmp_path / "new" / "part-*.parquet"))
+    for src, dst in ((new_part, part), (_crc(new_part), _crc(part))):
+        shutil.copyfile(src, dst)
+    _, n = _jobs(spark, lambda: cat._ensure_tdigest(spark, sf), "memo_rewritten")
+    assert n > 0
+    assert read_marker(first[0], "_SKETCH_COMPLETE") != stamps[0]
+    assert read_marker(cat._ensure_graph_edges(spark, sf), "_EDGES_COMPLETE") != stamps[1]
+
+
+def _documents_dir(spark, root):
+    """An sf dir holding only a small ``documents`` table: 80 docs in ten
+    near-duplicate families (doc_id % 10) over the BM25 query terms, so
+    every probe slice has hits."""
+    sf = os.path.join(str(root), "sf")
+    words = "hash join stream window agg slow query scan alpha beta".split()
+    rows = [
+        (i, " ".join(words[i % 10 :] + words[: i % 10] + [f"tok{i % 10}", f"v{i // 10}"]))
+        for i in range(80)
+    ]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        f"{sf}/documents.parquet"
+    )
+    return sf
+
+
+@pytest.mark.parametrize(
+    "family, verb",
+    [
+        ("dedup", "warp_spark.pipeline.dedup.append_dedup_index"),
+        ("bm25", "warp_spark.pipeline.text.append_bm25_index"),
+    ],
+)
+def test_append_that_raises_leaves_the_sentinel_and_the_next_ensure_rebuilds(
+    spark, tmp_path, monkeypatch, family, verb
+):
+    """A mutation that dies after the sentinel is written leaves the
+    marker at the sentinel (never at a stamp), so the next ensure
+    rebuilds instead of appending twice — and probes the same rows as
+    the one-shot index."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    import warp_spark.catalog as cat
+    from warp_spark.artifacts import artifact_path, read_marker
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = _documents_dir(spark, tmp_path)
+    appended = getattr(cat, f"_ensure_{family}_index_appended")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected mutation failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(verb, crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            appended(spark, sf)
+    path = artifact_path(f"warp_{family}_idxapp_v1", sf)
+    assert read_marker(path, "_INDEX_COMPLETE") == "appending"
+
+    assert appended(spark, sf) == path
+    assert read_marker(path, "_INDEX_COMPLETE").startswith(f"{family}app base n=")
+    docs = cat._t(spark, sf, "documents").to_df()
+    if family == "dedup":
+        batch = docs.filter(F.col("doc_id") % 20 >= 16)
+        got = cat._dedup_probe(spark, path, batch).collect()
+        want = cat._dedup_probe(spark, cat._ensure_dedup_index(spark, sf), batch).collect()
+        assert any(r["is_dup"] for r in got)
+    else:
+        from warp_spark.pipeline.text import bm25_index_probe
+
+        got = bm25_index_probe(spark, path, cat._BM25_QUERIES, k=10).collect()
+        want = bm25_index_probe(
+            spark, cat._ensure_bm25_index(spark, sf), cat._BM25_QUERIES, k=10
+        ).collect()
+    assert sorted(map(str, got)) == sorted(map(str, want)) and len(got) > 0
+
+
+def test_refused_catalog_delete_publishes_the_rebuild(spark, tmp_path, monkeypatch):
+    """dedup_index_delete with its delete verb refusing: the entry
+    publishes the rebuild over the remaining corpus, labelled as such,
+    and answers with the same rows as the fast path."""
+    import tempfile
+
+    import __spark_entry__ as m
+    from warp_spark.artifacts import artifact_path, read_marker
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = _documents_dir(spark, tmp_path)
+    entry = m.queries()["dedup_index_delete"]
+    fast = sorted(map(str, entry(spark, sf).collect()))
+    path = artifact_path("warp_dedup_idxdel_v1", sf)
+    assert "deleted" in read_marker(path, "_INDEX_COMPLETE")
+    monkeypatch.setattr(
+        "warp_spark.pipeline.dedup.delete_from_dedup_index", lambda *a, **k: False
+    )
+    assert sorted(map(str, entry(spark, sf).collect())) == fast and fast
+    assert read_marker(path, "_INDEX_COMPLETE") == "delete rebuilt (refused)"

@@ -614,8 +614,8 @@ def test_dedup_index_compact_preserves_content_and_collapses_files(spark):
 
     import shutil
 
+    from warp_spark.artifacts import artifact_path
     from warp_spark.catalog import (
-        _dedup_append_path,
         _ensure_dedup_index_appended,
         _t,
     )
@@ -624,7 +624,7 @@ def test_dedup_index_compact_preserves_content_and_collapses_files(spark):
     # force a FRESH base+append state: a prior compaction leaves the
     # (content-identical) one-file layout behind, which would void the
     # small-files precondition below
-    stale = _dedup_append_path(SF)
+    stale = artifact_path("warp_dedup_idxapp_v1", SF)
     if os.path.exists(stale):
         shutil.rmtree(stale)
     path = _ensure_dedup_index_appended(spark, SF)
@@ -663,15 +663,17 @@ def test_bm25_and_ann_compact_preserve_probe_results(spark):
     import shutil
 
     import __spark_entry__ as m
+    from warp_spark.artifacts import artifact_path
     from warp_spark.catalog import (
-        _ann_append_path,
-        _bm25_append_path,
         _ensure_ann_index_appended,
         _ensure_bm25_index_appended,
     )
 
     # bm25: fresh append state → multi-file buckets → compact → 1 file
-    for p in (_bm25_append_path(SF), _ann_append_path(SF)):
+    for p in (
+        artifact_path("warp_bm25_idxapp_v1", SF),
+        artifact_path("warp_ann_idxapp_v1", SF),
+    ):
         if os.path.exists(p):
             shutil.rmtree(p)
     bpath = _ensure_bm25_index_appended(spark, SF)

@@ -2946,7 +2946,7 @@ def test_persist_edges_roundtrip_and_content_stamp(spark, tmp_path):
     # and the rebuilt artifact reflects the NEW content
     got2 = sorted(
         (r["src"], r["dst"])
-        for r in load_edges(spark, cat._graph_edges_path(sf)).collect()
+        for r in load_edges(spark, cat._ensure_graph_edges(spark, sf)).collect()
     )
     assert got2 == [(10, 12)]
 

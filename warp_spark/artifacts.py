@@ -1,15 +1,23 @@
-"""Shared on-disk artifact publication discipline.
+"""The one lifecycle of every persisted artifact (dedup minhash bands,
+BM25 postings, IVF-PQ codes, graph edge/wedge censuses, t-digest
+sketches): stamp → ensure → publish → mutate.
 
-Every persisted index/artifact in this repo (dedup minhash bands, BM25
-postings, IVF-PQ codes, graph edge/wedge censuses, t-digest sketches)
-follows the same lifecycle: build into a UNIQUE sibling tmp directory,
-then atomically swap the finished tree into place under an exclusive
-flock.  Both the catalog's ``_publish_artifact`` and the pipeline
-modules' compaction finishers route through the two helpers here so the
-lock and swap-window semantics are identical everywhere (r12 verdict
-item 2 / r12 ADVICE: the compaction legs previously re-implemented the
-swap without the flock, and the publish path built into a FIXED sibling
-tmp that two concurrent builders would clobber).
+- **Stamp.** :func:`memo_stamp` names the artifact's inputs: a content
+  fingerprint of its source table, computed by a Spark aggregate and
+  memoized per source file version within the process.
+- **Ensure.** :func:`ensure` compares the stamp with the artifact's
+  completion marker and publishes a fresh build when they differ.
+- **Publish.** :func:`publish_artifact` builds into a unique sibling
+  scratch directory, writes the marker last inside it, and swaps the
+  finished tree into place under an exclusive flock.
+- **Mutate.** :func:`mutate` changes a published artifact in place
+  (append, delete, compact): the marker holds a sentinel while the
+  mutation runs, so a crash leaves a marker that matches no stamp and
+  the next :func:`ensure` rebuilds; a mutation that refuses publishes a
+  rebuild instead.
+
+The pipeline modules' mutation verbs and compaction finishers share the
+same lock and swap (:func:`index_mutation`, :func:`swap_artifact_dir`).
 
 Swap-window note: POSIX cannot atomically exchange two directories from
 Python (``renameat2(RENAME_EXCHANGE)`` is not exposed), so the swap is
@@ -25,16 +33,119 @@ from __future__ import annotations
 import contextlib
 import fcntl
 import functools
+import hashlib
 import os
 import shutil
 import tempfile
 
+from warp_spark.sources.parquet import _local_stamp
+
 __all__ = [
+    "artifact_path",
+    "memo_stamp",
+    "read_marker",
+    "publish_artifact",
+    "ensure",
+    "mutate",
+    "copy_artifact",
     "unique_sibling_tmp",
     "swap_artifact_dir",
     "index_mutation",
     "locked_mutation",
 ]
+
+
+def artifact_path(prefix: str, sf_dir: str) -> str:
+    """Shared-tempdir location of a persisted per-dataset artifact.  The
+    name keys on a hash of the absolute ``sf_dir``, so two datasets that
+    share a basename never rebuild each other's artifact; the basename
+    stays in the name for debugging."""
+    ap = os.path.abspath(os.path.normpath(sf_dir))
+    h = hashlib.sha256(ap.encode("utf-8")).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"{prefix}_{os.path.basename(ap)}_{h}")
+
+
+_STAMPS: dict = {}
+
+
+def memo_stamp(key: str, src: str, compute) -> str:
+    """The stamp ``compute()`` returns for the source at ``src``,
+    memoized under ``key`` per file version of ``src`` (size and mtime of
+    every file under it) within the process.  The fingerprint scan is
+    what detects a source change, but while no file changed its answer
+    cannot have either.  A source the driver cannot stat is
+    fingerprinted on every call and never cached."""
+    version = _local_stamp(os.path.abspath(src))
+    if version is None:
+        return compute()
+    hit = _STAMPS.get(key)
+    if hit is not None and hit[0] == version:
+        return hit[1]
+    stamp = compute()
+    _STAMPS[key] = (version, stamp)
+    return stamp
+
+
+def read_marker(path: str, marker: str) -> str | None:
+    """The text of the artifact's completion marker, or None."""
+    try:
+        with open(os.path.join(path, marker)) as f:
+            return f.read().strip()
+    except FileNotFoundError:
+        return None
+
+
+def _write_marker(path: str, marker: str, text: str) -> None:
+    with open(os.path.join(path, marker), "w") as f:
+        f.write(text + "\n")
+
+
+def publish_artifact(path: str, marker: str, stamp: str, build) -> None:
+    """Build a fresh artifact and swap it into place: ``build(tmp)``
+    writes into a unique sibling scratch directory, the marker is written
+    last inside it, then the tree replaces ``path`` under the flock.  A
+    concurrent reader never sees a half-built tree and two concurrent
+    builders never share a scratch tree; a build that raises leaves the
+    published tree as it was."""
+    tmp = unique_sibling_tmp(path, tag="build")
+    try:
+        build(tmp)
+        _write_marker(tmp, marker, stamp)
+        swap_artifact_dir(path, tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+
+
+def ensure(path: str, marker: str, stamp: str, build, rebuild: bool = False) -> tuple:
+    """``(path, stamp)`` after publishing ``build`` unless the marker
+    already reads ``stamp``; ``rebuild`` publishes regardless.  The stamp
+    comes back so a dependent artifact can chain it into its own."""
+    if rebuild or read_marker(path, marker) != stamp:
+        publish_artifact(path, marker, stamp, build)
+    return path, stamp
+
+
+def mutate(path, marker, sentinel, apply, label, rebuild=None, rebuild_label=None) -> None:
+    """Change the published artifact at ``path`` in place.  The marker
+    reads ``sentinel`` while ``apply()`` runs and ``label`` after it
+    returns true; a sentinel matches no stamp, so a mutation that raises
+    leaves an artifact the next :func:`ensure` rebuilds rather than
+    mutates twice.  ``apply()`` returns false when the mutation refuses
+    (its preconditions do not hold); then ``rebuild`` is published under
+    ``rebuild_label`` (default ``label``)."""
+    _write_marker(path, marker, sentinel)
+    if apply():
+        _write_marker(path, marker, label)
+    else:
+        publish_artifact(path, marker, rebuild_label or label, rebuild)
+
+
+def copy_artifact(src: str, dst: str) -> None:
+    """Replace ``dst`` with a file-tree copy of the artifact at ``src`` —
+    the starting state of a demonstration that mutates the copy."""
+    shutil.rmtree(dst, ignore_errors=True)
+    shutil.copytree(src, dst)
 
 
 @contextlib.contextmanager

@@ -41,6 +41,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warp_spark.aggregators import Aggregator
+from warp_spark.artifacts import (
+    artifact_path,
+    copy_artifact,
+    ensure,
+    memo_stamp,
+    mutate,
+    publish_artifact,
+    read_marker,
+)
 from warp_spark.dataset import Dataset, Order
 from warp_spark.functions import call
 from warp_spark.localdf import small_rows_df
@@ -6745,8 +6754,6 @@ def dedup_neardup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     — nothing O(corpus) lives in the state store.  Same oracle as the
     batch entry: the streaming replay must reproduce the batch answer
     exactly."""
-    import glob as _glob
-    import os
     import shutil
     import tempfile
     import uuid
@@ -6782,6 +6789,13 @@ def dedup_neardup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("dup_of").alias("dup_of"),
         F.max("best_jaccard").alias("best_jaccard"),
     )
+    return _dup_rows(batch, hits)
+
+
+def _dup_rows(batch: DataFrame, hits: DataFrame) -> DataFrame:
+    """One row per batch doc with its lowest near-duplicate corpus id
+    (the dedup_incremental output shape) from ``(batch_id, dup_of,
+    best_jaccard)`` hits."""
     return (
         batch.select("doc_id")
         .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
@@ -6794,105 +6808,11 @@ def dedup_neardup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _artifact_path(prefix: str, sf_dir: str) -> str:
-    """Shared-tempdir location for a persisted per-dataset artifact.
-    The directory name keys on a HASH OF THE ABSOLUTE sf_dir, not just
-    its basename (r11 ADVICE): two different datasets both named
-    'sf0.01' previously thrash-rebuilt each other's artifact.  The
-    basename stays in the name for human debuggability."""
-    import hashlib
-    import os
-    import tempfile
+def _dedup_probe(spark: SparkSession, path: str, batch: DataFrame) -> DataFrame:
+    """``_dup_rows`` of ``batch`` probed against the dedup index at ``path``."""
+    from warp_spark.pipeline.dedup import dedup_index_probe
 
-    ap = os.path.abspath(os.path.normpath(sf_dir))
-    h = hashlib.sha256(ap.encode("utf-8")).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(), f"{prefix}_{os.path.basename(ap)}_{h}"
-    )
-
-
-def _source_stat_sig(src: str) -> tuple:
-    """File-stat signature of a parquet dataset used to memoize the
-    content-fingerprint SCAN: stats the part files INSIDE the dataset
-    directory, not just the top-level path (r11 ADVICE — an in-place
-    rewrite of a part file changes neither the directory's mtime nor
-    its size, so the old top-level stat could reuse a stale stamp)."""
-    import glob as _glob
-    import os
-
-    if os.path.isfile(src):
-        files = [src]
-    else:
-        files = sorted(
-            _glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-        ) or [src]
-    sig = []
-    for f in files:
-        # single stat per file; a part file deleted between glob and
-        # stat (concurrent rewrite) becomes a sentinel entry, so the
-        # signature MISMATCHES and the caller rebuilds — instead of a
-        # FileNotFoundError escaping every ensure helper (r12 ADVICE)
-        try:
-            st = os.stat(f)
-            sig.append((f, st.st_mtime_ns, st.st_size))
-        except FileNotFoundError:
-            sig.append((f, -1, -1))
-    return tuple(sig)
-
-
-_CONTENT_STAMP_CACHE: dict = {}
-
-
-def _memo_stamp(key: str, src: str, compute) -> str:
-    """Memoize a content-fingerprint STAMP per (key, source file-stat
-    signature) within the process — the _GRAPH_EDGES_FP_CACHE /
-    _TDIGEST_FP_CACHE pattern generalized (r14, guide §1.2): the
-    fingerprint scan is the honesty mechanism that detects source
-    changes, but re-running it on every entry invocation re-pays a
-    full source scan for an answer that cannot have changed while the
-    part files' stat signature is identical.  ``compute()`` runs the
-    actual fingerprint aggregation and returns the stamp string; it
-    re-runs exactly when a part file under ``src`` changes (mtime or
-    size — _source_stat_sig stats the files INSIDE the dataset, r11
-    ADVICE).  Never caches across processes: a fresh bench/driver run
-    always fingerprints once."""
-    stat_sig = _source_stat_sig(src)
-    cached = _CONTENT_STAMP_CACHE.get(key)
-    if cached is not None and cached[0] == stat_sig:
-        return cached[1]
-    stamp = compute()
-    _CONTENT_STAMP_CACHE[key] = (stat_sig, stamp)
-    return stamp
-
-
-def _publish_artifact(path: str, marker_name: str, stamp: str, build_fn) -> None:
-    """Race-proof artifact rebuild (r11 ADVICE): build into a UNIQUE
-    sibling scratch directory — the completion marker is written LAST,
-    inside it — then swap into place under an exclusive flock, so a
-    concurrent prober never observes a half-built directory and two
-    concurrent builders never clobber each other's in-progress tree
-    (r12 ADVICE: the old fixed ``.build`` sibling was shared).
-    ``build_fn(tmp_path)`` performs the Spark writes.  The swap itself
-    is the repo-wide ``swap_artifact_dir`` discipline (artifacts.py),
-    shared with the pipeline compaction finishers."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
-    tmp = unique_sibling_tmp(path, tag="build")
-    try:
-        build_fn(tmp)
-        with open(os.path.join(tmp, marker_name), "w") as f:
-            f.write(stamp + "\n")
-        swap_artifact_dir(path, tmp)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-
-
-def _dedup_index_path(sf_dir: str) -> str:
-    return _artifact_path("warp_dedup_idx_v1", sf_dir)
+    return _dup_rows(batch, dedup_index_probe(spark, path, batch, threshold=0.5))
 
 
 def _ensure_dedup_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
@@ -6902,12 +6822,8 @@ def _ensure_dedup_index(spark: SparkSession, sf_dir: str, rebuild: bool = False)
     (doc_id % 20 < 16, the dedup_incremental convention).  The stamp
     carries a content fingerprint (doc_id sum + crc32-of-text sum),
     so same-cardinality content changes rebuild."""
-    import os
-
     from warp_spark.pipeline.dedup import persist_dedup_index
 
-    path = _dedup_index_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     corpus = (
         _t(spark, sf_dir, "documents").to_df().filter(F.col("doc_id") % 20 < 16)
     )
@@ -6923,21 +6839,14 @@ def _ensure_dedup_index(spark: SparkSession, sf_dir: str, rebuild: bool = False)
             f"n_docs={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
         )
 
-    stamp = _memo_stamp(
-        f"dedup_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: persist_dedup_index(corpus, tmp),
-        )
-    return path
+    stamp = memo_stamp(f"dedup_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    return ensure(
+        artifact_path("warp_dedup_idx_v1", sf_dir),
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda tmp: persist_dedup_index(corpus, tmp),
+        rebuild,
+    )[0]
 
 
 # Persisted near-dup index, build half (pipeline/dedup.py::
@@ -7002,29 +6911,12 @@ def dedup_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pytest-pinned against the in-query path).
 @register("dedup_index_probe", None)
 def dedup_index_probe_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from warp_spark.pipeline.dedup import dedup_index_probe
-
     path = _ensure_dedup_index(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents").to_df()
-    batch = docs.filter(F.col("doc_id") % 20 >= 16)
-    hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-    return (
-        batch.select("doc_id")
-        .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-        .select(
-            "doc_id",
-            "dup_of",
-            "best_jaccard",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-    )
+    return _dedup_probe(spark, path, docs.filter(F.col("doc_id") % 20 >= 16))
 
 
 ORACLES["dedup_index_probe"] = ORACLES["dedup_incremental"]
-
-
-def _dedup_append_path(sf_dir: str) -> str:
-    return _artifact_path("warp_dedup_idxapp_v1", sf_dir)
 
 
 def _ensure_dedup_index_appended(spark: SparkSession, sf_dir: str) -> str:
@@ -7034,24 +6926,17 @@ def _ensure_dedup_index_appended(spark: SparkSession, sf_dir: str) -> str:
     append_dedup_index — after the append the artifact covers exactly
     the standing corpus (doc_id % 20 < 16) that _ensure_dedup_index
     builds in one shot, so probing it must reproduce the one-shot
-    index's answers (that equality IS the entry's oracle).  Content-
-    stamp reuse like every other ensure helper: the final stamp
-    fingerprints BOTH the base corpus and the appended slice, so the
-    append path re-runs exactly when the source content changes and
-    probes ride the artifact otherwise.  Marker discipline: the marker
-    is set to an 'appending' sentinel BEFORE the in-place append and
-    to the final stamp only after it completes — a mid-append crash
-    leaves the sentinel, which never matches, forcing a clean rebuild
-    instead of a double-append.  If append_dedup_index cannot
-    guarantee append ≡ rebuild (cap crossing), it degrades to the
-    one-shot build over the full standing corpus — correctness is
-    never conditional on the fast path."""
-    import os
-
+    index's answers (that equality IS the entry's oracle).  The final
+    stamp fingerprints BOTH the base corpus and the appended slice, so
+    the append path re-runs exactly when the source content changes
+    and probes ride the artifact otherwise.  The append runs under
+    artifacts.mutate's 'appending' sentinel; if append_dedup_index
+    cannot guarantee append ≡ rebuild (cap crossing), the one-shot
+    build over the full standing corpus is published instead —
+    correctness is never conditional on the fast path."""
     from warp_spark.pipeline.dedup import append_dedup_index, persist_dedup_index
 
-    path = _dedup_append_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
+    path = artifact_path("warp_dedup_idxapp_v1", sf_dir)
     docs = _t(spark, sf_dir, "documents").to_df()
     base = docs.filter(F.col("doc_id") % 20 < 12)
     slice_ = docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16))
@@ -7079,37 +6964,24 @@ def _ensure_dedup_index_appended(spark: SparkSession, sf_dir: str) -> str:
             f"+ appended n={fp['ns']} id={fp['ids']} crc={fp['crcs']}"
         )
 
-    stamp = _memo_stamp(
-        f"dedup_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current == stamp:
-        return path
-    _publish_artifact(
-        path,
-        "_INDEX_COMPLETE",
-        "dedupapp base only",
-        lambda tmp: persist_dedup_index(base, tmp),
-    )
-    with open(marker, "w") as f:
-        f.write("appending\n")
-    if not append_dedup_index(spark, path, slice_):
-        # cap crossed or shape drift: the safe path is the one-shot
-        # rebuild over the full standing corpus
-        _publish_artifact(
+    stamp = memo_stamp(f"dedup_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    if read_marker(path, "_INDEX_COMPLETE") != stamp:
+        publish_artifact(
             path,
             "_INDEX_COMPLETE",
+            "dedupapp base only",
+            lambda tmp: persist_dedup_index(base, tmp),
+        )
+        mutate(
+            path,
+            "_INDEX_COMPLETE",
+            "appending",
+            lambda: append_dedup_index(spark, path, slice_),
             stamp,
             lambda tmp: persist_dedup_index(
                 docs.filter(F.col("doc_id") % 20 < 16), tmp
             ),
         )
-        return path
-    with open(marker, "w") as f:
-        f.write(stamp + "\n")
     return path
 
 
@@ -7127,22 +6999,9 @@ def _ensure_dedup_index_appended(spark: SparkSession, sf_dir: str) -> str:
 # (MutableData.swift:40-63).
 @register("dedup_index_append", None)
 def dedup_index_append_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from warp_spark.pipeline.dedup import dedup_index_probe
-
     path = _ensure_dedup_index_appended(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents").to_df()
-    batch = docs.filter(F.col("doc_id") % 20 >= 16)
-    hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-    return (
-        batch.select("doc_id")
-        .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-        .select(
-            "doc_id",
-            "dup_of",
-            "best_jaccard",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-    )
+    return _dedup_probe(spark, path, docs.filter(F.col("doc_id") % 20 >= 16))
 
 
 ORACLES["dedup_index_append"] = ORACLES["dedup_incremental"]
@@ -7160,23 +7019,12 @@ ORACLES["dedup_index_append"] = ORACLES["dedup_incremental"]
 # are pytest-pinned).
 @register("dedup_index_compact", None)
 def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from warp_spark.pipeline.dedup import compact_dedup_index, dedup_index_probe
+    from warp_spark.pipeline.dedup import compact_dedup_index
 
     path = _ensure_dedup_index_appended(spark, sf_dir)
     compact_dedup_index(spark, path)
     docs = _t(spark, sf_dir, "documents").to_df()
-    batch = docs.filter(F.col("doc_id") % 20 >= 16)
-    hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-    return (
-        batch.select("doc_id")
-        .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-        .select(
-            "doc_id",
-            "dup_of",
-            "best_jaccard",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-    )
+    return _dedup_probe(spark, path, docs.filter(F.col("doc_id") % 20 >= 16))
 
 
 ORACLES["dedup_index_compact"] = ORACLES["dedup_incremental"]
@@ -7188,12 +7036,8 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
     entry copies this artifact (a small file-tree copy) and mutates
     the COPY, so re-running the stream costs the ingest itself, never
     a base re-signature."""
-    import os
-
     from warp_spark.pipeline.dedup import persist_dedup_index
 
-    path = _artifact_path("warp_dedup_base12_v1", sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     base = _t(spark, sf_dir, "documents").to_df().filter(F.col("doc_id") % 20 < 12)
 
     def _fp() -> str:
@@ -7203,18 +7047,13 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
         ).first()
         return f"dedup base12 n={fp['n']} crc={fp['crc']}"
 
-    stamp = _memo_stamp(
-        f"dedup_base12:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current != stamp:
-        _publish_artifact(
-            path, "_INDEX_COMPLETE", stamp, lambda tmp: persist_dedup_index(base, tmp)
-        )
-    return path
+    stamp = memo_stamp(f"dedup_base12:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    return ensure(
+        artifact_path("warp_dedup_base12_v1", sf_dir),
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda tmp: persist_dedup_index(base, tmp),
+    )[0]
 
 
 # 27th streaming execution — CONTINUOUS INDEX INGEST: the corpus slice
@@ -7232,94 +7071,62 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
 # the state store — nothing O(corpus) in streaming state.
 @register("dedup_index_append_streamed", None)
 def dedup_index_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import os
     import shutil
     import tempfile
 
-    from warp_spark.pipeline.dedup import append_dedup_index, dedup_index_probe
+    from warp_spark.pipeline.dedup import append_dedup_index, persist_dedup_index
 
     docs = _t(spark, sf_dir, "documents").to_df()
     slice_ = docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16))
-    batch = docs.filter(F.col("doc_id") % 20 >= 16)
     # the streamed demonstration re-ingests every run (like every other
     # streamed entry, which replays its stream per run) — but it
     # mutates a CHEAP COPY of the stamp-reused base artifact, so the
     # per-run cost is the ingest, never a base re-signature
-    base_path = _ensure_dedup_base12(spark, sf_dir)
-    path = _artifact_path("warp_dedup_idxstr_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(base_path, path)
-    with open(os.path.join(path, "_INDEX_COMPLETE"), "w") as f:
-        f.write("ingesting\n")
-    root = tempfile.mkdtemp(prefix="warp_idx_ingest_stream_")
-    try:
-        # ONE slice pass stages all three trigger files (previously
-        # three filter+coalesce(1) writes, each re-scanning documents)
-        _stage_split_files(
-            slice_, root, F.col("doc_id") % 3, ["doc_id", "text"]
-        )
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
+    path = artifact_path("warp_dedup_idxstr_v1", sf_dir)
+    copy_artifact(_ensure_dedup_base12(spark, sf_dir), path)
 
-        # mirrors _ensure_dedup_index_appended's degrade contract (r12
-        # ADVICE): if append_dedup_index refuses a trigger's batch (cap
-        # crossed / shape drift), remaining triggers stop appending and
-        # the drain falls through to a one-shot rebuild over the full
-        # standing slice — correctness is never conditional on the
-        # fast path, in the streamed leg too
-        degraded = {"flag": False}
-
-        def ingest(bdf, batch_id):
-            if degraded["flag"] or bdf.isEmpty():
-                return
-            if not append_dedup_index(spark, path, bdf):
-                degraded["flag"] = True
-
-        q = stream.writeStream.foreachBatch(ingest).start()
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    if degraded["flag"]:
-        from warp_spark.pipeline.dedup import persist_dedup_index
-
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "dedupstr rebuilt (append degraded mid-stream)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-        hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-        return (
-            batch.select("doc_id")
-            .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-            .select(
-                "doc_id",
-                "dup_of",
-                "best_jaccard",
-                F.col("dup_of").isNotNull().alias("is_dup"),
+    def ingest_stream() -> bool:
+        root = tempfile.mkdtemp(prefix="warp_idx_ingest_stream_")
+        try:
+            # ONE slice pass stages all three trigger files
+            _stage_split_files(
+                slice_, root, F.col("doc_id") % 3, ["doc_id", "text"]
             )
-        )
-    with open(os.path.join(path, "_INDEX_COMPLETE"), "w") as f:
-        f.write("dedupstr base + streamed 12..15\n")
-    hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-    return (
-        batch.select("doc_id")
-        .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-        .select(
-            "doc_id",
-            "dup_of",
-            "best_jaccard",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
+            stream = (
+                spark.readStream.schema("doc_id bigint, text string")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(root)
+            )
+            # mirrors _ensure_dedup_index_appended's degrade contract
+            # (r12 ADVICE): once append_dedup_index refuses a trigger's
+            # batch (cap crossed / shape drift), remaining triggers stop
+            # appending and the refusal publishes a one-shot rebuild over
+            # the full standing slice — in the streamed leg too
+            degraded = {"flag": False}
+
+            def ingest(bdf, batch_id):
+                if degraded["flag"] or bdf.isEmpty():
+                    return
+                if not append_dedup_index(spark, path, bdf):
+                    degraded["flag"] = True
+
+            q = stream.writeStream.foreachBatch(ingest).start()
+            q.processAllAvailable()
+            q.stop()
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+        return not degraded["flag"]
+
+    mutate(
+        path,
+        "_INDEX_COMPLETE",
+        "ingesting",
+        ingest_stream,
+        "dedupstr base + streamed 12..15",
+        lambda tmp: persist_dedup_index(docs.filter(F.col("doc_id") % 20 < 16), tmp),
+        "dedupstr rebuilt (append degraded mid-stream)",
     )
+    return _dedup_probe(spark, path, docs.filter(F.col("doc_id") % 20 >= 16))
 
 
 ORACLES["dedup_index_append_streamed"] = ORACLES["dedup_incremental"]
@@ -7342,79 +7149,59 @@ ORACLES["dedup_index_append_streamed"] = ORACLES["dedup_incremental"]
 def dedup_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import os
-    import shutil
 
     from warp_spark.pipeline.dedup import (
         append_dedup_index,
         compact_dedup_index,
-        dedup_index_probe,
         persist_dedup_index,
     )
 
     docs = _t(spark, sf_dir, "documents").to_df()
     slice_ = docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16))
-    batch = docs.filter(F.col("doc_id") % 20 >= 16)
+    standing = docs.filter(F.col("doc_id") % 20 < 16)
     # the lifecycle re-runs every invocation (like the streamed ingest)
     # over a cheap copy of the stamp-reused base-12 artifact
-    base_path = _ensure_dedup_base12(spark, sf_dir)
-    path = _artifact_path("warp_dedup_idxlife_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(base_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("maintaining\n")
-    # 1) APPEND the day's slice (honest fallback on refusal)
-    if not append_dedup_index(spark, path, slice_):
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "lifecycle rebuilt (append refused)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-    # 2) STALENESS CHECK: the maintained artifact must now cover the
-    # standing corpus — its doc count is the cheap invariant a nightly
-    # job asserts before serving (a full content re-stamp would re-pay
-    # the corpus scan the append path exists to avoid)
-    n_index = int(spark.read.parquet(f"{path}/stats").first()["n_docs"])
-    n_corpus = docs.filter(F.col("doc_id") % 20 < 16).count()
-    if n_index != n_corpus:  # stale: the honest path is the rebuild
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "lifecycle rebuilt (stale count)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-    # 3) COMPACT the append-grown layout back to one file per bucket
-    n_files_before = len(
-        _glob.glob(os.path.join(path, "bands", "**", "*.parquet"), recursive=True)
+    path = artifact_path("warp_dedup_idxlife_v1", sf_dir)
+    copy_artifact(_ensure_dedup_base12(spark, sf_dir), path)
+
+    def maintain() -> bool:
+        # 1) APPEND the day's slice (a refusal publishes the rebuild)
+        if not append_dedup_index(spark, path, slice_):
+            return False
+        # 2) STALENESS CHECK: the maintained artifact must now cover the
+        # standing corpus — its doc count is the cheap invariant a
+        # nightly job asserts before serving (a full content re-stamp
+        # would re-pay the corpus scan the append path exists to avoid)
+        n_index = int(spark.read.parquet(f"{path}/stats").first()["n_docs"])
+        if n_index != standing.count():  # stale: the honest path is the rebuild
+            publish_artifact(
+                path,
+                "_INDEX_COMPLETE",
+                "lifecycle rebuilt (stale count)",
+                lambda tmp: persist_dedup_index(standing, tmp),
+            )
+        # 3) COMPACT the append-grown layout back to one file per bucket
+        bands = os.path.join(path, "bands", "**", "*.parquet")
+        n_files_before = len(_glob.glob(bands, recursive=True))
+        compact_dedup_index(spark, path)
+        n_files_after = len(_glob.glob(bands, recursive=True))
+        if n_files_after > n_files_before:  # compaction must never grow files
+            raise RuntimeError(
+                f"compaction grew the index: {n_files_before} -> {n_files_after}"
+            )
+        return True
+
+    mutate(
+        path,
+        "_INDEX_COMPLETE",
+        "maintaining",
+        maintain,
+        "lifecycle base-12 + appended 12..15, compacted",
+        lambda tmp: persist_dedup_index(standing, tmp),
+        "lifecycle rebuilt (append refused)",
     )
-    compact_dedup_index(spark, path)
-    n_files_after = len(
-        _glob.glob(os.path.join(path, "bands", "**", "*.parquet"), recursive=True)
-    )
-    if n_files_after > n_files_before:  # compaction must never grow files
-        raise RuntimeError(
-            f"compaction grew the index: {n_files_before} -> {n_files_after}"
-        )
-    with open(marker, "w") as f:
-        f.write("lifecycle base-12 + appended 12..15, compacted\n")
     # 4) PROBE: serve the incoming batch from the maintained index
-    hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-    return (
-        batch.select("doc_id")
-        .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-        .select(
-            "doc_id",
-            "dup_of",
-            "best_jaccard",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-    )
+    return _dedup_probe(spark, path, docs.filter(F.col("doc_id") % 20 >= 16))
 
 
 ORACLES["dedup_index_lifecycle"] = ORACLES["dedup_incremental"]
@@ -7462,55 +7249,28 @@ WHERE d.doc_id % 20 >= 16
 """,
 )
 def dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from warp_spark.pipeline.dedup import (
-        delete_from_dedup_index,
-        dedup_index_probe,
-        persist_dedup_index,
-    )
+    from warp_spark.pipeline.dedup import delete_from_dedup_index, persist_dedup_index
 
     docs = _t(spark, sf_dir, "documents").to_df()
     del_docs = docs.filter(
         (F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16)
     )
-    batch = docs.filter(F.col("doc_id") % 20 >= 16)
     # the deletion re-runs every invocation over a cheap copy of the
-    # stamp-reused standing index (the streamed-ingest discipline)
-    std_path = _ensure_dedup_index(spark, sf_dir)
-    path = _artifact_path("warp_dedup_idxdel_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(std_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("deleting\n")
-    if not delete_from_dedup_index(spark, path, del_docs):
-        # refusal (shape drift / cap drop / id-text mismatch): the
-        # honest path is the rebuild over the remaining corpus
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "delete rebuilt (refused)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 12), tmp
-            ),
-        )
-    else:
-        with open(marker, "w") as f:
-            f.write("standing minus 12..15 (deleted)\n")
-    hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-    return (
-        batch.select("doc_id")
-        .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-        .select(
-            "doc_id",
-            "dup_of",
-            "best_jaccard",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
+    # stamp-reused standing index (the streamed-ingest discipline); a
+    # refusal (shape drift / cap drop / id-text mismatch) publishes the
+    # rebuild over the remaining corpus
+    path = artifact_path("warp_dedup_idxdel_v1", sf_dir)
+    copy_artifact(_ensure_dedup_index(spark, sf_dir), path)
+    mutate(
+        path,
+        "_INDEX_COMPLETE",
+        "deleting",
+        lambda: delete_from_dedup_index(spark, path, del_docs),
+        "standing minus 12..15 (deleted)",
+        lambda tmp: persist_dedup_index(docs.filter(F.col("doc_id") % 20 < 12), tmp),
+        "delete rebuilt (refused)",
     )
+    return _dedup_probe(spark, path, docs.filter(F.col("doc_id") % 20 >= 16))
 
 
 # ---------------------------------------------------------------------------
@@ -10602,22 +10362,14 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_index_path(sf_dir: str) -> str:
-    return _artifact_path("warp_ann_ivfpq_v1", sf_dir)
-
-
 def _ensure_ann_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
     """Build-once discipline for the persisted IVF-PQ index: the probe
     entry loads whatever the marker certifies; persist (or a corpus
     change, detected via the recorded vector count) rebuilds.  Training
     is deterministic, so a rebuild yields byte-identical artifacts —
     entry order between persist and probe cannot change results."""
-    import os
-
     from warp_spark.pipeline.similarity import persist_ivfpq_index
 
-    path = _ann_index_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     emb = _t(spark, sf_dir, "embeddings").to_df()
     # content fingerprint, not just cardinality (r10 ADVICE, applied to
     # the precedent too): vec_id sum + crc32 over the rendered vector.
@@ -10634,23 +10386,39 @@ def _ensure_ann_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -
             f"n_vectors={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
         )
 
-    stamp = _memo_stamp(
-        f"ann_idx:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp
+    stamp = memo_stamp(f"ann_idx:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp)
+    return ensure(
+        artifact_path("warp_ann_ivfpq_v1", sf_dir),
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda tmp: persist_ivfpq_index(emb, tmp, n_centroids=16, m=16, n_codes=32),
+        rebuild,
+    )[0]
+
+
+def _ann_index_recall(
+    spark: SparkSession, path: str, emb: DataFrame, corpus: Optional[DataFrame] = None
+) -> DataFrame:
+    """The ANN tier's recall contract for the IVF-PQ index at ``path``:
+    recall@5 of the first 10 vectors (nprobe 12, rerank 100) against
+    exact brute force over ``corpus`` (default: all of ``emb``) must
+    clear the 0.8 floor."""
+    from warp_spark.pipeline.similarity import (
+        brute_force_topk,
+        ivfpq_probe,
+        load_ivfpq_index,
     )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: persist_ivfpq_index(
-                emb, tmp, n_centroids=16, m=16, n_codes=32
-            ),
-        )
-    return path
+
+    centroids, codebooks, codes, storage = load_ivfpq_index(spark, path)
+    q = emb.filter(F.col("vec_id") < 10)
+    return _ann_recall_check(
+        ivfpq_probe(
+            q, codes, centroids, codebooks, k=5, nprobe=12, rerank=100,
+            storage=storage,
+        ),
+        brute_force_topk(q, emb if corpus is None else corpus, k=5),
+        floor=0.8,
+    )
 
 
 # Persistable ANN index, build half (similarity.py::persist_ivfpq_index):
@@ -10774,28 +10542,8 @@ def ann_index_recon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from warp_spark.pipeline.similarity import (
-        brute_force_topk,
-        ivfpq_probe,
-        load_ivfpq_index,
-    )
-
     path = _ensure_ann_index(spark, sf_dir)
-    centroids, codebooks, codes, storage = load_ivfpq_index(spark, path)
-    emb = _t(spark, sf_dir, "embeddings").to_df()
-    q = emb.filter(F.col("vec_id") < 10)
-    return _ann_recall_check(
-        ivfpq_probe(
-            q, codes, centroids, codebooks, k=5, nprobe=12, rerank=100,
-            storage=storage,
-        ),
-        brute_force_topk(q, emb, k=5),
-        floor=0.8,
-    )
-
-
-def _ann_append_path(sf_dir: str) -> str:
-    return _artifact_path("warp_ann_idxapp_v1", sf_dir)
+    return _ann_index_recall(spark, path, _t(spark, sf_dir, "embeddings").to_df())
 
 
 def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
@@ -10809,15 +10557,12 @@ def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
     rebuild (pytest-pinned); the entry's driver contract is the ANN
     tier's recall floor vs exact brute force over the FULL corpus.
     Same stamp/sentinel discipline as the other append twins."""
-    import os
-
     from warp_spark.pipeline.similarity import (
         append_ivfpq_index,
         persist_ivfpq_index,
     )
 
-    path = _ann_append_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
+    path = artifact_path("warp_ann_idxapp_v1", sf_dir)
     emb = _t(spark, sf_dir, "embeddings").to_df()
     is_base = F.col("vec_id") % 5 != 4
 
@@ -10841,42 +10586,28 @@ def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
             f"+ appended n={fp['ns']} crc={fp['crcs']}"
         )
 
-    stamp = _memo_stamp(
-        f"ann_app:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current == stamp:
-        return path
-    base = emb.filter(is_base)
-    _publish_artifact(
-        path,
-        "_INDEX_COMPLETE",
-        "annapp base only",
-        lambda tmp: persist_ivfpq_index(
-            base, tmp, n_centroids=16, m=16, n_codes=32
-        ),
-    )
-    with open(marker, "w") as f:
-        f.write("appending\n")
-    if not append_ivfpq_index(spark, path, emb.filter(~is_base)):
-        # precondition refused (slice re-delivers indexed ids): rebuild
-        # over the full corpus with the model still trained on the
-        # base slice, preserving the frozen-model byte-equality
-        # contract — correctness is never conditional on the fast path
-        _publish_artifact(
+    stamp = memo_stamp(f"ann_app:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp)
+    if read_marker(path, "_INDEX_COMPLETE") != stamp:
+        base = emb.filter(is_base)
+        publish_artifact(
             path,
             "_INDEX_COMPLETE",
+            "annapp base only",
+            lambda tmp: persist_ivfpq_index(base, tmp, n_centroids=16, m=16, n_codes=32),
+        )
+        # a refusal (the slice re-delivers indexed ids) publishes the
+        # full-corpus rebuild with the model still trained on the base
+        # slice, preserving the frozen-model byte-equality contract
+        mutate(
+            path,
+            "_INDEX_COMPLETE",
+            "appending",
+            lambda: append_ivfpq_index(spark, path, emb.filter(~is_base)),
             stamp,
             lambda tmp: persist_ivfpq_index(
                 emb, tmp, n_centroids=16, m=16, n_codes=32, train_df=base
             ),
         )
-        return path
-    with open(marker, "w") as f:
-        f.write(stamp + "\n")
     return path
 
 
@@ -10895,26 +10626,11 @@ def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from warp_spark.pipeline.similarity import (
-        brute_force_topk,
-        compact_ivfpq_index,
-        ivfpq_probe,
-        load_ivfpq_index,
-    )
+    from warp_spark.pipeline.similarity import compact_ivfpq_index
 
     path = _ensure_ann_index_appended(spark, sf_dir)
     compact_ivfpq_index(spark, path)
-    centroids, codebooks, codes, storage = load_ivfpq_index(spark, path)
-    emb = _t(spark, sf_dir, "embeddings").to_df()
-    q = emb.filter(F.col("vec_id") < 10)
-    return _ann_recall_check(
-        ivfpq_probe(
-            q, codes, centroids, codebooks, k=5, nprobe=12, rerank=100,
-            storage=storage,
-        ),
-        brute_force_topk(q, emb, k=5),
-        floor=0.8,
-    )
+    return _ann_index_recall(spark, path, _t(spark, sf_dir, "embeddings").to_df())
 
 
 # Incremental index maintenance, vector leg (similarity.py::
@@ -10937,24 +10653,8 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from warp_spark.pipeline.similarity import (
-        brute_force_topk,
-        ivfpq_probe,
-        load_ivfpq_index,
-    )
-
     path = _ensure_ann_index_appended(spark, sf_dir)
-    centroids, codebooks, codes, storage = load_ivfpq_index(spark, path)
-    emb = _t(spark, sf_dir, "embeddings").to_df()
-    q = emb.filter(F.col("vec_id") < 10)
-    return _ann_recall_check(
-        ivfpq_probe(
-            q, codes, centroids, codebooks, k=5, nprobe=12, rerank=100,
-            storage=storage,
-        ),
-        brute_force_topk(q, emb, k=5),
-        floor=0.8,
-    )
+    return _ann_index_recall(spark, path, _t(spark, sf_dir, "embeddings").to_df())
 
 
 # Embedding-space decontamination (similarity.py::semantic_contamination):
@@ -11562,13 +11262,6 @@ def events_tdigest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def _tdigest_path(sf_dir: str) -> str:
-    return _artifact_path("warp_tdigest_v1", sf_dir)
-
-
-_TDIGEST_FP_CACHE: dict = {}
-
-
 def _ensure_tdigest(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
     """Build-once discipline for the persisted quantile sketch (r11
     verdict item 8 — the index-triple pattern applied to quantiles):
@@ -11578,44 +11271,33 @@ def _ensure_tdigest(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> 
     parquet artifact, so every percentile read-off is a scan of a few
     hundred bucket rows instead of a source pass.  Content stamp =
     row count + exact cents sum; the fingerprint SCAN is memoized per
-    (sf_dir, part-file stat signature) like the edge artifact's, so
-    repeated probes in one session pay zero lineitem scans."""
-    import os
-
+    lineitem file version, so repeated probes in one session pay zero
+    lineitem scans."""
     from warp_spark.sketches import tdigest_hist
 
-    path = _tdigest_path(sf_dir)
-    marker = os.path.join(path, "_SKETCH_COMPLETE")
     li = _t(spark, sf_dir, "lineitem").to_df()
     cents = F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5)).cast(
         "long"
     )
-    stat_sig = _source_stat_sig(f"{sf_dir}/lineitem.parquet")
-    cached = _TDIGEST_FP_CACHE.get(sf_dir)
-    if cached is not None and cached[0] == stat_sig:
-        stamp = cached[1]
-    else:
+
+    def _fp() -> str:
         fp = li.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(cents.cast("decimal(38,0)")).alias("s"),
         ).first()
-        stamp = (
-            f"tdigest sub_bits=7 group=l_returnflag n={fp['n']} centssum={fp['s']}"
-        )
-        _TDIGEST_FP_CACHE[sf_dir] = (stat_sig, stamp)
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        hist = tdigest_hist(li, cents, "l_returnflag", value_sub_bits=7)
-        _publish_artifact(
-            path,
-            "_SKETCH_COMPLETE",
-            stamp,
-            lambda tmp: hist.coalesce(1).write.mode("overwrite").parquet(tmp),
-        )
-    return path
+        return f"tdigest sub_bits=7 group=l_returnflag n={fp['n']} centssum={fp['s']}"
+
+    stamp = memo_stamp(f"tdigest:{sf_dir}", f"{sf_dir}/lineitem.parquet", _fp)
+    return ensure(
+        artifact_path("warp_tdigest_v1", sf_dir),
+        "_SKETCH_COMPLETE",
+        stamp,
+        lambda tmp: tdigest_hist(li, cents, "l_returnflag", value_sub_bits=7)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(tmp),
+        rebuild,
+    )[0]
 
 
 # Persisted quantile sketch, build half: write the mergeable log-linear
@@ -12101,44 +11783,25 @@ def graph_ra_links_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _graph_edges_path(sf_dir: str) -> str:
-    return _artifact_path("warp_graph_edges_v1", sf_dir)
-
-
-_GRAPH_EDGES_FP_CACHE: dict = {}
-
-
-def _ensure_graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    """Build-once discipline for the persisted part co-purchase edge
-    list (r10 verdict item 4): six graph entries (pagerank, triangles,
+def _graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> tuple:
+    """``(path, stamp)`` of the persisted part co-purchase edge list
+    (r10 verdict item 4): six graph entries (pagerank, triangles,
     jaccard ×2, assortativity, k-core, degree profile) share this
     graph, and before this artifact each re-ran the lineitem self-join
     + distinct in-query.  The staleness stamp carries a CONTENT
     fingerprint of the source columns (row count + an exact decimal
     key-combination sum), not just a row count, so a content change at
-    unchanged cardinality rebuilds — the discipline the r10 ADVICE
-    asked for on the BM25 stamp.  The fingerprint SCAN itself is
-    memoized per (sf_dir, file stat signature) within the process, so
-    the seven graph entries sharing the artifact pay it once per
-    session, not once per query.  The stat signature covers the PART
-    FILES inside the dataset directory (r11 ADVICE: an in-place part
-    rewrite changes neither the directory's mtime nor its size), so
-    any writer that touches a data file re-scans."""
-    import os
-
+    unchanged cardinality rebuilds.  The fingerprint scan is memoized
+    per lineitem file version, so the graph entries sharing the
+    artifact pay it once per session; the dependent artifacts chain the
+    returned stamp into theirs."""
     from warp_spark.pipeline.graph import persist_edges
 
-    path = _graph_edges_path(sf_dir)
-    marker = os.path.join(path, "_EDGES_COMPLETE")
-    stat_sig = _source_stat_sig(f"{sf_dir}/lineitem.parquet")
-    cached = _GRAPH_EDGES_FP_CACHE.get(sf_dir)
-    if cached is not None and cached[0] == stat_sig:
-        stamp = cached[1]
-    else:
-        li = _t(spark, sf_dir, "lineitem").to_df().select(
-            "l_orderkey", "l_partkey"
-        )
-        fp = li.agg(
+    def lineitem() -> DataFrame:
+        return _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
+
+    def _fp() -> str:
+        fp = lineitem().agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
                 (
@@ -12147,28 +11810,21 @@ def _ensure_graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False)
                 )
             ).alias("s"),
         ).first()
-        stamp = f"copurchase canonical n_rows={fp['n']} keysum={fp['s']}"
-        _GRAPH_EDGES_FP_CACHE[sf_dir] = (stat_sig, stamp)
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        src_li = _t(spark, sf_dir, "lineitem").to_df().select(
-            "l_orderkey", "l_partkey"
-        )
-        other = src_li.select(
-            F.col("l_orderkey"), F.col("l_partkey").alias("dst")
-        )
-        edges = (
-            src_li.join(other, "l_orderkey")
-            .where(F.col("l_partkey") < F.col("dst"))
-            .select(F.col("l_partkey").alias("src"), "dst")
-        )
-        _publish_artifact(
-            path, "_EDGES_COMPLETE", stamp, lambda tmp: persist_edges(edges, tmp)
-        )
-    return path
+        return f"copurchase canonical n_rows={fp['n']} keysum={fp['s']}"
+
+    stamp = memo_stamp(f"graph_edges:{sf_dir}", f"{sf_dir}/lineitem.parquet", _fp)
+    return ensure(
+        artifact_path("warp_graph_edges_v1", sf_dir),
+        "_EDGES_COMPLETE",
+        stamp,
+        lambda tmp: persist_edges(_copurchase_order_edges(lineitem()), tmp),
+        rebuild,
+    )
+
+
+def _ensure_graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
+    """Path of the persisted co-purchase edge list (see _graph_edges)."""
+    return _graph_edges(spark, sf_dir, rebuild)[0]
 
 
 # The one hub-cap used by every capped link-prediction entry and the
@@ -12177,8 +11833,57 @@ def _ensure_graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False)
 _GRAPH_WEDGE_CAP = 120
 
 
-def _graph_wedges_path(sf_dir: str) -> str:
-    return _artifact_path("warp_graph_wedges_v1", sf_dir)
+def _census_build(spark: SparkSession, edge_path: str):
+    """Build callable writing the cap-120 wedge census of the canonical
+    edge artifact at ``edge_path``."""
+    from warp_spark.pipeline.graph import load_edges, persist_wedge_census
+
+    return lambda tmp: persist_wedge_census(
+        load_edges(spark, edge_path),
+        tmp,
+        max_center_degree=_GRAPH_WEDGE_CAP,
+        assume_canonical=True,
+    )
+
+
+def _wedge_census_row(census: DataFrame) -> DataFrame:
+    """Pair count, exact score totals and x < y on every row of a wedge
+    census — the one-row contract of every wedge-census entry."""
+    return census.agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum("cn").cast("long").alias("cn_total"),
+        F.sum("ra_ppm").cast("long").alias("ra_total"),
+        (
+            F.sum(F.when(F.col("x") < F.col("y"), 1).otherwise(0))
+            == F.count(F.lit(1))
+        ).alias("pairs_canonical"),
+    )
+
+
+def _edge_census_row(e: DataFrame) -> DataFrame:
+    """Edge and node counts plus the canonical-and-distinct check of an
+    edge artifact — the one-row contract of every edge-artifact entry."""
+    nodes = e.select(F.col("src").alias("n")).union(
+        e.select(F.col("dst").alias("n"))
+    )
+    stats = _scalar_join(
+        e.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.countDistinct("src", "dst").alias("n_distinct"),
+            F.sum(F.when(F.col("src") < F.col("dst"), 1).otherwise(0)).alias(
+                "n_lt"
+            ),
+        ),
+        nodes.agg(F.countDistinct("n").alias("n_nodes")),
+    )
+    return stats.select(
+        F.col("n_rows").cast("long").alias("n_edges"),
+        F.col("n_nodes").cast("long").alias("n_nodes"),
+        (
+            (F.col("n_distinct") == F.col("n_rows"))
+            & (F.col("n_lt") == F.col("n_rows"))
+        ).alias("canonical_complete"),
+    )
 
 
 def _ensure_graph_wedges(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
@@ -12192,34 +11897,14 @@ def _ensure_graph_wedges(spark: SparkSession, sf_dir: str, rebuild: bool = False
     artifact's content-fingerprint stamp, so a lineitem content change
     propagates edge rebuild → wedge rebuild with no extra source
     scan."""
-    import os
-
-    from warp_spark.pipeline.graph import load_edges, persist_wedge_census
-
-    edge_path = _ensure_graph_edges(spark, sf_dir)
-    with open(os.path.join(edge_path, "_EDGES_COMPLETE")) as f:
-        edge_stamp = f.read().strip()
-    path = _graph_wedges_path(sf_dir)
-    marker = os.path.join(path, "_WEDGES_COMPLETE")
-    stamp = f"wedges cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        edges = load_edges(spark, edge_path)
-        _publish_artifact(
-            path,
-            "_WEDGES_COMPLETE",
-            stamp,
-            lambda tmp: persist_wedge_census(
-                edges,
-                tmp,
-                max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
-            ),
-        )
-    return path
+    edge_path, edge_stamp = _graph_edges(spark, sf_dir)
+    return ensure(
+        artifact_path("warp_graph_wedges_v1", sf_dir),
+        "_WEDGES_COMPLETE",
+        f"wedges cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]",
+        _census_build(spark, edge_path),
+        rebuild,
+    )[0]
 
 
 # Persisted wedge-census artifact, build half (pipeline/graph.py::
@@ -12264,16 +11949,7 @@ def graph_wedges_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.pipeline.graph import load_wedge_census
 
     path = _ensure_graph_wedges(spark, sf_dir, rebuild=True)
-    census = load_wedge_census(spark, path)
-    return census.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum("cn").cast("long").alias("cn_total"),
-        F.sum("ra_ppm").cast("long").alias("ra_total"),
-        (
-            F.sum(F.when(F.col("x") < F.col("y"), 1).otherwise(0))
-            == F.count(F.lit(1))
-        ).alias("pairs_canonical"),
-    )
+    return _wedge_census_row(load_wedge_census(spark, path))
 
 
 # Persisted graph-edge artifact, build half (pipeline/graph.py::
@@ -12308,36 +11984,7 @@ def graph_edges_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.pipeline.graph import load_edges
 
     path = _ensure_graph_edges(spark, sf_dir, rebuild=True)
-    e = load_edges(spark, path)
-    nodes = e.select(F.col("src").alias("n")).union(
-        e.select(F.col("dst").alias("n"))
-    )
-    stats = _scalar_join(
-        e.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("src", "dst").alias("n_distinct"),
-            F.sum(F.when(F.col("src") < F.col("dst"), 1).otherwise(0)).alias(
-                "n_lt"
-            ),
-        ),
-        nodes.agg(F.countDistinct("n").alias("n_nodes")),
-    )
-    return stats.select(
-        F.col("n_rows").cast("long").alias("n_edges"),
-        F.col("n_nodes").cast("long").alias("n_nodes"),
-        (
-            (F.col("n_distinct") == F.col("n_rows"))
-            & (F.col("n_lt") == F.col("n_rows"))
-        ).alias("canonical_complete"),
-    )
-
-
-def _graph_edgeapp_path(sf_dir: str) -> str:
-    return _artifact_path("warp_graph_edgeapp_v1", sf_dir)
-
-
-def _graph_wedgeapp_path(sf_dir: str) -> str:
-    return _artifact_path("warp_graph_wedgeapp_v1", sf_dir)
+    return _edge_census_row(load_edges(spark, path))
 
 
 def _copurchase_order_edges(li: DataFrame) -> DataFrame:
@@ -12366,7 +12013,8 @@ def _ensure_graph_base(
     graph_ingest_streamed).  Both twins COPY these trees and mutate
     the copies, so re-running either costs the ingest itself, never a
     base rebuild (the _ensure_dedup_base12 discipline).  Staleness
-    chains the standing edge artifact's content stamp.
+    chains the standing edge artifact's content stamp.  Returns
+    ``(edge path, wedge path, stamp)``.
 
     ``even_only`` restricts the graph to the induced subgraph of
     EVEN-numbered parts — the streamed twin's bounded domain (the
@@ -12374,46 +12022,30 @@ def _ensure_graph_base(
     an index-sized rewrite, and the per-trigger streaming demo re-pays
     it EVERY run, so it runs on the ~1/4-size domain while the
     stamp-reused batch twin covers the full graph."""
-    import os
+    from warp_spark.pipeline.graph import persist_edges
 
-    from warp_spark.pipeline.graph import load_edges, persist_edges, persist_wedge_census
-
-    std_edge_path = _ensure_graph_edges(spark, sf_dir)
-    with open(os.path.join(std_edge_path, "_EDGES_COMPLETE")) as f:
-        edge_stamp = f.read().strip()
+    _, edge_stamp = _graph_edges(spark, sf_dir)
     tag = "baseeven" if even_only else "base"
-    ep = _artifact_path(f"warp_graph_{tag}e_v2", sf_dir)
-    wp = _artifact_path(f"warp_graph_{tag}w_v2", sf_dir)
     stamp = f"graph {tag}-main cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
 
-    def current(p, name):
-        m = os.path.join(p, name)
-        if os.path.exists(m):
-            with open(m) as f:
-                return f.read().strip()
-        return None
-
-    if current(ep, "_EDGES_COMPLETE") != stamp:
+    def base_edges(tmp: str) -> None:
         li = _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
         if even_only:
             li = li.filter(F.col("l_partkey") % 2 == 0)
-        base_e = _copurchase_order_edges(li.filter(F.col("l_orderkey") % 50 != 0))
-        _publish_artifact(
-            ep, "_EDGES_COMPLETE", stamp, lambda t: persist_edges(base_e, t)
+        persist_edges(
+            _copurchase_order_edges(li.filter(F.col("l_orderkey") % 50 != 0)), tmp
         )
-    if current(wp, "_WEDGES_COMPLETE") != stamp:
-        _publish_artifact(
-            wp,
-            "_WEDGES_COMPLETE",
-            stamp,
-            lambda t: persist_wedge_census(
-                load_edges(spark, ep),
-                t,
-                max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
-            ),
-        )
-    return ep, wp
+
+    ep, _ = ensure(
+        artifact_path(f"warp_graph_{tag}e_v2", sf_dir), "_EDGES_COMPLETE", stamp, base_edges
+    )
+    wp, _ = ensure(
+        artifact_path(f"warp_graph_{tag}w_v2", sf_dir),
+        "_WEDGES_COMPLETE",
+        stamp,
+        _census_build(spark, ep),
+    )
+    return ep, wp, stamp
 
 
 def _ensure_graph_append_demo(spark: SparkSession, sf_dir: str) -> tuple:
@@ -12431,38 +12063,22 @@ def _ensure_graph_append_demo(spark: SparkSession, sf_dir: str) -> tuple:
     must equal their one-shot builds value-for-value (that equality
     IS both entries' oracle; also pytest-pinned on constructed
     graphs).  Staleness chains the standing edge artifact's content
-    stamp (no extra source scan); the sentinel discipline mirrors
-    _ensure_dedup_index_appended: an 'appending' marker during the
-    in-place mutation forces a clean rebuild after a mid-append
-    crash.  If update_wedge_census cannot fold the delta (missing or
-    unreadable census), it degrades to the one-shot census rebuild —
-    correctness is never conditional on the fast path."""
-    import os
+    stamp (no extra source scan); both markers hold artifacts.mutate's
+    'appending' sentinel during the in-place mutation, so a mid-append
+    crash forces a clean rebuild.  If update_wedge_census cannot fold
+    the delta (missing or unreadable census), the one-shot census
+    rebuild is published — correctness is never conditional on the
+    fast path."""
+    from warp_spark.pipeline.graph import append_edges, update_wedge_census
 
-    from warp_spark.pipeline.graph import (
-        append_edges,
-        load_edges,
-        persist_wedge_census,
-        update_wedge_census,
-    )
-
-    # chain the standing edge artifact's content stamp: same source,
-    # same fingerprint, zero additional scans
-    std_edge_path = _ensure_graph_edges(spark, sf_dir)
-    with open(os.path.join(std_edge_path, "_EDGES_COMPLETE")) as f:
-        edge_stamp = f.read().strip()
-    ep, wp = _graph_edgeapp_path(sf_dir), _graph_wedgeapp_path(sf_dir)
-    e_marker = os.path.join(ep, "_EDGES_COMPLETE")
-    w_marker = os.path.join(wp, "_WEDGES_COMPLETE")
+    _, edge_stamp = _graph_edges(spark, sf_dir)
+    ep = artifact_path("warp_graph_edgeapp_v1", sf_dir)
+    wp = artifact_path("warp_graph_wedgeapp_v1", sf_dir)
     stamp = f"edgeapp base-main+delta2pct cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
-
-    def read_marker(p):
-        if os.path.exists(p):
-            with open(p) as f:
-                return f.read().strip()
-        return None
-
-    if read_marker(e_marker) == stamp and read_marker(w_marker) == stamp:
+    if (
+        read_marker(ep, "_EDGES_COMPLETE") == stamp
+        and read_marker(wp, "_WEDGES_COMPLETE") == stamp
+    ):
         return ep, wp
 
     li = _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
@@ -12470,37 +12086,28 @@ def _ensure_graph_append_demo(spark: SparkSession, sf_dir: str) -> tuple:
     # start from cheap COPIES of the shared stamp-reused base pair —
     # the base build (including its census) is paid once per content
     # change, shared with the streamed twin
-    import shutil
+    base_ep, base_wp, _ = _ensure_graph_base(spark, sf_dir)
+    copy_artifact(base_ep, ep)
+    copy_artifact(base_wp, wp)
 
-    base_ep, base_wp = _ensure_graph_base(spark, sf_dir)
-    for src, dst in ((base_ep, ep), (base_wp, wp)):
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        shutil.copytree(src, dst)
-    for m in (e_marker, w_marker):
-        with open(m, "w") as f:
-            f.write("appending\n")
-    delta = append_edges(spark, ep, delta_e)
-    if not update_wedge_census(
-        spark, wp, ep, delta, max_center_degree=_GRAPH_WEDGE_CAP
-    ):
-        _publish_artifact(
+    def append() -> bool:
+        mutate(
             wp,
             "_WEDGES_COMPLETE",
-            stamp,
-            lambda t: persist_wedge_census(
-                load_edges(spark, ep),
-                t,
+            "appending",
+            lambda: update_wedge_census(
+                spark,
+                wp,
+                ep,
+                append_edges(spark, ep, delta_e),
                 max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
             ),
+            stamp,
+            _census_build(spark, ep),
         )
-        with open(e_marker, "w") as f:
-            f.write(stamp + "\n")
-        return ep, wp
-    for m in (e_marker, w_marker):
-        with open(m, "w") as f:
-            f.write(stamp + "\n")
+        return True
+
+    mutate(ep, "_EDGES_COMPLETE", "appending", append, stamp)
     return ep, wp
 
 
@@ -12533,28 +12140,7 @@ def graph_edges_append_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.pipeline.graph import load_edges
 
     ep, _ = _ensure_graph_append_demo(spark, sf_dir)
-    e = load_edges(spark, ep)
-    nodes = e.select(F.col("src").alias("n")).union(
-        e.select(F.col("dst").alias("n"))
-    )
-    stats = _scalar_join(
-        e.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("src", "dst").alias("n_distinct"),
-            F.sum(F.when(F.col("src") < F.col("dst"), 1).otherwise(0)).alias(
-                "n_lt"
-            ),
-        ),
-        nodes.agg(F.countDistinct("n").alias("n_nodes")),
-    )
-    return stats.select(
-        F.col("n_rows").cast("long").alias("n_edges"),
-        F.col("n_nodes").cast("long").alias("n_nodes"),
-        (
-            (F.col("n_distinct") == F.col("n_rows"))
-            & (F.col("n_lt") == F.col("n_rows"))
-        ).alias("canonical_complete"),
-    )
+    return _edge_census_row(load_edges(spark, ep))
 
 
 # Compaction, graph leg (pipeline/graph.py::compact_edges): re-cluster
@@ -12597,28 +12183,7 @@ def graph_edges_compact_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if n_after > max(n_before, 8):  # compaction must never grow files
         raise RuntimeError(f"edge compaction grew files: {n_before} -> {n_after}")
-    e = load_edges(spark, ep)
-    nodes = e.select(F.col("src").alias("n")).union(
-        e.select(F.col("dst").alias("n"))
-    )
-    stats = _scalar_join(
-        e.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("src", "dst").alias("n_distinct"),
-            F.sum(F.when(F.col("src") < F.col("dst"), 1).otherwise(0)).alias(
-                "n_lt"
-            ),
-        ),
-        nodes.agg(F.countDistinct("n").alias("n_nodes")),
-    )
-    return stats.select(
-        F.col("n_rows").cast("long").alias("n_edges"),
-        F.col("n_nodes").cast("long").alias("n_nodes"),
-        (
-            (F.col("n_distinct") == F.col("n_rows"))
-            & (F.col("n_lt") == F.col("n_rows"))
-        ).alias("canonical_complete"),
-    )
+    return _edge_census_row(load_edges(spark, ep))
 
 
 # Incremental graph maintenance, wedge leg (pipeline/graph.py::
@@ -12662,16 +12227,7 @@ def graph_wedges_append_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.pipeline.graph import load_wedge_census
 
     _, wp = _ensure_graph_append_demo(spark, sf_dir)
-    census = load_wedge_census(spark, wp)
-    return census.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum("cn").cast("long").alias("cn_total"),
-        F.sum("ra_ppm").cast("long").alias("ra_total"),
-        (
-            F.sum(F.when(F.col("x") < F.col("y"), 1).otherwise(0))
-            == F.count(F.lit(1))
-        ).alias("pairs_canonical"),
-    )
+    return _wedge_census_row(load_wedge_census(spark, wp))
 
 
 # 28th streaming execution — CONTINUOUS GRAPH INGEST: the delta
@@ -12724,26 +12280,20 @@ def graph_wedges_append_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import os
     import shutil
     import tempfile
 
     from warp_spark.pipeline.graph import (
         append_edges,
-        load_edges,
         load_wedge_census,
-        persist_wedge_census,
         update_wedge_census,
     )
 
-    base_ep, base_wp = _ensure_graph_base(spark, sf_dir, even_only=True)
-    ep = _artifact_path("warp_graph_edgestr_v1", sf_dir)
-    wp = _artifact_path("warp_graph_wedgestr_v1", sf_dir)
-    for src, dst in ((base_ep, ep), (base_wp, wp)):
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        shutil.copytree(src, dst)
+    base_ep, base_wp, base_stamp = _ensure_graph_base(spark, sf_dir, even_only=True)
+    ep = artifact_path("warp_graph_edgestr_v1", sf_dir)
+    wp = artifact_path("warp_graph_wedgestr_v1", sf_dir)
+    copy_artifact(base_ep, ep)
+    copy_artifact(base_wp, wp)
     li = (
         _t(spark, sf_dir, "lineitem")
         .to_df()
@@ -12755,57 +12305,55 @@ def graph_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_e = _copurchase_order_edges(
         li.filter(F.col("l_orderkey") % 50 == 0)
     ).localCheckpoint(eager=True)
-    root = tempfile.mkdtemp(prefix="warp_graph_ingest_stream_")
-    try:
-        # one checkpoint pass stages all three trigger files
-        _stage_split_files(delta_e, root, F.col("src") % 3, ["src", "dst"])
-        stream = (
-            spark.readStream.schema("src bigint, dst bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
+
+    def ingest_stream() -> bool:
+        root = tempfile.mkdtemp(prefix="warp_graph_ingest_stream_")
+        try:
+            # one checkpoint pass stages all three trigger files
+            _stage_split_files(delta_e, root, F.col("src") % 3, ["src", "dst"])
+            stream = (
+                spark.readStream.schema("src bigint, dst bigint")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(root)
+            )
+
+            def ingest(bdf, batch_id):
+                if not bdf.isEmpty():
+                    append_edges(spark, ep, bdf)
+
+            q = stream.writeStream.foreachBatch(ingest).start()
+            q.processAllAvailable()
+            q.stop()
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+        return True
+
+    def fold() -> bool:
+        # cumulative delta = appended minus base: deterministic, no
+        # state carried across triggers
+        delta_all = (
+            spark.read.parquet(ep)
+            .select("u", "v")
+            .join(spark.read.parquet(base_ep).select("u", "v"), ["u", "v"], "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        return update_wedge_census(
+            spark, wp, ep, delta_all, max_center_degree=_GRAPH_WEDGE_CAP
         )
 
-        def ingest(bdf, batch_id):
-            if not bdf.isEmpty():
-                append_edges(spark, ep, bdf)
-
-        q = stream.writeStream.foreachBatch(ingest).start()
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    # cumulative delta = appended minus base: deterministic, no state
-    # carried across triggers
-    delta_all = (
-        spark.read.parquet(ep)
-        .select("u", "v")
-        .join(spark.read.parquet(base_ep).select("u", "v"), ["u", "v"], "left_anti")
-        .localCheckpoint(eager=True)
+    # the ingested copies keep their base markers; a census that cannot
+    # fold the delta is rebuilt from the ingested edges
+    mutate(ep, "_EDGES_COMPLETE", "ingesting", ingest_stream, base_stamp)
+    mutate(
+        wp,
+        "_WEDGES_COMPLETE",
+        "ingesting",
+        fold,
+        base_stamp,
+        _census_build(spark, ep),
+        "graphstr rebuilt (delta fold refused)",
     )
-    if not update_wedge_census(
-        spark, wp, ep, delta_all, max_center_degree=_GRAPH_WEDGE_CAP
-    ):
-        _publish_artifact(
-            wp,
-            "_WEDGES_COMPLETE",
-            "graphstr rebuilt (delta fold refused)",
-            lambda t: persist_wedge_census(
-                load_edges(spark, ep),
-                t,
-                max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
-            ),
-        )
-    census = load_wedge_census(spark, wp)
-    return census.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum("cn").cast("long").alias("cn_total"),
-        F.sum("ra_ppm").cast("long").alias("ra_total"),
-        (
-            F.sum(F.when(F.col("x") < F.col("y"), 1).otherwise(0))
-            == F.count(F.lit(1))
-        ).alias("pairs_canonical"),
-    )
+    return _wedge_census_row(load_wedge_census(spark, wp))
 
 
 # ---------------------------------------------------------------------------
@@ -14113,6 +13661,14 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The three fixed lexical queries every BM25 entry answers.
+_BM25_QUERIES = [
+    (1, ["hash", "join"]),
+    (2, ["stream", "window", "agg"]),
+    (3, ["slow", "query", "scan"]),
+]
+
+
 @register(
     "bm25_topk",
     """
@@ -14179,15 +13735,7 @@ def bm25_topk_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.pipeline.text import bm25_topk
 
     docs = _t(spark, sf_dir, "documents").to_df()
-    return bm25_topk(
-        docs,
-        [
-            (1, ["hash", "join"]),
-            (2, ["stream", "window", "agg"]),
-            (3, ["slow", "query", "scan"]),
-        ],
-        k=10,
-    )
+    return bm25_topk(docs, _BM25_QUERIES, k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -15973,17 +15521,9 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plus the 1-row exact corpus stats.  Build-once discipline via a
 # marker stamp, mirroring _ensure_ann_index.
 # ---------------------------------------------------------------------------
-def _bm25_index_path(sf_dir: str) -> str:
-    return _artifact_path("warp_bm25_idx_v1", sf_dir)
-
-
 def _ensure_bm25_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    import os
-
     from warp_spark.pipeline.text import build_bm25_index
 
-    path = _bm25_index_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     docs = _t(spark, sf_dir, "documents").to_df()
     # content fingerprint, not just cardinality (r10 ADVICE): a corpus
     # content change at unchanged row count must rebuild.  One cheap
@@ -16004,21 +15544,14 @@ def _ensure_bm25_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) 
             f"n_docs={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
         )
 
-    stamp = _memo_stamp(
-        f"bm25_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: build_bm25_index(docs, tmp, n_buckets=n_buckets),
-        )
-    return path
+    stamp = memo_stamp(f"bm25_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    return ensure(
+        artifact_path("warp_bm25_idx_v1", sf_dir),
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda tmp: build_bm25_index(docs, tmp, n_buckets=n_buckets),
+        rebuild,
+    )[0]
 
 
 # Build half: rebuild, read the artifacts BACK, and emit the index-
@@ -16080,23 +15613,10 @@ def bm25_index_probe_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.pipeline.text import bm25_index_probe
 
     path = _ensure_bm25_index(spark, sf_dir)
-    return bm25_index_probe(
-        spark,
-        path,
-        [
-            (1, ["hash", "join"]),
-            (2, ["stream", "window", "agg"]),
-            (3, ["slow", "query", "scan"]),
-        ],
-        k=10,
-    )
+    return bm25_index_probe(spark, path, _BM25_QUERIES, k=10)
 
 
 ORACLES["bm25_index_probe"] = ORACLES["bm25_topk"]
-
-
-def _bm25_append_path(sf_dir: str) -> str:
-    return _artifact_path("warp_bm25_idxapp_v1", sf_dir)
 
 
 def _ensure_bm25_index_appended(spark: SparkSession, sf_dir: str) -> str:
@@ -16110,12 +15630,9 @@ def _ensure_bm25_index_appended(spark: SparkSession, sf_dir: str) -> str:
     entry's oracle).  Same stamp/sentinel discipline as the dedup
     twin: content-fingerprinted final stamp, 'appending' sentinel
     during the in-place mutation."""
-    import os
-
     from warp_spark.pipeline.text import append_bm25_index, build_bm25_index
 
-    path = _bm25_append_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
+    path = artifact_path("warp_bm25_idxapp_v1", sf_dir)
     docs = _t(spark, sf_dir, "documents").to_df()
     is_base = F.col("doc_id") % 20 < 16
 
@@ -16135,37 +15652,25 @@ def _ensure_bm25_index_appended(spark: SparkSession, sf_dir: str) -> str:
             f"+ appended n={fp['ns']} crc={fp['crcs']}"
         )
 
-    stamp = _memo_stamp(
-        f"bm25_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current == stamp:
-        return path
-    base = docs.filter(is_base)
-    _publish_artifact(
-        path,
-        "_INDEX_COMPLETE",
-        "bm25app base only",
-        lambda tmp: build_bm25_index(base, tmp),
-    )
-    with open(marker, "w") as f:
-        f.write("appending\n")
-    if not append_bm25_index(spark, path, docs.filter(~is_base)):
-        # precondition refused (slice re-delivers indexed ids): the
-        # safe path is the one-shot rebuild over the full corpus —
-        # correctness is never conditional on the fast path
-        _publish_artifact(
+    stamp = memo_stamp(f"bm25_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    if read_marker(path, "_INDEX_COMPLETE") != stamp:
+        base = docs.filter(is_base)
+        publish_artifact(
             path,
             "_INDEX_COMPLETE",
+            "bm25app base only",
+            lambda tmp: build_bm25_index(base, tmp),
+        )
+        # a refusal (the slice re-delivers indexed ids) publishes the
+        # one-shot rebuild over the full corpus
+        mutate(
+            path,
+            "_INDEX_COMPLETE",
+            "appending",
+            lambda: append_bm25_index(spark, path, docs.filter(~is_base)),
             stamp,
             lambda tmp: build_bm25_index(docs, tmp),
         )
-        return path
-    with open(marker, "w") as f:
-        f.write(stamp + "\n")
     return path
 
 
@@ -16181,16 +15686,7 @@ def bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _ensure_bm25_index_appended(spark, sf_dir)
     compact_bm25_index(spark, path)
-    return bm25_index_probe(
-        spark,
-        path,
-        [
-            (1, ["hash", "join"]),
-            (2, ["stream", "window", "agg"]),
-            (3, ["slow", "query", "scan"]),
-        ],
-        k=10,
-    )
+    return bm25_index_probe(spark, path, _BM25_QUERIES, k=10)
 
 
 ORACLES["bm25_index_compact"] = ORACLES["bm25_topk"]
@@ -16210,16 +15706,7 @@ def bm25_index_append_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.pipeline.text import bm25_index_probe
 
     path = _ensure_bm25_index_appended(spark, sf_dir)
-    return bm25_index_probe(
-        spark,
-        path,
-        [
-            (1, ["hash", "join"]),
-            (2, ["stream", "window", "agg"]),
-            (3, ["slow", "query", "scan"]),
-        ],
-        k=10,
-    )
+    return bm25_index_probe(spark, path, _BM25_QUERIES, k=10)
 
 
 ORACLES["bm25_index_append"] = ORACLES["bm25_topk"]
@@ -16289,9 +15776,6 @@ ORACLES["bm25_index_append"] = ORACLES["bm25_topk"]
     """,
 )
 def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from warp_spark.pipeline.text import (
         bm25_index_probe,
         build_bm25_index,
@@ -16299,37 +15783,18 @@ def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").to_df()
-    del_docs = docs.filter(F.col("doc_id") % 20 >= 16)
-    std_path = _ensure_bm25_index(spark, sf_dir)
-    path = _artifact_path("warp_bm25_idxdel_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(std_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("deleting\n")
-    if not delete_from_bm25_index(spark, path, del_docs):
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "bm25 delete rebuilt (refused)",
-            lambda tmp: build_bm25_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-    else:
-        with open(marker, "w") as f:
-            f.write("full minus 16..19 (deleted)\n")
-    return bm25_index_probe(
-        spark,
+    path = artifact_path("warp_bm25_idxdel_v1", sf_dir)
+    copy_artifact(_ensure_bm25_index(spark, sf_dir), path)
+    mutate(
         path,
-        [
-            (1, ["hash", "join"]),
-            (2, ["stream", "window", "agg"]),
-            (3, ["slow", "query", "scan"]),
-        ],
-        k=10,
+        "_INDEX_COMPLETE",
+        "deleting",
+        lambda: delete_from_bm25_index(spark, path, docs.filter(F.col("doc_id") % 20 >= 16)),
+        "full minus 16..19 (deleted)",
+        lambda tmp: build_bm25_index(docs.filter(F.col("doc_id") % 20 < 16), tmp),
+        "bm25 delete rebuilt (refused)",
     )
+    return bm25_index_probe(spark, path, _BM25_QUERIES, k=10)
 
 
 # Index deletion, vector leg (pipeline/similarity.py::
@@ -16350,49 +15815,27 @@ def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from warp_spark.pipeline.similarity import (
-        brute_force_topk,
         delete_from_ivfpq_index,
-        ivfpq_probe,
-        load_ivfpq_index,
         persist_ivfpq_index,
     )
 
     emb = _t(spark, sf_dir, "embeddings").to_df()
     is_base = F.col("vec_id") % 5 != 4
-    std_path = _ensure_ann_index_appended(spark, sf_dir)
-    path = _artifact_path("warp_ann_idxdel_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(std_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("deleting\n")
-    if not delete_from_ivfpq_index(spark, path, emb.filter(~is_base)):
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "ann delete rebuilt (refused)",
-            lambda tmp: persist_ivfpq_index(
-                emb.filter(is_base), tmp, n_centroids=16, m=16, n_codes=32
-            ),
-        )
-    else:
-        with open(marker, "w") as f:
-            f.write("appended minus held-out fifth (deleted)\n")
-    centroids, codebooks, codes, storage = load_ivfpq_index(spark, path)
-    q = emb.filter(F.col("vec_id") < 10)
-    return _ann_recall_check(
-        ivfpq_probe(
-            q, codes, centroids, codebooks, k=5, nprobe=12, rerank=100,
-            storage=storage,
+    path = artifact_path("warp_ann_idxdel_v1", sf_dir)
+    copy_artifact(_ensure_ann_index_appended(spark, sf_dir), path)
+    mutate(
+        path,
+        "_INDEX_COMPLETE",
+        "deleting",
+        lambda: delete_from_ivfpq_index(spark, path, emb.filter(~is_base)),
+        "appended minus held-out fifth (deleted)",
+        lambda tmp: persist_ivfpq_index(
+            emb.filter(is_base), tmp, n_centroids=16, m=16, n_codes=32
         ),
-        brute_force_topk(q, emb.filter(is_base), k=5),
-        floor=0.8,
+        "ann delete rebuilt (refused)",
     )
+    return _ann_index_recall(spark, path, emb, emb.filter(is_base))
 
 
 # ---------------------------------------------------------------------------
