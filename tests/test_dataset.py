@@ -206,6 +206,8 @@ def test_rank_prefix_matches_window(spark):
     """The distributed prefix-sum running aggregate must agree with the
     single-task global window on every decomposable reducer — including
     NULL runs and duplicate sort keys."""
+    from pyspark.sql import Window
+
     rows = [
         (i, float(v) if v is not None else None)
         for i, v in enumerate([None, 5, 3, None, 8, 8, 1, None, 2, 9, 4, 4, None, 7] * 50)
@@ -222,9 +224,23 @@ def test_rank_prefix_matches_window(spark):
         # pre-pass; k is unique here, so both paths see one total order
         "rcd": Aggregator(F.col("v"), "countDistinct"),
     }
-    by = [Order("k")]
-    a = ds.rank(ranks, by, strategy="prefix", num_partitions=7).to_df()
-    b = ds.rank(ranks, by, strategy="window").to_df()
+    a = ds.rank(ranks, [Order("k")], num_partitions=7).to_df()
+    # reference: Spark's own single-task global window; first-occurrence
+    # markers stand in for count(DISTINCT), which Spark rejects in a window
+    run = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    first = F.col("v").isNotNull() & (
+        F.row_number().over(Window.partitionBy("v").orderBy("k")) == 1
+    )
+    b = ds.to_df().select(
+        "k",
+        F.row_number().over(Window.orderBy("k")).alias("rnk"),
+        F.sum("v").over(run).alias("rsum"),
+        F.avg("v").over(run).alias("ravg"),
+        F.min("v").over(run).alias("rmin"),
+        F.max("v").over(run).alias("rmax"),
+        F.count("v").over(run).alias("rcnt"),
+        F.sum(first.cast("long")).over(run).alias("rcd"),
+    )
     am = {r["k"]: r for r in a.collect()}
     bm = {r["k"]: r for r in b.collect()}
     assert len(am) == len(bm) == len(rows)
@@ -239,27 +255,19 @@ def test_rank_prefix_matches_window(spark):
 
 
 def test_rank_global_window_rejects_large_input(spark):
-    """The un-partitioned single-task window fallback is a hard error
-    above max_window_rows (matching transpose's guard) — a silent
+    """The un-partitioned single-task window (concat/list) is a hard
+    error above max_window_rows (matching transpose's guard) — a silent
     scale-killer must not be reachable by default on real data."""
     import pytest
 
     rows = [(i, float(i)) for i in range(700)]
     ds = Dataset.from_df(spark.createDataFrame(rows, "k long, v double"))
-    ranks = {"run": Aggregator(F.col("v"), "sum")}
+    ranks = {"run": Aggregator(F.col("v"), "concat")}
     with pytest.raises(ValueError, match="max_window_rows"):
-        ds.rank(ranks, [Order("k")], strategy="window", max_window_rows=500)
+        ds.rank(ranks, [Order("k")], max_window_rows=500)
     # raising the cap explicitly (genuinely small data) still works
-    out = ds.rank(
-        ranks, [Order("k")], strategy="window", max_window_rows=1000
-    ).to_df()
+    out = ds.rank(ranks, [Order("k")], max_window_rows=1000).to_df()
     assert out.count() == 700
-
-
-def test_rank_prefix_rejects_nondecomposable(spark):
-    ds = Dataset.from_df(spark.createDataFrame([(1, "a")], "k long, v string"))
-    with pytest.raises(ValueError, match="not prefix-decomposable"):
-        ds.rank({"x": Aggregator(F.col("v"), "concat")}, by=[Order("k")], strategy="prefix")
 
 
 def test_transpose_roundtrip(spark):
@@ -534,6 +542,22 @@ class TestParquetSchemaMemo:
         ds = Dataset.from_parquet(spark, p)
         assert ds.df.columns == ["v"]
         assert sorted(r.v for r in ds.collect()) == [0, 10, 20]
+
+    def test_events_reread_launches_no_schema_job(self, spark, tmp_path):
+        """``catalog._events`` reads through the same per-version memo
+        (with its nanosAsLong conf in the memo key)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from warp_spark.catalog import _events
+
+        ts = pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_000], pa.timestamp("ns"))
+        pq.write_table(pa.table({"event_id": [1, 2], "ts": ts}), str(tmp_path / "events.parquet"))
+        first, _ = self._jobs(spark, lambda: _events(spark, str(tmp_path)), "events_cold")
+        again, warm = self._jobs(spark, lambda: _events(spark, str(tmp_path)), "events_warm")
+        assert warm == 0
+        assert dict(again.dtypes)["ts"] == "timestamp"
+        assert sorted(again.collect()) == sorted(first.collect())
 
     def test_conf_change_infers_again(self, spark, tmp_path):
         import pyarrow as pa

@@ -70,13 +70,30 @@ def _rows(df, drop=()):
     return normalize_rows(cols, rows)
 
 
+def _plans(spark, build):
+    """``build()``'s frame and the text of its analyzed plan plus the
+    physical plans of the SQL executions run while building it: a rank
+    step pins its range partitioning with a local checkpoint, whose
+    plan is where the preview's input appears."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    before = set(ids())
+    df = build().to_df()
+    ran = [e.physicalPlanDescription() for i, e in ids().items() if i not in before]
+    return df, "\n".join([df._jdf.queryExecution().analyzed().toString(), *ran])
+
+
 def _both(spark, monkeypatch, steps, drop=()):
     """(local-path rows, plain-read rows) of the preview of ``steps``."""
     ch = Chain(steps)
     ch.example_dataset(spark, max_input_rows=SAMPLE_N).to_df().collect()
-    local = ch.example_dataset(spark, max_input_rows=N).to_df()
+    local, plan = _plans(spark, lambda: ch.example_dataset(spark, max_input_rows=N))
     if steps[0]["kind"] == "source" and steps[-1]["kind"] != "transpose":  # transpose collects
-        assert "LocalRelation" in local._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan or "LocalTableScan" in plan
     got = _rows(local, drop)
     with monkeypatch.context() as m:
         m.setattr(
@@ -86,8 +103,8 @@ def _both(spark, monkeypatch, steps, drop=()):
                 spark, path, fmt, options
             ).limit(rows),
         )
-        plain = ch.example_dataset(spark, max_input_rows=N).to_df()
-    assert "LocalRelation" not in plain._jdf.queryExecution().analyzed().toString()
+        plain, plan = _plans(spark, lambda: ch.example_dataset(spark, max_input_rows=N))
+    assert "LocalRelation" not in plan and "LocalTableScan" not in plan
     return got, _rows(plain, drop)
 
 

@@ -1981,7 +1981,7 @@ def test_ntile_global_matches_spark_window(spark):
     a larger shuffled frame — including the n < k edge where later
     buckets stay empty."""
     from pyspark.sql import Window
-    from warp_spark.catalog import _ntile_global
+    from warp_spark.prefix import ntile
 
     for n in list(range(1, 26)) + [997]:
         df = spark.range(n).select(
@@ -1996,7 +1996,7 @@ def test_ntile_global_matches_spark_window(spark):
         }
         got = {
             (r["id"],): r["b"]
-            for r in _ntile_global(df, keys, 4, "b").collect()
+            for r in ntile(df, keys, 4, "b").collect()
         }
         assert got == want, n
 
@@ -3034,12 +3034,12 @@ def test_dau_wau_cover_explode(spark, tmp_path):
 
 
 def test_prefix_sum_global_matches_spark_window(spark):
-    """The decimal-exact two-phase global cumsum (_prefix_sum_global,
-    the parts_abc backbone) must equal Spark's own un-partitioned
+    """The decimal-exact two-phase global cumsum (prefix.running, the
+    parts_abc backbone) must equal Spark's own un-partitioned
     running-sum window — including descending order keys, ties broken
     by id, and frames smaller than the partition count."""
     from pyspark.sql import Window
-    from warp_spark.catalog import _prefix_sum_global
+    from warp_spark.prefix import running
 
     for n in [1, 2, 7, 997]:
         df = spark.range(n).select(
@@ -3055,7 +3055,7 @@ def test_prefix_sum_global_matches_spark_window(spark):
         }
         got = {
             r["id"]: int(r["c"])
-            for r in _prefix_sum_global(df, keys, "v", "c").collect()
+            for r in running(df, keys, {"c": ("sum", F.col("v"))}).collect()
         }
         assert got == want, n
 

@@ -112,12 +112,12 @@ def main():
                 for row in spdf.itertuples(index=False, name=None)
             ]
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
+            print(f"FAIL  {name}: spark error: {e}", flush=True)
             failures.append(name)
             continue
         sql = oracles.get(name)
         if sql is None:
-            print(f"ok?   {name}: rows={len(srows)} (no oracle — rows-only check)")
+            print(f"ok?   {name}: rows={len(srows)} (no oracle — rows-only check)", flush=True)
             if len(srows) == 0:
                 failures.append(name)
             continue
@@ -142,24 +142,24 @@ def main():
                 for row in odf.itertuples(index=False, name=None)
             ]
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
+            print(f"FAIL  {name}: duckdb error: {e}", flush=True)
             failures.append(name)
             continue
         sc, sr = normalize_rows(scols, srows)
         oc, orr = normalize_rows(ocols, orows)
         dt = time.time() - t0
         if sc != oc:
-            print(f"FAIL  {name}: schema mismatch spark={sc} oracle={oc}")
+            print(f"FAIL  {name}: schema mismatch spark={sc} oracle={oc}", flush=True)
             failures.append(name)
         elif len(sr) != len(orr):
-            print(f"FAIL  {name}: rowcount spark={len(sr)} oracle={len(orr)}")
+            print(f"FAIL  {name}: rowcount spark={len(sr)} oracle={len(orr)}", flush=True)
             failures.append(name)
         elif sr != orr:
             bad = [(a, b) for a, b in zip(sr, orr) if a != b][:3]
-            print(f"FAIL  {name}: value mismatch, first diffs: {bad}")
+            print(f"FAIL  {name}: value mismatch, first diffs: {bad}", flush=True)
             failures.append(name)
         else:
-            print(f"PASS  {name}: {len(sr)} rows [{dt:.1f}s]")
+            print(f"PASS  {name}: {len(sr)} rows [{dt:.1f}s]", flush=True)
 
     print()
     if failures:

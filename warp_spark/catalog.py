@@ -53,6 +53,8 @@ from warp_spark.artifacts import (
 from warp_spark.dataset import Dataset, Order
 from warp_spark.functions import call
 from warp_spark.localdf import small_rows_df
+from warp_spark.prefix import ntile, running
+from warp_spark.sources.parquet import read_parquet
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> Dataset:
@@ -65,7 +67,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     native timestamp by integer-dividing to microseconds — same
     truncation DuckDB applies, so the oracle agrees bit-for-bit."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     return df
@@ -617,7 +619,7 @@ def rank_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Running DISTINCT count through the distributed prefix path
-# (dataset.py::_rank_prefix_with_count_distinct): Spark rejects
+# (Dataset.rank over prefix.running): Spark rejects
 # count(DISTINCT) as a window function outright, so this is first-
 # occurrence marking (one value-partitioned row_number) feeding the
 # two-phase prefix SUM — every stage parallel, the reducer that used
@@ -1693,7 +1695,6 @@ def mutable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mutable_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
     import os
     import shutil
     import tempfile
@@ -4043,8 +4044,6 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def events_sample_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
     import uuid
@@ -4121,13 +4120,9 @@ def events_sample_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
     import uuid
-
-    from pyspark.sql import Window
 
     from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import last_touch_attribution_stateful
@@ -4135,22 +4130,19 @@ def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="warp_stream_entry_")
     name = f"attribution_streamed_{uuid.uuid4().hex[:8]}"
     try:
-        batch = (
+        touches = (
             _events(spark, sf_dir)
             .filter(F.col("event_type").isin("view", "click", "purchase"))
             .withColumn(
                 "__is_touch",
                 F.when(F.col("event_type").isin("view", "click"), 1).otherwise(0),
             )
-            .withColumn(
-                "__third",
-                F.ntile(3).over(Window.orderBy("ts", "__is_touch", "event_id")),
-            )
         )
-        # ONE pass stages the time-ordered thirds (the old loop ran the
-        # global ntile WINDOW three times — once per filter — plus three
-        # source scans); row→file assignment is identical, and the
-        # stateful consumer sorts within each micro-batch group
+        batch = ntile(
+            touches, [F.col("ts"), F.col("__is_touch"), F.col("event_id")], 3, "__third"
+        )
+        # ONE pass stages the time-ordered thirds; the stateful consumer
+        # sorts within each micro-batch group
         _stage_split_files(
             batch,
             d,
@@ -4175,62 +4167,6 @@ def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ntile_global(df: DataFrame, order_cols, k: int, out: str) -> DataFrame:
-    """Exact global ``ntile(k)`` without an un-partitioned window:
-    range-partition on the sort keys, ``row_number`` within each
-    partition plus the exclusive prefix of per-partition counts (the
-    two-phase prefix discipline of ``dataset.py::_rank_prefix``), then
-    the closed-form ntile bucket from (global rank, n) — the first
-    ``n mod k`` buckets hold ``n div k + 1`` rows, exactly the SQL
-    definition (differential-pinned against Spark's own ntile window
-    in tests/test_scale_ops.py).  Partition count follows
-    ``spark.sql.shuffle.partitions`` (the _rank_prefix convention), so
-    per-partition windows stay memory-sized at cluster scale.  The
-    partition-count offsets and the
-    scalar ``n`` are bounded artifacts (≤ partitions rows / 1 number);
-    every row-level stage is parallel.  Callers must pass a tiebreaking
-    total order (sort keys unique per row) or bucket assignment at ties
-    is engine-arbitrary."""
-    from pyspark.sql import Window
-
-    pid, rn, off = "__nt_pid", "__nt_rn", "__nt_off"
-    # localCheckpoint, not persist: the row-number branch and the
-    # offsets branch must see the SAME range partitioning
-    # (repartitionByRange samples boundaries per materialization), and
-    # chained quartile cuts would nest persisted lineage ×2 per cut —
-    # the checkpoint truncates it. Eager + non-reliable storage: an
-    # executor loss fails the job instead of recomputing (the
-    # documented token_budget_fill tradeoff, sampling.py).
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    ranged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .withColumn(pid, F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy(pid).orderBy(*order_cols)
-    tot = ranged.groupBy(pid).agg(F.count(F.lit(1)).alias("__nt_c"))
-    woff = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        pid, F.coalesce(F.sum("__nt_c").over(woff), F.lit(0)).alias(off)
-    )
-    n = ranged.count()  # 1-scalar artifact over the checkpointed rows
-    q, rem = divmod(n, k)
-    cut = (q + 1) * rem
-    bucket = (
-        f"CASE WHEN {rn} <= {cut} THEN ({rn} - 1) DIV {q + 1} + 1 "
-        f"ELSE {rem} + ({rn} - 1 - {cut}) DIV {max(q, 1)} + 1 END"
-    )
-    return (
-        ranged.withColumn(rn, F.row_number().over(w))
-        .join(F.broadcast(offs), pid)
-        .withColumn(rn, F.col(rn) + F.col(off))
-        .withColumn(out, F.expr(bucket).cast("int"))
-        .drop(pid, rn, off)
-    )
-
-
 # ---------------------------------------------------------------------------
 # RFM segmentation: the classic customer-value grid — per-user recency
 # (days since last purchase vs the corpus max ts), frequency (purchase
@@ -4240,7 +4176,7 @@ def _ntile_global(df: DataFrame, order_cols, k: int, out: str) -> DataFrame:
 # BIGINT cents — a per-row IEEE multiply+floor (deterministic) whose
 # SUM is then exact integer arithmetic, never a float fold. The
 # quartile cuts run on the per-user artifact (|users| rows, already
-# aggregated down from raw events) through _ntile_global — two-phase
+# aggregated down from raw events) through prefix.ntile — two-phase
 # prefix rank + closed-form bucket, never an un-partitioned window.
 # ---------------------------------------------------------------------------
 @register(
@@ -4289,13 +4225,9 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("__ref_us", "__last_us")
     )
-    pu = _ntile_global(pu, [F.col("recency_days"), F.col("user_id")], 4, "r_q")
-    pu = _ntile_global(
-        pu, [F.col("frequency").desc(), F.col("user_id")], 4, "f_q"
-    )
-    pu = _ntile_global(
-        pu, [F.col("monetary_cents").desc(), F.col("user_id")], 4, "m_q"
-    )
+    pu = ntile(pu, [F.col("recency_days"), F.col("user_id")], 4, "r_q")
+    pu = ntile(pu, [F.col("frequency").desc(), F.col("user_id")], 4, "f_q")
+    pu = ntile(pu, [F.col("monetary_cents").desc(), F.col("user_id")], 4, "m_q")
     return (
         pu.groupBy("r_q", "f_q", "m_q")
         .agg(
@@ -7620,17 +7552,13 @@ def events_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_rollup,
     )
 
-    import glob
-    import os
-
-    from pyspark.sql import Window
-
     d = tempfile.mkdtemp(prefix="warp_stream_entry_")
     name = f"late_rollup_{uuid.uuid4().hex[:8]}"
     try:
         # stage newest-first thirds: each subsequent micro-batch is late
-        batch = _events(spark, sf_dir).withColumn(
-            "__third", F.ntile(3).over(Window.orderBy(F.col("ts").desc()))
+        # (event_id breaks ts ties, so the thirds are a total order)
+        batch = ntile(
+            _events(spark, sf_dir), [F.col("ts").desc(), F.col("event_id")], 3, "__third"
         )
         # ONE pass stages all three trigger files (previously three
         # window+filter+coalesce(1) writes); the old loop relied on
@@ -8436,13 +8364,9 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_holt_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
     import uuid
-
-    from pyspark.sql import Window
 
     from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import holt_stateful
@@ -8450,16 +8374,14 @@ def events_holt_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="warp_stream_entry_")
     name = f"holt_streamed_{uuid.uuid4().hex[:8]}"
     try:
-        batch = (
-            _events(spark, sf_dir)
-            .filter(F.col("event_type") == "purchase")
-            .withColumn(
-                "__third", F.ntile(3).over(Window.orderBy("ts", "event_id"))
-            )
+        batch = ntile(
+            _events(spark, sf_dir).filter(F.col("event_type") == "purchase"),
+            [F.col("ts"), F.col("event_id")],
+            3,
+            "__third",
         )
-        # ONE pass stages the time-ordered thirds (the old loop ran the
-        # global ntile window + a source scan per file); assignment is
-        # identical and consumers are in-batch order-insensitive
+        # ONE pass stages the time-ordered thirds; consumers are
+        # in-batch order-insensitive
         _stage_split_files(
             batch,
             d,
@@ -8963,13 +8885,9 @@ def orders_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_ewma_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
     import uuid
-
-    from pyspark.sql import Window
 
     from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import ewma_stateful
@@ -8977,16 +8895,14 @@ def events_ewma_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="warp_stream_entry_")
     name = f"ewma_streamed_{uuid.uuid4().hex[:8]}"
     try:
-        batch = (
-            _events(spark, sf_dir)
-            .filter(F.col("event_type") == "purchase")
-            .withColumn(
-                "__third", F.ntile(3).over(Window.orderBy("ts", "event_id"))
-            )
+        batch = ntile(
+            _events(spark, sf_dir).filter(F.col("event_type") == "purchase"),
+            [F.col("ts"), F.col("event_id")],
+            3,
+            "__third",
         )
-        # ONE pass stages the time-ordered thirds (the old loop ran the
-        # global ntile window + a source scan per file); assignment is
-        # identical and consumers are in-batch order-insensitive
+        # ONE pass stages the time-ordered thirds; consumers are
+        # in-batch order-insensitive
         _stage_split_files(
             batch,
             d,
@@ -11454,7 +11370,7 @@ def events_ks_drift_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__n2",
         (F.col("__n2") * F.col("c1") - F.col("__n1") * F.col("c2")).alias("d"),
     )
-    run = _prefix_sum_global(delta, [F.col("__key")], "d", "run")
+    run = running(delta, [F.col("__key")], {"run": ("sum", F.col("d"))})
     return run.agg(
         F.max("__n1").cast("long").alias("n1"),
         F.max("__n2").cast("long").alias("n2"),
@@ -13739,62 +13655,11 @@ def bm25_topk_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact global running SUM without an un-partitioned window — the
-# decimal-typed sibling of _ntile_global (same two-phase prefix
-# discipline as dataset.py::_rank_prefix, but the reference semantics
-# there fold through doubleValue/to_number, which is exact only below
-# 2^53; a revenue cumsum at extreme SF needs decimal(38,0)).  Range-
-# partition on the caller's total order, cumsum WITHIN each partition
-# with an ordinary window (parallel), add the exclusive prefix of the
-# per-partition totals (≤ partitions rows, broadcast back).  Callers
-# must pass a tiebreaking total order.
-# ---------------------------------------------------------------------------
-def _prefix_sum_global(df: DataFrame, order_cols, val: str, out: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    pid, off = "__ps_pid", "__ps_off"
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    # localCheckpoint for the same reason as _ntile_global: the row
-    # branch and the offsets branch must see ONE materialized range
-    # partitioning (repartitionByRange samples boundaries per run).
-    ranged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .withColumn(pid, F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w = (
-        Window.partitionBy(pid)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    woff = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        ranged.groupBy(pid)
-        .agg(F.sum(val).alias("__ps_c"))
-        .select(
-            pid,
-            F.coalesce(
-                F.sum("__ps_c").over(woff),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias(off),
-        )
-    )
-    return (
-        ranged.withColumn(out, F.sum(val).over(w))
-        .join(F.broadcast(offs), pid)
-        .withColumn(out, F.col(out) + F.col(off))
-        .drop(pid, off)
-    )
-
-
-# ---------------------------------------------------------------------------
 # ABC (Pareto) classification of parts by catalog revenue — the
 # inventory-management classic: rank parts by revenue descending, class
 # A = parts whose inclusive cumulative share stays within 80% of total
 # revenue, B within 95%, C the tail.  The global ordered cumsum is the
-# scale hazard; it runs through _prefix_sum_global (range partition +
+# scale hazard; it runs through prefix.running (range partition +
 # per-partition window + broadcast exclusive offsets — never a
 # single-task window over |parts| rows).  Revenue rides exact
 # round(price·100) cents in decimal(38,0); the class boundaries compare
@@ -13842,8 +13707,8 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(F.sum("c0").cast("decimal(38,0)").alias("cents"))
     )
-    cum = _prefix_sum_global(
-        rev, [F.col("cents").desc(), F.col("l_partkey")], "cents", "c"
+    cum = running(
+        rev, [F.col("cents").desc(), F.col("l_partkey")], {"c": ("sum", F.col("cents"))}
     )
     tot = rev.agg(F.sum("cents").cast("decimal(38,0)").alias("__t"))
     cls = _scalar_join(cum, tot).select(
@@ -14268,8 +14133,8 @@ def stats_chisq_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # collapse to a per-cents histogram with BOTH sides' counts; the KS
 # sup-gap is then max |n2·C1(x) − n1·C2(x)| over that histogram — the
 # cross-multiplied form needs NO division per value, and the running
-# difference is ONE distributed prefix sum (_prefix_sum_global, the
-# decimal-exact two-phase cumsum) of the signed per-value delta
+# difference is ONE distributed prefix sum (prefix.running, exact
+# over decimal(38,0)) of the signed per-value delta
 # n2·c1 − n1·c2, never an un-partitioned window over row-level data.
 # d_ppm ships as one integer floor division — scale-free, engine-exact.
 # ---------------------------------------------------------------------------
@@ -14335,7 +14200,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__n2",
         (F.col("__n2") * F.col("c1") - F.col("__n1") * F.col("c2")).alias("d"),
     )
-    run = _prefix_sum_global(delta, [F.col("cents")], "d", "run")
+    run = running(delta, [F.col("cents")], {"run": ("sum", F.col("d"))})
     return run.agg(
         F.max("__n1").cast("long").alias("n1"),
         F.max("__n2").cast("long").alias("n2"),
@@ -14354,7 +14219,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gets R' = 2·avg_rank = 2·cum_before(v) + cnt(v) + 1 — always an
 # integer.  Per variable that is one histogram groupBy + ONE
 # distributed prefix sum over the distinct-value domain
-# (_prefix_sum_global) + a hash join back on the value; the five
+# (prefix.running) + a hash join back on the value; the five
 # moments then ride decimal(38,0) exactly (both marginal sums equal
 # n(n+1) identically).  rho is the ONE fixed-parenthesization double
 # expression num / sqrt(denx · deny) over exactly-converted integers,
@@ -14414,7 +14279,7 @@ def stats_spearman_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def rank2_map(col: str, out: str) -> DataFrame:
         h = hxy.groupBy(col).agg(F.sum("cnt").alias("cnt"))
-        c = _prefix_sum_global(h, [F.col(col)], "cnt", "cum")
+        c = running(h, [F.col(col)], {"cum": ("sum", F.col("cnt"))})
         return c.select(
             col,
             (
@@ -14806,13 +14671,9 @@ def events_daily_type_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_new_users_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
     import uuid
-
-    from pyspark.sql import Window
 
     from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import first_seen_stateful
@@ -14820,12 +14681,11 @@ def events_new_users_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="warp_stream_entry_")
     name = f"new_users_streamed_{uuid.uuid4().hex[:8]}"
     try:
-        batch = _events(spark, sf_dir).withColumn(
-            "__third", F.ntile(3).over(Window.orderBy("ts", "event_id"))
+        batch = ntile(
+            _events(spark, sf_dir), [F.col("ts"), F.col("event_id")], 3, "__third"
         )
-        # ONE pass stages the time-ordered thirds (the old loop ran the
-        # global ntile window + a source scan per file); assignment is
-        # identical and consumers are in-batch order-insensitive
+        # ONE pass stages the time-ordered thirds; consumers are
+        # in-batch order-insensitive
         _stage_split_files(
             batch,
             d,
@@ -14899,14 +14759,13 @@ def graph_bipartite_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact global norm percentiles over the embedding column — order
 # statistics on an UNBOUNDED value domain (unlike the histogram-form
 # percentile entries, no small domain to collapse to), so the pick
-# rides the distributed two-phase prefix rank (Dataset.rank 'prefix'
-# path — range partition + per-partition row_number + broadcast
-# offsets; never a single-task global window).  Norms are exact
+# rides the distributed two-phase prefix rank (Dataset.rank over
+# prefix.running — range partition + per-partition running count +
+# broadcast offsets; never a single-task global window).  Norms are exact
 # integers: q = floor(v·10⁴ + 0.5) per element (per-row IEEE,
 # deterministic), norm²q = Σq² — so the percentile pick (value at rank
 # ceil(q·n), vec_id tiebreak) hash-matches DuckDB's quantile_disc.
-# The single driver-side n = count() is a scalar (the _ntile_global
-# precedent).
+# The single driver-side n = count() is a scalar.
 # ---------------------------------------------------------------------------
 @register(
     "embedding_norm_percentiles",
@@ -14946,7 +14805,7 @@ def embedding_norm_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("norm2q")
     )
-    n = nq.count()  # 1-scalar artifact (the _ntile_global precedent)
+    n = nq.count()  # 1-scalar artifact
     ranked = (
         Dataset(nq)
         .rank(

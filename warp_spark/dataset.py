@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from warp_spark.aggregators import Aggregator
 from warp_spark.localdf import small_rows_df
+from warp_spark.prefix import running
 from warp_spark.values import to_number  # noqa: F401  (used by rank windows)
 
 ROW_ID = "__row_id"
@@ -332,87 +333,92 @@ class Dataset:
         (Data.swift:300-304 — explicitly "not SQL UNION")."""
         return Dataset(self.df.unionByName(other.df, allowMissingColumns=True))
 
-    # reducers the distributed prefix-sum path can decompose (running
-    # value = f(local running value within range partition, exclusive
-    # prefix of per-partition totals))
-    _PREFIX_REDUCERS = frozenset({"countAll", "count", "sum", "average", "min", "max"})
-    # countDistinct distributes too, via a first-occurrence-marking
-    # pre-pass (mark each value's first row in the total order, then
-    # running-SUM the 0/1 markers through the same prefix machinery);
-    # only concat/list remain window-only, and for those the OUTPUT is
-    # O(n²) bytes — no partition strategy fixes byte volume, so the
-    # single-task window is not what caps them at scale
-    _GLOBAL_DISTRIBUTABLE = _PREFIX_REDUCERS | {"countDistinct"}
+    # reducers the distributed prefix scan decomposes; countDistinct
+    # rides it as a running SUM of first-occurrence markers. Only
+    # concat/list stay window-only: their running OUTPUT is O(n²) bytes,
+    # which no partition strategy fixes
+    _PREFIX_REDUCERS = frozenset(
+        {"countAll", "count", "sum", "average", "min", "max", "countDistinct"}
+    )
 
     def rank(
         self,
         ranks: Mapping[str, Aggregator],
         by: Sequence[Order],
         partition_by: Optional[Sequence[ExprLike]] = None,
-        strategy: str = "auto",
         num_partitions: Optional[int] = None,
         max_window_rows: int = 100_000,
     ) -> "Dataset":
         """Running aggregates over sorted rows (Data.swift:306-311;
         window pushdown SQL.swift:1491-1537). ``partition_by`` is a scale
         extension: the reference computes one global running aggregate
-        (single sequential reducer, Transformer.swift:476-547).
+        (single sequential reducer, Transformer.swift:476-547); a
+        partitioned rank is one window per partition key.
 
-        Strategies for the *global* (no ``partition_by``) case:
+        A global rank whose reducers are all decomposable (countAll,
+        count, sum, average, min, max, countDistinct) runs on the
+        distributed two-phase prefix scan of ``prefix.running`` over
+        ``num_partitions`` range partitions — no stage moves the data
+        to a single task. countDistinct marks each value's first row in
+        one total order (the sort keys plus a row id, attached if
+        absent) and running-sums the 0/1 markers: at row r that sum is
+        the number of distinct non-null values among rows ≤ r.
 
-        - ``"prefix"`` (chosen by ``"auto"`` whenever every reducer is
-          decomposable): two-phase distributed prefix aggregation.
-          Range-partition by the sort keys, compute the running aggregate
-          *within* each partition with an ordinary window (parallel), then
-          combine each row's local value with the exclusive prefix of the
-          per-partition totals (one tiny N_partitions-row side table,
-          broadcast back). No stage ever moves the full data to a single
-          task — this is the 100 TB path. ``countDistinct`` rides the
-          same path via a first-occurrence-marking pre-pass
-          (``_rank_prefix_with_count_distinct``).
-        - ``"window"``: single global window
-          (``Window.orderBy(...).rowsBetween(unboundedPreceding,
-          currentRow)``) — Spark serializes this into ONE task; kept only
-          as the fallback for the reducers whose running OUTPUT is
-          inherently O(n²) bytes (concat, list — no partition strategy
-          fixes byte volume) and for differential-testing the prefix
-          path.
+        A global rank with concat or list runs as one un-partitioned
+        window (a single task; their running output is O(n²) bytes, so
+        no partitioning would rescue them at scale) and raises when the
+        input holds more than ``max_window_rows`` rows.
         """
-        # windowed variants of the reducers (plain aggregate functions —
-        # the batch reducers in aggregators.py wrap them with group-level
-        # null handling that cannot sit under .over())
-        window_reducers = {
-            "sum": lambda c: F.sum(to_number(c)),
-            "average": lambda c: F.avg(to_number(c)),
-            "min": F.min,
-            "max": F.max,
-            "count": lambda c: F.count(F.when(to_number(c).isNotNull(), 1)),
-            "concat": lambda c: F.concat_ws("", F.collect_list(c.cast("string"))),
-            "list": F.collect_list,
-        }
         order_keys = self._order_columns(by) if by else [F.col(ROW_ID)]
-        if (
-            not partition_by
-            and strategy in ("auto", "prefix")
-            and all(a.reduce in self._GLOBAL_DISTRIBUTABLE for a in ranks.values())
-        ):
-            if any(a.reduce == "countDistinct" for a in ranks.values()):
-                return self._rank_prefix_with_count_distinct(
-                    ranks, order_keys, num_partitions
+        out = self.df
+        added_id = False
+        cd = [n for n, a in ranks.items() if a.reduce == "countDistinct"]
+        if cd:
+            # the marker windows and the running frame must resolve ties
+            # from ONE total order, or a tied row can see a running count
+            # that excludes its own value
+            if ROW_ID not in out.columns:
+                out = out.withColumn(ROW_ID, F.monotonically_increasing_id())
+                added_id = True
+            order_keys = [*order_keys, F.col(ROW_ID)]
+            parts = [_col(p) for p in partition_by or []]
+            for name in cd:
+                # Spark rejects count(DISTINCT) as a window function
+                # (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED)
+                c = ranks[name]._map_col()
+                w = Window.partitionBy(c, *parts).orderBy(*order_keys)
+                out = out.withColumn(
+                    f"__cd_{name}",
+                    (c.isNotNull() & (F.row_number().over(w) == 1)).cast("long"),
                 )
-            return self._rank_prefix(ranks, order_keys, num_partitions)
-        if strategy == "prefix":
-            bad = [n for n, a in ranks.items() if a.reduce not in self._GLOBAL_DISTRIBUTABLE]
-            raise ValueError(f"reducers not prefix-decomposable: {bad}")
+        drop = [f"__cd_{n}" for n in cd] + ([ROW_ID] if added_id else [])
+        if not partition_by and all(
+            a.reduce in self._PREFIX_REDUCERS for a in ranks.values()
+        ):
+            specs: dict[str, tuple[str, Column]] = {}
+            finals: dict[str, Column] = {}
+            for name, agg in ranks.items():
+                c, h = agg._map_col(), f"__rk_{name}"
+                num = to_number(c)
+                if agg.reduce == "average":
+                    specs[f"{h}_s"], specs[h] = ("sum", num), ("count", num)
+                    finals[name] = F.when(F.col(h) > 0, F.col(f"{h}_s") / F.col(h))
+                    continue
+                specs[h] = {
+                    "countAll": ("count", F.lit(1)),
+                    "count": ("count", F.when(num.isNotNull(), 1)),
+                    "countDistinct": ("sum", F.col(f"__cd_{name}")),
+                    "sum": ("sum", num),
+                    "min": ("min", c),
+                    "max": ("max", c),
+                }[agg.reduce]
+                finals[name] = F.col(h)
+            ranked = running(out, order_keys, specs, num_partitions=num_partitions)
+            return Dataset(ranked.withColumns(finals).drop(*specs, *drop))
         if not partition_by:
             import warnings
 
-            bad = [n for n, a in ranks.items() if a.reduce not in self._GLOBAL_DISTRIBUTABLE]
-            reason = (
-                f"reducers {bad} are not prefix-decomposable"
-                if bad
-                else "strategy='window' was forced (strategy='prefix' would distribute)"
-            )
+            bad = [n for n, a in ranks.items() if a.reduce not in self._PREFIX_REDUCERS]
             # hard guard, matching transpose(): a single-task global
             # window over more than max_window_rows is a silent
             # scale-killer, not a slow path — count via a cheap limit
@@ -428,197 +434,50 @@ class Dataset:
             )
             if probe > max_window_rows:
                 raise ValueError(
-                    f"rank: un-partitioned global window ({reason}) over "
-                    f"more than max_window_rows={max_window_rows} rows "
-                    "would run on a single task; partition_by a key, use a "
-                    "prefix-decomposable reducer, or raise max_window_rows "
+                    f"rank: un-partitioned global window (reducers {bad} are "
+                    f"not prefix-decomposable) over more than "
+                    f"max_window_rows={max_window_rows} rows would run on a "
+                    "single task; partition_by a key, use a prefix-"
+                    "decomposable reducer, or raise max_window_rows "
                     "explicitly for genuinely small data"
                 )
             warnings.warn(
                 "rank: un-partitioned global window over the data — "
-                f"{reason}, so the running aggregate runs on a single task; "
-                "fine for preview-sized data, a bottleneck at scale",
+                f"reducers {bad} are not prefix-decomposable, so the running "
+                "aggregate runs on a single task; fine for preview-sized "
+                "data, a bottleneck at scale",
                 RuntimeWarning,
                 stacklevel=2,
             )
-        out = self.df
-        cd_present = any(a.reduce == "countDistinct" for a in ranks.values())
-        added_id = False
-        if cd_present:
-            # the marker window and the running-sum frame must resolve
-            # ties from ONE total order (otherwise a tied row can see a
-            # running count that excludes its own value) — extend the
-            # sort keys with a row id, mirroring the prefix path
-            if ROW_ID not in out.columns:
-                out = out.withColumn(ROW_ID, F.monotonically_increasing_id())
-                added_id = True
-            order_keys = [*order_keys, F.col(ROW_ID)]
+        # windowed variants of the reducers (plain aggregate functions —
+        # the batch reducers in aggregators.py wrap them with group-level
+        # null handling that cannot sit under .over())
+        window_reducers = {
+            "sum": lambda c: F.sum(to_number(c)),
+            "average": lambda c: F.avg(to_number(c)),
+            "min": F.min,
+            "max": F.max,
+            "count": lambda c: F.count(F.when(to_number(c).isNotNull(), 1)),
+            "list": F.collect_list,
+        }
         base = Window.orderBy(*order_keys)
         if partition_by:
             base = Window.partitionBy(*[_col(p) for p in partition_by]).orderBy(*order_keys)
         framed = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        cd_markers: list[str] = []
         for name, agg in ranks.items():
             if agg.reduce == "countAll":
                 # simple rank = running countAll (QBERankStep.swift:107-122)
                 c = F.row_number().over(base)
             elif agg.reduce == "countDistinct":
-                # Spark rejects count(DISTINCT) as a window function
-                # (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED), so even the
-                # fallback uses first-occurrence marking: mark each
-                # value's first row, running-sum the markers
-                cval = agg._map_col()
-                parts = [_col(p) for p in partition_by] if partition_by else []
-                mw = Window.partitionBy(cval, *parts).orderBy(*order_keys)
-                m = f"__cdw_{name}"
-                out = out.withColumn(
-                    m,
-                    (cval.isNotNull() & (F.row_number().over(mw) == 1)).cast("long"),
-                )
-                cd_markers.append(m)
-                c = F.sum(F.col(m)).over(framed)
+                c = F.sum(F.col(f"__cd_{name}")).over(framed)
+            elif agg.reduce == "concat":
+                strs = F.collect_list(agg._map_col().cast("string")).over(framed)
+                c = F.concat_ws("", strs)
             elif agg.reduce in window_reducers:
                 c = window_reducers[agg.reduce](agg._map_col()).over(framed)
             else:
                 raise ValueError(f"reducer {agg.reduce!r} not supported as running aggregate")
             out = out.withColumn(name, c)
-        drop = cd_markers + ([ROW_ID] if added_id else [])
-        return Dataset(out.drop(*drop))
-
-    def _rank_prefix_with_count_distinct(
-        self,
-        ranks: Mapping[str, Aggregator],
-        order_keys: Sequence[Column],
-        num_partitions: Optional[int],
-    ) -> "Dataset":
-        """Distributed global running countDistinct: mark each value's
-        FIRST occurrence in the total order (a value-partitioned window
-        — one hash shuffle on the value, state = one row_number), then
-        running-SUM the 0/1 markers through the standard two-phase
-        prefix path.  The running sum of first-occurrence markers at
-        row r is exactly the number of distinct non-null values among
-        rows ≤ r.
-
-        Consistency requires ONE total order shared by the marker pass
-        and the prefix pass, so the sort keys are extended with a row
-        id (attached here if absent — arbitrary but FIXED, the same
-        role physical row order plays in the single-window fallback's
-        tie behavior) and the whole lineage is pinned by the prefix
-        path's persist.  Skew bound: the marker window colocates the
-        hottest value's rows, but carries only (value, keys, id) —
-        at 100 TB that is the narrow projection, not the data."""
-        df = self.df
-        added_id = ROW_ID not in df.columns
-        if added_id:
-            df = df.withColumn(ROW_ID, F.monotonically_increasing_id())
-        full_keys = [*order_keys, F.col(ROW_ID)]
-        markers: dict[str, Column] = {}
-        for name, agg in ranks.items():
-            if agg.reduce == "countDistinct":
-                c = agg._map_col()
-                w = Window.partitionBy(c).orderBy(*full_keys)
-                markers[f"__cd_{name}"] = (
-                    c.isNotNull() & (F.row_number().over(w) == 1)
-                ).cast("long")
-        out = Dataset(df.withColumns(markers))._rank_prefix(
-            ranks, full_keys, num_partitions
-        )
-        drop = list(markers) + ([ROW_ID] if added_id else [])
-        return Dataset(out.df.drop(*drop))
-
-    def _rank_prefix(
-        self,
-        ranks: Mapping[str, Aggregator],
-        order_keys: Sequence[Column],
-        num_partitions: Optional[int],
-    ) -> "Dataset":
-        """Distributed global running aggregate: range-partition on the
-        sort keys, window *within* each partition, then add the exclusive
-        prefix of per-partition totals. Equivalent to the global window
-        for every decomposable reducer, but every stage is parallel."""
-        df = self.df
-        spark = df.sparkSession
-        n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        pid = "__rank_pid"
-        # The plan branches below (row-level windows + the tiny per-partition
-        # totals) — the branch point MUST be pinned: repartitionByRange
-        # samples its boundaries per materialization, so without a persist
-        # the two branches can land rows in different partitions and the
-        # offsets would not line up with the local running values.
-        ranged = (
-            df.repartitionByRange(n, *order_keys)
-            .withColumn(pid, F.spark_partition_id())
-            .persist()
-        )
-        wrow = Window.partitionBy(pid).orderBy(*order_keys)
-        wframe = wrow.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-        helpers: dict[str, Column] = {}  # local (within-partition) running values
-        totals: list[Column] = []  # per-partition totals feeding the offsets
-        prefix_fns: dict[str, Column.__class__] = {}  # helper -> combiner over totals
-        finals: dict[str, Column] = {}  # output expression per rank column
-
-        def add(helper: str, win: Column, tot: Column, prefix_fn) -> tuple[Column, Column]:
-            helpers[helper] = win
-            totals.append(tot.alias(f"__t_{helper}"))
-            prefix_fns[helper] = prefix_fn
-            return F.col(helper), F.col(f"__o_{helper}")
-
-        for name, agg in ranks.items():
-            c = agg._map_col()
-            num = to_number(c)
-            kind = agg.reduce
-            h = f"__h_{name}"
-            if kind == "countAll":
-                local, off = add(h, F.row_number().over(wrow), F.count(F.lit(1)), F.sum)
-                finals[name] = local + F.coalesce(off, F.lit(0))
-            elif kind == "count":
-                cnt = F.count(F.when(num.isNotNull(), 1))
-                local, off = add(h, cnt.over(wframe), cnt, F.sum)
-                finals[name] = local + F.coalesce(off, F.lit(0))
-            elif kind == "countDistinct":
-                # running sum of the 0/1 first-occurrence markers built
-                # by _rank_prefix_with_count_distinct (LONG, not the
-                # to_number double path — the fallback returns long)
-                m = F.sum(F.col(f"__cd_{name}"))
-                local, off = add(h, m.over(wframe), m, F.sum)
-                finals[name] = (local + F.coalesce(off, F.lit(0))).cast("long")
-            elif kind == "sum":
-                local, off = add(h, F.sum(num).over(wframe), F.sum(num), F.sum)
-                finals[name] = F.when(
-                    local.isNull() & off.isNull(), F.lit(None)
-                ).otherwise(F.coalesce(local, F.lit(0)) + F.coalesce(off, F.lit(0)))
-            elif kind in ("min", "max"):
-                fn = F.min if kind == "min" else F.max
-                comb = F.least if kind == "min" else F.greatest  # both skip NULLs
-                local, off = add(h, fn(c).over(wframe), fn(c), fn)
-                finals[name] = comb(local, off)
-            elif kind == "average":
-                s = F.sum(num)
-                cnt = F.count(num)
-                ls, os_ = add(f"{h}_s", s.over(wframe), s, F.sum)
-                lc, oc = add(f"{h}_c", cnt.over(wframe), cnt, F.sum)
-                tot_c = lc + F.coalesce(oc, F.lit(0))
-                tot_s = F.coalesce(ls, F.lit(0.0)) + F.coalesce(os_, F.lit(0.0))
-                finals[name] = F.when(tot_c > 0, tot_s / tot_c)
-            else:  # pragma: no cover — guarded by _PREFIX_REDUCERS
-                raise AssertionError(kind)
-
-        local_df = ranged.withColumns(helpers)
-        # exclusive prefix over the per-partition totals: N_partitions rows
-        # total, so the single-partition window here is over a side table of
-        # at most a few thousand rows — not the data
-        totals_df = ranged.groupBy(pid).agg(*totals)
-        ow = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-        offsets = totals_df.select(
-            pid,
-            *[
-                prefix_fns[helper](F.col(f"__t_{helper}")).over(ow).alias(f"__o_{helper}")
-                for helper in helpers
-            ],
-        )
-        out = local_df.join(F.broadcast(offsets), pid, "left").withColumns(finals)
-        drop = [pid, *helpers.keys(), *[f"__o_{helper}" for helper in helpers]]
         return Dataset(out.drop(*drop))
 
     def transpose(self, max_rows: int = 2000) -> "Dataset":

@@ -9,7 +9,7 @@ as a distributed plan:
 
 - token counts are JVM Column expressions (``text.token_count``),
 - the global exclusive prefix sum reuses the two-phase distributed
-  running aggregate (``Dataset.rank(strategy="prefix")``): range
+  running aggregate of ``Dataset.rank`` (``prefix.running``): range
   partition on the order key → ordinary window *within* each partition
   → combine with the exclusive prefix of per-partition totals (a tiny
   N_partitions-row broadcast side table). No stage moves the full data
@@ -61,7 +61,6 @@ def pack_chunks(
     ranked = counted.rank(
         {"running_tokens": Aggregator(F.col("n_tokens"), "sum")},
         by=[Order(F.col(id_col))],
-        strategy="prefix",
         num_partitions=num_partitions,
     ).to_df()
     off = (F.col("running_tokens") - F.col("n_tokens")).cast("long")

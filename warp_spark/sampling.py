@@ -18,6 +18,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from warp_spark.prefix import running
+
 _RANK = "__strat_rank"
 _KEY = "__strat_key"
 
@@ -419,47 +421,20 @@ def deterministic_shuffle_global(
     """Seeded deterministic shuffle with a GLOBAL position — for the
     consumers that do need one total order (curriculum schedules,
     resumable single-stream readers), computed the scale-safe way: the
-    distributed two-phase prefix of ``dataset.py::_rank_prefix``, never
-    a global single-task window. Range-partition on the md5 key
-    (sample-based bounds, so partitions stay balanced under any seed),
-    ``row_number`` within each partition, then add the broadcast
-    exclusive prefix of per-partition row counts — every stage is
-    partition-parallel; the only single-partition window runs over the
-    N_partitions-row totals side table, not the data. The persist pins
-    the range-partitioner's sampled bounds so the totals leg sees the
-    same row placement as the row leg (repartitionByRange re-samples
-    per materialization)."""
+    row's rank in (md5 key, id) order from the distributed prefix scan
+    of ``prefix.running``, never a global single-task window. The range
+    partitioner samples its bounds from the md5 keys, so partitions stay
+    balanced under any seed."""
     key = F.md5(
         F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string"))
     )
     staged = df.select(F.col(id_col), key.alias("shuffle_key"))
-    spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    pid = "__shuf_pid"
-    ranged = (
-        staged.repartitionByRange(n, F.col("shuffle_key"), F.col(id_col))
-        .withColumn(pid, F.spark_partition_id())
-        .persist()
-    )
-    wrow = Window.partitionBy(pid).orderBy("shuffle_key", id_col)
-    local = ranged.withColumn("_lrn", F.row_number().over(wrow))
-    totals = ranged.groupBy(pid).agg(F.count(F.lit(1)).alias("_t"))
-    ow = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        F.col(pid), F.sum("_t").over(ow).alias("_off")
-    )
-    return (
-        local.join(F.broadcast(offsets), pid, "left")
-        .select(
-            F.col(id_col),
-            (F.col("_lrn") + F.coalesce(F.col("_off"), F.lit(0)))
-            .cast("long")
-            .alias("position"),
-            F.col("shuffle_key"),
-        )
-    )
+    return running(
+        staged,
+        [F.col("shuffle_key"), F.col(id_col)],
+        {"position": ("count", F.lit(1))},
+        num_partitions=num_partitions,
+    ).select(F.col(id_col), F.col("position").cast("long"), F.col("shuffle_key"))
 
 
 def kmv_overlap(
@@ -546,12 +521,12 @@ def token_budget_fill(
 
     Distributed exactly like Dataset's running aggregates: a per-group
     window would colocate an entire source on one task (sources are few
-    and huge at 100 TB), so the running sum is a grouped two-phase
-    prefix instead — range-partition on (group, priority) so one
+    and huge at 100 TB), so the running sum is the grouped prefix scan
+    of ``prefix.running`` — range-partition on (group, priority) so one
     group SPANS many partitions in order, window within (group,
-    partition-id), then add each group's exclusive prefix of
-    per-partition totals (a groups×partitions-row aggregate, broadcast
-    back).  Every stage is parallel; exact for integer weights.
+    partition), then add each group's exclusive prefix of per-partition
+    totals (a groups×partitions-row side table, broadcast back).  Every
+    stage is parallel; exact for integer weights.
 
     Returns the selected rows plus ``cum_weight`` (inclusive running
     total ≤ budget).
@@ -593,53 +568,13 @@ def token_budget_fill(
                 stacklevel=2,
             )
             order_cols = [F.col(weight_col).desc()]
-    spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    pid = "__fill_pid"
-    # pin the branch point: repartitionByRange samples boundaries per
-    # materialization; the row-level branch and the totals branch must
-    # see identical partition assignments.  localCheckpoint (eager)
-    # rather than persist(): it materializes ONCE right here, and its
-    # blocks are released by the ContextCleaner when this DataFrame is
-    # garbage-collected — a persist() would sit in the cache manager
-    # forever unless the caller unpersisted it, accumulating pinned
-    # partitions across calls in a long-lived session.  Tradeoff:
-    # localCheckpoint truncates lineage into NON-reliable executor
-    # storage, so on a multi-executor cluster a lost executor fails the
-    # job instead of recomputing; with a reliable checkpoint dir
-    # configured (sparkContext.setCheckpointDir) swap to .checkpoint()
-    # for fault tolerance at the cost of a distributed write
-    ranged = (
-        df.repartitionByRange(n, F.col(group_col), *order_cols)
-        .withColumn(pid, F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wrow = (
-        Window.partitionBy(group_col, pid)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn("__local", F.sum(weight_col).over(wrow))
-    totals = ranged.groupBy(group_col, pid).agg(
-        F.sum(weight_col).alias("__tot")
-    )
-    woff = (
-        Window.partitionBy(group_col)
-        .orderBy(pid)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        group_col, pid, F.sum("__tot").over(woff).alias("__off")
-    )
-    cum = F.col("__local") + F.coalesce(F.col("__off"), F.lit(0))
-    return (
-        local.join(F.broadcast(offsets), [group_col, pid], "left")
-        .withColumn("cum_weight", cum)
-        .filter(F.col("cum_weight") <= budget)
-        .drop(pid, "__local", "__off")
-    )
+    return running(
+        df,
+        order_cols,
+        {"cum_weight": ("sum", F.col(weight_col))},
+        group_cols=[group_col],
+        num_partitions=num_partitions,
+    ).filter(F.col("cum_weight") <= budget)
 
 
 def epoch_allocation(

@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(phys_bytes: int | None) -> str:
+    """Default ``spark.driver.memory``: 60 % of physical memory in whole
+    GiB, at least 1g and at most 16g. A local driver JVM is the whole
+    engine, and a heap larger than the box can hold loses the JVM under
+    load. Unknown physical memory gives the 16g cap."""
+    if not phys_bytes:
+        return "16g"
+    return f"{max(1, min(16, int(phys_bytes * 0.6) >> 30))}g"
+
+
+def _phys_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return None
+
+
 def get_spark(
     app_name: str = "warp-spark",
     cpus: str | int | None = None,
@@ -47,7 +64,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("WARP_SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("WARP_SPARK_DRIVER_MEM") or driver_memory(_phys_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.caseSensitive", "false")
         # the events table carries TIMESTAMP(NANOS) parquet columns,
