@@ -21,23 +21,13 @@ def plan_of(spark, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def pinned_plans_of(spark, name: str) -> tuple[str, str]:
-    """(executed plan, physical plans of the SQL executions the entry ran
-    while it was built, in explain's formatted mode). A prefix scan (warp_spark/prefix.py) pins its
-    range partitioning with a local checkpoint, so its range exchange
-    and everything under it run there, not in the final plan."""
+def pinned_plans_of(spark, sql_plans, name: str) -> tuple[str, str]:
+    """(executed plan, plans of the SQL executions run while the entry
+    was built — where a prefix scan's pinned range exchange shows)."""
     from warp_spark.catalog import QUERIES
 
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def ids():
-        ex = store.executionsList()
-        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
-
-    before = set(ids())
-    df = QUERIES[name](spark, SF)
-    built = [e.physicalPlanDescription() for i, e in ids().items() if i not in before]
-    return df._jdf.queryExecution().executedPlan().toString(), "\n".join(built)
+    df, built = sql_plans(lambda: QUERIES[name](spark, SF))
+    return df._jdf.queryExecution().executedPlan().toString(), built
 
 
 def optimized_of(spark, name: str) -> str:
@@ -207,10 +197,10 @@ def test_char_entropy_no_shuffle_no_python(spark):
         assert py not in plan
 
 
-def test_pack_sequences_distributed_prefix(spark):
+def test_pack_sequences_distributed_prefix(spark, sql_plans):
     """Packing must use the two-phase prefix shape: range partition on
     the order key, never a global single-task window over the data."""
-    plan, built = pinned_plans_of(spark, "pack_sequences")
+    plan, built = pinned_plans_of(spark, sql_plans, "pack_sequences")
     assert "Arguments: rangepartitioning(" in built  # an Exchange's
     assert "SinglePartition" not in plan or plan.count("Window") >= 2
 
@@ -414,13 +404,13 @@ def test_triangle_counts_caches_oriented_build_once(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_running_distinct_uses_prefix_path(spark):
+def test_running_distinct_uses_prefix_path(spark, sql_plans):
     """rank_running_distinct must run the distributed decomposition:
     a value-partitioned marker window (PARTITION BY user_id — never a
     whole-data unpartitioned window) followed by the range-partitioned
     prefix machinery. The only allowed unpartitioned window is the
     N-partitions-row offsets side table."""
-    _, built = pinned_plans_of(spark, "rank_running_distinct")
+    _, built = pinned_plans_of(spark, sql_plans, "rank_running_distinct")
     assert "Arguments: rangepartitioning(" in built  # Exchanges'
     assert "Arguments: hashpartitioning(user_id" in built
 

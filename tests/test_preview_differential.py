@@ -70,30 +70,24 @@ def _rows(df, drop=()):
     return normalize_rows(cols, rows)
 
 
-def _plans(spark, build):
-    """``build()``'s frame and the text of its analyzed plan plus the
-    physical plans of the SQL executions run while building it: a rank
-    step pins its range partitioning with a local checkpoint, whose
-    plan is where the preview's input appears."""
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def ids():
-        ex = store.executionsList()
-        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
-
-    before = set(ids())
-    df = build().to_df()
-    ran = [e.physicalPlanDescription() for i, e in ids().items() if i not in before]
-    return df, "\n".join([df._jdf.queryExecution().analyzed().toString(), *ran])
-
-
-def _both(spark, monkeypatch, steps, drop=()):
+def _both(spark, monkeypatch, sql_plans, steps, drop=()):
     """(local-path rows, plain-read rows) of the preview of ``steps``."""
     ch = Chain(steps)
     ch.example_dataset(spark, max_input_rows=SAMPLE_N).to_df().collect()
-    local, plan = _plans(spark, lambda: ch.example_dataset(spark, max_input_rows=N))
+
+    ranked = any(s["kind"] == "rank" for s in steps)
+    # a rank step's analyzed plan starts at its pin's LogicalRDD, so the
+    # source shows in the pin's plan (a LocalTableScan), not in the
+    # analyzed one (a LocalRelation)
+    local_source = "LocalTableScan" if ranked else "LocalRelation"
+
+    def preview():
+        df, ran = sql_plans(lambda: ch.example_dataset(spark, max_input_rows=N).to_df())
+        return df, ran if ranked else df._jdf.queryExecution().analyzed().toString()
+
+    local, plan = preview()
     if steps[0]["kind"] == "source" and steps[-1]["kind"] != "transpose":  # transpose collects
-        assert "LocalRelation" in plan or "LocalTableScan" in plan
+        assert local_source in plan
     got = _rows(local, drop)
     with monkeypatch.context() as m:
         m.setattr(
@@ -103,8 +97,8 @@ def _both(spark, monkeypatch, steps, drop=()):
                 spark, path, fmt, options
             ).limit(rows),
         )
-        plain, plan = _plans(spark, lambda: ch.example_dataset(spark, max_input_rows=N))
-    assert "LocalRelation" not in plan and "LocalTableScan" not in plan
+        plain, plan = preview()
+    assert local_source not in plan
     return got, _rows(plain, drop)
 
 
@@ -158,24 +152,24 @@ def _fill(steps, path):
 
 
 @pytest.mark.parametrize("name", sorted(STEPS))
-def test_preview_rows_match_plain_truncated_read(spark, monkeypatch, src, name):
+def test_preview_rows_match_plain_truncated_read(spark, monkeypatch, sql_plans, src, name):
     steps = [step("source", path=src)] + _fill(STEPS[name], src)
     # crawl measures each fetch's duration, which no two runs share
     drop = ("duration_ms",) if name == "crawl" else ()
-    got, want = _both(spark, monkeypatch, steps, drop)
+    got, want = _both(spark, monkeypatch, sql_plans, steps, drop)
     assert got == want
     assert got[1]  # every chain above keeps some rows
 
 
-def test_random_step_preview_row_counts_match(spark, monkeypatch, src):
+def test_random_step_preview_row_counts_match(spark, monkeypatch, sql_plans, src):
     for seed in (None, 7):
         steps = [step("source", path=src), step("random", n=12, seed=seed)]
-        got, want = _both(spark, monkeypatch, steps)
+        got, want = _both(spark, monkeypatch, sql_plans, steps)
         assert len(got[1]) == len(want[1]) == 12
 
 
-def test_sequencer_chain_previews_alike(spark, monkeypatch):
-    got, want = _both(spark, monkeypatch, [step("sequencer", pattern="[ab]{3}")])
+def test_sequencer_chain_previews_alike(spark, monkeypatch, sql_plans):
+    got, want = _both(spark, monkeypatch, sql_plans, [step("sequencer", pattern="[ab]{3}")])
     assert got == want and len(got[1]) == 8
 
 

@@ -363,6 +363,9 @@ class Dataset:
         one total order (the sort keys plus a row id, attached if
         absent) and running-sums the 0/1 markers: at row r that sum is
         the number of distinct non-null values among rows ≤ r.
+        Building such a rank runs at least two Spark jobs at once,
+        before any action: the scan's pin samples the range bounds and
+        writes the range shuffle (see warp_spark/prefix.py).
 
         A global rank with concat or list runs as one un-partitioned
         window (a single task; their running output is O(n²) bytes, so

@@ -13,12 +13,20 @@ Spark form never moves the data to one task:
 4. add the exclusive prefix of the per-partition totals, a side table of
    at most (groups ×) partitions rows, broadcast back.
 
-Every stage over the data is partition-parallel. The pin is a lazy
-``localCheckpoint``: it leaves no CacheManager entry, and its blocks are
-released by the ContextCleaner when the frame is garbage-collected (a
-``persist`` would stay cached until someone unpersisted it). Tradeoff:
-local checkpoint blocks are not replicated, so on a multi-executor
-cluster a lost executor fails the job instead of recomputing it.
+Every stage over the data is partition-parallel. The pin is a
+``localCheckpoint(eager=False)``: it leaves no CacheManager entry, and
+its blocks are released by the ContextCleaner when the frame is
+garbage-collected (a ``persist`` would stay cached until someone
+unpersisted it). Tradeoffs, accepted for that:
+
+- the pin is not lazy. With adaptive execution on (the session
+  default), building it runs the range-sampling job and the range
+  shuffle's map stage (plus the map stage of every shuffle under it) —
+  at least two jobs over the whole input when the frame is built, before
+  any action and even if the frame is only asked for its schema. A
+  ``persist`` ran them inside the first action;
+- local checkpoint blocks are not replicated, so on a multi-executor
+  cluster a lost executor fails the job instead of recomputing it.
 """
 
 from __future__ import annotations
@@ -121,7 +129,6 @@ def ntile(
     order_cols: Sequence[Column],
     k: int,
     out: str,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Exact global ``ntile(k)`` over ``order_cols`` (a total order)
     without an un-partitioned window: the row's rank and the row count
@@ -129,9 +136,7 @@ def ntile(
     definition in closed form — the first ``n mod k`` buckets hold
     ``n div k + 1`` rows, the rest ``n div k``."""
     rn, n = "__nt_rn", "__nt_n"
-    ranked = running(
-        df, order_cols, {rn: ("count", F.lit(1))}, num_partitions=num_partitions, count_col=n
-    )
+    ranked = running(df, order_cols, {rn: ("count", F.lit(1))}, count_col=n)
     q, rem = f"({n} DIV {k})", f"({n} % {k})"
     cut = f"(({q} + 1) * {rem})"
     bucket = (
