@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 import pytest
 
 from warp_spark import get_spark
@@ -31,3 +33,44 @@ def sql_plans(spark):
         return out, "\n".join(ran)
 
     return run
+
+
+@pytest.fixture
+def plain_reads(monkeypatch):
+    """``with plain_reads():`` previews fold their chain over
+    ``read_source(path).limit(n)``: no sample, so no prefix memo either
+    (warp_spark.sources.parquet, warp_spark.plans.chain)."""
+    import warp_spark.sources as sources
+
+    @contextmanager
+    def plain():
+        with monkeypatch.context() as m:
+            m.setattr(
+                sources,
+                "preview_source",
+                lambda spark, path, rows, fmt="parquet", options=None: sources.read_source(
+                    spark, path, fmt, options
+                ).limit(rows),
+            )
+            m.setattr(sources, "current_sample", lambda *a, **kw: None)
+            yield
+
+    return plain
+
+
+@pytest.fixture
+def memo_cuts(monkeypatch):
+    """The ``n`` of every preview cut from a prefix memo
+    (warp_spark.plans.chain)."""
+    import warp_spark.plans.chain as chain_module
+
+    cuts = []
+    frame = chain_module._Prefix.frame
+
+    def spy(self, spark, n=None):
+        if n is not None:
+            cuts.append(n)
+        return frame(self, spark, n)
+
+    monkeypatch.setattr(chain_module._Prefix, "frame", spy)
+    return cuts

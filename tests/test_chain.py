@@ -352,3 +352,102 @@ def test_text_source_previews_read_sample_once_per_version(spark, tmp_path, fmt)
     rows = ch.example_dataset(spark, max_input_rows=10).to_df().collect()
     assert [r.k for r in rows] == list(range(500, 510))
     assert sorted(r.k for r in ch.dataframe(spark).collect()) == list(range(500, 540))
+
+
+# -- prefix memo (warp_spark.plans.chain) ------------------------------------
+
+
+def _edit_loop_chain():
+    """The edit loop's shape: row-wise steps, then two joins."""
+    return (
+        Chain()
+        .add("source", path=f"{SF}/lineitem.parquet")
+        .add("calculate", calculations={"rev": "=[l_extendedprice] * (1 - [l_discount])"})
+        .add("join", chain=[step("source", path=f"{SF}/orders.parquet")], on="l_orderkey = o_orderkey")
+        .add("join", chain=[step("source", path=f"{SF}/customer.parquet")], on="o_custkey = c_custkey")
+    )
+
+
+def _rows(ch, spark, n):
+    return sorted(map(tuple, ch.example_dataset(spark, n).to_df().collect()))
+
+
+def _plain(spark, plain_reads, ch, n):
+    with plain_reads():
+        return _rows(ch, spark, n)
+
+
+def test_aggregate_preview_after_two_joins_runs_one_job(spark, memo_cuts):
+    ch = _edit_loop_chain()
+    # the first preview reads samples of 400 rows if they are smaller;
+    # then the join preview has filled the memo
+    ch.example_dataset(spark, 400).to_df().collect()
+    ch.example_dataset(spark, 400).to_df().collect()
+    ch.add("aggregate", groups={"seg": "c_mktsegment"},
+           values={"n": {"map": "l_quantity", "reduce": "countAll"},
+                   "total": {"map": "rev", "reduce": "sum"}})
+    rows, jobs = _jobs(spark, lambda: ch.example_dataset(spark, 300).to_df().collect(), "pv_agg")
+    assert memo_cuts[-1] == 300
+    assert sum(r.n for r in rows) > 0 and jobs <= 1
+
+
+def test_join_previews_at_any_smaller_size_come_from_one_memo(spark, plain_reads, memo_cuts):
+    ch = _edit_loop_chain()
+    ch.example_dataset(spark, 500).to_df().collect()
+    for n in (500, 120, 310, 7):
+        assert _rows(ch, spark, n) == _plain(spark, plain_reads, ch, n)
+    assert memo_cuts[-4:] == [500, 120, 310, 7]
+
+
+def test_left_join_prefix_takes_the_plain_fold(spark, plain_reads, memo_cuts):
+    ch = (
+        Chain()
+        .add("source", path=f"{SF}/orders.parquet")
+        .add("join", chain=[step("source", path=f"{SF}/customer.parquet")],
+             on="o_custkey = c_custkey", how="left")
+    )
+    for n in (200, 50):
+        assert _rows(ch, spark, n) == _plain(spark, plain_reads, ch, n)
+    assert memo_cuts == []
+
+
+def test_prefix_over_the_bound_is_not_kept_and_not_run_again(
+    spark, monkeypatch, plain_reads, memo_cuts
+):
+    import warp_spark.plans.chain as chain_module
+    from warp_spark.sources.parquet import session_reads
+
+    monkeypatch.setattr(chain_module, "_MEMO_MAX_ROWS", 5)
+    reads = session_reads(spark)
+    reads.prefixes.clear()  # earlier tests kept this prefix
+    ch = _edit_loop_chain()
+    ch.example_dataset(spark, 300).to_df().collect()
+    assert [p.rows for p in reads.prefixes.values()] == [None]
+    fills = []
+    keep = reads.keep_prefix
+    monkeypatch.setattr(reads, "keep_prefix", lambda *a: fills.append(a) or keep(*a))
+    for n in (300, 100):
+        assert _rows(ch, spark, n) == _plain(spark, plain_reads, ch, n)
+    assert memo_cuts == [] and fills == []
+
+
+def test_larger_preview_or_rewritten_source_takes_the_plain_fold(
+    spark, plain_reads, tmp_path, memo_cuts
+):
+    p = str(tmp_path / "t")
+    _write(spark, p, 0)
+    ch = Chain().add("source", path=p).add(
+        "join", chain=[step("source", path=p), step("rename", mapping={"k": "k2", "v": "v2"})],
+        on="k = k2")
+    ch.example_dataset(spark, 40).to_df().collect()
+    assert _rows(ch, spark, 30) == _plain(spark, plain_reads, ch, 30) and memo_cuts == [30]
+    # n > N: the plain fold reads the larger sample
+    assert _rows(ch, spark, 80) == _plain(spark, plain_reads, ch, 80) and memo_cuts == [30]
+    assert _sample(spark, p).asked == 80
+    assert _rows(ch, spark, 60) == _plain(spark, plain_reads, ch, 60) and memo_cuts == [30, 60]
+    # a rewritten file: its new sample, then a new memo
+    _write(spark, p, 1000)
+    rows = _rows(ch, spark, 60)
+    assert rows == _plain(spark, plain_reads, ch, 60) and memo_cuts == [30, 60]
+    assert min(r[0] for r in rows) >= 1000
+    assert _rows(ch, spark, 50) == _plain(spark, plain_reads, ch, 50) and memo_cuts == [30, 60, 50]

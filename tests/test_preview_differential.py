@@ -10,10 +10,15 @@ and a ``__row_id`` column, which the order-dependent steps (limit,
 offset, rank without an order) fall back to. Sources are single files,
 so the plain read's first ``n`` rows are the sample's.
 
+The same holds after a join or union prefix, which a preview plans
+over the prefix's memo (warp_spark.plans.chain): every step kind after
+an inner join, a union and a self-join, at preview sizes asked out of
+order, gives the rows of the plain fold at that size.
+
 Rows are compared with ``tools/check_correctness.normalize_rows`` after
 rounding floats to 12 significant digits: a local relation is split into
-other partitions than the file scan, so a double sum may differ in its
-last ulp.
+other partitions than the file scan, and a memo holds its rows in
+another order, so a double sum may differ in its last ulp.
 """
 
 from __future__ import annotations
@@ -23,7 +28,8 @@ import sys
 
 import pytest
 
-import warp_spark.sources as sources
+import warp_spark.plans.chain as chain_module
+from warp_spark.dataset import SAMPLE_INDEX
 from warp_spark.plans import Chain, step
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -56,6 +62,23 @@ def src(spark, tmp_path_factory):
     return p
 
 
+@pytest.fixture(scope="module")
+def dim(spark, tmp_path_factory):
+    """15 rows keyed 14..0: the keys 0..4 of ``src`` find their row only
+    past the first 10."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = list(range(14, -1, -1))
+    table = pa.table({
+        "dk": pa.array(keys, pa.int64()),
+        "label": pa.array([None if k == 3 else f"L{k}" for k in keys]),
+    })
+    p = str(tmp_path_factory.mktemp("preview") / "dim.parquet")
+    pq.write_table(table, p)
+    return p
+
+
 def _round(v):
     if isinstance(v, float) and v == v and v not in (float("inf"), float("-inf")):
         return float(f"{v:.12g}")
@@ -70,7 +93,7 @@ def _rows(df, drop=()):
     return normalize_rows(cols, rows)
 
 
-def _both(spark, monkeypatch, sql_plans, steps, drop=()):
+def _both(spark, plain_reads, sql_plans, steps, drop=()):
     """(local-path rows, plain-read rows) of the preview of ``steps``."""
     ch = Chain(steps)
     ch.example_dataset(spark, max_input_rows=SAMPLE_N).to_df().collect()
@@ -89,14 +112,7 @@ def _both(spark, monkeypatch, sql_plans, steps, drop=()):
     if steps[0]["kind"] == "source" and steps[-1]["kind"] != "transpose":  # transpose collects
         assert local_source in plan
     got = _rows(local, drop)
-    with monkeypatch.context() as m:
-        m.setattr(
-            sources,
-            "preview_source",
-            lambda spark, path, rows, fmt="parquet", options=None: sources.read_source(
-                spark, path, fmt, options
-            ).limit(rows),
-        )
+    with plain_reads():
         plain, plan = preview()
     assert local_source not in plan
     return got, _rows(plain, drop)
@@ -145,31 +161,31 @@ STEPS = {
 }
 
 
-def _fill(steps, path):
+def _fill(steps, path, dim=""):
     import json
 
-    return json.loads(json.dumps(steps).replace("{src}", path))
+    return json.loads(json.dumps(steps).replace("{src}", path).replace("{dim}", dim))
 
 
 @pytest.mark.parametrize("name", sorted(STEPS))
-def test_preview_rows_match_plain_truncated_read(spark, monkeypatch, sql_plans, src, name):
+def test_preview_rows_match_plain_truncated_read(spark, plain_reads, sql_plans, src, name):
     steps = [step("source", path=src)] + _fill(STEPS[name], src)
     # crawl measures each fetch's duration, which no two runs share
     drop = ("duration_ms",) if name == "crawl" else ()
-    got, want = _both(spark, monkeypatch, sql_plans, steps, drop)
+    got, want = _both(spark, plain_reads, sql_plans, steps, drop)
     assert got == want
     assert got[1]  # every chain above keeps some rows
 
 
-def test_random_step_preview_row_counts_match(spark, monkeypatch, sql_plans, src):
+def test_random_step_preview_row_counts_match(spark, plain_reads, sql_plans, src):
     for seed in (None, 7):
         steps = [step("source", path=src), step("random", n=12, seed=seed)]
-        got, want = _both(spark, monkeypatch, sql_plans, steps)
+        got, want = _both(spark, plain_reads, sql_plans, steps)
         assert len(got[1]) == len(want[1]) == 12
 
 
-def test_sequencer_chain_previews_alike(spark, monkeypatch, sql_plans):
-    got, want = _both(spark, monkeypatch, sql_plans, [step("sequencer", pattern="[ab]{3}")])
+def test_sequencer_chain_previews_alike(spark, plain_reads, sql_plans):
+    got, want = _both(spark, plain_reads, sql_plans, [step("sequencer", pattern="[ab]{3}")])
     assert got == want and len(got[1]) == 8
 
 
@@ -182,3 +198,69 @@ def test_every_dispatched_step_kind_is_covered():
         st["kind"] for steps in STEPS.values() for st in steps
     }
     assert kinds <= covered, kinds - covered
+
+
+PREFIXES = {
+    "inner_join": [step("join", chain=[step("source", path="{dim}")], on="k = dk")],
+    "union": STEPS["union"],
+    "self_join": STEPS["self_join"],
+}
+
+
+@pytest.mark.parametrize("name", sorted(STEPS))
+@pytest.mark.parametrize("prefix", sorted(PREFIXES))
+def test_previews_over_a_prefix_memo_match_plain_read(
+    spark, plain_reads, memo_cuts, src, dim, prefix, name
+):
+    steps = [step("source", path=src)] + _fill(PREFIXES[prefix] + STEPS[name], src, dim)
+    drop = ("duration_ms",) if name == "crawl" else ()
+    ch = Chain(steps)
+    for n in (SAMPLE_N, 10, 40, 25):
+        local = ch.example_dataset(spark, max_input_rows=n).to_df()
+        assert not [c for c in local.columns if c.startswith(SAMPLE_INDEX)]
+        got = _rows(local, drop)
+        with plain_reads():
+            want = _rows(ch.example_dataset(spark, max_input_rows=n).to_df(), drop)
+        assert got == want, n
+    # the first preview read the samples at SAMPLE_N if they were smaller
+    assert memo_cuts[-3:] == [10, 40, 25]
+
+
+ROW_WISE = sorted(
+    name for name, steps in STEPS.items() if steps and all(map(chain_module._row_wise, steps))
+)
+
+
+@pytest.mark.parametrize("name", ROW_WISE)
+def test_row_wise_steps_inside_a_memo_prefix_match_plain_read(
+    spark, plain_reads, memo_cuts, src, name
+):
+    """The steps run inside the memo fill, over the samples' hidden
+    index columns, and a union ends the prefix."""
+    steps = [step("source", path=src)] + _fill(STEPS[name], src) + [
+        step("union", chain=[step("source", path=src)])]
+    ch = Chain(steps)
+    for n in (SAMPLE_N, 10, 40, 25):
+        local = ch.example_dataset(spark, max_input_rows=n).to_df()
+        assert not [c for c in local.columns if c.startswith(SAMPLE_INDEX)]
+        got = _rows(local)
+        with plain_reads():
+            want = _rows(ch.example_dataset(spark, max_input_rows=n).to_df())
+        assert got == want, n
+    assert memo_cuts[-3:] == [10, 40, 25]
+
+
+def test_ineffective_join_passes_left_rows_through_a_memo(spark, plain_reads, memo_cuts, src):
+    """Every right column clashes with a left one, so the join passes
+    the left rows through; the right's index column does not count."""
+    steps = [step("source", path=src),
+             step("join", chain=[step("source", path=src)], on="k = k"),
+             step("aggregate", groups={"g": "g"}, values={"n": {"map": "k", "reduce": "countAll"}})]
+    ch = Chain(steps)
+    for n in (SAMPLE_N, 30):
+        got = _rows(ch.example_dataset(spark, max_input_rows=n).to_df())
+        with plain_reads():
+            want = _rows(ch.example_dataset(spark, max_input_rows=n).to_df())
+        assert got == want
+        assert sum(r[1] for r in got[1]) == n
+    assert memo_cuts[-1] == 30

@@ -249,3 +249,40 @@ def test_jdbc_read_requires_driver(spark):
 
     with _pytest.raises(Exception, match="(?i)driver|class"):
         read_sqlite(spark, "/tmp/none.db", "t").collect()
+
+
+# --- schema memo (warp_spark.sources.parquet.read_inferred) ---------------
+
+def _jobs(spark, fn, tag):
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+TEXT_READS = {
+    "csv": (read_csv, lambda ks: "k,name\n" + "".join(f"{k},n\n" for k in ks)),
+    "json": (read_json, lambda ks: json.dumps([{"k": k, "name": "n"} for k in ks])),
+    "ndjson": (lambda spark, p: read_json(spark, p, multi_line=False),
+               lambda ks: "".join(json.dumps({"k": k, "name": "n"}) + "\n" for k in ks)),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(TEXT_READS))
+def test_text_source_infers_schema_once_per_file_version(spark, tmp_path, fmt):
+    read, text = TEXT_READS[fmt]
+    p = tmp_path / f"t.{fmt}"
+    p.write_text(text([1, 2]))
+    first, cold = _jobs(spark, lambda: read(spark, str(p)), f"infer_cold_{fmt}")
+    again, warm = _jobs(spark, lambda: read(spark, str(p)), f"infer_warm_{fmt}")
+    assert cold >= 1 and warm == 0
+    assert again.schema == first.schema
+    assert dict(again.dtypes)["k"] in ("int", "bigint")
+    # an in-place rewrite (a new size) is a new version: inferred again
+    p.write_text(text(["x", "yy", "zzz"]))
+    df, jobs = _jobs(spark, lambda: read(spark, str(p)), f"infer_new_{fmt}")
+    assert jobs >= 1 and dict(df.dtypes)["k"] == "string"
+    assert sorted(r.k for r in df.collect()) == ["x", "yy", "zzz"]

@@ -3236,15 +3236,16 @@ def _ann_recall_check(approx: DataFrame, exact: DataFrame, floor: float) -> Data
     that recall distributedly and emits the invariant row the constant
     oracle states; a broken index hash-fails the driver gate. Raw
     neighbor lists + recall floors are additionally pytested
-    (tests/test_scale_ops.py)."""
-    hits = approx.join(exact, on=["query_id", "neighbor_id"], how="inner")
+    (tests/test_scale_ops.py). One plan: each exact neighbor is flagged
+    by whether the approximate list holds it, so the exact top-k runs
+    once, inside the action."""
+    found = approx.select("query_id", "neighbor_id", F.lit(True).alias("__hit"))
     return (
-        _scalar_join(
-            exact.agg(
-                F.countDistinct("query_id").alias("n_queries"),
-                F.count(F.lit(1)).alias("n_exact"),
-            ),
-            hits.agg(F.count(F.lit(1)).alias("n_hits")),
+        exact.join(found, on=["query_id", "neighbor_id"], how="left")
+        .agg(
+            F.countDistinct("query_id").alias("n_queries"),
+            F.count(F.lit(1)).alias("n_exact"),
+            F.count("__hit").alias("n_hits"),
         )
         .select(
             "n_queries",
@@ -14785,10 +14786,6 @@ def graph_bipartite_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_norm_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    from warp_spark.dataset import Dataset, Order
-
     emb = _t(spark, sf_dir, "embeddings").to_df().select("vec_id", "embedding")
     x = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "v")
@@ -14805,23 +14802,19 @@ def embedding_norm_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("norm2q")
     )
-    n = nq.count()  # 1-scalar artifact
-    ranked = (
-        Dataset(nq)
-        .rank(
-            {"r": Aggregator(F.col("vec_id"), "countAll")},
-            by=[Order(F.col("norm2q")), Order(F.col("vec_id"))],
-        )
-        .to_df()
+    # the rank r of each vector in (norm2q, vec_id) order, and the vector
+    # count n from the same scan's totals: quantile_disc(p) is the row
+    # with r = ceil(p * n)
+    ranked = running(
+        nq, [F.col("norm2q"), F.col("vec_id")], {"r": ("count", F.lit(1))}, count_col="n"
     )
-    picks = {p: math.ceil(p / 100 * n) for p in (50, 90, 99)}
     return ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         *[
-            F.max(F.when(F.col("r") == r, F.col("norm2q")))
+            F.max(F.when(F.col("r") == F.ceil(F.lit(p / 100) * F.col("n")), F.col("norm2q")))
             .cast("long")
             .alias(f"p{p}_norm2q")
-            for p, r in picks.items()
+            for p in (50, 90, 99)
         ],
         F.max("norm2q").cast("long").alias("max_norm2q"),
     )

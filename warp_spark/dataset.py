@@ -36,6 +36,12 @@ from warp_spark.prefix import running
 from warp_spark.values import to_number  # noqa: F401  (used by rank windows)
 
 ROW_ID = "__row_id"
+# A preview sample's hidden row index (warp_spark.sources.parquet); a
+# chain preview carries one per source through its join prefix
+# (warp_spark.plans.chain). The steps that act on "every column"
+# (select_columns, flatten, search, the join clash check) leave such
+# columns out and carry them along.
+SAMPLE_INDEX = "__sample_index"
 
 ExprLike = Union[Column, str]
 
@@ -43,6 +49,12 @@ ExprLike = Union[Column, str]
 def _col(e: ExprLike) -> Column:
     """Accept a Column or a SQL expression string."""
     return F.expr(e) if isinstance(e, str) else e
+
+
+def _split_hidden(columns: Sequence[str]) -> tuple[list[str], list[str]]:
+    """(visible, hidden) column names: hidden are the SAMPLE_INDEX ones."""
+    hidden = [c for c in columns if c.startswith(SAMPLE_INDEX)]
+    return [c for c in columns if not c.startswith(SAMPLE_INDEX)], hidden
 
 
 @dataclass
@@ -120,12 +132,13 @@ class Dataset:
     def select_columns(self, columns: Sequence[str]) -> "Dataset":
         """Project + reorder; silently ignores missing names
         (Data.swift:256-258)."""
-        existing = {c.lower(): c for c in self.df.columns}
+        visible, hidden = _split_hidden(self.df.columns)
+        existing = {c.lower(): c for c in visible}
         keep = [existing[c.lower()] for c in columns if c.lower() in existing]
         if not keep:
             # empty selection → empty dataset (Data.swift:662-664)
             return Dataset(self.df.select().limit(0))
-        return Dataset(self.df.select(*keep))
+        return Dataset(self.df.select(*keep, *hidden))
 
     def rename(self, mapping: Mapping[str, str]) -> "Dataset":
         """QBERenameStep.swift:82-106."""
@@ -277,12 +290,13 @@ class Dataset:
         """Melt/unpivot: one output row per input *cell*
         (Data.swift:270-276; Transformer.swift:239-323). Uses the
         built-in ``melt`` — a narrow transformation, no shuffle."""
-        cols = list(columns) if columns else list(self.df.columns)
+        visible, hidden = _split_hidden(self.df.columns)
+        cols = list(columns) if columns else visible
         df = self.df
-        id_cols = []
+        id_cols = hidden
         if row_identifier is not None:
             df = df.withColumn(row_identifier_to, _col(row_identifier))
-            id_cols = [row_identifier_to]
+            id_cols = [*hidden, row_identifier_to]
         # melt requires a homogeneous value type: cast to string like the
         # reference's dynamically-typed cells
         casted = df.select(*id_cols, *[F.col(c).cast("string").alias(c) for c in cols])
@@ -313,8 +327,9 @@ class Dataset:
         if how not in ("inner", "left"):
             raise ValueError("reference supports only inner and left joins (Data.swift:113-130)")
         left, right = self.df, other.df
-        clashing = {c.lower() for c in left.columns} & {c.lower() for c in right.columns}
-        if all(c.lower() in clashing for c in right.columns):
+        right_cols = _split_hidden(right.columns)[0]
+        clashing = {c.lower() for c in left.columns} & {c.lower() for c in right_cols}
+        if all(c.lower() in clashing for c in right_cols):
             # "ineffective join" elimination, replicated deliberately: when
             # every right column name-clashes the join adds no columns, and
             # the reference passes left rows through unchanged — no
@@ -323,7 +338,7 @@ class Dataset:
             return self
         right_kept = right  # keep clashing cols for the predicate, drop after
         joined = left.join(right_kept, on=_col(on) if not isinstance(on, list) else on, how=how)
-        drop_cols = [right_kept[c] for c in right.columns if c.lower() in clashing]
+        drop_cols = [right_kept[c] for c in right_cols if c.lower() in clashing]
         for dc in drop_cols:
             joined = joined.drop(dc)
         return Dataset(joined)
@@ -533,7 +548,7 @@ class Dataset:
     def search(self, query: str, columns: Optional[Sequence[str]] = None) -> "Dataset":
         """OR of case-insensitive contains over all columns
         (QBESearchStep.swift:39-60)."""
-        cols = columns or self.df.columns
+        cols = columns or _split_hidden(self.df.columns)[0]
         preds = [F.lower(F.col(c).cast("string")).contains(query.lower()) for c in cols]
         return Dataset(self.df.filter(_functools_reduce(lambda a, b: a | b, preds)))
 

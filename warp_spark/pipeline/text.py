@@ -956,32 +956,34 @@ def bigram_lm_scores(
     document by its average log2 bigram probability — low scores mark
     gibberish and boilerplate the per-doc ratio features miss.
 
-    Scale shape: the model is two aggregated count tables (distinct
-    bigrams and their context sums — vocabulary-bounded, (V+1)², not
-    corpus-bounded), joined back to the exploded bigram stream; the
-    per-doc average folds its terms in POSITION order from a sorted
-    collected list, so the float summation order is pinned and the
-    DuckDB oracle replays the identical fold. No broadcast of the model
-    is assumed — the count join shuffles on (prev, cur), which AQE can
-    still convert to broadcast when the model is small."""
+    Scale shape: the model's two counts (each bigram's, and its
+    context's) are window counts over the exploded bigram stream, both
+    over ONE exchange on ``prev`` (the (prev, cur) window's clustering
+    is implied by it), so the corpus is tokenized and shuffled once and
+    no count table is joined back. A window buffers its ``prev`` group,
+    which spills to disk for a very frequent context token. The per-doc
+    average folds its terms in POSITION order from a sorted collected
+    list, so the float summation order is pinned and the DuckDB oracle
+    replays the identical fold."""
+    from pyspark.sql.window import Window
+
     ids = tokenize_ids(df, build_vocab(df, text_col, vocab_size), id_col, text_col)
     n = F.col("n_tokens")
-    big_arr = F.zip_with(
+    # a guard, not a filter: a pushed-down filter re-inlines the
+    # tokenizer below it; a NULL array explodes to no rows
+    big_arr = F.when(n >= 2, F.zip_with(
         F.slice(F.col("token_ids"), 1, n - 1),
         F.slice(F.col("token_ids"), 2, n - 1),
         lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
+    ))
     big = (
-        ids.filter(n >= 2)
-        .select(F.col(id_col), F.posexplode(big_arr).alias("pos", "bg"))
+        ids.select(F.col(id_col), F.posexplode(big_arr).alias("pos", "bg"))
         .select(F.col(id_col), "pos", F.col("bg.prev").alias("prev"), F.col("bg.cur").alias("cur"))
     )
-    cb = big.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c"))
-    cp = cb.groupBy("prev").agg(F.sum("c").alias("cc"))
     denom = vocab_size + 1  # vocabulary including the OOV id
     terms = (
-        big.join(cb, ["prev", "cur"])
-        .join(cp, ["prev"])
+        big.withColumn("cc", F.count(F.lit(1)).over(Window.partitionBy("prev")))
+        .withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("prev", "cur")))
         .select(
             F.col(id_col),
             "pos",

@@ -10,13 +10,13 @@ from warp_spark.sources.jdbc import (
     write_jdbc,
 )
 from warp_spark.sources.json import read_json, write_json
-from warp_spark.sources.parquet import preview_source, read_parquet, read_source
+from warp_spark.sources.parquet import current_sample, preview_source, read_parquet, read_source
 from warp_spark.sources.xml import read_xml, write_xml
 
 __all__ = [
     "read_csv", "write_csv",
     "read_json", "write_json",
-    "read_parquet", "read_source", "preview_source",
+    "read_parquet", "read_source", "preview_source", "current_sample",
     "read_xml", "write_xml",
     "read_dbf", "write_dbf",
     "fetch_url",

@@ -8,9 +8,10 @@ ISO8601, lists as pack strings).
 Spark-first mapping: ``spark.read.csv`` in PERMISSIVE mode already
 pads short rows with NULL and truncates extra cells when a schema is
 supplied; type inference is Spark's sampler (≈ the reference's
-per-cell ``Language.valueForLocalString``). The only driver-side work
-is reading the header line of ONE file to dedupe duplicate column
-names — O(1) regardless of data size.
+per-cell ``Language.valueForLocalString``), run once per file version
+and reader options (warp_spark.sources.parquet.read_inferred). The only
+driver-side work is reading the header line of ONE file to dedupe
+duplicate column names — O(1) regardless of data size.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from warp_spark.sources.parquet import read_inferred
 
 
 def _dedupe(names: list[str]) -> list[str]:
@@ -66,7 +69,9 @@ def read_csv(
 ) -> DataFrame:
     """Read CSV with Warp semantics: header-dedup, ragged short rows
     padded with NULL, ragged long rows truncated to header width,
-    quoted separators/newlines honored (escape is a doubled quote)."""
+    quoted separators/newlines honored (escape is a doubled quote).
+    The schema is inferred once per file version and options."""
+    key = ("csv", separator, header, quote, infer_schema, multi_line)
     base = (
         spark.read.option("sep", separator)
         .option("quote", quote)
@@ -76,14 +81,21 @@ def read_csv(
         .option("inferSchema", infer_schema)
     )
     if not header:
-        return base.option("header", False).csv(path)
+        base = base.option("header", False)
+        return read_inferred(
+            spark, key, path, lambda s: (base if s is None else base.schema(s)).csv(path)
+        )
 
     raw_names = _read_header_line(path, separator, quote)
     names = _dedupe([n if n else f"col_{i+1}" for i, n in enumerate(raw_names)])
     # supplying the schema is what makes PERMISSIVE pad/truncate ragged
     # rows to exactly the header width (QBETests.swift:110-146 semantics)
     if infer_schema:
-        inferred = base.option("header", True).csv(path).schema
+        with_header = base.option("header", True)
+        inferred = read_inferred(
+            spark, key, path,
+            lambda s: (with_header if s is None else with_header.schema(s)).csv(path),
+        ).schema
         fields = [
             T.StructField(names[i], inferred[i].dataType if i < len(inferred) else T.StringType())
             for i in range(len(names))

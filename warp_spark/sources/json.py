@@ -6,9 +6,10 @@ Reference: WarpConduit/Sources/JSONStream.swift:18-168 — a JSON file is
 (3) a single scalar/object → a single-row ``data`` column.
 
 Spark-first mapping: shape (1) is ``spark.read.json(multiLine=True)``
-— fully distributed. Shapes (2)/(3) are config-file-sized by
-construction (a single JSON scalar array); they parse driver-side and
-become a small DataFrame. Newline-delimited JSON (the cluster-scale
+— fully distributed; its schema is inferred once per file version
+(warp_spark.sources.parquet.read_inferred). Shapes (2)/(3) are
+config-file-sized by construction (a single JSON scalar array); they
+parse driver-side and become a small DataFrame. Newline-delimited JSON (the cluster-scale
 format) passes straight through to ``spark.read.json``.
 """
 
@@ -20,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from warp_spark.sources.parquet import read_inferred
 
 
 def _first_file(path: str) -> str:
@@ -37,10 +40,13 @@ def _first_file(path: str) -> str:
 
 def read_json(spark: SparkSession, path: str, multi_line: bool = True) -> DataFrame:
     """Read JSON, detecting the reference's three shapes."""
+    reader = spark.read.option("multiLine", multi_line)
+    df = read_inferred(
+        spark, ("json", multi_line), path,
+        lambda s: (reader if s is None else reader.schema(s)).json(path),
+    )
     if not multi_line:
-        return spark.read.json(path)  # NDJSON: one object per line
-
-    df = spark.read.option("multiLine", True).json(path)
+        return df  # NDJSON: one object per line
     cols = df.columns
     if cols and cols != ["_corrupt_record"]:
         return df  # shape 1: array of objects (or a single object)
