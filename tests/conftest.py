@@ -36,6 +36,40 @@ def sql_plans(spark):
 
 
 @pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` returns ``fn()``'s result and the number of Spark
+    jobs it launched, counted under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        tag = f"jobs_of_{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return run
+
+
+@pytest.fixture
+def memo_schema(spark):
+    """``memo_schema(path)``: the schema the session's read memo holds
+    for the current file version of the parquet directory ``path``, or
+    None (warp_spark.sources.parquet)."""
+    from warp_spark.sources.parquet import _local_stamp, _sql_conf, session_reads
+
+    def get(path):
+        hit = session_reads(spark).schemas.get(("parquet", path, _sql_conf(spark)))
+        return hit[1] if hit is not None and hit[0] == _local_stamp(path) else None
+
+    return get
+
+
+@pytest.fixture
 def plain_reads(monkeypatch):
     """``with plain_reads():`` previews fold their chain over
     ``read_source(path).limit(n)``: no sample, so no prefix memo either

@@ -474,3 +474,63 @@ def test_topk_nonadjacent_escalation_returns_full_rows(spark):
     fast = [tuple(r) for r in _topk_nonadjacent(scored, und, 5, "s", n0=1).collect()]
     slow = [tuple(r) for r in _topk_nonadjacent(scored, und, 5, "s", n_max=0).collect()]
     assert fast == slow == [(x, x + 2, 500 - x, f"n{x}") for x in range(5)]
+
+
+# --- persisted edge and census trees ---------------------------------------
+
+def _graph(spark):
+    return _edges(spark, [(i % 37, (i * 7) % 53) for i in range(400)] + [(3, 3), (5, 2)])
+
+
+def test_persist_edges_writes_one_hash_bucket_per_file(spark, tmp_path):
+    """One exchange clusters and de-duplicates: file ``i`` holds exactly
+    the canonical distinct pairs with pmod(hash(u), 8) = i."""
+    import glob
+    import os
+
+    from warp_spark.pipeline.graph import persist_edges
+
+    e = _graph(spark)
+    p = str(tmp_path / "edges")
+    persist_edges(e, p)
+    su, sv = F.col("src"), F.col("dst")
+    want = {
+        (r.u, r.v)
+        for r in e.select(F.least(su, sv).alias("u"), F.greatest(su, sv).alias("v"))
+        .where("u != v")
+        .collect()
+    }
+    got = []
+    for f in sorted(glob.glob(os.path.join(p, "part-*.parquet"))):
+        part = int(os.path.basename(f).split("-")[1])
+        rows = spark.read.parquet(f).select(
+            "u", "v", F.pmod(F.hash("u"), F.lit(8)).alias("b")
+        ).collect()
+        assert {r.b for r in rows} <= {part}
+        got += [(r.u, r.v) for r in rows]
+    assert sorted(got) == sorted(want)
+
+
+def test_published_graph_trees_read_back_with_their_schema(spark, tmp_path, jobs_of, memo_schema):
+    from warp_spark.artifacts import publish_artifact
+    from warp_spark.pipeline.graph import (
+        load_edges,
+        load_wedge_census,
+        persist_edges,
+        persist_wedge_census,
+    )
+
+    ep, wp = str(tmp_path / "edges"), str(tmp_path / "wedges")
+    publish_artifact(ep, "_EDGES_COMPLETE", "s1", lambda tmp: persist_edges(_graph(spark), tmp))
+    publish_artifact(
+        wp,
+        "_WEDGES_COMPLETE",
+        "s1",
+        lambda tmp: persist_wedge_census(load_edges(spark, ep), tmp, assume_canonical=True),
+    )
+    for p, load in ((ep, load_edges), (wp, load_wedge_census)):
+        inferred = spark.read.parquet(p).schema
+        assert memo_schema(p) == inferred
+        got, jobs = jobs_of(lambda: load(spark, p))
+        assert jobs == 0
+        assert got.count() == spark.read.parquet(p).count() > 0

@@ -276,3 +276,178 @@ def test_changes_cdf_across_schema_evolution(spark, wh):
     )
     assert got == [("update_postimage", 2, "B"), ("update_preimage", 2, "b")]
     assert set(t.changes("id", 0).columns) == {"_change_type", "id", "v"}
+
+
+# --- edge cases and config independence of merge_changes -------------------
+
+def test_merge_changes_edge_cases(spark, wh):
+    """Duplicate base keys the batch does not touch stay duplicated; an
+    equal seq is broken by op ('U' > 'D'); a 'D' on an absent key is a
+    no-op; a NULL key matches no base row, so its winning 'U' is
+    inserted, its 'D' deletes nothing, and NULL-key base rows stay."""
+    t = wh.create(
+        "e",
+        spark.createDataFrame(
+            [(1, "a"), (1, "a2"), (2, "b"), (None, "n0"), (5, "e")], "id int, v string"
+        ),
+    )
+    changes = spark.createDataFrame(
+        [
+            (2, "b2", 1, "U"),
+            (5, "e-del", 3, "D"),
+            (5, "e2", 3, "U"),  # equal seq: the 'U' wins
+            (7, None, 1, "D"),  # absent key: no-op
+            (None, "n1", 1, "U"),
+        ],
+        "id int, v string, seq int, op string",
+    )
+    t.merge_changes(changes, "id", "seq")
+    assert rows(t.read()) == [
+        (1, "a"), (1, "a2"), (2, "b2"), (5, "e2"), (None, "n0"), (None, "n1")
+    ]
+    nulls = spark.createDataFrame(
+        [(None, "n2", 1, "U"), (None, None, 2, "D")], "id int, v string, seq int, op string"
+    )
+    t.merge_changes(nulls, "id", "seq")
+    assert rows(t.read()) == [
+        (1, "a"), (1, "a2"), (2, "b2"), (5, "e2"), (None, "n0"), (None, "n1")
+    ]
+
+
+def _merge_case(spark, root):
+    base = spark.range(0, 3000).select(
+        (F.col("id") % 2500).cast("int").alias("id"), F.concat(F.lit("b"), F.col("id")).alias("v")
+    )
+    changes = spark.range(0, 1200).select(
+        (F.col("id") * 7 % 4000).cast("int").alias("id"),
+        F.concat(F.lit("c"), F.col("id")).alias("v"),
+        (F.col("id") % 3).cast("int").alias("seq"),
+        F.when(F.col("id") % 5 == 0, "D").otherwise("U").alias("op"),
+    )
+    t = Warehouse(spark, root).create("c", base)
+    t.merge_changes(changes, "id", "seq")
+    return rows(t.read())
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [{"spark.sql.autoBroadcastJoinThreshold": "-1"}, {"spark.sql.adaptive.enabled": "false"}],
+    ids=["no_broadcast", "aqe_off"],
+)
+def test_merge_changes_rows_do_not_depend_on_config(spark, tmp_path, conf):
+    expected = _merge_case(spark, str(tmp_path / "default"))
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        got = _merge_case(spark, str(tmp_path / "perturbed"))
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert got == expected
+
+
+def test_merge_changes_scans_the_batch_once(spark, wh, tmp_path, sql_plans):
+    """The upserts and the anti-join keys share one ranking of the batch:
+    the executed plans of the merge scan the batch's source once."""
+    src = str(tmp_path / "batch")
+    spark.range(0, 300).select(
+        (F.col("id") * 5 % 1200).cast("int").alias("id"),
+        F.lit("w").alias("v"),
+        (F.col("id") % 3).cast("int").alias("seq"),
+        F.when(F.col("id") % 4 == 0, "D").otherwise("U").alias("op"),
+    ).write.parquet(src)
+    t = wh.create("p", spark.range(0, 1000).select(
+        F.col("id").cast("int").alias("id"), F.lit("b").alias("v")
+    ))
+    _, plans = sql_plans(lambda: t.merge_changes(spark.read.parquet(src), "id", "seq"))
+    assert plans.count(f"InMemoryFileIndex [file:{src}]") == 1, plans
+
+
+# --- schema-known read-back ------------------------------------------------
+
+WRITERS = {
+    "overwrite": lambda spark, t: t.overwrite(
+        spark.createDataFrame([(7, "z", 0.5)], "id int not null, v string, x double")
+    ),
+    "update": lambda spark, t: t.update("id = 1", {"v": "'u'", "x": "x * 2"}),
+    "delete": lambda spark, t: t.delete("id = 2"),
+    "merge": lambda spark, t: t.merge_changes(
+        spark.createDataFrame(
+            [(1, "m", 9.0, 1, "U"), (2, None, None, 1, "D"), (3, "n", None, 1, "U")],
+            "id int, v string, x double, seq int, op string",
+        ),
+        "id",
+        "seq",
+    ),
+    "compact": lambda spark, t: t.compact(),
+    "add_column": lambda spark, t: t.add_column("n", "bigint", "id * 2"),
+    "drop_column": lambda spark, t: t.drop_column("x"),
+    "rename_column": lambda spark, t: t.rename_column("v", "w"),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(WRITERS))
+def test_rewrite_reads_back_with_the_schema_it_wrote(spark, wh, jobs_of, memo_schema, verb):
+    t = wh.create(
+        "r",
+        spark.createDataFrame([(1, "a", 1.5), (2, "b", None)], "id int not null, v string, x double"),
+    )
+    WRITERS[verb](spark, t)
+    cur = t._current_dir()
+    inferred = spark.read.parquet(cur).schema
+    assert memo_schema(cur) == inferred
+    got, jobs = jobs_of(t.read)
+    assert jobs == 0 and got.schema == inferred
+
+
+def test_versions_changed_behind_the_memo_are_inferred_again(spark, wh, jobs_of, tmp_path):
+    import glob
+    import os
+    import shutil
+
+    df = spark.createDataFrame([(1, "a")], "id int, v string").coalesce(1)
+    t = wh.create("i", df)
+    _, jobs = jobs_of(t.read)
+    assert jobs == 0
+    # an append adds files the memo never saw
+    t.insert(spark.createDataFrame([(2, "b")], "id int, v string"))
+    got, jobs = jobs_of(t.read)
+    assert jobs >= 1 and rows(got) == [(1, "a"), (2, "b")]
+    # a part file rewritten in place, here with a wider schema (and
+    # without its now stale checksum file)
+    t.overwrite(df)
+    other = str(tmp_path / "other")
+    df.withColumn("extra", F.lit(1)).coalesce(1).write.parquet(other)
+    (part,) = glob.glob(f"{t._current_dir()}/part-*.parquet")
+    shutil.copy(glob.glob(f"{other}/part-*.parquet")[0], part)
+    os.remove(os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc"))
+    got, jobs = jobs_of(t.read)
+    assert jobs >= 1 and "extra" in got.columns
+
+
+def test_merged_table_keeps_its_merge_schema_read(spark, wh, jobs_of):
+    """After a merge_schema insert every read merges the file schemas,
+    also after a later rewrite registered the version it wrote."""
+    t = wh.create("g", spark.range(0, 3).select("id"))
+    t.insert(spark.range(3, 5).select("id", F.lit("t").alias("tag")), merge_schema=True)
+    got, jobs = jobs_of(t.read)
+    assert jobs >= 1 and got.columns == ["id", "tag"]
+    t.update("id = 0", {"tag": "'u'"})
+    got, jobs = jobs_of(t.read)
+    assert jobs >= 1 and got.columns == ["id", "tag"]
+    assert got.filter(F.col("tag").isNull()).count() == 2
+
+
+def test_pruned_versions_leave_the_read_memo(spark, wh, memo_schema):
+    import os
+
+    from warp_spark.sources.parquet import session_reads
+
+    t = wh.create("v", spark.range(0, 3))
+    first = t._current_dir()
+    assert memo_schema(first) is not None
+    t.update("id = 1", {"id": "id + 10"})
+    assert not os.path.isdir(first)
+    assert [k for k in session_reads(spark).schemas if k[-2] == first] == []
+    assert memo_schema(t._current_dir()) is not None

@@ -806,3 +806,40 @@ def test_bm25_index_probe_partition_pruning(spark):
         and "bucket" in s.split("PartitionFilters", 1)[1].split("]", 1)[0]
         for s in scans
     ), scans
+
+
+# Spark jobs a catalog_pass write entry launches at sf0.001 while its
+# frame is built and in its noop action, once a warm-up run has filled
+# the process memos (source schemas, artifact fingerprints). Upper
+# bounds; each count repeats exactly across runs and under local[1]
+# and local[4].
+WRITE_ENTRY_JOBS = {
+    # build: the lineitem self-join's two shuffle stages and the edge
+    # write, whose one exchange on u also serves the distinct; the
+    # read-back infers nothing. action: the census is one aggregate with
+    # two distinct counts, three AQE stages
+    "graph_edges_persist": (3, 3),
+    # build: the create's write; the merge's window shuffle (run as the
+    # lazy pin of its winners is built), the broadcast of their keys and
+    # the rewrite; the eager pin of the result, which must outlive the
+    # warehouse directory. action: the scan of that pin
+    "mutable_cdc_merge": (5, 1),
+    # build: none, the staged copy borrows the source's schema; the
+    # stream's trigger jobs run on its own thread, outside the caller's
+    # job group, and are not counted. action: the memory table's scan
+    "events_hourly_rollup_streamed": (0, 1),
+}
+
+
+@pytest.mark.parametrize("name", sorted(WRITE_ENTRY_JOBS))
+def test_write_entry_jobs(spark, jobs_of, tmp_path, monkeypatch, name):
+    import tempfile
+
+    from warp_spark.catalog import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    QUERIES[name](spark, SF).collect()
+    df, build = jobs_of(lambda: QUERIES[name](spark, SF))
+    _, action = jobs_of(lambda: df.write.format("noop").mode("overwrite").save())
+    want = WRITE_ENTRY_JOBS[name]
+    assert build <= want[0] and action <= want[1], (build, action)

@@ -1092,6 +1092,21 @@ def test_kmv_distinct_estimate_and_exact_path(spark):
     assert row["n_hashes"] == 20000
 
 
+def test_kmv_distinct_keyless_equals_one_constant_group(spark):
+    """The keyless sketch (a distributed top-k, no window) returns what
+    the grouped path returns for a single constant group, on both the
+    exact (< k) and the estimated side."""
+    from pyspark.sql import functions as F
+
+    from warp_spark.sampling import kmv_distinct
+
+    for n in (0, 40, 5000):
+        df = spark.range(0, n).select((F.col("id") * 3).alias("v"), F.lit(1).alias("g"))
+        keyless = [tuple(r) for r in kmv_distinct(df, "v", k=64).collect()]
+        grouped = [tuple(r)[1:] for r in kmv_distinct(df, "v", k=64, group_col="g").collect()]
+        assert keyless == (grouped or [(0, 0.0)])
+
+
 def test_prefix_filter_shingle_mode_is_exact_vs_naive(spark):
     """Shingle-element mode: exactly the pairs naive all-pairs shingle
     Jaccard finds — the exact-complete ground truth for the set metric

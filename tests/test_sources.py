@@ -5,8 +5,10 @@ JSON three-shape detection (JSONStream.swift:18-168)."""
 import json
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from warp_spark.sources import read_csv, read_json, write_csv, write_json
+from warp_spark.sources import read_csv, read_json, read_parquet, write_csv, write_json
 
 
 def rows(df):
@@ -253,16 +255,6 @@ def test_jdbc_read_requires_driver(spark):
 
 # --- schema memo (warp_spark.sources.parquet.read_inferred) ---------------
 
-def _jobs(spark, fn, tag):
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
 TEXT_READS = {
     "csv": (read_csv, lambda ks: "k,name\n" + "".join(f"{k},n\n" for k in ks)),
     "json": (read_json, lambda ks: json.dumps([{"k": k, "name": "n"} for k in ks])),
@@ -272,17 +264,51 @@ TEXT_READS = {
 
 
 @pytest.mark.parametrize("fmt", sorted(TEXT_READS))
-def test_text_source_infers_schema_once_per_file_version(spark, tmp_path, fmt):
+def test_text_source_infers_schema_once_per_file_version(spark, tmp_path, fmt, jobs_of):
     read, text = TEXT_READS[fmt]
     p = tmp_path / f"t.{fmt}"
     p.write_text(text([1, 2]))
-    first, cold = _jobs(spark, lambda: read(spark, str(p)), f"infer_cold_{fmt}")
-    again, warm = _jobs(spark, lambda: read(spark, str(p)), f"infer_warm_{fmt}")
+    first, cold = jobs_of(lambda: read(spark, str(p)))
+    again, warm = jobs_of(lambda: read(spark, str(p)))
     assert cold >= 1 and warm == 0
     assert again.schema == first.schema
     assert dict(again.dtypes)["k"] in ("int", "bigint")
     # an in-place rewrite (a new size) is a new version: inferred again
     p.write_text(text(["x", "yy", "zzz"]))
-    df, jobs = _jobs(spark, lambda: read(spark, str(p)), f"infer_new_{fmt}")
+    df, jobs = jobs_of(lambda: read(spark, str(p)))
     assert jobs >= 1 and dict(df.dtypes)["k"] == "string"
     assert sorted(r.k for r in df.collect()) == ["x", "yy", "zzz"]
+
+
+def _nested_frame(spark):
+    """Non-nullable fields at every level, and a field with metadata."""
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False, {"comment": "the key"}),
+        T.StructField("s", T.StructType([T.StructField("a", T.IntegerType(), False)]), False),
+        T.StructField("xs", T.ArrayType(T.StringType(), False), False),
+        T.StructField("m", T.MapType(T.StringType(), T.DoubleType(), False), True),
+        T.StructField("d", T.DecimalType(12, 2), True),
+        T.StructField("ts", T.TimestampType(), True),
+    ])
+    rows = [(1, (2,), ["x"], {"a": 1.0}, None, None), (2, (3,), [], None, None, None)]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_written_parquet_reads_back_with_its_schema(spark, tmp_path, jobs_of):
+    """A directory noted by its writer reads back with the schema it
+    wrote — the one inference would find — and runs no job; rewriting
+    its files is a new version, inferred again."""
+    from warp_spark.sources.parquet import remember_parquet
+
+    df = _nested_frame(spark)
+    p = str(tmp_path / "w")
+    df.write.parquet(p)
+    remember_parquet(spark, p, df.schema)
+    back, jobs = jobs_of(lambda: read_parquet(spark, p))
+    assert jobs == 0
+    assert back.schema == spark.read.parquet(p).schema
+    assert sorted(map(str, back.collect())) == sorted(map(str, df.collect()))
+
+    df.withColumn("extra", F.lit(1)).write.mode("overwrite").parquet(p)
+    again, jobs = jobs_of(lambda: read_parquet(spark, p))
+    assert jobs >= 1 and "extra" in again.columns

@@ -47,9 +47,6 @@ ALLOWED = {
         2, "the totals side table: ≤ |groups| × partitions rows"
     ),
     ("warp_spark/sampling.py", "epoch_allocation"): (2, "≤ |sources| rows"),
-    ("warp_spark/sampling.py", "kmv_distinct"): (
-        1, "partitioned by group_col; with none, every distinct value hash"
-    ),
     ("warp_spark/sampling.py", "rebalance_weights"): (3, "≤ |groups| rows"),
     ("warp_spark/stats.py", "pareto_frontier_2d"): (1, "≤ |distinct m1| rows"),
 }

@@ -9,7 +9,9 @@ sketches): stamp → ensure → publish → mutate.
   completion marker and publishes a fresh build when they differ.
 - **Publish.** :func:`publish_artifact` builds into a unique sibling
   scratch directory, writes the marker last inside it, and swaps the
-  finished tree into place under an exclusive flock.
+  finished tree into place under an exclusive flock.  A build that
+  reports the schema it wrote has the tree read back without a
+  schema-inference job.
 - **Mutate.** :func:`mutate` changes a published artifact in place
   (append, delete, compact): the marker holds a sentinel while the
   mutation runs, so a crash leaves a marker that matches no stamp and
@@ -38,7 +40,10 @@ import os
 import shutil
 import tempfile
 
-from warp_spark.sources.parquet import _local_stamp
+from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+from warp_spark.sources.parquet import _local_stamp, remember_parquet
 
 __all__ = [
     "artifact_path",
@@ -106,15 +111,26 @@ def publish_artifact(path: str, marker: str, stamp: str, build) -> None:
     last inside it, then the tree replaces ``path`` under the flock.  A
     concurrent reader never sees a half-built tree and two concurrent
     builders never share a scratch tree; a build that raises leaves the
-    published tree as it was."""
+    published tree as it was.
+
+    A build that writes one parquet tree at ``tmp`` itself returns the
+    ``StructType`` it wrote (any other return value is ignored); the
+    active session's read memo then holds it for the published tree's
+    file version, marker included, so the first read-back infers
+    nothing (warp_spark.sources.parquet)."""
     tmp = unique_sibling_tmp(path, tag="build")
     try:
-        build(tmp)
+        written = build(tmp)
         _write_marker(tmp, marker, stamp)
+        version = _local_stamp(tmp)  # a rename keeps every file's stamp
         swap_artifact_dir(path, tmp)
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
+    if isinstance(written, StructType):
+        spark = SparkSession.getActiveSession()
+        if spark is not None:
+            remember_parquet(spark, path, written, version)
 
 
 def ensure(path: str, marker: str, stamp: str, build, rebuild: bool = False) -> tuple:

@@ -5088,11 +5088,15 @@ def _stage_split_files(
 def _stage_event_stream(spark: SparkSession, sf_dir: str, tmpdir: str) -> DataFrame:
     """Stage events.parquet into a temp dir (the file source wants a
     directory) and open it as a readStream with ``ts`` normalized to a
-    watermarkable TIMESTAMP — shared by every streaming-executed entry."""
+    watermarkable TIMESTAMP — shared by every streaming-executed entry.
+    The staged files are copies, so the stream borrows the source's
+    schema from the session's read memo instead of inferring it from
+    the copy."""
     from warp_spark.streaming import read_event_stream
 
-    _stage_parquet_files(f"{sf_dir}/events.parquet", tmpdir)
-    ev = read_event_stream(spark, tmpdir)
+    src = f"{sf_dir}/events.parquet"
+    _stage_parquet_files(src, tmpdir)
+    ev = read_event_stream(spark, tmpdir, schema=read_parquet(spark, src).schema)
     if dict(ev.dtypes)["ts"] == "bigint":
         ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     elif dict(ev.dtypes)["ts"] == "timestamp_ntz":
@@ -11779,26 +11783,27 @@ def _wedge_census_row(census: DataFrame) -> DataFrame:
 
 def _edge_census_row(e: DataFrame) -> DataFrame:
     """Edge and node counts plus the canonical-and-distinct check of an
-    edge artifact — the one-row contract of every edge-artifact entry."""
-    nodes = e.select(F.col("src").alias("n")).union(
-        e.select(F.col("dst").alias("n"))
+    edge artifact — the one-row contract of every edge-artifact entry.
+
+    One lazy aggregate over each edge's two endpoints
+    (``explode(array(src, dst))``), run by the entry's own action:
+    nothing runs while the frame is built.  Every edge appears twice,
+    so its row count and its ``src < dst`` count come out doubled and
+    are halved; the distinct (src, dst) count is not changed by the
+    doubling, and the distinct endpoint count is the node count."""
+    ends = e.select("src", "dst", F.explode(F.array("src", "dst")).alias("n"))
+    stats = ends.agg(
+        F.count(F.lit(1)).alias("n_rows2"),
+        F.countDistinct("src", "dst").alias("n_distinct"),
+        F.sum(F.when(F.col("src") < F.col("dst"), 1).otherwise(0)).alias("n_lt2"),
+        F.countDistinct("n").alias("n_nodes"),
     )
-    stats = _scalar_join(
-        e.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("src", "dst").alias("n_distinct"),
-            F.sum(F.when(F.col("src") < F.col("dst"), 1).otherwise(0)).alias(
-                "n_lt"
-            ),
-        ),
-        nodes.agg(F.countDistinct("n").alias("n_nodes")),
-    )
+    n_edges = (F.col("n_rows2") / 2).cast("long")
     return stats.select(
-        F.col("n_rows").cast("long").alias("n_edges"),
+        n_edges.alias("n_edges"),
         F.col("n_nodes").cast("long").alias("n_nodes"),
         (
-            (F.col("n_distinct") == F.col("n_rows"))
-            & (F.col("n_lt") == F.col("n_rows"))
+            (F.col("n_distinct") == n_edges) & (F.col("n_lt2") == F.col("n_rows2"))
         ).alias("canonical_complete"),
     )
 
@@ -11945,11 +11950,11 @@ def _ensure_graph_base(
     tag = "baseeven" if even_only else "base"
     stamp = f"graph {tag}-main cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
 
-    def base_edges(tmp: str) -> None:
+    def base_edges(tmp: str):
         li = _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
         if even_only:
             li = li.filter(F.col("l_partkey") % 2 == 0)
-        persist_edges(
+        return persist_edges(
             _copurchase_order_edges(li.filter(F.col("l_orderkey") % 50 != 0)), tmp
         )
 

@@ -5,15 +5,22 @@ re-expressed over parquet-backed managed tables.
 
 Design for scale:
 - ``insert`` is a pure append (new files; no rewrite).
-- ``update``/``delete`` are copy-on-write rewrites of the full table —
-  the honest cost model without a transactional table format. On a real
-  deployment the same API binds to Delta/Iceberg ``MERGE``/``DELETE``
-  (row-level, file-pruned); the parquet path keeps the semantics
-  testable here with zero extra dependencies.
-- every rewrite goes to a fresh directory then atomically swaps a
-  pointer file, so readers never observe a half-written table and a
-  failed rewrite leaves the previous version intact (poor-man's MVCC,
-  one live version).
+- ``update``/``delete``/``merge_changes`` are copy-on-write rewrites of
+  the full table — the honest cost model without a transactional table
+  format. On a real deployment the same API binds to Delta/Iceberg
+  ``MERGE``/``DELETE`` (row-level, file-pruned); the parquet path keeps
+  the semantics testable here with zero extra dependencies.
+- every rewrite goes to a fresh version directory, then atomically
+  swaps a pointer file, so readers never observe a half-written table
+  and a failed rewrite leaves the previous version intact (poor-man's
+  MVCC, one live version).
+- a rewrite launches only the jobs its data needs: the new version's
+  schema goes into the session's read memo as it is written
+  (warp_spark.sources.parquet.remember_parquet), so reading it back —
+  the next verb's base, or the caller's result — runs no
+  schema-inference job. An append changes the version's files and is
+  inferred again; a table with schema-merged appends (``_MERGED``)
+  keeps its ``mergeSchema`` read.
 """
 
 from __future__ import annotations
@@ -23,8 +30,10 @@ import shutil
 import uuid
 from typing import Mapping, Optional, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from warp_spark.sources.parquet import forget_parquet, read_parquet, remember_parquet
 
 ExprLike = Union[Column, str]
 
@@ -99,22 +108,21 @@ class MutableTable:
             return []
 
     def _swap_in(self, df: DataFrame) -> None:
-        """Write a new version directory, append to the log, atomically
-        repoint, then prune beyond ``keep_versions``."""
+        """Write a new version directory and note its schema in the read
+        memo, append to the log, atomically repoint, then prune beyond
+        ``keep_versions`` (:meth:`vacuum`)."""
         os.makedirs(self.path, exist_ok=True)
         version = f"v_{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, version))
+        d = os.path.join(self.path, version)
+        df.write.mode("overwrite").parquet(d)
+        remember_parquet(self.spark, d, df.schema)
         with open(self._log(), "a") as fh:
             fh.write(version + "\n")
         tmp = self._pointer() + ".tmp"
         with open(tmp, "w") as fh:
             fh.write(version)
         os.replace(tmp, self._pointer())  # atomic on POSIX
-        live = self.versions()
-        for stale in live[: -self.keep_versions]:
-            d = os.path.join(self.path, stale)
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
+        self.vacuum()
 
     def exists(self) -> bool:
         return self._current_dir() is not None
@@ -128,10 +136,9 @@ class MutableTable:
             cur = self._current_dir()
             if cur is None:
                 raise FileNotFoundError(f"table {self.path} does not exist")
-            reader = self.spark.read
             if os.path.exists(os.path.join(self.path, "_MERGED")):
-                reader = reader.option("mergeSchema", "true")
-            return reader.parquet(cur)
+                return self.spark.read.option("mergeSchema", "true").parquet(cur)
+            return read_parquet(self.spark, cur)
         names = self.versions()
         if not names:
             raise FileNotFoundError(f"table {self.path} does not exist")
@@ -142,7 +149,7 @@ class MutableTable:
                 f"version {version} ({name}) was pruned — construct the "
                 f"table with keep_versions > {self.keep_versions} to retain it"
             )
-        return self.spark.read.parquet(d)
+        return read_parquet(self.spark, d)
 
     # -- DML (MutableData.swift:125-196) -----------------------------------
     def overwrite(self, df: DataFrame) -> None:
@@ -221,12 +228,18 @@ class MutableTable:
         deterministic). Keys absent from the base are inserted by 'U';
         'D' on an absent key is a no-op.
 
-        Shape: one window over the CHANGE BATCH (rank per key), then an
-        outer join base↔winners and a copy-on-write rewrite — the plain-
-        parquet analog of Delta/Iceberg MERGE, where a real table format
-        would prune the rewrite to matched files."""
-        from pyspark.sql import Window
-
+        Shape: one window over the CHANGE BATCH ranks each key's
+        changes, and the winners are pinned with ``localCheckpoint`` (no
+        CacheManager entry): the batch is scanned and shuffled once,
+        although the rewrite uses the winners twice — their keys in a
+        left anti join that drops every base row they touch, their
+        upserts in a union. Without the pin, column pruning gives the
+        two uses different plans and the batch is read twice. The base
+        stays on the streamed side of the anti join, so a batch whose
+        winners can be broadcast never shuffles the base, and the base
+        is never sorted. The result is a copy-on-write rewrite — the
+        plain-parquet analog of Delta/Iceberg MERGE, where a real table
+        format would prune the rewrite to matched files."""
         w = Window.partitionBy(key_col).orderBy(
             F.col(seq_col).desc(), F.col(op_col).desc()
         )
@@ -234,18 +247,12 @@ class MutableTable:
             changes.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn", seq_col)
+            .localCheckpoint(eager=False)
         )
         base = self.read()
-        upserts = winners.filter(F.col(op_col) == "U").drop(op_col)
-        deletes = winners.filter(F.col(op_col) == "D").select(key_col)
         kept = base.join(winners.select(key_col), key_col, "left_anti")
-        merged = kept.unionByName(
-            upserts.select(*base.columns)
-        )
-        # deletes: rows already excluded via the anti join above; the
-        # explicit frame documents intent (and guards column drift)
-        _ = deletes
-        self._swap_in(merged)
+        upserts = winners.filter(F.col(op_col) == "U").select(*base.columns)
+        self._swap_in(kept.unionByName(upserts))
 
     def merge_stream(
         self,
@@ -352,13 +359,15 @@ class MutableTable:
 
     def vacuum(self, keep: Optional[int] = None) -> None:
         """Prune version directories beyond the newest ``keep``
-        (defaults to ``keep_versions``). The log keeps every name —
-        reads of pruned versions raise, as in ``read``."""
+        (defaults to ``keep_versions``), and their schemas from the read
+        memo. The log keeps every name — reads of pruned versions raise,
+        as in ``read``."""
         keep = self.keep_versions if keep is None else max(1, keep)
         for stale in self.versions()[:-keep]:
             d = os.path.join(self.path, stale)
             if os.path.isdir(d):
                 shutil.rmtree(d, ignore_errors=True)
+                forget_parquet(self.spark, d)
 
     # -- DDL ---------------------------------------------------------------
     def add_column(self, name: str, dtype: str = "string", default: ExprLike = None) -> None:

@@ -23,8 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from warp_spark.artifacts import locked_mutation
+from warp_spark.sources.parquet import read_parquet
 
 
 def pagerank_int(
@@ -360,7 +362,7 @@ def persist_wedge_census(
     path: str,
     max_center_degree: int | None = None,
     assume_canonical: bool = False,
-) -> None:
+) -> T.StructType:
     """Materialize the wedge census as a parquet artifact — the
     second-level amortization over :func:`persist_edges`: both capped
     link-prediction scorers (Jaccard and Resource-Allocation) read the
@@ -377,17 +379,20 @@ def persist_wedge_census(
     larger partitions" cuts the other way when it throttles the write
     stage); AQE's partition coalescing already sizes the final stage
     by bytes, which is the scale-adaptive file-sizing knob (guide §6),
-    and files stay disjoint pair-hash groups either way."""
-    wedge_census(edges, max_center_degree, assume_canonical).write.mode(
-        "overwrite"
-    ).parquet(path)
+    and files stay disjoint pair-hash groups either way.
+
+    Returns the schema it wrote, for a read-back that infers nothing
+    (warp_spark.artifacts.publish_artifact)."""
+    census = wedge_census(edges, max_center_degree, assume_canonical)
+    census.write.mode("overwrite").parquet(path)
+    return census.schema
 
 
 def load_wedge_census(spark, path: str) -> DataFrame:
     """Read back a persist_wedge_census artifact: (x, y, cn, ra_ppm)
     rows with x < y — feed to jaccard_links / resource_allocation_links
     via their ``census=`` parameter to skip the quadratic expansion."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _topk_nonadjacent(
@@ -587,7 +592,7 @@ def resource_allocation_links(
     return _topk_nonadjacent(scored_pairs, und, k, "ra_ppm")
 
 
-def persist_edges(edges: DataFrame, path: str) -> None:
+def persist_edges(edges: DataFrame, path: str) -> T.StructType:
     """Materialize the CANONICAL undirected edge list as a parquet
     artifact — the amortization step for a graph tier where several
     algorithms (pagerank, triangles, jaccard, k-core, assortativity,
@@ -605,15 +610,22 @@ def persist_edges(edges: DataFrame, path: str) -> None:
     paid once.  The write hash-clusters rows by ``u`` (8 files per
     artifact at test scale; on a cluster this is the shuffle the first
     degree groupBy would have paid anyway), giving per-file min/max
-    statistics over ``u``.
+    statistics over ``u``.  That one exchange also serves the
+    duplicate drop: hash(u) clustering already places equal (u, v)
+    pairs in one partition, so the distinct after it adds no shuffle.
+
+    Returns the schema it wrote, for a read-back that infers nothing
+    (warp_spark.artifacts.publish_artifact).
     """
     su, sv = F.col("src"), F.col("dst")
     canonical = (
         edges.select(F.least(su, sv).alias("u"), F.greatest(su, sv).alias("v"))
         .where(F.col("u") != F.col("v"))
+        .repartition(8, "u")
         .distinct()
     )
-    canonical.repartition(8, "u").write.mode("overwrite").parquet(path)
+    canonical.write.mode("overwrite").parquet(path)
+    return canonical.schema
 
 
 def load_edges(spark, path: str) -> DataFrame:
@@ -621,8 +633,9 @@ def load_edges(spark, path: str) -> DataFrame:
     ``(u, v)`` rows with ``u < v`` — feed to any algorithm here as
     ``src``/``dst`` (their internal canonicalization is then a no-op
     distinct over an already-canonical set, never a fact-table
-    self-join)."""
-    return spark.read.parquet(path).select(
+    self-join).  A tree this session just published is read with the
+    schema its build wrote, running no inference job."""
+    return read_parquet(spark, path).select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     )
 

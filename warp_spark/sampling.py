@@ -173,17 +173,25 @@ def kmv_distinct(
     Returns one row per group: ``[group_col,] n_hashes, est_distinct``.
     Scale shape: map-side partial distinct on (group, hash), one
     shuffle; the window and the aggregate reuse the same partitioning.
-    The sketch is mergeable (union the hash sets, re-take the k
-    smallest), which is what makes it a streaming/partitioned-rollup
+    Without a group the k-th smallest hash is the largest of a
+    distributed top-k (``orderBy().limit(k)``, per-partition heaps), read
+    beside the count as a scalar subquery — no window over every hash in
+    one task. The sketch is mergeable (union the hash sets, re-take the
+    k smallest), which is what makes it a streaming/partitioned-rollup
     distinct counter at 100 TB."""
     groups = [group_col] if group_col else []
     h = df.select(*groups, _hash32(F.col(value_col)).alias("__hv")).distinct()
-    w = Window.partitionBy(*groups).orderBy("__hv")
-    r = h.withColumn("__rn", F.row_number().over(w))
-    per = r.groupBy(*groups).agg(
-        F.count(F.lit(1)).alias("n_hashes"),
-        F.max(F.when(F.col("__rn") == k, F.col("__hv"))).alias("__hvk"),
-    )
+    if group_col:
+        w = Window.partitionBy(group_col).orderBy("__hv")
+        per = h.withColumn("__rn", F.row_number().over(w)).groupBy(group_col).agg(
+            F.count(F.lit(1)).alias("n_hashes"),
+            F.max(F.when(F.col("__rn") == k, F.col("__hv"))).alias("__hvk"),
+        )
+    else:
+        hvk = h.orderBy("__hv").limit(k).agg(F.max("__hv")).scalar()
+        per = h.agg(F.count(F.lit(1)).alias("n_hashes")).select(
+            "n_hashes", hvk.alias("__hvk")
+        )
     est = F.when(
         F.col("n_hashes") >= k,
         F.lit(float((k - 1) * 4294967296.0)) / F.col("__hvk").cast("double"),

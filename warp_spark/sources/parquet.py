@@ -12,7 +12,9 @@ like change what a read returns).
 - **Schema.** ``spark.read.parquet``, ``.csv`` and ``.json`` run a
   schema-inference job on every call; while the stamp holds for the
   same reader options, ``spark.read.schema(memo)`` skips it
-  (``read_inferred``).
+  (``read_inferred``). A parquet directory this session just wrote
+  needs no inference at all: its writer puts the schema it wrote in the
+  memo under the stamp taken after its last file (``remember_parquet``).
 - **Preview sample.** The first N rows of a parquet, csv or json source,
   N the largest preview size asked for so far, kept on the driver per
   (format, options, path) by ``collectAsList`` (JVM-side: no row crosses
@@ -202,6 +204,44 @@ def read_inferred(
     if stamp is None:
         return read(None)
     return session_reads(spark).read((*key, path, _sql_conf(spark)), stamp, read)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable: the schema
+    a parquet read returns for files Spark wrote from ``dt``."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def remember_parquet(
+    spark: SparkSession, path: str, schema: T.StructType, version: Optional[tuple] = None
+) -> None:
+    """Note that the parquet directory ``path`` was just written, without
+    partition columns, from a frame of ``schema``: ``read_parquet`` of
+    the same file version and SQL conf then reads it with that schema
+    and runs no inference job. ``version`` is the directory's file stamp
+    after its last file was written (stamped now when None); any later
+    change to its files is a new version, read as before."""
+    version = _local_stamp(path) if version is None else version
+    if version is not None:
+        key = ("parquet", path, _sql_conf(spark))
+        session_reads(spark).schemas[key] = (version, _nullable(schema))
+
+
+def forget_parquet(spark: SparkSession, path: str) -> None:
+    """Drop the schemas the read memo holds for the parquet directory
+    ``path``, under every SQL conf: its files are gone."""
+    memo = session_reads(spark).schemas
+    for key in list(memo):
+        if key[0] == "parquet" and key[-2] == path:
+            memo.pop(key, None)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

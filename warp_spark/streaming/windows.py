@@ -516,7 +516,9 @@ def run_stream_to_memory(
     shuffle_partitions: int = 8,
 ):
     """Test/debug sink: drain all available input into an in-memory
-    table and stop. Returns the SparkSession for querying the table.
+    table named ``name`` and stop. Returns the stopped
+    ``StreamingQuery`` (its ``recentProgress`` holds the per-trigger
+    metrics); read the rows with ``spark.table(name)``.
 
     ``shuffle_partitions`` right-sizes the STATE STORE count for the
     drained micro-batch volume: a stateful streaming query commits one
