@@ -137,6 +137,16 @@ def test_minhash_sig_udf_matches_expression_chain(spark):
     assert jvm_map == py_map
 
 
+def test_grouped_median_refuses_empty_group_cols(spark):
+    """With no group keys the rank window would see every value on one
+    task; an ungrouped median is the reducer tier's, so it raises."""
+    from warp_spark.median import grouped_median
+
+    df = spark.range(5).withColumnRenamed("id", "v")
+    with pytest.raises(ValueError, match="group_cols"):
+        grouped_median(df, [], "v")
+
+
 @pytest.mark.parametrize("variant", ["median", "medianLow", "medianHigh", "medianPack"])
 def test_grouped_median_matches_reducer(spark, variant):
     """The window-path exact median (O(1) memory per task) must equal

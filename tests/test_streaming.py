@@ -849,11 +849,11 @@ def test_stage_split_files_raises_on_key_outside_range(spark, tmp_path):
     and leaves no trigger files behind."""
     import os
 
-    from warp_spark.catalog import _stage_split_files
+    from warp_spark.streaming.replay import _stage_split
 
     df = spark.range(12).withColumnRenamed("id", "v")
     ok = str(tmp_path / "ok")
-    _stage_split_files(df, ok, F.col("v") % 3, ["v"], n=3)
+    _stage_split(df, ok, F.col("v") % 3, ["v"], n=3)
     got = sorted(r.v for r in spark.read.parquet(f"{ok}/file_*.parquet").collect())
     assert got == list(range(12))
     assert sorted(os.listdir(ok)) == ["file_000.parquet", "file_001.parquet", "file_002.parquet"]
@@ -861,5 +861,85 @@ def test_stage_split_files_raises_on_key_outside_range(spark, tmp_path):
     for key in (F.col("v") % 4, F.when(F.col("v") < 10, F.col("v") % 3)):
         bad = str(tmp_path / "bad")
         with pytest.raises(RuntimeError, match="outside 0..2"):
-            _stage_split_files(df, bad, key, ["v"], n=3)
+            _stage_split(df, bad, key, ["v"], n=3)
         assert not [f for f in os.listdir(bad) if f.startswith("file_")]
+
+
+def test_stage_split_returns_the_schema_it_wrote(spark, tmp_path):
+    """The split staging opens its stream with the schema it wrote, so
+    that schema must be what a parquet read of the files infers."""
+    from warp_spark.streaming.replay import _stage_split
+
+    df = spark.range(6).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds("id").alias("ts"),
+        F.timestamp_seconds("id").cast("timestamp_ntz").alias("ts_ntz"),
+        F.when(F.col("id") % 2 == 0, F.lit("even")).alias("maybe"),
+        F.array("id", "id").alias("arr"),
+    )
+    root = str(tmp_path / "split")
+    got = _stage_split(df, root, F.col("k") % 3, df.columns, n=3)
+    assert got == spark.read.parquet(root).schema
+
+
+def test_memory_replay_leaves_no_view(spark):
+    """A streamed entry drops its memory sink's temp view once it has
+    the sink's frame; the frame still collects and aggregates."""
+    import os
+
+    from warp_spark.catalog import QUERIES
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    df = QUERIES["events_hourly_rollup_streamed"](spark, os.path.dirname(EVENTS))
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    rows = df.collect()
+    assert rows and df.groupBy().count().first()[0] == len(rows)
+
+
+@pytest.mark.parametrize("fails", ["build", "drain"])
+def test_failed_replay_cleans_up(spark, tmp_path, monkeypatch, fails):
+    """Whether the query builder raises or the started query fails, the
+    replay removes its staged directory, leaves no active query and no
+    temp view."""
+    import os
+    import tempfile
+
+    from warp_spark.streaming import memory_sink, replay_events
+
+    def build(ev):
+        if fails == "build":
+            raise ValueError("boom")
+        return ev.select(F.raise_error(F.lit("boom")).alias("x"))
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = sorted(t.name for t in spark.catalog.listTables())
+    with pytest.raises(Exception, match="boom"):
+        replay_events(spark, os.path.dirname(EVENTS), build, memory_sink("append"))
+    assert os.listdir(tmp_path) == []
+    assert spark.streams.active == []
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+def test_catalog_owns_no_replay():
+    """Every streamed catalog entry replays through
+    warp_spark/streaming/replay.py: catalog.py makes no temp directory,
+    opens or drains no stream itself, and defines no staging helper."""
+    import ast
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parent.parent / "warp_spark/catalog.py"
+    tree = ast.parse(path.read_text())
+    banned = {"mkdtemp", "readStream", "writeStream", "processAllAvailable"}
+    found = sorted(
+        (n.lineno, n.attr if isinstance(n, ast.Attribute) else n.id)
+        for n in ast.walk(tree)
+        if (isinstance(n, ast.Attribute) and n.attr in banned)
+        or (isinstance(n, ast.Name) and n.id in banned)
+    )
+    stagers = sorted(
+        n.name
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.name.startswith("_stage_")
+    )
+    assert not found and not stagers, (found, stagers)

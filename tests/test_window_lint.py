@@ -36,7 +36,7 @@ ALLOWED = {
         "partition_by spec: non-empty keys on that branch",
     ),
     ("warp_spark/median.py", "grouped_median"): (
-        2, "partitioned by group_cols; with none, every non-null value"
+        2, "partitioned by group_cols, which must be non-empty (ValueError)"
     ),
     ("warp_spark/pipeline/text.py", "dsir_importance"): (1, "≤ buckets rows"),
     ("warp_spark/pipeline/text.py", "source_token_kl"): (

@@ -55,6 +55,12 @@ from warp_spark.functions import call
 from warp_spark.localdf import small_rows_df
 from warp_spark.prefix import ntile, running
 from warp_spark.sources.parquet import read_parquet
+from warp_spark.streaming.replay import (
+    foreach_batch_sink,
+    memory_sink,
+    replay_events,
+    replay_split,
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> Dataset:
@@ -1612,7 +1618,6 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mutable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from warp_spark.mutable import Warehouse
@@ -1620,8 +1625,9 @@ def mutable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
     orders = _t(spark, sf_dir, "orders").to_df().select(*cols)
     base = orders.filter(F.col("o_orderkey") % 7 == 0)
-    root = tempfile.mkdtemp(prefix="warp_cdc_entry_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_cdc_entry_", ignore_cleanup_errors=True
+    ) as root:
         wh = Warehouse(spark, root)
         t = wh.create("orders_cdc", base)
         k = F.col("o_orderkey")
@@ -1656,10 +1662,7 @@ def mutable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         t.merge_changes(changes, "o_orderkey", "seq")
-        final = t.read().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return final
+        return t.read().localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1696,7 +1699,6 @@ def mutable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mutable_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from warp_spark.mutable import Warehouse
@@ -1705,8 +1707,9 @@ def mutable_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").to_df().select(*cols)
     k = F.col("o_orderkey")
     base = orders.filter(k % 6 == 1)
-    root = tempfile.mkdtemp(prefix="warp_cdc_stream_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_cdc_stream_", ignore_cleanup_errors=True
+    ) as root:
         wh = Warehouse(spark, os.path.join(root, "wh"))
         t = wh.create("orders_stream_cdc", base)
         upd = base.filter((k % 12 == 7) & (k % 18 != 13))
@@ -1733,34 +1736,19 @@ def mutable_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("seq", F.lit(2))
         )
-        d = os.path.join(root, "changes")
-        os.makedirs(d)
-        # ONE job stages both change batches, split on seq (previously
-        # two coalesce(1) writes, each re-scanning orders); distinct
-        # mtimes from the helper pin batch 1 before batch 2 (the
-        # FileStreamSource orders new files by modification time)
-        _stage_split_files(
+        # ONE job stages both change batches, split on seq; the split
+        # staging's mtimes replay batch 1 before batch 2
+        replay_split(
             b1.select(*cols, "seq", "op").unionByName(
                 b2.select(*cols, "seq", "op")
             ),
-            d,
             F.col("seq") - 1,
             cols + ["seq", "op"],
+            lambda changes: changes,
+            lambda changes: t.merge_stream(changes, "o_orderkey", "seq"),
             n=2,
         )
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-                "o_totalprice double, seq int, op string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-        t.merge_stream(stream, "o_orderkey", "seq")
-        final = t.read().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return final
+        return t.read().localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1796,7 +1784,6 @@ def mutable_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mutable_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from warp_spark.mutable import Warehouse
@@ -1805,8 +1792,9 @@ def mutable_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").to_df().select(*cols)
     k = F.col("o_orderkey")
     base = orders.filter(k % 4 == 2)
-    root = tempfile.mkdtemp(prefix="warp_cdf_entry_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_cdf_entry_", ignore_cleanup_errors=True
+    ) as root:
         wh = Warehouse(spark, root)
         t = wh.create("orders_cdf", base, keep_versions=3)
         upd = base.filter((k % 12 == 6) & (k % 20 != 14))
@@ -1829,10 +1817,7 @@ def mutable_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("seq", F.lit(1))
         )
         t.merge_changes(batch, "o_orderkey", "seq")
-        feed = t.changes("o_orderkey", 0).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return feed
+        return t.changes("o_orderkey", 0).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1877,7 +1862,6 @@ def mutable_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mutable_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from functools import reduce
@@ -1890,8 +1874,9 @@ def mutable_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         .filter(F.col("o_orderkey") % 5 == 2)
     )
-    root = tempfile.mkdtemp(prefix="warp_tt_entry_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_tt_entry_", ignore_cleanup_errors=True
+    ) as root:
         wh = Warehouse(spark, root)
         t = wh.create("orders_tt", src, keep_versions=3)
         t.update("o_totalprice > 150000", {"o_orderstatus": F.lit("H")})
@@ -1909,12 +1894,9 @@ def mutable_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("n_h"),
                 )
             )
-        final = reduce(lambda a, b: a.unionByName(b), outs).localCheckpoint(
+        return reduce(lambda a, b: a.unionByName(b), outs).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -1942,7 +1924,6 @@ def mutable_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mutable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from warp_spark.mutable import Warehouse
@@ -1950,8 +1931,9 @@ def mutable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").to_df().select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="warp_evo_entry_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_evo_entry_", ignore_cleanup_errors=True
+    ) as root:
         wh = Warehouse(spark, root)
         t = wh.create("orders_evo", orders.filter(F.col("o_orderkey") % 5 == 1))
         t.insert(
@@ -1960,7 +1942,7 @@ def mutable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             merge_schema=True,
         )
-        final = (
+        return (
             t.read()
             .groupBy(
                 F.coalesce("channel", F.lit("<pre-evolution>")).alias("channel")
@@ -1972,9 +1954,6 @@ def mutable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -2280,7 +2259,6 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_roundtrip_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from functools import reduce
@@ -2292,9 +2270,10 @@ def source_roundtrip_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(*cols)
         .filter(F.col("o_orderkey") % 4 == 1)
     )
-    root = tempfile.mkdtemp(prefix="warp_fmt_entry_")
     outs = []
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_fmt_entry_", ignore_cleanup_errors=True
+    ) as root:
         for fmt in ("csv", "json", "orc"):
             path = f"{root}/{fmt}"
             w = src.write.mode("overwrite")
@@ -2321,12 +2300,9 @@ def source_roundtrip_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("key_checksum"),
                 )
             )
-        final = reduce(lambda a, b: a.unionByName(b), outs).localCheckpoint(
+        return reduce(lambda a, b: a.unionByName(b), outs).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -3607,20 +3583,13 @@ def events_hourly_rollup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
     readStream file source, complete-mode memory sink (state bounded by
     the 1-day watermark on a real stream; complete mode here because the
     memory sink then holds exactly the final aggregate to hand the
-    driver). The file is staged into a temp dir — Spark's file source
-    wants a directory — and the dir is removed once drained (the memory
-    sink owns the rows)."""
-    import shutil
-    import tempfile
-    import uuid
+    driver)."""
+    from warp_spark.streaming import windowed_rollup
 
-    from warp_spark.streaming import run_stream_to_memory, windowed_rollup
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"hourly_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        rolled = windowed_rollup(
+    rolled = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: windowed_rollup(
             ev,
             "ts",
             "1 hour",
@@ -3630,11 +3599,10 @@ def events_hourly_rollup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
                 "total_value": Aggregator(F.col("value"), "sum"),
             },
             watermark="1 day",
-        )
-        run_stream_to_memory(rolled, name, output_mode="complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).withColumn("total_value", F.round("total_value", 2))
+        ),
+        memory_sink("complete"),
+    )
+    return rolled.withColumn("total_value", F.round("total_value", 2))
 
 
 # ---------------------------------------------------------------------------
@@ -3659,28 +3627,22 @@ def events_hourly_rollup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
+    from warp_spark.streaming import windowed_rollup
 
-    from warp_spark.streaming import run_stream_to_memory, windowed_rollup
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"stream_static_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        dim = (
-            _t(spark, sf_dir, "customer")
-            .to_df()
-            .select(
-                F.col("c_custkey").alias("user_id"),
-                F.col("c_mktsegment").alias("segment"),
-            )
+    dim = (
+        _t(spark, sf_dir, "customer")
+        .to_df()
+        .select(
+            F.col("c_custkey").alias("user_id"),
+            F.col("c_mktsegment").alias("segment"),
         )
+    )
+
+    def build(ev):
         enriched = ev.join(F.broadcast(dim), "user_id", "left").withColumn(
             "segment", F.coalesce("segment", F.lit("UNKNOWN"))
         )
-        rolled = windowed_rollup(
+        return windowed_rollup(
             enriched,
             "ts",
             "1 hour",
@@ -3691,10 +3653,9 @@ def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
             watermark="1 day",
         )
-        run_stream_to_memory(rolled, name, output_mode="complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).withColumn("total_value", F.round("total_value", 2))
+
+    rolled = replay_events(spark, sf_dir, build, memory_sink("complete"))
+    return rolled.withColumn("total_value", F.round("total_value", 2))
 
 
 # ---------------------------------------------------------------------------
@@ -4045,35 +4006,23 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def events_sample_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import bottomk_sample_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"sample_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        batch = _events(spark, sf_dir)
-        # unordered thirds — the op is order-free; ONE pass stages all
-        # three trigger files (previously 3 filter+coalesce(1) writes,
-        # each re-scanning events)
-        _stage_split_files(
-            batch, d, F.col("event_id") % 3, list(batch.columns)
-        )
-        ev = read_event_stream(spark, d, max_files_per_trigger=1)
+    def build(ev):
         hv = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10).cast("long")
         keyed = ev.select(
             "event_id", "user_id", "event_type", hv.alias("hv")
         ).withColumn("bucket", F.pmod(F.col("hv"), F.lit(16)))
-        out = bottomk_sample_stateful(keyed, k=64)
-        run_stream_to_memory(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return bottomk_sample_stateful(keyed, k=64)
+
+    batch = _events(spark, sf_dir)
+    # unordered thirds — the op is order-free; ONE pass stages all
+    # three trigger files
+    sampled = replay_split(
+        batch, F.col("event_id") % 3, list(batch.columns), build, memory_sink("update")
+    )
     return (
-        spark.table(name)
-        .select("hv", "event_id", "user_id", "event_type")
+        sampled.select("hv", "event_id", "user_id", "event_type")
         .distinct()
         .orderBy("hv", "event_id")
         .limit(64)
@@ -4121,45 +4070,30 @@ def events_sample_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import last_touch_attribution_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"attribution_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        touches = (
-            _events(spark, sf_dir)
-            .filter(F.col("event_type").isin("view", "click", "purchase"))
-            .withColumn(
-                "__is_touch",
-                F.when(F.col("event_type").isin("view", "click"), 1).otherwise(0),
-            )
+    touches = (
+        _events(spark, sf_dir)
+        .filter(F.col("event_type").isin("view", "click", "purchase"))
+        .withColumn(
+            "__is_touch",
+            F.when(F.col("event_type").isin("view", "click"), 1).otherwise(0),
         )
-        batch = ntile(
-            touches, [F.col("ts"), F.col("__is_touch"), F.col("event_id")], 3, "__third"
-        )
-        # ONE pass stages the time-ordered thirds; the stateful consumer
-        # sorts within each micro-batch group
-        _stage_split_files(
-            batch,
-            d,
-            F.col("__third") - 1,
-            [c for c in batch.columns if not c.startswith("__")],
-        )
-        ev = read_event_stream(spark, d, max_files_per_trigger=1)
-        if dict(ev.dtypes)["ts"] == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        out = last_touch_attribution_stateful(ev)
-        run_stream_to_memory(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    )
+    batch = ntile(
+        touches, [F.col("ts"), F.col("__is_touch"), F.col("event_id")], 3, "__third"
+    )
+    # ONE pass stages the time-ordered thirds; the stateful consumer
+    # sorts within each micro-batch group
+    attributed = replay_split(
+        batch,
+        F.col("__third") - 1,
+        [c for c in batch.columns if not c.startswith("__")],
+        last_touch_attribution_stateful,
+        memory_sink("update"),
+    )
     return (
-        spark.table(name)
-        .groupBy("channel")
+        attributed.groupBy("channel")
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
             F.sum("cents").alias("total_cents"),
@@ -5009,101 +4943,6 @@ def events_sessionize_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(ev, "ts", gap, keys=["user_id"])
 
 
-def _stage_parquet_files(
-    src: str, dst_dir: str, prefix: str = "part", t0: int = 1_700_000_000
-) -> int:
-    """Stage a parquet dataset — a single .parquet FILE (the testdata
-    form) or a Spark-written DIRECTORY of part files — into ``dst_dir``
-    as sequentially named files with strictly increasing mtimes (the
-    file stream source orders micro-batches by mtime, the r4
-    merge_stream lesson). Returns the number of files staged so callers
-    can append later batches (e.g. a watermark-flush sentinel) after."""
-    import glob as _glob
-    import os
-    import shutil
-
-    parts = (
-        sorted(_glob.glob(os.path.join(src, "part-*.parquet")))
-        if os.path.isdir(src)
-        else [src]
-    )
-    for i, p in enumerate(parts):
-        dst = os.path.join(dst_dir, f"{prefix}_{i:03d}.parquet")
-        shutil.copy(p, dst)
-        os.utime(dst, (t0 + i,) * 2)
-    return len(parts)
-
-
-def _stage_split_files(
-    df: DataFrame, root: str, key: Column, cols: list, n: int = 3
-) -> None:
-    """Stage ``df`` as ``n`` utime-pinned micro-batch files, one per
-    residue class of ``key`` — in ONE Spark job (guide §1.2: the old
-    per-entry loops ran ``n`` filter + coalesce(1) writes, each
-    re-scanning the source).  ``partitionBy`` on the residue writes
-    one file per class (the partition column is dropped, so each file
-    carries exactly ``cols``); per-file row SETS are identical to the
-    filter form, and in-file order is irrelevant to every consumer
-    (order-independent appends / per-row scoring).  Empty classes
-    still get their (empty) trigger file."""
-    import glob as _glob
-    import os
-    import shutil
-
-    df.select(*cols, key.alias("__b")).repartition(1).write.mode(
-        "overwrite"
-    ).partitionBy("__b").parquet(f"{root}/stage")
-    # rows whose key is null or outside 0..n-1 land in an unclaimed
-    # __b=* dir and would vanish with the stage rmtree — every current
-    # caller passes a total pmod/% key, so a stray partition is a caller
-    # bug, raised before any file is claimed
-    stray = [
-        d
-        for d in _glob.glob(f"{root}/stage/__b=*")
-        if os.path.basename(d) not in {f"__b={i}" for i in range(n)}
-    ]
-    if stray:
-        shutil.rmtree(f"{root}/stage", ignore_errors=True)
-        raise RuntimeError(
-            f"_stage_split_files: key produced rows outside 0..{n - 1}: "
-            f"{sorted(os.path.basename(d) for d in stray)}"
-        )
-    for i in range(n):
-        hits = _glob.glob(f"{root}/stage/__b={i}/part-*.parquet")
-        tgt = f"{root}/file_{i:03d}.parquet"
-        if hits:
-            os.rename(hits[0], tgt)
-        else:
-            df.limit(0).select(*cols).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{root}/stage_empty{i}")
-            os.rename(
-                _glob.glob(f"{root}/stage_empty{i}/part-*.parquet")[0], tgt
-            )
-            shutil.rmtree(f"{root}/stage_empty{i}", ignore_errors=True)
-        os.utime(tgt, (1_700_000_000 + 100 * i,) * 2)
-    shutil.rmtree(f"{root}/stage", ignore_errors=True)
-
-
-def _stage_event_stream(spark: SparkSession, sf_dir: str, tmpdir: str) -> DataFrame:
-    """Stage events.parquet into a temp dir (the file source wants a
-    directory) and open it as a readStream with ``ts`` normalized to a
-    watermarkable TIMESTAMP — shared by every streaming-executed entry.
-    The staged files are copies, so the stream borrows the source's
-    schema from the session's read memo instead of inferring it from
-    the copy."""
-    from warp_spark.streaming import read_event_stream
-
-    src = f"{sf_dir}/events.parquet"
-    _stage_parquet_files(src, tmpdir)
-    ev = read_event_stream(spark, tmpdir, schema=read_parquet(spark, src).schema)
-    if dict(ev.dtypes)["ts"] == "bigint":
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif dict(ev.dtypes)["ts"] == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev
-
-
 @register(
     "events_sessionize_streamed",
     """
@@ -5135,23 +4974,16 @@ def events_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-day watermark → complete-mode memory sink) against the identical
     gaps-and-islands oracle — session merging across micro-batches is
     the hardest stateful path Spark's native windows have."""
-    import shutil
-    import tempfile
-    import uuid
+    from warp_spark.streaming import sessionize
 
-    from warp_spark.streaming import run_stream_to_memory, sessionize
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"sessionize_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        sessions = sessionize(
+    return replay_events(
+        spark,
+        sf_dir,
+        lambda ev: sessionize(
             ev, "ts", "30 minutes", keys=["user_id"], watermark="1 day"
-        )
-        run_stream_to_memory(sessions, name, output_mode="complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name)
+        ),
+        memory_sink("complete"),
+    )
 
 
 @register(
@@ -5170,27 +5002,19 @@ def events_running_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     running total — must hash-match the plain batch GROUP BY oracle.
     This is the (b) escape-hatch tier of SURVEY §2.7 carrying a real
     value oracle, not a rows-only check."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
-    from warp_spark.streaming import run_stream_to_memory
     from warp_spark.streaming.windows import running_totals_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"running_totals_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        out = running_totals_stateful(ev, "user_id", "value", "ts")
-        run_stream_to_memory(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    snapshots = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: running_totals_stateful(ev, "user_id", "value", "ts"),
+        memory_sink("update"),
+    )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
+        snapshots.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", F.round("total", 2).alias("total"))
     )
@@ -6691,38 +6515,22 @@ def dedup_neardup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     — nothing O(corpus) lives in the state store.  Same oracle as the
     batch entry: the streaming replay must reproduce the batch answer
     exactly."""
-    import shutil
-    import tempfile
-    import uuid
-
     from warp_spark.pipeline.dedup import incremental_dedup_stream
-    from warp_spark.streaming import run_stream_to_memory
 
     docs = _t(spark, sf_dir, "documents").to_df()
     corpus = docs.filter(F.col("doc_id") % 20 < 16)
     batch = docs.filter(F.col("doc_id") % 20 >= 16)
-    root = tempfile.mkdtemp(prefix="warp_neardup_stream_")
-    name = f"neardup_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        # FileStreamSource orders new files by mtime: _stage_split_files
-        # pins the micro-batch order deterministically, staging all
-        # three trigger files in ONE batch pass
-        _stage_split_files(
-            batch, root, F.col("doc_id") % 3, ["doc_id", "text"]
-        )
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
-        hits_stream = incremental_dedup_stream(corpus, stream, threshold=0.5)
-        run_stream_to_memory(hits_stream, name, output_mode="update")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    revisions = replay_split(
+        batch,
+        F.col("doc_id") % 3,
+        ["doc_id", "text"],
+        lambda stream: incremental_dedup_stream(corpus, stream, threshold=0.5),
+        memory_sink("update"),
+    )
     # update mode re-emits a key on every revision; min/max per key
     # equal the final state (dup_of is non-increasing, jaccard max is
     # non-decreasing across revisions)
-    hits = spark.table(name).groupBy("batch_id").agg(
+    hits = revisions.groupBy("batch_id").agg(
         F.min("dup_of").alias("dup_of"),
         F.max("best_jaccard").alias("best_jaccard"),
     )
@@ -7008,9 +6816,6 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
 # the state store — nothing O(corpus) in streaming state.
 @register("dedup_index_append_streamed", None)
 def dedup_index_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from warp_spark.pipeline.dedup import append_dedup_index, persist_dedup_index
 
     docs = _t(spark, sf_dir, "documents").to_df()
@@ -7023,35 +6828,27 @@ def dedup_index_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy_artifact(_ensure_dedup_base12(spark, sf_dir), path)
 
     def ingest_stream() -> bool:
-        root = tempfile.mkdtemp(prefix="warp_idx_ingest_stream_")
-        try:
-            # ONE slice pass stages all three trigger files
-            _stage_split_files(
-                slice_, root, F.col("doc_id") % 3, ["doc_id", "text"]
-            )
-            stream = (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(root)
-            )
-            # mirrors _ensure_dedup_index_appended's degrade contract
-            # (r12 ADVICE): once append_dedup_index refuses a trigger's
-            # batch (cap crossed / shape drift), remaining triggers stop
-            # appending and the refusal publishes a one-shot rebuild over
-            # the full standing slice — in the streamed leg too
-            degraded = {"flag": False}
+        # mirrors _ensure_dedup_index_appended's degrade contract: once
+        # append_dedup_index refuses a trigger's batch (cap crossed /
+        # shape drift), remaining triggers stop appending and the
+        # refusal publishes a one-shot rebuild over the full standing
+        # slice — in the streamed leg too
+        degraded = {"flag": False}
 
-            def ingest(bdf, batch_id):
-                if degraded["flag"] or bdf.isEmpty():
-                    return
-                if not append_dedup_index(spark, path, bdf):
-                    degraded["flag"] = True
+        def ingest(bdf, batch_id):
+            if degraded["flag"] or bdf.isEmpty():
+                return
+            if not append_dedup_index(spark, path, bdf):
+                degraded["flag"] = True
 
-            q = stream.writeStream.foreachBatch(ingest).start()
-            q.processAllAvailable()
-            q.stop()
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+        # ONE slice pass stages all three trigger files
+        replay_split(
+            slice_,
+            F.col("doc_id") % 3,
+            ["doc_id", "text"],
+            lambda stream: stream,
+            foreach_batch_sink(ingest),
+        )
         return not degraded["flag"]
 
     mutate(
@@ -7511,21 +7308,15 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
+    from warp_spark.streaming import streaming_dedup
 
-    from warp_spark.streaming import run_stream_to_memory, streaming_dedup
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        deduped = streaming_dedup(ev, ["user_id", "event_type"], watermark="30 days")
-        run_stream_to_memory(deduped, name, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).select("user_id", "event_type")
+    deduped = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: streaming_dedup(ev, ["user_id", "event_type"], watermark="30 days"),
+        memory_sink("append"),
+    )
+    return deduped.select("user_id", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -7547,52 +7338,51 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
+    from warp_spark.streaming import windowed_rollup
 
-    from warp_spark.streaming import (
-        read_event_stream,
-        run_stream_to_memory,
-        windowed_rollup,
+    # stage newest-first thirds: each subsequent micro-batch is late
+    # (event_id breaks ts ties, so the thirds are a total order); the
+    # split staging's mtimes replay tile 1 first
+    batch = ntile(
+        _events(spark, sf_dir), [F.col("ts").desc(), F.col("event_id")], 3, "__third"
     )
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"late_rollup_{uuid.uuid4().hex[:8]}"
-    try:
-        # stage newest-first thirds: each subsequent micro-batch is late
-        # (event_id breaks ts ties, so the thirds are a total order)
-        batch = ntile(
-            _events(spark, sf_dir), [F.col("ts").desc(), F.col("event_id")], 3, "__third"
-        )
-        # ONE pass stages all three trigger files (previously three
-        # window+filter+coalesce(1) writes); the old loop relied on
-        # natural write mtimes for batch order — the helper's explicit
-        # utimes pin the same tile-1-first order deterministically
-        _stage_split_files(
-            batch,
-            d,
-            F.col("__third") - 1,
-            [c for c in batch.columns if c != "__third"],
-        )
-        ev = read_event_stream(spark, d, max_files_per_trigger=1)
-        if dict(ev.dtypes)["ts"] == "bigint":
-            ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif dict(ev.dtypes)["ts"] == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        rolled = windowed_rollup(
+    rolled = replay_split(
+        batch,
+        F.col("__third") - 1,
+        [c for c in batch.columns if c != "__third"],
+        lambda ev: windowed_rollup(
             ev,
             "ts",
             "1 hour",
             groups=["event_type"],
             aggs={"n_events": Aggregator(F.col("event_id"), "countAll")},
             watermark="365 days",
-        )
-        run_stream_to_memory(rolled, name, output_mode="complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).select(
+        ),
+        memory_sink("complete"),
+    )
+    return rolled.select(
         F.col("window_start").alias("hour"), "event_type", "n_events"
+    )
+
+
+def _click_purchase_join(ev: DataFrame, how: str) -> DataFrame:
+    """Clicks joined ``how`` to same-user purchases within [0, 4 h] of
+    them, both sides watermarked by 1 day."""
+    from warp_spark.streaming import stream_interval_join
+
+    def side(kind):
+        return ev.filter(F.col("event_type") == kind).select(
+            "user_id", "ts", "event_id", "value"
+        )
+
+    return stream_interval_join(
+        side("click"),
+        side("purchase"),
+        by=["user_id"],
+        lower="INTERVAL 0 SECONDS",
+        upper="INTERVAL 4 HOURS",
+        watermark="1 day",
+        how=how,
     )
 
 
@@ -7619,34 +7409,12 @@ def events_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import run_stream_to_memory, stream_interval_join
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        joined = stream_interval_join(
-            clicks,
-            purchases,
-            by=["user_id"],
-            lower="INTERVAL 0 SECONDS",
-            upper="INTERVAL 4 HOURS",
-            watermark="1 day",
-        )
-        run_stream_to_memory(joined, name, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name)
+    return replay_events(
+        spark,
+        sf_dir,
+        lambda ev: _click_purchase_join(ev, "inner"),
+        memory_sink("append"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7675,60 +7443,28 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
-    from warp_spark.streaming import run_stream_to_memory, stream_interval_join
-    from warp_spark.streaming.windows import read_event_stream
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"ss_left_join_{uuid.uuid4().hex[:8]}"
-    try:
-        batch_ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        max_ts = batch_ev.agg(F.max("ts")).first()[0]  # 1-scalar artifact
-        flush_ts = max_ts + _dt.timedelta(days=30)
-        n_staged = _stage_parquet_files(f"{sf_dir}/events.parquet", d, "file")
-        sentinel = small_rows_df(
-            spark,
-            [
-                (-1, flush_ts, -1, "click", 0.0, "{}"),
-                (-2, flush_ts, -1, "purchase", 0.0, "{}"),
-            ],
-            batch_ev.select(
-                "event_id", "ts", "user_id", "event_type", "value", "props"
-            ).schema,
-        )
-        sentinel.coalesce(1).write.mode("overwrite").parquet(f"{d}/stage")
-        part = _glob.glob(f"{d}/stage/part-*.parquet")[0]
-        flush_file = f"{d}/file_{n_staged:03d}.parquet"
-        os.rename(part, flush_file)
-        shutil.rmtree(f"{d}/stage", ignore_errors=True)
-        os.utime(flush_file, (1_700_000_100 + n_staged,) * 2)
-        ev = read_event_stream(spark, d, max_files_per_trigger=1)
-        if dict(ev.dtypes)["ts"] == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        joined = stream_interval_join(
-            clicks,
-            purchases,
-            by=["user_id"],
-            lower="INTERVAL 0 SECONDS",
-            upper="INTERVAL 4 HOURS",
-            watermark="1 day",
-            how="left",
-        )
-        run_stream_to_memory(joined, name, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    batch_ev = read_parquet(spark, f"{sf_dir}/events.parquet")
+    max_ts = batch_ev.agg(F.max("ts")).first()[0]  # 1-scalar artifact
+    flush_ts = max_ts + _dt.timedelta(days=30)
+    sentinel = small_rows_df(
+        spark,
+        [
+            (-1, flush_ts, -1, "click", 0.0, "{}"),
+            (-2, flush_ts, -1, "purchase", 0.0, "{}"),
+        ],
+        batch_ev.select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
+        ).schema,
+    )
+    joined = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: _click_purchase_join(ev, "left"),
+        memory_sink("append"),
+        flush=sentinel,
+    )
+    return joined.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -7767,29 +7503,23 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # for a detector, not just a rollup.
 @register("events_anomaly_zscore_streamed", ORACLES["events_anomaly_zscore"])
 def events_anomaly_zscore_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import run_stream_to_memory, windowed_rollup
+    from warp_spark.streaming import windowed_rollup
     from warp_spark.streaming.windows import zscore_from_hourly
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"zscore_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        counted = windowed_rollup(
+    counted = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: windowed_rollup(
             ev,
             "ts",
             "1 hour",
             groups=["event_type"],
             aggs={"n_events": Aggregator(F.col("event_id"), "countAll")},
             watermark="1 day",
-        )
-        run_stream_to_memory(counted, name, output_mode="complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    grid = spark.table(name).select(
+        ),
+        memory_sink("complete"),
+    )
+    grid = counted.select(
         F.col("window_start").alias("hour"), "event_type", "n_events"
     )
     return zscore_from_hourly(grid, "event_type")
@@ -7925,32 +7655,25 @@ def mixture_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
-    from warp_spark.streaming import run_stream_to_memory
     from warp_spark.streaming.windows import heavy_hitters_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"heavy_hitters_{uuid.uuid4().hex[:8]}"
     capacity = 3
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d).withColumn(
-            "k", F.col("user_id") % 4
-        )
-        hh = heavy_hitters_stateful(
-            ev.select("k", "event_type"), "k", "event_type", capacity=capacity
-        )
-        run_stream_to_memory(hh, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    summaries = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: heavy_hitters_stateful(
+            ev.select((F.col("user_id") % 4).alias("k"), "event_type"),
+            "k",
+            "event_type",
+            capacity=capacity,
+        ),
+        memory_sink("update"),
+    )
     w = Window.partitionBy("k")
     final = (
-        spark.table(name)
-        .withColumn("__mx", F.max("n_processed").over(w))
+        summaries.withColumn("__mx", F.max("n_processed").over(w))
         .filter(F.col("n_processed") == F.col("__mx"))
         .drop("__mx")
     )
@@ -8033,24 +7756,16 @@ def events_heavy_hitters_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def events_countmin_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
     from warp_spark.sketches import countmin_build, countmin_estimate
-    from warp_spark.streaming import run_stream_to_memory
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"cm_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        sketch = countmin_build(ev.select("user_id"), "user_id", depth=4, width=512)
-        run_stream_to_memory(sketch, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    sketch = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: countmin_build(ev.select("user_id"), "user_id", depth=4, width=512),
+        memory_sink("update"),
+    )
     snapshot = (
-        spark.table(name)
-        .groupBy("cm_row", "cm_bucket")
+        sketch.groupBy("cm_row", "cm_bucket")
         .agg(F.max("cm_count").alias("cm_count"))
     )
     ev_batch = _t(spark, sf_dir, "events").to_df().select("user_id")
@@ -8106,31 +7821,25 @@ def events_countmin_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_kmv_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
     from warp_spark.sampling import _hash32
-    from warp_spark.streaming import run_stream_to_memory
     from warp_spark.streaming.windows import kmv_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"kmv_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        src = ev.select(
-            F.col("event_type"), _hash32(F.col("user_id")).alias("hv")
-        )
-        sk = kmv_stateful(src, "event_type", "hv", k=64)
-        run_stream_to_memory(sk, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    sketches = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: kmv_stateful(
+            ev.select(F.col("event_type"), _hash32(F.col("user_id")).alias("hv")),
+            "event_type",
+            "hv",
+            k=64,
+        ),
+        memory_sink("update"),
+    )
     w = Window.partitionBy("event_type")
     return (
-        spark.table(name)
-        .withColumn("__mx", F.max("n_processed").over(w))
+        sketches.withColumn("__mx", F.max("n_processed").over(w))
         .filter(F.col("n_processed") == F.col("__mx"))
         .drop("__mx")
     )
@@ -8339,6 +8048,20 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _replay_thirds(events: DataFrame, build) -> DataFrame:
+    """Replay ``events`` as (ts, event_id)-ordered thirds, one per
+    trigger, through ``build`` into an update-mode memory sink. ONE pass
+    stages the thirds; consumers are in-batch order-insensitive."""
+    batch = ntile(events, [F.col("ts"), F.col("event_id")], 3, "__third")
+    return replay_split(
+        batch,
+        F.col("__third") - 1,
+        [c for c in batch.columns if c != "__third"],
+        build,
+        memory_sink("update"),
+    )
+
+
 # 22nd streaming execution (windows.py::holt_stateful): the Holt
 # level+trend recurrence as 16 bytes of state per user — the two-register
 # generalization of events_ewma_streamed, emitted exactly once per
@@ -8369,38 +8092,10 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_holt_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import holt_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"holt_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        batch = ntile(
-            _events(spark, sf_dir).filter(F.col("event_type") == "purchase"),
-            [F.col("ts"), F.col("event_id")],
-            3,
-            "__third",
-        )
-        # ONE pass stages the time-ordered thirds; consumers are
-        # in-batch order-insensitive
-        _stage_split_files(
-            batch,
-            d,
-            F.col("__third") - 1,
-            [c for c in batch.columns if c != "__third"],
-        )
-        ev = read_event_stream(spark, d, max_files_per_trigger=1)
-        if dict(ev.dtypes)["ts"] == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        out = holt_stateful(ev)
-        run_stream_to_memory(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).select(
+    purchases = _events(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    return _replay_thirds(purchases, holt_stateful).select(
         "user_id", "event_id", "value", "level", "trend", "forecast_next"
     )
 
@@ -8890,38 +8585,12 @@ def orders_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_ewma_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import ewma_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"ewma_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        batch = ntile(
-            _events(spark, sf_dir).filter(F.col("event_type") == "purchase"),
-            [F.col("ts"), F.col("event_id")],
-            3,
-            "__third",
-        )
-        # ONE pass stages the time-ordered thirds; consumers are
-        # in-batch order-insensitive
-        _stage_split_files(
-            batch,
-            d,
-            F.col("__third") - 1,
-            [c for c in batch.columns if c != "__third"],
-        )
-        ev = read_event_stream(spark, d, max_files_per_trigger=1)
-        if dict(ev.dtypes)["ts"] == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        out = ewma_stateful(ev)
-        run_stream_to_memory(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).select("user_id", "event_id", "value", "ewma")
+    purchases = _events(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    return _replay_thirds(purchases, ewma_stateful).select(
+        "user_id", "event_id", "value", "ewma"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -9068,18 +8737,18 @@ def zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from warp_spark.layout import write_hive_partitioned
 
-    d = tempfile.mkdtemp(prefix="warp_part_entry_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_part_entry_", ignore_cleanup_errors=True
+    ) as d:
         write_hive_partitioned(_events(spark, sf_dir), d, ["event_type"])
         back = spark.read.parquet(d).filter(
             F.col("event_type").isin("click", "purchase")
         )
-        out = (
+        return (
             back.groupBy(
                 "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
             )
@@ -9089,9 +8758,6 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -9542,7 +9208,6 @@ def infer_formula_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mutable_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from warp_spark.mutable import Warehouse
@@ -9550,8 +9215,9 @@ def mutable_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority"]
     orders = _t(spark, sf_dir, "orders").to_df().select(*cols)
-    root = tempfile.mkdtemp(prefix="warp_dml_entry_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="warp_dml_entry_", ignore_cleanup_errors=True
+    ) as root:
         wh = Warehouse(spark, root)
         t = wh.create("orders_slice", orders.filter(F.col("o_orderkey") % 10 == 0))
         # insert: different column order, o_orderpriority absent → NULL
@@ -9569,10 +9235,7 @@ def mutable_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.add_column("flag", "int", F.lit(1))
         # detach the result from the table files (localCheckpoint pins
         # the blocks executor-side) so the temp warehouse can be removed
-        final = t.read().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return final
+        return t.read().localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -11135,6 +10798,29 @@ def agg_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
+def _replay_cent_hist(spark: SparkSession, sf_dir: str, sub_bits: int) -> DataFrame:
+    """The per-(event_type, bucket) histogram of value cents
+    (``hdr_bucket(cents, sub_bits)`` as ``__key``, count ``__cnt``) built
+    by an update-mode streaming aggregation over the events replay.
+    Update mode re-emits a key on every revision, so max(``__cnt``) per
+    key is the final count."""
+    from warp_spark.sketches import hdr_bucket
+
+    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long")
+    return (
+        replay_events(
+            spark,
+            sf_dir,
+            lambda ev: ev.select("event_type", hdr_bucket(cents, sub_bits).alias("__key"))
+            .groupBy("event_type", "__key")
+            .agg(F.count(F.lit(1)).alias("__cnt")),
+            memory_sink("update"),
+        )
+        .groupBy("event_type", "__key")
+        .agg(F.max("__cnt").alias("__cnt"))
+    )
+
+
 # Streamed twin (25th streaming execution): the SAME mergeable
 # histogram artifact maintained by an update-mode streaming count
 # aggregation over the micro-batched event feed — per-trigger
@@ -11153,31 +10839,9 @@ def agg_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def events_tdigest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
+    from warp_spark.sketches import tdigest_quantiles_from_hist
 
-    from warp_spark.sketches import hdr_bucket, tdigest_quantiles_from_hist
-    from warp_spark.streaming import run_stream_to_memory
-
-    d = tempfile.mkdtemp(prefix="warp_tdigest_stream_")
-    name = f"tdigest_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long")
-        hist = (
-            ev.select("event_type", hdr_bucket(cents, 7).alias("__key"))
-            .groupBy("event_type", "__key")
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-        )
-        run_stream_to_memory(hist, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    drained = (
-        spark.table(name)
-        .groupBy("event_type", "__key")
-        .agg(F.max("__cnt").alias("__cnt"))
-    )
+    drained = _replay_cent_hist(spark, sf_dir, 7)
     return tdigest_quantiles_from_hist(
         drained, "event_type", qs=(0.01, 0.5, 0.99)
     ).orderBy("event_type")
@@ -11333,32 +10997,9 @@ ORACLES["tdigest_probe"] = ORACLES["agg_tdigest_quantiles"]
     """,
 )
 def events_ks_drift_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.sketches import hdr_bucket
-    from warp_spark.streaming import run_stream_to_memory
-
-    d = tempfile.mkdtemp(prefix="warp_ksdrift_stream_")
-    name = f"ks_drift_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long")
-        hist = (
-            ev.filter(F.col("event_type").isin("view", "click"))
-            .select("event_type", hdr_bucket(cents, 7).alias("__key"))
-            .groupBy("event_type", "__key")
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-        )
-        run_stream_to_memory(hist, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    drained = (
-        spark.table(name)
-        .groupBy("event_type", "__key")
-        .agg(F.max("__cnt").alias("__cnt"))
+    drained = _replay_cent_hist(spark, sf_dir, 7).filter(
+        F.col("event_type").isin("view", "click")
     )
     is_v = F.col("event_type") == "view"
     h = drained.groupBy("__key").agg(
@@ -12202,9 +11843,6 @@ def graph_wedges_append_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from warp_spark.pipeline.graph import (
         append_edges,
         load_wedge_census,
@@ -12228,26 +11866,19 @@ def graph_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_orderkey") % 50 == 0)
     ).localCheckpoint(eager=True)
 
+    def ingest(bdf, batch_id):
+        if not bdf.isEmpty():
+            append_edges(spark, ep, bdf)
+
     def ingest_stream() -> bool:
-        root = tempfile.mkdtemp(prefix="warp_graph_ingest_stream_")
-        try:
-            # one checkpoint pass stages all three trigger files
-            _stage_split_files(delta_e, root, F.col("src") % 3, ["src", "dst"])
-            stream = (
-                spark.readStream.schema("src bigint, dst bigint")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(root)
-            )
-
-            def ingest(bdf, batch_id):
-                if not bdf.isEmpty():
-                    append_edges(spark, ep, bdf)
-
-            q = stream.writeStream.foreachBatch(ingest).start()
-            q.processAllAvailable()
-            q.stop()
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+        # one checkpoint pass stages all three trigger files
+        replay_split(
+            delta_e,
+            F.col("src") % 3,
+            ["src", "dst"],
+            lambda stream: stream,
+            foreach_batch_sink(ingest),
+        )
         return True
 
     def fold() -> bool:
@@ -12356,33 +11987,10 @@ def sample_weighted_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hdr_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
+    from warp_spark.sketches import hdr_quantiles_from_hist
 
-    from warp_spark.sketches import hdr_bucket, hdr_quantiles_from_hist
-    from warp_spark.streaming import run_stream_to_memory
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"hdr_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long")
-        hist = (
-            ev.select("event_type", hdr_bucket(cents, 5).alias("__key"))
-            .groupBy("event_type", "__key")
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-        )
-        run_stream_to_memory(hist, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    snapshot = (
-        spark.table(name)
-        .groupBy("event_type", "__key")
-        .agg(F.max("__cnt").alias("__cnt"))
-    )
     return hdr_quantiles_from_hist(
-        snapshot, "event_type", qs=(0.5, 0.95), sub_bits=5
+        _replay_cent_hist(spark, sf_dir, 5), "event_type", qs=(0.5, 0.95), sub_bits=5
     )
 
 
@@ -13381,29 +12989,20 @@ def events_burst_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     revision, so the snapshot takes max(cnt) per key = the final
     count). Same oracle as the batch entry: the stream replay must
     reproduce the batch answer exactly."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import run_stream_to_memory
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"burst_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        bucket = F.expr("unix_micros(cast(ts as timestamp)) div 600000000")
-        counts = ev.groupBy(
-            F.col("event_type"), bucket.alias("__b")
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        run_stream_to_memory(counts, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    bucket = F.expr("unix_micros(cast(ts as timestamp)) div 600000000")
+    counts = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: ev.groupBy(F.col("event_type"), bucket.alias("__b")).agg(
+            F.count(F.lit(1)).alias("cnt")
+        ),
+        memory_sink("update"),
+    )
     # localCheckpoint: the finisher self-joins pm (stats + hot filter),
     # and two branches of one MemoryPlan view fail attribute dedup
     # ("conflicting references"); the snapshot is O(active buckets)
     pm = (
-        spark.table(name)
-        .groupBy("event_type", "__b")
+        counts.groupBy("event_type", "__b")
         .agg(F.max("cnt").alias("cnt"))
         .localCheckpoint(eager=True)
     )
@@ -14677,36 +14276,10 @@ def events_daily_type_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_new_users_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import read_event_stream, run_stream_to_memory
     from warp_spark.streaming.windows import first_seen_stateful
 
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"new_users_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        batch = ntile(
-            _events(spark, sf_dir), [F.col("ts"), F.col("event_id")], 3, "__third"
-        )
-        # ONE pass stages the time-ordered thirds; consumers are
-        # in-batch order-insensitive
-        _stage_split_files(
-            batch,
-            d,
-            F.col("__third") - 1,
-            [c for c in batch.columns if c != "__third"],
-        )
-        ev = read_event_stream(spark, d, max_files_per_trigger=1)
-        if dict(ev.dtypes)["ts"] == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        out = first_seen_stateful(ev)
-        run_stream_to_memory(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return (
-        spark.table(name)
+        _replay_thirds(_events(spark, sf_dir), first_seen_stateful)
         .select(
             F.expr(
                 "DATE_ADD(DATE'1970-01-01', CAST(first_epoch_day AS INT))"
@@ -16085,28 +15658,17 @@ def stats_runs_test_daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_diversity_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from warp_spark.streaming import run_stream_to_memory
-
-    d = tempfile.mkdtemp(prefix="warp_stream_entry_")
-    name = f"diversity_streamed_{uuid.uuid4().hex[:8]}"
-    try:
-        ev = _stage_event_stream(spark, sf_dir, d)
-        counted = (
-            ev.withWatermark("ts", "1 day")
-            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-        run_stream_to_memory(counted, name, output_mode="complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    counted = replay_events(
+        spark,
+        sf_dir,
+        lambda ev: ev.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        memory_sink("complete"),
+    )
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     t = (
-        spark.table(name)
-        .select(F.col("w.start").cast("date").alias("day"), "c")
+        counted.select(F.col("w.start").cast("date").alias("day"), "c")
         .groupBy("day")
         .agg(
             F.sum(dec(F.col("c"))).alias("n"),

@@ -36,10 +36,19 @@ def grouped_median(
     (non-numeric values ignored, like the reducer tier). ``variant``:
     ``median`` averages the two middle values on ties, ``medianLow`` /
     ``medianHigh`` take the lower/upper, ``medianPack`` packs both
-    (reference tie semantics, Function.swift:2136-2189)."""
+    (reference tie semantics, Function.swift:2136-2189).
+
+    ``group_cols`` must be non-empty: with no keys the rank window would
+    run over every value on one task. An ungrouped median belongs to the
+    reducer tier (aggregators.py)."""
     if variant not in VARIANTS:
         raise ValueError(f"unknown median variant {variant!r}")
     g = list(group_cols)
+    if not g:
+        raise ValueError(
+            "grouped_median needs group_cols; an ungrouped median is a reducer "
+            "(warp_spark.aggregators)"
+        )
     v = to_number(F.col(value_col))
     w = Window.partitionBy(*g).orderBy(v)
     ranked = (

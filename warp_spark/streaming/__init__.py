@@ -1,3 +1,9 @@
+from warp_spark.streaming.replay import (
+    foreach_batch_sink,
+    memory_sink,
+    replay_events,
+    replay_split,
+)
 from warp_spark.streaming.windows import (
     hourly_rollup,
     read_event_stream,
@@ -18,4 +24,8 @@ __all__ = [
     "heavy_hitters_stateful",
     "read_event_stream",
     "run_stream_to_memory",
+    "replay_events",
+    "replay_split",
+    "memory_sink",
+    "foreach_batch_sink",
 ]

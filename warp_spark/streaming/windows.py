@@ -542,8 +542,10 @@ def run_stream_to_memory(
             .outputMode(output_mode)
             .start()
         )
-        q.processAllAvailable()
-        q.stop()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
         spark.conf.set(key, old)
     return q
