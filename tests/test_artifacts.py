@@ -562,24 +562,38 @@ def test_refused_mutation_publishes_the_rebuild_label(tmp_path):
     assert read_marker(path, "_X_COMPLETE") == "final"
 
 
-def test_memo_stamp_skips_the_cache_for_an_unstatable_source(tmp_path):
-    from warp_spark.artifacts import memo_stamp
+def test_table_fingerprint_skips_the_cache_for_an_unstatable_source(tmp_path, monkeypatch):
+    import warp_spark.artifacts as arts
 
     calls = []
 
-    def compute():
-        calls.append(1)
-        return f"stamp-{len(calls)}"
+    def scan(spark, src):
+        calls.append(src)
+        return f"n={len(calls)}"
 
+    monkeypatch.setattr(arts, "_fingerprint_scan", scan)
     missing = str(tmp_path / "absent.parquet")
-    assert memo_stamp("k_absent", missing, compute) == "stamp-1"
-    assert memo_stamp("k_absent", missing, compute) == "stamp-2"
+    assert arts.table_fingerprint(None, missing) == "n=1"
+    assert arts.table_fingerprint(None, missing) == "n=2"
     src = tmp_path / "t.parquet"
     src.write_bytes(b"abc")
-    assert memo_stamp("k_file", str(src), compute) == "stamp-3"
-    assert memo_stamp("k_file", str(src), compute) == "stamp-3"  # memo hit
+    assert arts.table_fingerprint(None, str(src)) == "n=3"
+    assert arts.table_fingerprint(None, str(src)) == "n=3"  # memo hit
     src.write_bytes(b"abcd")
-    assert memo_stamp("k_file", str(src), compute) == "stamp-4"
+    assert arts.table_fingerprint(None, str(src)) == "n=4"
+
+
+def test_table_fingerprint_tells_a_null_shift_apart(spark, tmp_path):
+    """Rows that differ only in which column holds the null get
+    different fingerprints."""
+    from warp_spark.artifacts import table_fingerprint
+
+    fps = set()
+    for tag, row in (("a", (None, 1)), ("b", (1, None)), ("c", (1, 1))):
+        src = str(tmp_path / f"{tag}.parquet")
+        spark.createDataFrame([row], "x long, y long").write.parquet(src)
+        fps.add(table_fingerprint(spark, src))
+    assert len(fps) == 3, fps
 
 
 def _crc(path):
@@ -642,6 +656,29 @@ def test_second_ensure_on_an_unchanged_source_launches_no_job(spark, tmp_path, m
     assert read_marker(cat._ensure_graph_edges(spark, sf), "_EDGES_COMPLETE") != stamps[1]
 
 
+def test_graph_append_demo_rebuilds_a_lost_census(spark, tmp_path, monkeypatch):
+    """With the appended edges still certified, a wedge census that was
+    removed is rebuilt on the next ensure, with the same rows."""
+    import shutil
+    import tempfile
+
+    import warp_spark.catalog as cat
+    from warp_spark.pipeline.graph import load_wedge_census
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "artifacts"))
+    os.makedirs(tempfile.tempdir)
+    sf = str(tmp_path / "sf")
+    rows = [(o, (o * p) % 23) for o in range(1, 151) for p in (1, 2, 3)]
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").coalesce(1).write.parquet(
+        f"{sf}/lineitem.parquet"
+    )
+    _, wp = cat._ensure_graph_append_demo(spark, sf)
+    want = sorted(map(str, load_wedge_census(spark, wp).collect()))
+    shutil.rmtree(wp)
+    assert cat._ensure_graph_append_demo(spark, sf)[1] == wp
+    assert sorted(map(str, load_wedge_census(spark, wp).collect())) == want and want
+
+
 def _documents_dir(spark, root):
     """An sf dir holding only a small ``documents`` table: 80 docs in ten
     near-duplicate families (doc_id % 10) over the BM25 query terms, so
@@ -656,6 +693,140 @@ def _documents_dir(spark, root):
         f"{sf}/documents.parquet"
     )
     return sf
+
+
+def _embeddings_dir(spark, root):
+    """An sf dir holding only a small ``embeddings`` table: 80 vectors
+    of dimension 16."""
+    import random
+
+    sf = os.path.join(str(root), "sf")
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(80)]
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1).write.parquet(
+        f"{sf}/embeddings.parquet"
+    )
+    return sf
+
+
+# per source table: its sf dir, the edit of row 7 that keeps the row
+# count, and the artifacts built from it
+_FINGERPRINTED = {
+    "documents": (
+        _documents_dir,
+        lambda text: text + " edited",
+        (
+            "_ensure_dedup_index",
+            "_ensure_dedup_index_appended",
+            "_ensure_dedup_base12",
+            "_ensure_bm25_index",
+            "_ensure_bm25_index_appended",
+        ),
+    ),
+    "embeddings": (
+        _embeddings_dir,
+        lambda vec: [x + 0.5 for x in vec],
+        ("_ensure_ann_index", "_ensure_ann_index_appended"),
+    ),
+}
+
+
+@pytest.mark.parametrize("table", sorted(_FINGERPRINTED))
+def test_table_fingerprint_is_scanned_once_and_stamps_every_artifact(
+    spark, tmp_path, monkeypatch, table
+):
+    """A cold ensure of every artifact built from a table scans the
+    table once; a second ensure runs no Spark job; an edit of one row
+    at an unchanged row count changes every stamp."""
+    import glob
+    import shutil
+    import tempfile
+
+    import warp_spark.artifacts as arts
+    import warp_spark.catalog as cat
+    from warp_spark.artifacts import read_marker
+
+    make_dir, edit, ensures = _FINGERPRINTED[table]
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "artifacts"))
+    os.makedirs(tempfile.tempdir)
+    sf = make_dir(spark, tmp_path)
+    scans = []
+    scan = arts._fingerprint_scan
+    monkeypatch.setattr(
+        arts, "_fingerprint_scan", lambda s, src: scans.append(src) or scan(s, src)
+    )
+
+    def stamps():
+        paths = [getattr(cat, name)(spark, sf) for name in ensures]
+        return [read_marker(p, "_INDEX_COMPLETE") for p in paths]
+
+    first = stamps()
+    assert scans == [f"{sf}/{table}.parquet"]
+    again, n = _jobs(spark, stamps, f"memo_{table}")
+    assert again == first and n == 0
+    assert len(scans) == 1
+
+    # rewrite the one part file in place: row 7 edited, same row count
+    df = cat._t(spark, sf, table).to_df()
+    rows = [(r[0], edit(r[1]) if r[0] == 7 else r[1]) for r in sorted(df.collect())]
+    new = str(tmp_path / "new")
+    spark.createDataFrame(rows, df.schema).coalesce(1).write.parquet(new)
+    (part,) = glob.glob(f"{sf}/{table}.parquet/part-*.parquet")
+    (new_part,) = glob.glob(f"{new}/part-*.parquet")
+    for src, dst in ((new_part, part), (_crc(new_part), _crc(part))):
+        shutil.copyfile(src, dst)
+    edited = stamps()
+    assert len(scans) == 2
+    assert all(a != b for a, b in zip(first, edited)), (first, edited)
+
+
+def test_append_dedup_index_of_an_empty_slice_changes_no_probe(spark, tmp_path):
+    """An empty micro-batch appended to the dedup index leaves it as it
+    was: the probe answers the same rows."""
+    import warp_spark.catalog as cat
+    from pyspark.sql import functions as F
+
+    from warp_spark.pipeline.dedup import append_dedup_index, persist_dedup_index
+
+    sf = _documents_dir(spark, tmp_path)
+    docs = cat._t(spark, sf, "documents").to_df()
+    path = str(tmp_path / "idx")
+    persist_dedup_index(docs.filter(F.col("doc_id") % 20 < 16), path)
+    batch = docs.filter(F.col("doc_id") % 20 >= 16)
+    before = sorted(map(str, cat._dedup_probe(spark, path, batch).collect()))
+    assert append_dedup_index(spark, path, docs.limit(0))
+    after = sorted(map(str, cat._dedup_probe(spark, path, batch).collect()))
+    assert after == before and any("is_dup=True" in r for r in before)
+
+
+def test_catalog_owns_no_stamp_code():
+    """Every artifact stamp is a line over artifacts.table_fingerprint,
+    and every marker read or publish goes through an artifacts verb:
+    catalog.py defines no ``_fp`` fingerprint closure and neither
+    imports nor calls crc32, memo_stamp, read_marker or
+    publish_artifact."""
+    import ast
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parent.parent / "warp_spark/catalog.py"
+    tree = ast.parse(path.read_text())
+    banned = {"crc32", "memo_stamp", "read_marker", "publish_artifact"}
+    found = sorted(
+        (n.lineno, name)
+        for n in ast.walk(tree)
+        for name in (
+            [n.func.attr if isinstance(n.func, ast.Attribute) else getattr(n.func, "id", None)]
+            if isinstance(n, ast.Call)
+            else [a.name for a in n.names] if isinstance(n, ast.ImportFrom) else []
+        )
+        if name in banned
+    )
+    fps = sorted(
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and n.name == "_fp"
+    )
+    assert not found and not fps, (found, fps)
 
 
 @pytest.mark.parametrize(

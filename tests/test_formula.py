@@ -396,3 +396,24 @@ def test_formula_memo_bypassed_by_non_default_context(spark):
     assert feval(spark, "=@ * 2", identity=ident) == 4
     loc = fm.LOCALES["nl"]
     assert formula(text, locale=loc) is not formula(text, locale=loc)
+
+
+def test_literals_parse_under_python_optimize():
+    """String, blob and list literals advance the parser outside any
+    assert, so they parse the same under ``python -O``."""
+    import pathlib
+    import subprocess
+    import sys
+
+    code = (
+        "from warp_spark.formula import parse\n"
+        "print(parse('=\"ab\"').value, parse('=`aGk=`').value, len(parse('={1;2}').items))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", code],
+        cwd=pathlib.Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.split() == ["ab", "b'hi'", "2"]

@@ -163,6 +163,19 @@ def test_append_edges_equals_rebuild_and_dedupes_redelivery(spark, tmp_path):
     assert sorted((r["src"], r["dst"]) for r in load_edges(spark, p).collect()) == oneshot
 
 
+def test_append_edges_of_an_empty_batch_changes_no_edge(spark, tmp_path):
+    """An empty micro-batch appends nothing: the delta is empty and the
+    artifact loads the same edges."""
+    from warp_spark.pipeline.graph import append_edges, load_edges, persist_edges
+
+    p = str(tmp_path / "edges")
+    persist_edges(spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long"), p)
+    before = sorted(load_edges(spark, p).collect())
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert append_edges(spark, p, empty).isEmpty()
+    assert sorted(load_edges(spark, p).collect()) == before == [(1, 2), (2, 3)]
+
+
 def test_update_wedge_census_equals_full_rebuild(spark, tmp_path):
     """Delta census maintenance must be value-identical to the full
     rebuild over the appended edge set, across every cap interaction

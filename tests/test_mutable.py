@@ -198,6 +198,14 @@ def test_merge_changes_lww(spark, wh):
     assert rows(t.read()) == [(1, "u2"), (3, "c"), (4, "new")]
 
 
+def test_merge_changes_of_an_empty_batch_keeps_the_rows(spark, wh):
+    """An empty micro-batch merges to the same rows."""
+    t = wh.create("z", spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"))
+    empty = spark.createDataFrame([], "id int, v string, seq int, op string")
+    t.merge_changes(empty, "id", "seq")
+    assert rows(t.read()) == [(1, "a"), (2, "b")]
+
+
 def test_merge_stream_applies_batches_in_order(spark, tmp_path):
     """Two staged change files drained with maxFilesPerTrigger=1 (mtimes
     force the order): the second micro-batch overwrites the first, so

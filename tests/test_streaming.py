@@ -943,3 +943,38 @@ def test_catalog_owns_no_replay():
         and n.name.startswith("_stage_")
     )
     assert not found and not stagers, (found, stagers)
+
+
+def test_streaming_merge_reads_each_micro_batch_once(spark):
+    """mutable_streaming_merge at sf0.001 reads each staged change batch
+    once: the query's progress reports exactly the staged rows, 417
+    then 167 (a pre-scan of each batch would double both)."""
+    import os
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    import __spark_entry__ as m
+
+    seen = []
+
+    class InputRows(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            seen.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = InputRows()
+    spark.streams.addListener(listener)
+    try:
+        m.queries()["mutable_streaming_merge"](spark, os.path.dirname(EVENTS)).collect()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert [n for n in seen if n] == [417, 167]

@@ -2,9 +2,11 @@
 BM25 postings, IVF-PQ codes, graph edge/wedge censuses, t-digest
 sketches): stamp → ensure → publish → mutate.
 
-- **Stamp.** :func:`memo_stamp` names the artifact's inputs: a content
-  fingerprint of its source table, computed by a Spark aggregate and
-  memoized per source file version within the process.
+- **Stamp.** An artifact's stamp is one line: its build parameters
+  over :func:`table_fingerprint` of its source table (``n=<rows>
+  xxh=<sum of row hashes>``), or over the stamp of the artifact it is
+  built from.  Each source table is scanned once per file version
+  within the process, however many artifacts derive from it.
 - **Ensure.** :func:`ensure` compares the stamp with the artifact's
   completion marker and publishes a fresh build when they differ.
 - **Publish.** :func:`publish_artifact` builds into a unique sibling
@@ -16,7 +18,8 @@ sketches): stamp → ensure → publish → mutate.
   (append, delete, compact): the marker holds a sentinel while the
   mutation runs, so a crash leaves a marker that matches no stamp and
   the next :func:`ensure` rebuilds; a mutation that refuses publishes a
-  rebuild instead.
+  rebuild instead.  :func:`ensure_appended` is :func:`ensure` for an
+  artifact built as a base plus an in-place append.
 
 The pipeline modules' mutation verbs and compaction finishers share the
 same lock and swap (:func:`index_mutation`, :func:`swap_artifact_dir`).
@@ -41,17 +44,19 @@ import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from warp_spark.sources.parquet import _local_stamp, remember_parquet
+from warp_spark.sources.parquet import _local_stamp, read_parquet, remember_parquet
 
 __all__ = [
     "artifact_path",
-    "memo_stamp",
+    "table_fingerprint",
     "read_marker",
     "publish_artifact",
     "ensure",
     "mutate",
+    "ensure_appended",
     "copy_artifact",
     "unique_sibling_tmp",
     "swap_artifact_dir",
@@ -70,25 +75,39 @@ def artifact_path(prefix: str, sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"{prefix}_{os.path.basename(ap)}_{h}")
 
 
-_STAMPS: dict = {}
+_FINGERPRINTS: dict = {}
 
 
-def memo_stamp(key: str, src: str, compute) -> str:
-    """The stamp ``compute()`` returns for the source at ``src``,
-    memoized under ``key`` per file version of ``src`` (size and mtime of
-    every file under it) within the process.  The fingerprint scan is
-    what detects a source change, but while no file changed its answer
-    cannot have either.  A source the driver cannot stat is
-    fingerprinted on every call and never cached."""
-    version = _local_stamp(os.path.abspath(src))
+def table_fingerprint(spark: SparkSession, src: str) -> str:
+    """``n=<rows> xxh=<sum>`` of the parquet table at ``src``: its row
+    count and the exact sum of every row's xxhash64 over all its
+    columns and their null flags (xxhash64 skips a null, so without the
+    flags ``(NULL, 1)`` and ``(1, NULL)`` would hash alike).  Memoized per absolute path and file version of ``src``
+    (size and mtime of every file under it) within the process: the
+    scan is what detects a content change, but while no file changed
+    its answer cannot have either.  A source the driver cannot stat is
+    scanned on every call and never cached."""
+    ap = os.path.abspath(src)
+    version = _local_stamp(ap)
     if version is None:
-        return compute()
-    hit = _STAMPS.get(key)
+        return _fingerprint_scan(spark, src)
+    hit = _FINGERPRINTS.get(ap)
     if hit is not None and hit[0] == version:
         return hit[1]
-    stamp = compute()
-    _STAMPS[key] = (version, stamp)
-    return stamp
+    fp = _fingerprint_scan(spark, src)
+    _FINGERPRINTS[ap] = (version, fp)
+    return fp
+
+
+def _fingerprint_scan(spark: SparkSession, src: str) -> str:
+    df = read_parquet(spark, src)
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.xxhash64(*df.columns, *[F.isnull(c) for c in df.columns]).cast("decimal(38,0)")
+        ).alias("xxh"),
+    ).first()
+    return f"n={row['n']} xxh={row['xxh']}"
 
 
 def read_marker(path: str, marker: str) -> str | None:
@@ -155,6 +174,20 @@ def mutate(path, marker, sentinel, apply, label, rebuild=None, rebuild_label=Non
         _write_marker(path, marker, label)
     else:
         publish_artifact(path, marker, rebuild_label or label, rebuild)
+
+
+def ensure_appended(path, marker, stamp, base, append, rebuild=None) -> str:
+    """``path`` after building it as a base plus an in-place append,
+    unless the marker already reads ``stamp``: ``base(tmp)`` is
+    published under a label no stamp matches, then ``append()`` runs
+    under the ``appending`` sentinel and the marker reads ``stamp``.
+    An append that refuses publishes ``rebuild`` under ``stamp``
+    instead (:func:`mutate`), so the fast path never decides what the
+    artifact holds."""
+    if read_marker(path, marker) != stamp:
+        publish_artifact(path, marker, "base only", base)
+        mutate(path, marker, "appending", append, stamp, rebuild)
+    return path
 
 
 def copy_artifact(src: str, dst: str) -> None:

@@ -45,10 +45,9 @@ from warp_spark.artifacts import (
     artifact_path,
     copy_artifact,
     ensure,
-    memo_stamp,
+    ensure_appended,
     mutate,
-    publish_artifact,
-    read_marker,
+    table_fingerprint,
 )
 from warp_spark.dataset import Dataset, Order
 from warp_spark.functions import call
@@ -6564,31 +6563,17 @@ def _ensure_dedup_index(spark: SparkSession, sf_dir: str, rebuild: bool = False)
     """Build-once discipline for the persisted near-dup corpus index
     (r10 verdict item 5 — completes the index triple: vector IVF-PQ,
     lexical BM25, dedup minhash bands).  Corpus = the standing slice
-    (doc_id % 20 < 16, the dedup_incremental convention).  The stamp
-    carries a content fingerprint (doc_id sum + crc32-of-text sum),
-    so same-cardinality content changes rebuild."""
+    (doc_id % 20 < 16, the dedup_incremental convention)."""
     from warp_spark.pipeline.dedup import persist_dedup_index
 
     corpus = (
         _t(spark, sf_dir, "documents").to_df().filter(F.col("doc_id") % 20 < 16)
     )
-
-    def _fp() -> str:
-        fp = corpus.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("doc_id").cast("decimal(38,0)")).alias("ids"),
-            F.sum(F.crc32(F.col("text")).cast("decimal(38,0)")).alias("crc"),
-        ).first()
-        return (
-            "dedup minhash=12 band=2 n_buckets=32 cap=10000 "
-            f"n_docs={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
-        )
-
-    stamp = memo_stamp(f"dedup_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    fp = table_fingerprint(spark, f"{sf_dir}/documents.parquet")
     return ensure(
         artifact_path("warp_dedup_idx_v1", sf_dir),
         "_INDEX_COMPLETE",
-        stamp,
+        f"dedup minhash=12 band=2 n_buckets=32 cap=10000 corpus=doc_id%20<16 over [{fp}]",
         lambda tmp: persist_dedup_index(corpus, tmp),
         rebuild,
     )[0]
@@ -6671,63 +6656,27 @@ def _ensure_dedup_index_appended(spark: SparkSession, sf_dir: str) -> str:
     append_dedup_index — after the append the artifact covers exactly
     the standing corpus (doc_id % 20 < 16) that _ensure_dedup_index
     builds in one shot, so probing it must reproduce the one-shot
-    index's answers (that equality IS the entry's oracle).  The final
-    stamp fingerprints BOTH the base corpus and the appended slice, so
-    the append path re-runs exactly when the source content changes
-    and probes ride the artifact otherwise.  The append runs under
-    artifacts.mutate's 'appending' sentinel; if append_dedup_index
-    cannot guarantee append ≡ rebuild (cap crossing), the one-shot
-    build over the full standing corpus is published instead —
-    correctness is never conditional on the fast path."""
+    index's answers (that equality IS the entry's oracle).  If
+    append_dedup_index cannot guarantee append ≡ rebuild (cap
+    crossing), the one-shot build over the full standing corpus is
+    published instead (artifacts.ensure_appended)."""
     from warp_spark.pipeline.dedup import append_dedup_index, persist_dedup_index
 
     path = artifact_path("warp_dedup_idxapp_v1", sf_dir)
     docs = _t(spark, sf_dir, "documents").to_df()
-    base = docs.filter(F.col("doc_id") % 20 < 12)
-    slice_ = docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16))
-    # one conditional-aggregation scan fingerprints base and slice
-    def _fp() -> str:
-        is_base = F.col("doc_id") % 20 < 12
-        fp = docs.filter(F.col("doc_id") % 20 < 16).agg(
-            F.sum(F.when(is_base, 1).otherwise(0)).alias("nb"),
-            F.sum(
-                F.when(is_base, F.col("doc_id").cast("decimal(38,0)")).otherwise(0)
-            ).alias("idb"),
-            F.sum(
-                F.when(is_base, F.crc32(F.col("text")).cast("decimal(38,0)")).otherwise(0)
-            ).alias("crcb"),
-            F.sum(F.when(~is_base, 1).otherwise(0)).alias("ns"),
-            F.sum(
-                F.when(~is_base, F.col("doc_id").cast("decimal(38,0)")).otherwise(0)
-            ).alias("ids"),
-            F.sum(
-                F.when(~is_base, F.crc32(F.col("text")).cast("decimal(38,0)")).otherwise(0)
-            ).alias("crcs"),
-        ).first()
-        return (
-            f"dedupapp base n={fp['nb']} id={fp['idb']} crc={fp['crcb']} "
-            f"+ appended n={fp['ns']} id={fp['ids']} crc={fp['crcs']}"
-        )
-
-    stamp = memo_stamp(f"dedup_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
-    if read_marker(path, "_INDEX_COMPLETE") != stamp:
-        publish_artifact(
+    fp = table_fingerprint(spark, f"{sf_dir}/documents.parquet")
+    return ensure_appended(
+        path,
+        "_INDEX_COMPLETE",
+        f"dedupapp base {fp} corpus=doc_id%20<12 + appended 12<=doc_id%20<16",
+        lambda tmp: persist_dedup_index(docs.filter(F.col("doc_id") % 20 < 12), tmp),
+        lambda: append_dedup_index(
+            spark,
             path,
-            "_INDEX_COMPLETE",
-            "dedupapp base only",
-            lambda tmp: persist_dedup_index(base, tmp),
-        )
-        mutate(
-            path,
-            "_INDEX_COMPLETE",
-            "appending",
-            lambda: append_dedup_index(spark, path, slice_),
-            stamp,
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-    return path
+            docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16)),
+        ),
+        lambda tmp: persist_dedup_index(docs.filter(F.col("doc_id") % 20 < 16), tmp),
+    )
 
 
 # Incremental index maintenance, append half (pipeline/dedup.py::
@@ -6784,19 +6733,11 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
     from warp_spark.pipeline.dedup import persist_dedup_index
 
     base = _t(spark, sf_dir, "documents").to_df().filter(F.col("doc_id") % 20 < 12)
-
-    def _fp() -> str:
-        fp = base.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.crc32(F.col("text")).cast("decimal(38,0)")).alias("crc"),
-        ).first()
-        return f"dedup base12 n={fp['n']} crc={fp['crc']}"
-
-    stamp = memo_stamp(f"dedup_base12:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    fp = table_fingerprint(spark, f"{sf_dir}/documents.parquet")
     return ensure(
         artifact_path("warp_dedup_base12_v1", sf_dir),
         "_INDEX_COMPLETE",
-        stamp,
+        f"dedup minhash=12 band=2 n_buckets=32 cap=10000 corpus=doc_id%20<12 over [{fp}]",
         lambda tmp: persist_dedup_index(base, tmp),
     )[0]
 
@@ -6836,9 +6777,7 @@ def dedup_index_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         degraded = {"flag": False}
 
         def ingest(bdf, batch_id):
-            if degraded["flag"] or bdf.isEmpty():
-                return
-            if not append_dedup_index(spark, path, bdf):
+            if not degraded["flag"] and not append_dedup_index(spark, path, bdf):
                 degraded["flag"] = True
 
         # ONE slice pass stages all three trigger files
@@ -6908,11 +6847,12 @@ def dedup_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # would re-pay the corpus scan the append path exists to avoid)
         n_index = int(spark.read.parquet(f"{path}/stats").first()["n_docs"])
         if n_index != standing.count():  # stale: the honest path is the rebuild
-            publish_artifact(
+            ensure(
                 path,
                 "_INDEX_COMPLETE",
                 "lifecycle rebuilt (stale count)",
                 lambda tmp: persist_dedup_index(standing, tmp),
+                rebuild=True,
             )
         # 3) COMPACT the append-grown layout back to one file per bucket
         bands = os.path.join(path, "bands", "**", "*.parquet")
@@ -9948,33 +9888,18 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_ann_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
     """Build-once discipline for the persisted IVF-PQ index: the probe
-    entry loads whatever the marker certifies; persist (or a corpus
-    change, detected via the recorded vector count) rebuilds.  Training
-    is deterministic, so a rebuild yields byte-identical artifacts —
-    entry order between persist and probe cannot change results."""
+    entry loads whatever the marker certifies; persist (or a change to
+    the embeddings table) rebuilds.  Training is deterministic, so a
+    rebuild yields byte-identical artifacts — entry order between
+    persist and probe cannot change results."""
     from warp_spark.pipeline.similarity import persist_ivfpq_index
 
     emb = _t(spark, sf_dir, "embeddings").to_df()
-    # content fingerprint, not just cardinality (r10 ADVICE, applied to
-    # the precedent too): vec_id sum + crc32 over the rendered vector.
-    def _fp() -> str:
-        fp = emb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("vec_id").cast("decimal(38,0)")).alias("ids"),
-            F.sum(
-                F.crc32(F.col("embedding").cast("string")).cast("decimal(38,0)")
-            ).alias("crc"),
-        ).first()
-        return (
-            "ivfpq n_centroids=16 m=16 n_codes=32 "
-            f"n_vectors={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
-        )
-
-    stamp = memo_stamp(f"ann_idx:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp)
+    fp = table_fingerprint(spark, f"{sf_dir}/embeddings.parquet")
     return ensure(
         artifact_path("warp_ann_ivfpq_v1", sf_dir),
         "_INDEX_COMPLETE",
-        stamp,
+        f"ivfpq n_centroids=16 m=16 n_codes=32 over [{fp}]",
         lambda tmp: persist_ivfpq_index(emb, tmp, n_centroids=16, m=16, n_codes=32),
         rebuild,
     )[0]
@@ -10139,8 +10064,7 @@ def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
     Faiss train-then-add pattern.  The appended index covers the full
     corpus under the base-trained model, byte-equal to a frozen-model
     rebuild (pytest-pinned); the entry's driver contract is the ANN
-    tier's recall floor vs exact brute force over the FULL corpus.
-    Same stamp/sentinel discipline as the other append twins."""
+    tier's recall floor vs exact brute force over the FULL corpus."""
     from warp_spark.pipeline.similarity import (
         append_ivfpq_index,
         persist_ivfpq_index,
@@ -10148,51 +10072,22 @@ def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
 
     path = artifact_path("warp_ann_idxapp_v1", sf_dir)
     emb = _t(spark, sf_dir, "embeddings").to_df()
-    is_base = F.col("vec_id") % 5 != 4
-
-    def _fp() -> str:
-        fp = emb.agg(
-            F.sum(F.when(is_base, 1).otherwise(0)).alias("nb"),
-            F.sum(
-                F.when(
-                    is_base, F.crc32(F.col("embedding").cast("string")).cast("decimal(38,0)")
-                ).otherwise(0)
-            ).alias("crcb"),
-            F.sum(F.when(~is_base, 1).otherwise(0)).alias("ns"),
-            F.sum(
-                F.when(
-                    ~is_base, F.crc32(F.col("embedding").cast("string")).cast("decimal(38,0)")
-                ).otherwise(0)
-            ).alias("crcs"),
-        ).first()
-        return (
-            f"annapp base n={fp['nb']} crc={fp['crcb']} "
-            f"+ appended n={fp['ns']} crc={fp['crcs']}"
-        )
-
-    stamp = memo_stamp(f"ann_app:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp)
-    if read_marker(path, "_INDEX_COMPLETE") != stamp:
-        base = emb.filter(is_base)
-        publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "annapp base only",
-            lambda tmp: persist_ivfpq_index(base, tmp, n_centroids=16, m=16, n_codes=32),
-        )
-        # a refusal (the slice re-delivers indexed ids) publishes the
-        # full-corpus rebuild with the model still trained on the base
-        # slice, preserving the frozen-model byte-equality contract
-        mutate(
-            path,
-            "_INDEX_COMPLETE",
-            "appending",
-            lambda: append_ivfpq_index(spark, path, emb.filter(~is_base)),
-            stamp,
-            lambda tmp: persist_ivfpq_index(
-                emb, tmp, n_centroids=16, m=16, n_codes=32, train_df=base
-            ),
-        )
-    return path
+    base = emb.filter(F.col("vec_id") % 5 != 4)
+    fp = table_fingerprint(spark, f"{sf_dir}/embeddings.parquet")
+    # a refusal (the slice re-delivers indexed ids) publishes the
+    # full-corpus rebuild with the model still trained on the base
+    # slice, preserving the frozen-model byte-equality contract
+    return ensure_appended(
+        path,
+        "_INDEX_COMPLETE",
+        f"annapp base {fp} vec_id%5!=4 + appended vec_id%5=4 "
+        "n_centroids=16 m=16 n_codes=32",
+        lambda tmp: persist_ivfpq_index(base, tmp, n_centroids=16, m=16, n_codes=32),
+        lambda: append_ivfpq_index(spark, path, emb.filter(F.col("vec_id") % 5 == 4)),
+        lambda tmp: persist_ivfpq_index(
+            emb, tmp, n_centroids=16, m=16, n_codes=32, train_df=base
+        ),
+    )
 
 
 # Compaction, vector leg (similarity.py::compact_ivfpq_index): after
@@ -10854,29 +10749,18 @@ def _ensure_tdigest(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> 
     (sketches.py::tdigest_hist, the SAME stage-1 state the batch and
     streamed t-digest entries compute in-query) written ONCE as a tiny
     parquet artifact, so every percentile read-off is a scan of a few
-    hundred bucket rows instead of a source pass.  Content stamp =
-    row count + exact cents sum; the fingerprint SCAN is memoized per
-    lineitem file version, so repeated probes in one session pay zero
-    lineitem scans."""
+    hundred bucket rows instead of a source pass."""
     from warp_spark.sketches import tdigest_hist
 
     li = _t(spark, sf_dir, "lineitem").to_df()
     cents = F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5)).cast(
         "long"
     )
-
-    def _fp() -> str:
-        fp = li.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cents.cast("decimal(38,0)")).alias("s"),
-        ).first()
-        return f"tdigest sub_bits=7 group=l_returnflag n={fp['n']} centssum={fp['s']}"
-
-    stamp = memo_stamp(f"tdigest:{sf_dir}", f"{sf_dir}/lineitem.parquet", _fp)
+    fp = table_fingerprint(spark, f"{sf_dir}/lineitem.parquet")
     return ensure(
         artifact_path("warp_tdigest_v1", sf_dir),
         "_SKETCH_COMPLETE",
-        stamp,
+        f"tdigest sub_bits=7 group=l_returnflag over [{fp}]",
         lambda tmp: tdigest_hist(li, cents, "l_returnflag", value_sub_bits=7)
         .coalesce(1)
         .write.mode("overwrite")
@@ -11350,36 +11234,17 @@ def _graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> tup
     (r10 verdict item 4): six graph entries (pagerank, triangles,
     jaccard ×2, assortativity, k-core, degree profile) share this
     graph, and before this artifact each re-ran the lineitem self-join
-    + distinct in-query.  The staleness stamp carries a CONTENT
-    fingerprint of the source columns (row count + an exact decimal
-    key-combination sum), not just a row count, so a content change at
-    unchanged cardinality rebuilds.  The fingerprint scan is memoized
-    per lineitem file version, so the graph entries sharing the
-    artifact pay it once per session; the dependent artifacts chain the
-    returned stamp into theirs."""
+    + distinct in-query.  The dependent artifacts chain the returned
+    stamp into theirs."""
     from warp_spark.pipeline.graph import persist_edges
 
-    def lineitem() -> DataFrame:
-        return _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
-
-    def _fp() -> str:
-        fp = lineitem().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (
-                    F.col("l_orderkey").cast("decimal(38,0)") * F.lit(1000003)
-                    + F.col("l_partkey").cast("decimal(38,0)")
-                )
-            ).alias("s"),
-        ).first()
-        return f"copurchase canonical n_rows={fp['n']} keysum={fp['s']}"
-
-    stamp = memo_stamp(f"graph_edges:{sf_dir}", f"{sf_dir}/lineitem.parquet", _fp)
+    li = _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
+    fp = table_fingerprint(spark, f"{sf_dir}/lineitem.parquet")
     return ensure(
         artifact_path("warp_graph_edges_v1", sf_dir),
         "_EDGES_COMPLETE",
-        stamp,
-        lambda tmp: persist_edges(_copurchase_order_edges(lineitem()), tmp),
+        f"copurchase canonical over [{fp}]",
+        lambda tmp: persist_edges(_copurchase_order_edges(li), tmp),
         rebuild,
     )
 
@@ -11456,10 +11321,8 @@ def _ensure_graph_wedges(spark: SparkSession, sf_dir: str, rebuild: bool = False
     before this artifact each entry re-paid the same quadratic wedge
     self-join from the edge artifact.  One census pass now writes
     (x, y, cn, ra_ppm) once — the graph_edges_persist amortization
-    applied one level up.  The staleness stamp CHAINS the edge
-    artifact's content-fingerprint stamp, so a lineitem content change
-    propagates edge rebuild → wedge rebuild with no extra source
-    scan."""
+    applied one level up.  The stamp chains the edge artifact's, so a
+    lineitem change propagates edge rebuild → wedge rebuild."""
     edge_path, edge_stamp = _graph_edges(spark, sf_dir)
     return ensure(
         artifact_path("warp_graph_wedges_v1", sf_dir),
@@ -11625,35 +11488,28 @@ def _ensure_graph_append_demo(spark: SparkSession, sf_dir: str) -> tuple:
     = exactly the full co-purchase graph, so both appended artifacts
     must equal their one-shot builds value-for-value (that equality
     IS both entries' oracle; also pytest-pinned on constructed
-    graphs).  Staleness chains the standing edge artifact's content
-    stamp (no extra source scan); both markers hold artifacts.mutate's
-    'appending' sentinel during the in-place mutation, so a mid-append
-    crash forces a clean rebuild.  If update_wedge_census cannot fold
-    the delta (missing or unreadable census), the one-shot census
-    rebuild is published — correctness is never conditional on the
-    fast path."""
+    graphs).  Staleness chains the standing edge artifact's stamp.
+    The edge marker is written last, after the census mutation has
+    finished; a mid-append crash leaves a sentinel and forces a clean
+    rebuild, and a census lost or stale behind certified edges is
+    rebuilt from them.  If update_wedge_census
+    cannot fold the delta (missing or unreadable census), the one-shot
+    census rebuild is published — correctness is never conditional on
+    the fast path."""
     from warp_spark.pipeline.graph import append_edges, update_wedge_census
 
     _, edge_stamp = _graph_edges(spark, sf_dir)
     ep = artifact_path("warp_graph_edgeapp_v1", sf_dir)
     wp = artifact_path("warp_graph_wedgeapp_v1", sf_dir)
     stamp = f"edgeapp base-main+delta2pct cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
-    if (
-        read_marker(ep, "_EDGES_COMPLETE") == stamp
-        and read_marker(wp, "_WEDGES_COMPLETE") == stamp
-    ):
-        return ep, wp
-
     li = _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
     delta_e = _copurchase_order_edges(li.filter(F.col("l_orderkey") % 50 == 0))
-    # start from cheap COPIES of the shared stamp-reused base pair —
-    # the base build (including its census) is paid once per content
-    # change, shared with the streamed twin
-    base_ep, base_wp, _ = _ensure_graph_base(spark, sf_dir)
-    copy_artifact(base_ep, ep)
-    copy_artifact(base_wp, wp)
 
+    # both legs start from cheap COPIES of the shared stamp-reused base
+    # pair — the base build (including its census) is paid once per
+    # content change, shared with the streamed twin
     def append() -> bool:
+        copy_artifact(_ensure_graph_base(spark, sf_dir)[1], wp)
         mutate(
             wp,
             "_WEDGES_COMPLETE",
@@ -11670,7 +11526,14 @@ def _ensure_graph_append_demo(spark: SparkSession, sf_dir: str) -> tuple:
         )
         return True
 
-    mutate(ep, "_EDGES_COMPLETE", "appending", append, stamp)
+    ensure_appended(
+        ep,
+        "_EDGES_COMPLETE",
+        stamp,
+        lambda tmp: copy_artifact(_ensure_graph_base(spark, sf_dir)[0], tmp),
+        append,
+    )
+    ensure(wp, "_WEDGES_COMPLETE", stamp, _census_build(spark, ep))
     return ep, wp
 
 
@@ -11867,8 +11730,7 @@ def graph_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
     def ingest(bdf, batch_id):
-        if not bdf.isEmpty():
-            append_edges(spark, ep, bdf)
+        append_edges(spark, ep, bdf)
 
     def ingest_stream() -> bool:
         # one checkpoint pass stages all three trigger files
@@ -14955,30 +14817,14 @@ def _ensure_bm25_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) 
     from warp_spark.pipeline.text import build_bm25_index
 
     docs = _t(spark, sf_dir, "documents").to_df()
-    # content fingerprint, not just cardinality (r10 ADVICE): a corpus
-    # content change at unchanged row count must rebuild.  One cheap
-    # scan — doc_id sum + crc32-of-text sum, both exact integers.
     # the stamp's n_buckets token derives from the actual build
-    # parameter (r11 verdict nit: a hardcoded token would not flip the
-    # stamp on a non-default-bucket rebuild)
+    # parameter, so a non-default-bucket rebuild flips the stamp
     n_buckets = 16
-
-    def _fp() -> str:
-        fp = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("doc_id").cast("decimal(38,0)")).alias("ids"),
-            F.sum(F.crc32(F.col("text")).cast("decimal(38,0)")).alias("crc"),
-        ).first()
-        return (
-            f"bm25 n_buckets={n_buckets} "
-            f"n_docs={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
-        )
-
-    stamp = memo_stamp(f"bm25_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    fp = table_fingerprint(spark, f"{sf_dir}/documents.parquet")
     return ensure(
         artifact_path("warp_bm25_idx_v1", sf_dir),
         "_INDEX_COMPLETE",
-        stamp,
+        f"bm25 n_buckets={n_buckets} over [{fp}]",
         lambda tmp: build_bm25_index(docs, tmp, n_buckets=n_buckets),
         rebuild,
     )[0]
@@ -15057,51 +14903,21 @@ def _ensure_bm25_index_appended(spark: SparkSession, sf_dir: str) -> str:
     text.py::append_bm25_index — base + slice = the FULL corpus the
     standing index covers, so probing the appended index must
     reproduce bm25_index_probe bit-for-bit (that equality IS the
-    entry's oracle).  Same stamp/sentinel discipline as the dedup
-    twin: content-fingerprinted final stamp, 'appending' sentinel
-    during the in-place mutation."""
+    entry's oracle).  A refusal (the slice re-delivers indexed ids)
+    publishes the one-shot rebuild over the full corpus."""
     from warp_spark.pipeline.text import append_bm25_index, build_bm25_index
 
     path = artifact_path("warp_bm25_idxapp_v1", sf_dir)
     docs = _t(spark, sf_dir, "documents").to_df()
-    is_base = F.col("doc_id") % 20 < 16
-
-    def _fp() -> str:
-        fp = docs.agg(
-            F.sum(F.when(is_base, 1).otherwise(0)).alias("nb"),
-            F.sum(
-                F.when(is_base, F.crc32(F.col("text")).cast("decimal(38,0)")).otherwise(0)
-            ).alias("crcb"),
-            F.sum(F.when(~is_base, 1).otherwise(0)).alias("ns"),
-            F.sum(
-                F.when(~is_base, F.crc32(F.col("text")).cast("decimal(38,0)")).otherwise(0)
-            ).alias("crcs"),
-        ).first()
-        return (
-            f"bm25app base n={fp['nb']} crc={fp['crcb']} "
-            f"+ appended n={fp['ns']} crc={fp['crcs']}"
-        )
-
-    stamp = memo_stamp(f"bm25_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
-    if read_marker(path, "_INDEX_COMPLETE") != stamp:
-        base = docs.filter(is_base)
-        publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "bm25app base only",
-            lambda tmp: build_bm25_index(base, tmp),
-        )
-        # a refusal (the slice re-delivers indexed ids) publishes the
-        # one-shot rebuild over the full corpus
-        mutate(
-            path,
-            "_INDEX_COMPLETE",
-            "appending",
-            lambda: append_bm25_index(spark, path, docs.filter(~is_base)),
-            stamp,
-            lambda tmp: build_bm25_index(docs, tmp),
-        )
-    return path
+    fp = table_fingerprint(spark, f"{sf_dir}/documents.parquet")
+    return ensure_appended(
+        path,
+        "_INDEX_COMPLETE",
+        f"bm25app base {fp} doc_id%20<16 + appended doc_id%20>=16 n_buckets=16",
+        lambda tmp: build_bm25_index(docs.filter(F.col("doc_id") % 20 < 16), tmp),
+        lambda: append_bm25_index(spark, path, docs.filter(F.col("doc_id") % 20 >= 16)),
+        lambda tmp: build_bm25_index(docs, tmp),
+    )
 
 
 # Compaction, lexical leg (pipeline/text.py::compact_bm25_index):

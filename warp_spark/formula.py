@@ -511,7 +511,7 @@ class _Parser:
         return Literal(sign * base)
 
     def string_literal(self) -> Node:
-        assert self.eat('"')
+        self.eat('"')  # the opening " the caller dispatched on
         out = []
         while self.pos < len(self.text):
             if self.eat('""'):
@@ -525,7 +525,7 @@ class _Parser:
         self.error("unterminated string literal")
 
     def blob_literal(self) -> Node:
-        assert self.eat("`")
+        self.eat("`")  # the opening ` the caller dispatched on
         end = self.text.find("`", self.pos)
         if end < 0:
             self.error("unterminated blob literal")
@@ -537,7 +537,7 @@ class _Parser:
             self.error("invalid base64 in blob literal")
 
     def list_literal(self) -> Node:
-        assert self.eat("{")
+        self.eat("{")  # the opening { the caller dispatched on
         self.ws()
         if self.eat("}"):
             return ListLiteral(())

@@ -281,8 +281,6 @@ class MutableTable:
         ckpt = checkpoint or os.path.join(self.path, f"_ckpt_{uuid.uuid4().hex[:8]}")
 
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
             self.merge_changes(batch_df, key_col, seq_col, op_col)
 
         q = (

@@ -1115,6 +1115,8 @@ def append_dedup_index(
     ).first()
     touched = sorted(pre["touched"])
     n_new = int(pre["n_rows"]) // bands_per_doc
+    if n_new == 0:
+        return True  # an empty slice leaves the index as it is
     # ONE partition-pruned pass answers BOTH preconditions (fused to a
     # single Spark job — this runs per TRIGGER in the streamed ingest,
     # where per-job overhead dominates the tiny scans):

@@ -204,7 +204,8 @@ class _Parser:
         return self.string()
 
     def charset(self) -> _Node:
-        assert self.peek() == "["
+        if self.peek() != "[":
+            self.error("expected '['")
         self.pos += 1
         values: list[str] = []
         while True:
