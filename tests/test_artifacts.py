@@ -829,6 +829,87 @@ def test_catalog_owns_no_stamp_code():
     assert not found and not fps, (found, fps)
 
 
+def test_pipeline_mutation_verbs_own_no_swap_code():
+    """Every ``@locked_mutation`` verb in warp_spark/pipeline/ only
+    decides which rows to add or remove; its files change through
+    artifacts.rewrite.  No verb calls unique_sibling_tmp,
+    swap_artifact_dir, shutil.* or os.rename, or writes with
+    ``.mode("overwrite")`` or ``.mode("append")``."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "warp_spark/pipeline"
+    verbs, found = [], []
+    for src in sorted(root.glob("*.py")):
+        for fn in ast.walk(ast.parse(src.read_text())):
+            if not isinstance(fn, ast.FunctionDef) or not any(
+                getattr(d, "id", getattr(d, "attr", None)) == "locked_mutation"
+                for d in fn.decorator_list
+            ):
+                continue
+            verbs.append(fn.name)
+            for n in ast.walk(fn):
+                if not isinstance(n, ast.Call):
+                    continue
+                f = n.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                owner = getattr(f.value, "id", None) if isinstance(f, ast.Attribute) else None
+                mode = (
+                    name == "mode"
+                    and n.args
+                    and isinstance(n.args[0], ast.Constant)
+                    and n.args[0].value in ("overwrite", "append")
+                )
+                if (
+                    name in ("unique_sibling_tmp", "swap_artifact_dir")
+                    or owner == "shutil"
+                    or (owner, name) == ("os", "rename")
+                    or mode
+                ):
+                    found.append(f"{src.name}:{n.lineno} {fn.name}")
+    assert len(verbs) == 13 and not found, (verbs, found)
+
+
+def test_delete_never_shows_a_reader_part_of_the_bands(spark, tmp_path, monkeypatch):
+    """A lock-free reader counting the band postings at any rename the
+    delete makes under the index sees the old total, the new total or
+    an error, never a table with a touched partition missing."""
+    from pyspark.sql import functions as F
+
+    from warp_spark.pipeline.dedup import delete_from_dedup_index, persist_dedup_index
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma doc{i} delta epsilon zeta eta theta") for i in range(40)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "idx")
+    persist_dedup_index(docs, path)
+    bands = spark.read.parquet(f"{path}/bands")
+    old_total = bands.count()
+    removed = bands.filter(F.col("corpus_id") == 7).count()
+    first = bands.filter(F.col("corpus_id") == 7).agg(F.min("bucket")).first()[0]
+    # a reader that misses the first touched bucket sees neither total
+    assert bands.filter(F.col("bucket") == first).count() != removed
+
+    real_rename = os.rename
+    seen = []
+
+    def rename(src, dst, *args, **kwargs):
+        if str(src).startswith(path + os.sep) or str(dst).startswith(path + os.sep):
+            try:
+                seen.append(spark.read.parquet(f"{path}/bands").count())
+            except Exception:
+                seen.append(None)
+        return real_rename(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", rename)
+    assert delete_from_dedup_index(spark, path, docs.filter("doc_id = 7")) is True
+    monkeypatch.undo()
+    new_total = spark.read.parquet(f"{path}/bands").count()
+    assert new_total == old_total - removed
+    assert seen and set(seen) <= {old_total, new_total, None}, seen
+
+
 @pytest.mark.parametrize(
     "family, verb",
     [

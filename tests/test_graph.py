@@ -525,6 +525,8 @@ def test_persist_edges_writes_one_hash_bucket_per_file(spark, tmp_path):
 
 
 def test_published_graph_trees_read_back_with_their_schema(spark, tmp_path, jobs_of, memo_schema):
+    import os
+
     from warp_spark.artifacts import publish_artifact
     from warp_spark.pipeline.graph import (
         load_edges,
@@ -547,3 +549,41 @@ def test_published_graph_trees_read_back_with_their_schema(spark, tmp_path, jobs
         got, jobs = jobs_of(lambda: load(spark, p))
         assert jobs == 0
         assert got.count() == spark.read.parquet(p).count() > 0
+
+    # the mutation verbs rewrite a flat root whole: its marker travels
+    # byte-identical, no old part file stays beside the new ones, and
+    # the tree is read back with the schema the verb wrote
+    from warp_spark.pipeline.graph import compact_edges, delete_edges, update_wedge_census
+
+    def mutated(p, marker, load, verb):
+        parts = lambda: {n for n in os.listdir(p) if n.endswith(".parquet")}
+        with open(os.path.join(p, marker), "rb") as f:
+            before_marker = f.read()
+        before = parts()
+        out = verb()
+        with open(os.path.join(p, marker), "rb") as f:
+            assert f.read() == before_marker
+        assert parts() and not parts() & before
+        got, jobs = jobs_of(lambda: load(spark, p))
+        assert jobs == 0
+        assert sorted(got.collect()) == sorted(spark.read.parquet(p).collect())
+        return out
+
+    mutated(ep, "_EDGES_COMPLETE", load_edges, lambda: compact_edges(spark, ep))
+    gone = _edges(spark, [(0, 0), (1, 7), (2, 14), (3, 21)])
+    delta = mutated(ep, "_EDGES_COMPLETE", load_edges, lambda: delete_edges(spark, ep, gone))
+    assert delta.count() > 0
+    mutated(
+        wp,
+        "_WEDGES_COMPLETE",
+        load_wedge_census,
+        lambda: update_wedge_census(spark, wp, ep, delta, removed=True),
+    )
+    fresh = persist_wedge_census(load_edges(spark, ep), str(tmp_path / "fresh"), assume_canonical=True)
+    assert fresh is not None
+    assert sorted(load_wedge_census(spark, wp).collect()) == sorted(
+        load_wedge_census(spark, str(tmp_path / "fresh")).collect()
+    )
+    assert sorted(n for n in os.listdir(tmp_path) if not n.endswith(".lock")) == [
+        "edges", "fresh", "wedges"
+    ]

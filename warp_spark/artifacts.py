@@ -14,15 +14,22 @@ sketches): stamp → ensure → publish → mutate.
   finished tree into place under an exclusive flock.  A build that
   reports the schema it wrote has the tree read back without a
   schema-inference job.
-- **Mutate.** :func:`mutate` changes a published artifact in place
-  (append, delete, compact): the marker holds a sentinel while the
+- **Mutate.** :func:`mutate` runs a mutation verb (append, delete,
+  compact) on a published artifact: the marker holds a sentinel while the
   mutation runs, so a crash leaves a marker that matches no stamp and
   the next :func:`ensure` rebuilds; a mutation that refuses publishes a
   rebuild instead.  :func:`ensure_appended` is :func:`ensure` for an
   artifact built as a base plus an in-place append.
 
-The pipeline modules' mutation verbs and compaction finishers share the
-same lock and swap (:func:`index_mutation`, :func:`swap_artifact_dir`).
+The pipeline modules' mutation verbs (append, delete, compact, the
+wedge-census fold) run whole under the artifact's root lock
+(:func:`locked_mutation`) and decide only which rows to add or remove;
+every file they change goes through :func:`rewrite`.  It writes the
+new rows of one table into a scratch tree, hard-links in the standing
+files the change keeps (all of them for an append, the untouched
+partitions for a delete, none for a compaction) and the markers of a
+flat root, and swaps the table whole.  A build and a rewrite share the
+scratch → swap → remember steps.
 
 Swap-window note: POSIX cannot atomically exchange two directories from
 Python (``renameat2(RENAME_EXCHANGE)`` is not exposed), so the swap is
@@ -43,7 +50,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -60,8 +67,8 @@ __all__ = [
     "copy_artifact",
     "unique_sibling_tmp",
     "swap_artifact_dir",
-    "index_mutation",
     "locked_mutation",
+    "rewrite",
 ]
 
 
@@ -137,19 +144,13 @@ def publish_artifact(path: str, marker: str, stamp: str, build) -> None:
     active session's read memo then holds it for the published tree's
     file version, marker included, so the first read-back infers
     nothing (warp_spark.sources.parquet)."""
-    tmp = unique_sibling_tmp(path, tag="build")
-    try:
+
+    def fill(tmp: str):
         written = build(tmp)
         _write_marker(tmp, marker, stamp)
-        version = _local_stamp(tmp)  # a rename keeps every file's stamp
-        swap_artifact_dir(path, tmp)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    if isinstance(written, StructType):
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            remember_parquet(spark, path, written, version)
+        return written
+
+    _replace(path, "build", fill, _root_lock(path), SparkSession.getActiveSession())
 
 
 def ensure(path: str, marker: str, stamp: str, build, rebuild: bool = False) -> tuple:
@@ -198,29 +199,9 @@ def copy_artifact(src: str, dst: str) -> None:
 
 
 @contextlib.contextmanager
-def index_mutation(path: str):
-    """Hold the canonical ``<path>.lock`` flock across an ENTIRE
-    read-verify-write mutation of the artifact rooted at ``path`` —
-    the one lock every mutation verb (append / delete / compact)
-    serializes on (r13 verdict item 3: the verbs previously locked
-    per-subtree inconsistently — bands under ``<path>.lock`` but
-    shingles under ``<path>/shingles.lock``, postings under their own
-    lock, appends under none — so two different verbs on the same
-    index serialized only when they happened to pick the same lock
-    file).  Holding the root lock across the whole verify+mutate span
-    also closes the TOCTOU the per-swap locks left open: two
-    concurrent appends could both pass the cap/no-re-append
-    precondition and then both append.
-
-    Sub-artifact swaps inside the span call
-    ``swap_artifact_dir(..., locked=True)`` — they are already
-    serialized by this lock, and taking their own per-subtree flock
-    would add nothing (different lock file) while suggesting mutual
-    exclusion that does not exist.
-
-    Readers stay lock-free (the standing self-heal contract): the
-    worst case they observe is a momentary missing sub-directory
-    between the two renames of a swap."""
+def _root_lock(path: str):
+    """The exclusive ``<path>.lock`` flock that every writer of the
+    artifact rooted at ``path`` serializes on."""
     with open(path + ".lock", "w") as lk:
         fcntl.flock(lk, fcntl.LOCK_EX)
         try:
@@ -230,21 +211,90 @@ def index_mutation(path: str):
 
 
 def locked_mutation(fn):
-    """Decorator form of :func:`index_mutation` for the mutation verbs,
-    whose shared signature is ``fn(spark, path, ...)`` with ``path``
-    the index root: the whole verb — precondition reads, verification
-    joins, file appends, sub-artifact swaps, and the stats overwrite —
-    runs under one exclusive ``<path>.lock``.  Any internal
-    ``swap_artifact_dir`` call must pass ``locked=True`` (re-taking
-    the same lock file on a fresh file description would
-    self-deadlock)."""
+    """Run a mutation verb ``fn(spark, path, ...)`` whole under the
+    root lock of the index at ``path``: its precondition reads, its
+    verification and every :func:`rewrite` it makes.  Two verbs on one
+    index therefore never interleave, and two appends cannot both pass
+    a precondition before either writes.  Readers stay lock-free."""
 
     @functools.wraps(fn)
     def wrapper(spark, path, *args, **kwargs):
-        with index_mutation(path):
+        with _root_lock(path):
             return fn(spark, path, *args, **kwargs)
 
     return wrapper
+
+
+def rewrite(
+    path: str,
+    rows: DataFrame,
+    by: str | None = None,
+    append: bool = False,
+    touched: list | None = None,
+) -> None:
+    """Replace the parquet table at ``path`` (a sub-table of an index,
+    or the root of a flat artifact) with ``rows``, which have its
+    schema, plus the old files the change leaves standing:
+
+    - ``append``: every old part file stays and the rows add files;
+    - ``touched``, with ``by``: the rows replace the partitions of
+      ``by`` holding these values, and every other partition stays;
+    - neither: the rows are the whole new table.
+
+    The rows are written (partitioned by ``by``) into a unique sibling
+    scratch tree; rows that replace partitions are first hash-clustered
+    by ``by``, one file per partition directory.  The standing files
+    and the top-level markers are hard-linked in beside them, and the
+    tree is swapped in whole.  The caller holds the root lock
+    (:func:`locked_mutation`).  An unpartitioned table is read back
+    with the schema of ``rows``, running no inference job."""
+    old = os.listdir(path)
+    if by is not None and not append:
+        n = len(touched) if touched is not None else sum(e.startswith(f"{by}=") for e in old)
+        rows = rows.repartition(max(n, 1), by)
+    gone = {f"{by}={v}" for v in touched} if touched is not None else None
+
+    def fill(tmp: str) -> StructType | None:
+        w = rows.write.mode("overwrite")
+        (w if by is None else w.partitionBy(by)).parquet(tmp)
+        for name in old:
+            if name.startswith("_") or append or (gone is not None and name not in gone):
+                _link_tree(os.path.join(path, name), os.path.join(tmp, name))
+        return rows.schema if by is None else None
+
+    _replace(path, "rewrite", fill, contextlib.nullcontext(), rows.sparkSession)
+
+
+def _link_tree(src: str, dst: str) -> None:
+    """Hard-link the file or tree ``src`` to ``dst``, keeping whatever
+    ``dst`` already holds."""
+    if os.path.isdir(src):
+        os.makedirs(dst, exist_ok=True)
+        for name in os.listdir(src):
+            _link_tree(os.path.join(src, name), os.path.join(dst, name))
+    elif not os.path.exists(dst):
+        os.link(src, dst)
+
+
+def _replace(path: str, tag: str, fill, lock, spark: SparkSession | None) -> None:
+    """Fill a unique sibling scratch tree with ``fill(tmp)``, swap it in
+    for ``path`` under ``lock`` and reclaim the old tree.  A fill that
+    returns the ``StructType`` of the one parquet table it wrote has the
+    new tree read back with that schema (warp_spark.sources.parquet).
+    A fill that raises leaves ``path`` as it was."""
+    tmp = unique_sibling_tmp(path, tag=tag)
+    try:
+        written = fill(tmp)
+        version = _local_stamp(tmp)  # a rename keeps every file's stamp
+        with lock:
+            trash = _swap(path, tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if trash is not None:
+        shutil.rmtree(trash, ignore_errors=True)
+    if isinstance(written, StructType) and spark is not None:
+        remember_parquet(spark, path, written, version)
 
 
 def unique_sibling_tmp(path: str, tag: str = "build") -> str:
@@ -277,28 +327,14 @@ def _swap(path: str, tmp: str) -> str | None:
     return trash
 
 
-def swap_artifact_dir(path: str, tmp: str, locked: bool = False) -> None:
+def swap_artifact_dir(path: str, tmp: str) -> None:
     """Atomically install the finished tree ``tmp`` as ``path`` under
     an exclusive ``<path>.lock`` flock.  The displaced old tree is
     renamed aside first (two cheap renames back-to-back) and reclaimed
     only after the lock is released, so a lock-free reader's worst case
     is a momentary ENOENT between renames — never a half-deleted or
-    half-built directory.
-
-    ``locked=True`` skips taking ``<path>.lock``: the caller asserts
-    it already holds a lock covering this swap (the
-    :func:`index_mutation` root lock for a sub-artifact swap inside a
-    mutation verb — flock is per-open-file-description, so re-taking
-    the SAME lock file here would self-deadlock, and taking a
-    per-subtree lock file would serialize against nothing)."""
-    if locked:
+    half-built directory."""
+    with _root_lock(path):
         trash = _swap(path, tmp)
-    else:
-        with open(path + ".lock", "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                trash = _swap(path, tmp)
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
     if trash is not None:
         shutil.rmtree(trash, ignore_errors=True)

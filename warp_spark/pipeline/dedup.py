@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from warp_spark.artifacts import locked_mutation
+from warp_spark.artifacts import locked_mutation, rewrite
 from warp_spark.localdf import small_rows_df
 from warp_spark.pipeline.text import fingerprint, tokens
 
@@ -1056,13 +1056,7 @@ def append_dedup_index(
     Reference analogue: MutableDataset row insertion
     (MutableData.swift:40-63) — the reference mutates standing data in
     place; here the mutation is an append of immutable files plus a
-    stats swap, the Spark-native equivalent.
-
-    Concurrency: the ENTIRE verb — precondition reads, cap check,
-    file appends, stats overwrite — holds the canonical
-    ``<path>.lock`` (artifacts.locked_mutation, r13 verdict item 3),
-    so two appends, or an append racing a delete/compact, serialize
-    instead of both passing the precondition and double-inserting."""
+    stats swap, the Spark-native equivalent."""
     st = spark.read.parquet(f"{path}/stats").first()
     n_buckets = int(st["n_buckets"])
     cap = int(st["max_corpus_bucket"])
@@ -1161,30 +1155,39 @@ def append_dedup_index(
     if chk["mx"] is not None and chk["mx"] > cap:
         return False  # a combined bucket crosses the cap: rebuild
 
-    new_bands.select("corpus_id", "band_idx", "band_val", "bucket").write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(f"{path}/bands")
+    rewrite(
+        f"{path}/bands",
+        new_bands.select("corpus_id", "band_idx", "band_val", "bucket"),
+        by="bucket",
+        append=True,
+    )
     # the shingle tier was computed in the SAME slice pass as the
     # signatures (doc_rows checkpoint above) — no text re-scan
-    doc_rows.select("corpus_id", "sh_b").write.mode("append").parquet(
-        f"{path}/shingles"
-    )
-    # stats swap: carry every model parameter, bump only the doc count
-    small_rows_df(
-        spark,
-        [
-            (
-                int(st["n_docs"]) + int(n_new),
-                int(st["num_hashes"]),
-                int(st["band_size"]),
-                n_buckets,
-                cap,
-            )
-        ],
-        "n_docs long, num_hashes int, band_size int, n_buckets int, "
-        "max_corpus_bucket long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    rewrite(f"{path}/shingles", doc_rows.select("corpus_id", "sh_b"), append=True)
+    _rewrite_stats(spark, path, st, int(n_new))
     return True
+
+
+def _rewrite_stats(spark, path: str, st, n_delta: int) -> None:
+    """The 1-row stats with every model parameter of ``st`` carried
+    over and ``n_docs`` moved by ``n_delta``."""
+    rewrite(
+        f"{path}/stats",
+        small_rows_df(
+            spark,
+            [
+                (
+                    int(st["n_docs"]) + n_delta,
+                    int(st["num_hashes"]),
+                    int(st["band_size"]),
+                    int(st["n_buckets"]),
+                    int(st["max_corpus_bucket"]),
+                )
+            ],
+            "n_docs long, num_hashes int, band_size int, n_buckets int, "
+            "max_corpus_bucket long",
+        ).coalesce(1),
+    )
 
 
 @locked_mutation
@@ -1222,16 +1225,7 @@ def delete_from_dedup_index(
     row-count invariant that guards every future append/delete.
 
     On ``True``, delete-then-probe equals rebuild-on-remaining-then-
-    probe EXACTLY (pytest-pinned).  The ENTIRE verb — verification,
-    bands partition rewrite, shingles swap, stats decrement — holds
-    the canonical ``<path>.lock`` (artifacts.locked_mutation, r13
-    verdict item 3), so a delete racing an append or compact
-    serializes on one lock instead of interleaving per-subtree."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import unique_sibling_tmp
-
+    probe EXACTLY (pytest-pinned)."""
     st = spark.read.parquet(f"{path}/stats").first()
     n_buckets = int(st["n_buckets"])
     bands_per_doc = int(st["num_hashes"]) // int(st["band_size"])
@@ -1287,48 +1281,17 @@ def delete_from_dedup_index(
     remaining = old_pruned.join(del_ids, "corpus_id", "left_anti").select(
         "corpus_id", "band_idx", "band_val", "bucket"
     )
-    tmp = unique_sibling_tmp(os.path.join(path, "bands"), tag="delete")
-    remaining.repartition(max(len(touched), 1), "bucket").write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(tmp)
-    # swap ONLY the touched bucket partitions — the verb-wide root
-    # lock is already held, so no per-swap flock; a bucket whose
-    # postings all belonged to deleted docs simply disappears
-    # (parquet readers handle absent partitions)
-    for b in touched:
-        dst = os.path.join(path, "bands", f"bucket={b}")
-        src = os.path.join(tmp, f"bucket={b}")
-        shutil.rmtree(dst, ignore_errors=True)
-        if os.path.exists(src):
-            os.rename(src, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    sh_tmp = unique_sibling_tmp(os.path.join(path, "shingles"), tag="delete")
-    (
+    # rewrite ONLY the touched bucket partitions; a bucket whose
+    # postings all belonged to deleted docs simply disappears (parquet
+    # readers handle absent partitions)
+    rewrite(f"{path}/bands", remaining, by="bucket", touched=touched)
+    rewrite(
+        f"{path}/shingles",
         spark.read.parquet(f"{path}/shingles")
         .join(del_ids, "corpus_id", "left_anti")
-        .coalesce(8)
-        .write.mode("overwrite")
-        .parquet(sh_tmp)
+        .coalesce(8),
     )
-    from warp_spark.artifacts import swap_artifact_dir
-
-    swap_artifact_dir(os.path.join(path, "shingles"), sh_tmp, locked=True)
-
-    small_rows_df(
-        spark,
-        [
-            (
-                int(st["n_docs"]) - int(n_del),
-                int(st["num_hashes"]),
-                int(st["band_size"]),
-                n_buckets,
-                int(st["max_corpus_bucket"]),
-            )
-        ],
-        "n_docs long, num_hashes int, band_size int, n_buckets int, "
-        "max_corpus_bucket long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    _rewrite_stats(spark, path, st, -n_del)
     return True
 
 
@@ -1346,37 +1309,11 @@ def compact_dedup_index(spark, path: str) -> None:
     marker over unchanged — content-preserving by construction
     (read → repartition → write; no signatures recomputed), so
     probe-before == probe-after exactly (pytest-pinned) and any
-    content stamp keyed on the SOURCE still matches.
-
-    Swap discipline: the compacted tree is built in a UNIQUE sibling
-    scratch dir while the whole verb holds the canonical
-    ``<path>.lock`` (artifacts.locked_mutation — the lock every
-    mutation verb serializes on, r13 verdict item 3), so writers
-    serialize and a concurrent prober's worst case is the momentary
-    two-rename window, never a half-deleted tree."""
-    import os
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
-    st = spark.read.parquet(f"{path}/stats")
-    n_buckets = int(st.first()["n_buckets"])
-    tmp = unique_sibling_tmp(path, tag="compact")
-    # one task per bucket (deterministic hash routing) → one file per
-    # bucket partition, the build-time layout
-    spark.read.parquet(f"{path}/bands").repartition(
-        n_buckets, "bucket"
-    ).write.partitionBy("bucket").parquet(f"{tmp}/bands")
-    spark.read.parquet(f"{path}/shingles").coalesce(8).write.parquet(
-        f"{tmp}/shingles"
-    )
-    st.coalesce(1).write.parquet(f"{tmp}/stats")
-    import shutil
-
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if os.path.isfile(full):  # markers and metadata travel as-is
-            shutil.copy2(full, os.path.join(tmp, name))
-    swap_artifact_dir(path, tmp, locked=True)
+    content stamp keyed on the SOURCE still matches."""
+    # hash routing on the bucket → one file per bucket partition, the
+    # build-time layout
+    rewrite(f"{path}/bands", spark.read.parquet(f"{path}/bands"), by="bucket")
+    rewrite(f"{path}/shingles", spark.read.parquet(f"{path}/shingles").coalesce(8))
 
 
 def cluster_representatives(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from warp_spark.artifacts import locked_mutation
+from warp_spark.artifacts import locked_mutation, rewrite
 from warp_spark.sources.parquet import read_parquet
 
 
@@ -665,11 +665,7 @@ def append_edges(spark, path: str, new_edges: DataFrame) -> DataFrame:
     plan would re-list the directory and see its own output).
 
     Reference analogue: MutableDataset row insertion
-    (MutableData.swift:40-63).  The whole verb — anti-join
-    verification and file append — holds the canonical
-    ``<path>.lock`` (artifacts.locked_mutation, r13 verdict item 3),
-    so two appends, or an append racing a delete/compact, serialize
-    on one lock."""
+    (MutableData.swift:40-63)."""
     su, sv = F.col("src"), F.col("dst")
     standing = spark.read.parquet(path)
     delta = (
@@ -682,9 +678,9 @@ def append_edges(spark, path: str, new_edges: DataFrame) -> DataFrame:
     if delta.isEmpty():
         return delta
     # hash-cluster on u like the build, one task per slice-bucket; the
-    # artifact accumulates one file per append (compaction territory,
+    # artifact accumulates files per append (compaction territory,
     # same as the index families)
-    delta.repartition(2, "u").write.mode("append").parquet(path)
+    rewrite(path, delta.repartition(2, "u"), append=True)
     return delta
 
 
@@ -699,26 +695,8 @@ def compact_edges(spark, path: str) -> None:
     hash-on-u layout (restoring per-file min/max statistics over u).
     Content-preserving by construction (read → repartition → write),
     so every downstream algorithm — and the census maintained against
-    this artifact — is unchanged.  Built in a unique sibling scratch
-    dir while the whole verb holds the canonical ``<path>.lock``
-    (artifacts.locked_mutation, r13 verdict item 3)."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
-    tmp = unique_sibling_tmp(path, tag="compact")
-    spark.read.parquet(path).repartition(8, "u").write.mode("overwrite").parquet(tmp)
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if (
-            os.path.isfile(full)
-            and not name.endswith(".parquet")
-            and not name.endswith(".crc")
-            and name != "_SUCCESS"
-        ):
-            shutil.copy2(full, os.path.join(tmp, name))
-    swap_artifact_dir(path, tmp, locked=True)
+    this artifact — is unchanged.  Marker files travel unchanged."""
+    rewrite(path, spark.read.parquet(path).repartition(8, "u"))
 
 
 @locked_mutation
@@ -745,9 +723,7 @@ def delete_edges(spark, path: str, removed_edges: DataFrame) -> DataFrame:
     The rewrite is one anti-join over the ARTIFACT (the compact_edges
     cost class — an edge artifact has no pruned sub-partition to
     rewrite, unlike the bucketed indexes) re-clustered to the
-    build-time 8-file hash-on-u layout, built in a unique sibling
-    scratch dir and swapped while the whole verb holds the canonical
-    ``<path>.lock`` (artifacts.locked_mutation).  Marker files travel
+    build-time 8-file hash-on-u layout.  Marker files travel
     unchanged; the CALLER owns re-stamping after a successful delete.
 
     Returns the eagerly-checkpointed canonical delta that was
@@ -758,11 +734,6 @@ def delete_edges(spark, path: str, removed_edges: DataFrame) -> DataFrame:
 
     Reference analogue: MutableDataset row removal
     (MutableData.swift:40-63)."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
     su, sv = F.col("src"), F.col("dst")
     standing = spark.read.parquet(path)
     slice_ = (
@@ -777,19 +748,7 @@ def delete_edges(spark, path: str, removed_edges: DataFrame) -> DataFrame:
     )
     if delta.isEmpty():
         return delta
-    remaining = standing.join(slice_, ["u", "v"], "left_anti")
-    tmp = unique_sibling_tmp(path, tag="delete")
-    remaining.repartition(8, "u").write.mode("overwrite").parquet(tmp)
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if (
-            os.path.isfile(full)
-            and not name.endswith(".parquet")
-            and not name.endswith(".crc")
-            and name != "_SUCCESS"
-        ):
-            shutil.copy2(full, os.path.join(tmp, name))
-    swap_artifact_dir(path, tmp, locked=True)
+    rewrite(path, standing.join(slice_, ["u", "v"], "left_anti").repartition(8, "u"))
     return delta
 
 
@@ -832,16 +791,13 @@ def update_wedge_census(
     the census (the ``cn > 0`` filter).
 
     The merged census (standing ⊎ signed delta, zero rows dropped) is
-    rewritten and atomically swapped — an INDEX-sized write, the
-    compaction cost class, while the quadratic stage stays bounded by
-    the touched neighborhoods.  Returns ``False`` (caller must
+    rewritten and swapped in whole, its marker files carried over
+    unchanged (the CALLER owns re-stamping) — an INDEX-sized write,
+    the compaction cost class, while the quadratic stage stays bounded
+    by the touched neighborhoods.  Returns ``False`` (caller must
     rebuild) when the standing census artifact is missing/unreadable —
-    the honest-fallback contract of the index append legs.  The whole
-    fold holds the canonical ``<census_path>.lock``
-    (artifacts.locked_mutation)."""
+    the honest-fallback contract of the index append legs."""
     import os
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
 
     if not os.path.isdir(census_path):
         return False
@@ -905,25 +861,7 @@ def update_wedge_census(
         )
         .where(F.col("cn") > 0)
     )
-    tmp = unique_sibling_tmp(census_path, tag="delta")
-    merged.write.mode("overwrite").parquet(tmp)
-    # carry MARKER files (the catalog's stamp) over unchanged — the
-    # census artifact is a flat parquet directory, so the old data
-    # files and Spark's write sentinels must NOT travel (the merged
-    # tree has its own); the CALLER owns re-stamping after a
-    # successful update
-    import shutil
-
-    for name in os.listdir(census_path):
-        full = os.path.join(census_path, name)
-        if (
-            os.path.isfile(full)
-            and not name.endswith(".parquet")
-            and not name.endswith(".crc")
-            and name != "_SUCCESS"
-        ):
-            shutil.copy2(full, os.path.join(tmp, name))
-    swap_artifact_dir(census_path, tmp, locked=True)
+    rewrite(census_path, merged)
     return True
 
 

@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from warp_spark.artifacts import locked_mutation
+from warp_spark.artifacts import locked_mutation, rewrite
 from warp_spark.localdf import small_rows_df
 
 
@@ -1174,13 +1174,7 @@ def append_ivfpq_index(
     append_dedup_index contract) when any slice id already appears in
     the codes table.  The check is a single-column (column-pruned)
     semi-join over the codes' vec_id column — one integer column of
-    the INDEX, never a corpus re-encode.
-
-    Concurrency: the ENTIRE verb — overlap precondition, codes and
-    storage appends — holds the canonical ``<path>.lock``
-    (artifacts.locked_mutation, r13 verdict item 3), so two appends,
-    or an append racing a delete/compact, serialize instead of both
-    passing the precondition."""
+    the INDEX, never a corpus re-encode."""
     overlap = (
         spark.read.parquet(f"{path}/codes")
         .select("vec_id")
@@ -1213,20 +1207,20 @@ def append_ivfpq_index(
         for j in range(n_sub)
     ]
     enc = ivfpq_assign_encode(F.col(vec_col), centroids, codebooks)
-    (
+    rewrite(
+        f"{path}/codes",
         new_vecs.select(
             F.col(id_col).alias("vec_id"),
             F.coalesce(enc["centroid_id"], F.lit(-1)).alias("centroid_id"),
             enc["codes"].alias("codes"),
-        )
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/codes")
+        ),
+        by="centroid_id",
+        append=True,
     )
-    (
-        new_vecs.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vector"))
-        .write.mode("append")
-        .parquet(f"{path}/storage")
+    rewrite(
+        f"{path}/storage",
+        new_vecs.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vector")),
+        append=True,
     )
     return True
 
@@ -1263,15 +1257,7 @@ def delete_from_ivfpq_index(
     must equal its distinct-id count ``n_del`` (both from the one
     pre-verification job) — stricter than the pre-r14 leftsemi form,
     which tolerated duplicate rows silently; refusing hands the
-    ambiguity to the caller's rebuild instead of guessing.  The ENTIRE
-    verb — verification, inverted-list rewrite, storage swap — holds
-    the canonical ``<path>.lock``
-    (artifacts.locked_mutation, r13 verdict item 3)."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
+    ambiguity to the caller's rebuild instead of guessing."""
     centroids = [
         (int(r["centroid_id"]), [float(x) for x in r["vector"]])
         for r in spark.read.parquet(f"{path}/centroids")
@@ -1342,29 +1328,14 @@ def delete_from_ivfpq_index(
     remaining = pruned.join(del_ids, "vec_id", "left_anti").select(
         "vec_id", "codes", "centroid_id"
     )
-    tmp = unique_sibling_tmp(os.path.join(path, "codes"), tag="delete")
-    remaining.repartition(max(len(touched), 1), "centroid_id").write.mode(
-        "overwrite"
-    ).partitionBy("centroid_id").parquet(tmp)
-    # swap ONLY the touched inverted lists — the verb-wide root lock
-    # is already held, so no per-swap flock
-    for c in touched:
-        dst = os.path.join(path, "codes", f"centroid_id={c}")
-        src = os.path.join(tmp, f"centroid_id={c}")
-        shutil.rmtree(dst, ignore_errors=True)
-        if os.path.exists(src):
-            os.rename(src, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    st_tmp = unique_sibling_tmp(os.path.join(path, "storage"), tag="delete")
-    (
+    # rewrite ONLY the touched inverted lists
+    rewrite(f"{path}/codes", remaining, by="centroid_id", touched=touched)
+    rewrite(
+        f"{path}/storage",
         spark.read.parquet(f"{path}/storage")
         .join(del_ids, "vec_id", "left_anti")
-        .coalesce(8)
-        .write.mode("overwrite")
-        .parquet(st_tmp)
+        .coalesce(8),
     )
-    swap_artifact_dir(os.path.join(path, "storage"), st_tmp, locked=True)
     return True
 
 
@@ -1380,33 +1351,9 @@ def compact_ivfpq_index(spark, path: str) -> None:
     and coalesces storage, carrying the model artifacts (centroids,
     codebooks) and markers over byte-unchanged.  Content-preserving by
     construction, so a probe's shortlist, ADC scores, and rerank are
-    identical before and after.  Built in a unique sibling scratch
-    dir while the whole verb holds the canonical ``<path>.lock``
-    (artifacts.locked_mutation, r13 verdict item 3 — the same lock
-    every mutation verb serializes on)."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
-    codes = spark.read.parquet(f"{path}/codes")
-    n_lists = codes.select("centroid_id").distinct().count()
-    tmp = unique_sibling_tmp(path, tag="compact")
-    codes.repartition(max(int(n_lists), 1), "centroid_id").write.partitionBy(
-        "centroid_id"
-    ).parquet(f"{tmp}/codes")
-    spark.read.parquet(f"{path}/storage").coalesce(8).write.parquet(
-        f"{tmp}/storage"
-    )
-    for sub in ("centroids", "codebooks"):
-        spark.read.parquet(f"{path}/{sub}").coalesce(1).write.parquet(
-            f"{tmp}/{sub}"
-        )
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if os.path.isfile(full):
-            shutil.copy2(full, os.path.join(tmp, name))
-    swap_artifact_dir(path, tmp, locked=True)
+    identical before and after."""
+    rewrite(f"{path}/codes", spark.read.parquet(f"{path}/codes"), by="centroid_id")
+    rewrite(f"{path}/storage", spark.read.parquet(f"{path}/storage").coalesce(8))
 
 
 def pq_reconstruction(

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from warp_spark.artifacts import locked_mutation
+from warp_spark.artifacts import locked_mutation, rewrite
 from warp_spark.localdf import small_rows_df
 
 # Small function-word lists per language for the n-gram/stopword-hit
@@ -1785,16 +1785,10 @@ def append_bm25_index(
     partitioning (modulus read FROM the stats artifact, never a
     hardcoded constant), so probe-side partition pruning keeps
     working.  Reference analogue: MutableDataset row insertion
-    (MutableData.swift:40-63).
-
-    Concurrency: the ENTIRE verb — overlap precondition, postings
-    append, stats overwrite — holds the canonical ``<path>.lock``
-    (artifacts.locked_mutation, r13 verdict item 3), so two appends,
-    or an append racing a delete/compact, serialize instead of both
-    passing the precondition."""
+    (MutableData.swift:40-63)."""
     tk = "_bm25_tk"
     st = spark.read.parquet(f"{path}/stats").first()
-    n_buckets = int(st["n_buckets"]) if "n_buckets" in st.asDict() else 16
+    n_buckets = int(st["n_buckets"])
     # ONE tokenize pass over the slice (guide §1.2: the old form read
     # and tokenized new_docs twice — once for the postings, once for
     # the stats increments — and scanned it a third time for the
@@ -1825,19 +1819,32 @@ def append_bm25_index(
             "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
         )
     )
-    postings.write.mode("append").partitionBy("bucket").parquet(
-        f"{path}/postings"
-    )
+    rewrite(f"{path}/postings", postings, by="bucket", append=True)
     inc = doc_tk.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.coalesce(F.sum(F.size(tk)), F.lit(0)).cast("long").alias("dl"),
     ).first()
-    small_rows_df(
-        spark,
-        [(int(st["n_docs"]) + int(inc["n"]), int(st["total_dl"]) + int(inc["dl"]), n_buckets)],
-        "n_docs long, total_dl long, n_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    _rewrite_bm25_stats(spark, path, st, int(inc["n"]), int(inc["dl"]))
     return True
+
+
+def _rewrite_bm25_stats(spark, path: str, st, n_delta: int, dl_delta: int) -> None:
+    """The 1-row BM25 stats ``st`` with ``n_docs`` and ``total_dl``
+    moved by the deltas."""
+    rewrite(
+        f"{path}/stats",
+        small_rows_df(
+            spark,
+            [
+                (
+                    int(st["n_docs"]) + n_delta,
+                    int(st["total_dl"]) + dl_delta,
+                    int(st["n_buckets"]),
+                )
+            ],
+            "n_docs long, total_dl long, n_buckets int",
+        ).coalesce(1),
+    )
 
 
 @locked_mutation
@@ -1867,8 +1874,7 @@ def delete_from_bm25_index(
     word's bucket holds most docs, so the rewrite is a full postings
     pass (index-sized, the compaction cost class — one read →
     anti-join → write per delete batch, never a corpus
-    re-tokenization); the ENTIRE verb holds the canonical
-    ``<path>.lock`` (artifacts.locked_mutation, r13 verdict item 3).
+    re-tokenization).
 
     Zero-token refusal (r13 verdict item 7): a slice row whose text
     tokenizes to NOTHING (null or whitespace-only) has no postings to
@@ -1878,13 +1884,8 @@ def delete_from_bm25_index(
     REFUSE outright; the caller rebuilds on the remaining corpus,
     where the zero-token doc's membership is decided by the corpus
     itself, not by an unverifiable claim."""
-    import os
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
     tk = "_bm25_tk"
     st = spark.read.parquet(f"{path}/stats").first()
-    n_buckets = int(st["n_buckets"]) if "n_buckets" in st.asDict() else 16
     # ONE tokenize pass over the slice (guide §1.2: the old form
     # re-tokenized del_docs a second time just to derive the stats
     # decrements): checkpoint the per-doc token arrays once, derive
@@ -1944,29 +1945,15 @@ def delete_from_bm25_index(
     )
     if int(ver["matched"]) != n_del_rows or int(ver["indexed_for_ids"]) != n_del_rows:
         return False  # absent id, text drift, or duplicated postings
-    tmp = unique_sibling_tmp(os.path.join(path, "postings"), tag="delete")
-    (
+    rewrite(
+        f"{path}/postings",
         postings.join(del_ids, id_col, "left_anti")
         # the anti-join hoists the key column; restore the build-time
         # column order so the artifact stays layout-faithful
-        .select("term", id_col, "dl", "tf", "bucket")
-        .repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
+        .select("term", id_col, "dl", "tf", "bucket"),
+        by="bucket",
     )
-    swap_artifact_dir(os.path.join(path, "postings"), tmp, locked=True)
-    small_rows_df(
-        spark,
-        [
-            (
-                int(st["n_docs"]) - int(inc["n"]),
-                int(st["total_dl"]) - int(inc["dl"]),
-                n_buckets,
-            )
-        ],
-        "n_docs long, total_dl long, n_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    _rewrite_bm25_stats(spark, path, st, -int(inc["n"]), -int(inc["dl"]))
     return True
 
 
@@ -1980,28 +1967,8 @@ def compact_bm25_index(spark, path: str) -> None:
     compaction re-clusters the postings to one file per bucket
     partition and carries the stats row and marker files over
     unchanged.  Content-preserving by construction (read → repartition
-    → write), so probe-before == probe-after exactly.  Built in a
-    unique sibling scratch dir while the whole verb holds the
-    canonical ``<path>.lock`` (artifacts.locked_mutation, r13 verdict
-    item 3 — the same lock every mutation verb serializes on)."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
-    st = spark.read.parquet(f"{path}/stats")
-    strow = st.first()
-    n_buckets = int(strow["n_buckets"]) if "n_buckets" in strow.asDict() else 16
-    tmp = unique_sibling_tmp(path, tag="compact")
-    spark.read.parquet(f"{path}/postings").repartition(
-        n_buckets, "bucket"
-    ).write.partitionBy("bucket").parquet(f"{tmp}/postings")
-    st.coalesce(1).write.parquet(f"{tmp}/stats")
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if os.path.isfile(full):
-            shutil.copy2(full, os.path.join(tmp, name))
-    swap_artifact_dir(path, tmp, locked=True)
+    → write), so probe-before == probe-after exactly."""
+    rewrite(f"{path}/postings", spark.read.parquet(f"{path}/postings"), by="bucket")
 
 
 def bm25_index_probe(
@@ -2029,11 +1996,9 @@ def bm25_index_probe(
     # stats first: the bucket MODULUS comes from the artifact (written
     # by build_bm25_index), so an index built with a non-default
     # n_buckets is probed with the right partition pruning — never a
-    # hardcoded 16 (r10 ADVICE).  Pre-stamp artifacts without the
-    # column fall back to the historical default.
+    # hardcoded 16 (r10 ADVICE).
     st = spark.read.parquet(f"{path}/stats").first()
-    n_docs, total_dl = st["n_docs"], st["total_dl"]
-    n_buckets = st["n_buckets"] if "n_buckets" in st.asDict() else 16
+    n_docs, total_dl, n_buckets = st["n_docs"], st["total_dl"], st["n_buckets"]
     # bucket ids for the query terms via the same JVM hash (bounded:
     # one row per distinct term)
     tdf = small_rows_df(spark, [(t,) for t in terms], "term string")
